@@ -9,41 +9,38 @@ Stage plan (explicit shuffle boundaries, SURVEY.md §3.1 lifecycle):
        salted_repartition; AQE skew handling does not apply to UDF
        stages either way)
     -> flatten (posexplode, narrow — preserves partitioning)
-    -> sortWithinPartitions(doc_id, offset)  (no shuffle; canonical
-       order -> bitwise-deterministic output)
-    -> mapInArrow(layout kernel)             (docs are contiguous runs
-       within a partition; incomplete tail docs carry over between
-       batches — no per-group overhead the way applyInPandas would
-       impose at 10^12 docs; numerics reach numpy zero-copy, payload
-       strings are permuted C++-side and never materialize in Python)
-    -> sink (nested or flat rows; strategy='join' keeps payload out of
-       the kernel stage entirely and joins it back JVM-side)
+    -> mapInArrow(make_partition_arrow_kernel)  (the task holds its whole
+       partition and sorts it ONCE by (doc_id, offset) with an Arrow C++
+       sort — canonical order, so the output is bitwise-deterministic
+       however the rows were ordered or batched, with no Spark sort
+       stage and no carry-over between batches; each document is then
+       a contiguous run for the per-document kernel; numerics reach
+       numpy once per partition, payload strings are permuted C++-side
+       and never materialize in Python)
+    -> sink (flat rows, or nested out_spans lists built in-kernel from
+       the same permutation)
 
-The kernel itself is eynollah_spark.kernels.layout.layout_document —
+extract_flat_input keeps the payload out of the kernel stage entirely and
+joins it back JVM-side; extract_from_parquet_files is the zero-shuffle
+path over doc-complete bucketed files.
+
+The kernel itself is eynollah_spark.kernels.layout.layout_permutation —
 see that module for reference-semantics citations.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
-from eynollah_spark.kernels.layout import DocSpans, layout_document, layout_permutation
+from eynollah_spark.kernels.layout import DocSpans, layout_permutation
 from eynollah_spark.schemas import FLAT_OUT_SCHEMA, OUT_SCHEMA
 
-HEAVY_QUANTILE = 0.99
-#: Static heavy-doc span-count threshold for OPT-IN salting (r6: the
-#: default is no salting, see salted_repartition). A full
-#: ``approx_percentile`` pre-scan costs an extra pass over the input at
-#: every invocation — at 100 TB that is an extra table read, so the
-#: opt-in static cutoff is preferred over the sampled 'auto' path.
-DEFAULT_HEAVY_THRESHOLD = 4096
-_HEAVY_SAMPLE_FRACTION = 0.02
 
-
-def salted_repartition(df: DataFrame, partitions: int, heavy_quantile: float = HEAVY_QUANTILE,
-                       heavy_threshold: int | str | None = None) -> DataFrame:
+def salted_repartition(df: DataFrame, partitions: int,
+                       heavy_threshold: int | None = None) -> DataFrame:
     """Repartition documents by xxhash64(doc_id) over a wide bucket
     keyspace; OPTIONALLY route the media-heavy tail (span count above
     heavy_threshold) through an independent hash space (SURVEY.md §4
@@ -60,22 +57,12 @@ def salted_repartition(df: DataFrame, partitions: int, heavy_quantile: float = H
     kernel fix removed the superlinear pathology salting was defending
     against, so the dense-tail default is plain wide-keyspace hashing.
     int = static cutoff, opt in for sparse CLUMPED tails on multi-node
-    clusters where each node brings its own bandwidth; 'auto' = estimate
-    the p-`heavy_quantile` cutoff from a small TABLESAMPLE (reads a
-    fraction of the input, never a full extra pass)."""
+    clusters where each node brings its own bandwidth."""
+    width = 64 * partitions
     if heavy_threshold is None:
-        width = 64 * partitions
         return df.repartition(
             2 * partitions,
             F.pmod(F.xxhash64("doc_id"), F.lit(width)).cast("int"))
-    df = df.withColumn("_n", F.size("spans"))
-    if heavy_threshold == "auto":
-        thr = (
-            df.sample(fraction=_HEAVY_SAMPLE_FRACTION, seed=7)
-            .selectExpr(f"approx_percentile(_n, {heavy_quantile}) AS t")
-            .first()["t"]
-        )
-        heavy_threshold = int(thr if thr is not None else 1 << 30)
     # ONE scan, ONE exchange (r5; was two filter branches + union, which
     # scanned the input twice). r6 (ADVICE r5 / guide §2.5): bucket ids
     # span a keyspace 64x wider than the partition count — the r5 form
@@ -90,14 +77,13 @@ def salted_repartition(df: DataFrame, partitions: int, heavy_quantile: float = H
     # heavy docs that collides under the light hash cannot also collide
     # under the heavy one; partitions are mixed heavy+light, and the
     # balance comes from the id spread, not from heavy isolation.
-    width = 64 * partitions
     bucket = F.when(
-        F.col("_n") > heavy_threshold,
+        F.size("spans") > heavy_threshold,
         F.lit(width) + F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(width)),
     ).otherwise(F.pmod(F.xxhash64("doc_id"), F.lit(width))).cast("int")
     return (df.withColumn("_b", bucket)
             .repartition(2 * partitions, F.col("_b"))
-            .drop("_n", "_b"))
+            .drop("_b"))
 
 
 def filter_printspace(flat: DataFrame, frame=None,
@@ -163,141 +149,6 @@ def flatten(df: DataFrame) -> DataFrame:
     )
 
 
-def _batch_cols(pdf: pd.DataFrame) -> dict[str, np.ndarray]:
-    """One column->numpy extraction per Arrow batch (the per-doc loop then
-    slices views — no pandas in the hot path)."""
-    out = {}
-    for c in ("doc_id", "kind", "text", "media_ref"):
-        out[c] = pdf[c].to_numpy(dtype=object)
-    for c in ("offset", "x0", "x1", "y0", "y1", "width", "height"):
-        out[c] = pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
-    out["rtl"] = pdf["rtl"].to_numpy()
-    out["_valid"] = pdf["kind"].notna().to_numpy()
-    return out
-
-
-def _doc_spans(cols, s: int, e: int, ncl: int = 0, ncu: int = 0) -> DocSpans | None:
-    valid = cols["_valid"][s:e]
-    if not valid.all():
-        if not valid.any():
-            return None
-        sl = np.flatnonzero(valid) + s
-    else:
-        sl = slice(s, e)
-    return DocSpans(
-        kind=cols["kind"][sl], text=cols["text"][sl], media_ref=cols["media_ref"][sl],
-        offset=cols["offset"][sl].astype(np.int64),
-        x0=cols["x0"][sl], x1=cols["x1"][sl], y0=cols["y0"][sl], y1=cols["y1"][sl],
-        width=int(cols["width"][s]), height=int(cols["height"][s]),
-        rtl=bool(cols["rtl"][s]), num_col_lower=ncl, num_col_upper=ncu,
-    )
-
-
-def make_kernel(nested: bool, fail_fast: bool = True,
-                num_col_lower: int = 0, num_col_upper: int = 0):
-    """Arrow-batch kernel: processes contiguous doc runs, carries the
-    incomplete tail run to the next batch, emits ONE output frame per
-    batch (never per doc). fail_fast=False quarantines per-document
-    kernel failures (same degrade-and-continue as the arrow path)."""
-
-    def _process(pdf: pd.DataFrame, acc_flat, acc_nested):
-        cols = _batch_cols(pdf)
-        ids = cols["doc_id"]
-        change = np.flatnonzero(ids[1:] != ids[:-1]) + 1
-        starts = np.concatenate(([0], change))
-        for k in range(len(starts)):
-            s = starts[k]
-            e = starts[k + 1] if k + 1 < len(starts) else len(ids)
-            d = _doc_spans(cols, s, e, num_col_lower, num_col_upper)
-            if d is None:
-                if nested:
-                    acc_nested.append((ids[s], []))
-                continue
-            perm, out_kind = _safe_document(d, fail_fast)
-            if nested:
-                acc_nested.append((ids[s], [
-                    {"kind": out_kind[p], "text": d.text[i],
-                     "media_ref": d.media_ref[i], "offset": int(d.offset[i])}
-                    for p, i in enumerate(perm)
-                ]))
-            else:
-                n = len(perm)
-                acc_flat.append((
-                    np.full(n, ids[s], dtype=object),
-                    np.arange(n, dtype=np.int32), out_kind,
-                    d.text[perm], d.media_ref[perm],
-                    d.offset[perm].astype(np.int32),
-                ))
-
-    def _flush(acc_flat, acc_nested):
-        if nested:
-            if not acc_nested:
-                return None
-            df = pd.DataFrame({
-                "doc_id": [a[0] for a in acc_nested],
-                "out_spans": [a[1] for a in acc_nested],
-            })
-            acc_nested.clear()
-            return df
-        if not acc_flat:
-            return None
-        df = pd.DataFrame({
-            "doc_id": np.concatenate([a[0] for a in acc_flat]),
-            "ord": np.concatenate([a[1] for a in acc_flat]),
-            "kind": np.concatenate([a[2] for a in acc_flat]),
-            "text": np.concatenate([a[3] for a in acc_flat]),
-            "media_ref": np.concatenate([a[4] for a in acc_flat]),
-            "offset": np.concatenate([a[5] for a in acc_flat]),
-        })
-        acc_flat.clear()
-        return df
-
-    def kernel(iterator):
-        carry: pd.DataFrame | None = None
-        acc_flat: list = []
-        acc_nested: list = []
-        for pdf in iterator:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
-            if len(pdf) == 0:
-                continue
-            ids = pdf["doc_id"].to_numpy(dtype=object)
-            neq_last = ids != ids[-1]
-            if neq_last.any():
-                # rows of the final doc run = trailing rows equal to ids[-1]
-                trailing = int(neq_last[::-1].argmax())
-                first_of_last = len(ids) - trailing
-            else:
-                first_of_last = 0  # whole batch is one doc: carry it all
-            carry = pdf.iloc[first_of_last:]
-            head = pdf.iloc[:first_of_last]
-            if len(head):
-                _process(head, acc_flat, acc_nested)
-                out = _flush(acc_flat, acc_nested)
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry):
-            _process(carry, acc_flat, acc_nested)
-            out = _flush(acc_flat, acc_nested)
-            if out is not None:
-                yield out
-
-    return kernel
-
-
-def _safe_document(d: DocSpans, fail_fast: bool):
-    """layout_document with the same per-document quarantine as
-    _safe_permutation (fallback: input-offset order, kinds unchanged)."""
-    try:
-        return layout_document(d)
-    except Exception:
-        if fail_fast:
-            raise
-        perm = np.argsort(d.offset, kind="stable").astype(np.int64)
-        return perm, d.kind[perm].copy()
-
-
 def _safe_permutation(d: DocSpans, fail_fast: bool):
     """Per-document failure quarantine: at 10^12 docs a single pathological
     page must not kill the job (the reference's halt_fail global abort,
@@ -313,230 +164,154 @@ def _safe_permutation(d: DocSpans, fail_fast: bool):
         return perm, np.zeros(len(perm), dtype=bool)
 
 
-def make_arrow_kernel(include_payload: bool = True, fail_fast: bool = True,
-                      num_col_lower: int = 0, num_col_upper: int = 0):
-    """Arrow-native flat-output kernel (the 100TB hot path).
+def _np(col, fill=0, dtype=np.float64) -> np.ndarray:
+    return pc.fill_null(col, fill).to_numpy(zero_copy_only=False).astype(dtype)
 
-    mapInArrow instead of mapInPandas: numeric columns reach numpy
-    zero-copy, doc/kind ids become dictionary codes, and the text /
-    media_ref payload strings are NEVER materialized as Python objects —
-    the kernel computes a permutation and the output columns are built
-    with C++ pc.take / pc.if_else. This is what keeps throughput
-    kernel-bound instead of serialization-bound.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
 
-    names_out = (["doc_id", "ord", "kind", "text", "media_ref", "offset"]
-                 if include_payload else ["doc_id", "ord", "kind", "offset"])
+def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper: int):
+    """The per-document loop over a partition sorted by (doc_id, offset),
+    where every document is a contiguous run of rows. Returns (starts,
+    counts, take, marg): each document's first row, its number of output
+    spans (0 for an empty document: null-kind rows only), and for all
+    output spans in reading order their row index and marginalia flag."""
+    ids = col["doc_id"]
+    n = len(ids)
+    change = np.flatnonzero(
+        pc.not_equal(ids[1:], ids[:-1]).to_numpy(zero_copy_only=False)) + 1
+    starts = np.concatenate(([0], change))
+    ends = np.concatenate((change, [n]))
+    # kinds as dictionary codes: one Python str per distinct kind, not per row
+    kd = pc.dictionary_encode(col["kind"])
+    kind = np.asarray(kd.dictionary.to_pylist() or [""], dtype=object)[
+        _np(kd.indices, 0, np.int64)]
+    valid = pc.is_valid(col["kind"]).to_numpy(zero_copy_only=False)
+    offs = _np(col["offset"], -1, np.int64)
+    x0, x1, y0, y1 = (_np(col[c]) for c in ("x0", "x1", "y0", "y1"))
+    width = _np(col["width"], 1, np.int64)
+    height = _np(col["height"], 1, np.int64)
+    rtl = _np(col["rtl"], False, np.bool_)
+    counts = np.zeros(len(starts), dtype=np.int64)
+    take_l, marg_l = [np.empty(0, np.int64)], [np.empty(0, bool)]
+    for k, (s, e) in enumerate(zip(starts, ends)):
+        v = valid[s:e]
+        if not v.any():
+            continue  # empty document: no output spans
+        idx = np.arange(s, e) if v.all() else s + np.flatnonzero(v)
+        d = DocSpans(
+            kind=kind[idx], text=None, media_ref=None,
+            offset=offs[idx], x0=x0[idx], x1=x1[idx], y0=y0[idx], y1=y1[idx],
+            width=int(width[s]), height=int(height[s]), rtl=bool(rtl[s]),
+            num_col_lower=num_col_lower, num_col_upper=num_col_upper,
+        )
+        perm, marg = _safe_permutation(d, fail_fast)
+        take_l.append(idx[perm])
+        marg_l.append(marg)
+        counts[k] = len(perm)
+    return starts, counts, np.concatenate(take_l), np.concatenate(marg_l)
 
-    def _concat(a: "pa.RecordBatch", b: "pa.RecordBatch") -> "pa.RecordBatch":
-        t = pa.Table.from_batches([a, b]).combine_chunks()
-        batches = t.to_batches()
-        return batches[0] if len(batches) == 1 else pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
 
-    def _np(col, fill=0, dtype=np.float64):
-        return pc.fill_null(col, fill).to_numpy(zero_copy_only=False).astype(dtype)
+def _ords(counts: np.ndarray) -> np.ndarray:
+    """Reading-order rank of every output span: 0..count-1 per document."""
+    return np.arange(counts.sum()) - np.repeat(np.cumsum(counts) - counts, counts)
 
-    def _process(batch, out):
-        n = batch.num_rows
-        if n == 0:
-            return
-        col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-        id_codes = pc.dictionary_encode(col["doc_id"]).indices.to_numpy(zero_copy_only=False)
-        kd = pc.dictionary_encode(col["kind"])
-        kind_vals = np.asarray(kd.dictionary.to_pylist() or [""], dtype=object)
-        kcodes = _np(kd.indices, 0, np.int64)
-        kind_obj = kind_vals[np.clip(kcodes, 0, len(kind_vals) - 1)]
-        valid = pc.is_valid(col["kind"]).to_numpy(zero_copy_only=False)
-        offs = _np(col["offset"], -1, np.int64)
-        x0 = _np(col["x0"]); x1 = _np(col["x1"]); y0 = _np(col["y0"]); y1 = _np(col["y1"])
-        W = _np(col["width"], 1, np.int64)
-        H = _np(col["height"], 1, np.int64)
-        RT = _np(col["rtl"], False, np.bool_)
-        change = np.flatnonzero(id_codes[1:] != id_codes[:-1]) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [n]))
-        take_l, ord_l, marg_l = [], [], []
-        for s, e in zip(starts, ends):
-            v = valid[s:e]
-            if not v.any():
-                continue  # empty document: no flat output rows
-            idx = np.arange(s, e) if v.all() else s + np.flatnonzero(v)
-            d = DocSpans(
-                kind=kind_obj[idx], text=None, media_ref=None,
-                offset=offs[idx], x0=x0[idx], x1=x1[idx], y0=y0[idx], y1=y1[idx],
-                width=int(W[s]), height=int(H[s]), rtl=bool(RT[s]),
-                num_col_lower=num_col_lower, num_col_upper=num_col_upper,
-            )
-            perm, marg = _safe_permutation(d, fail_fast)
-            take_l.append(idx[perm])
-            ord_l.append(np.arange(len(perm), dtype=np.int32))
-            marg_l.append(marg)
-        if not take_l:
-            return
-        take = pa.array(np.concatenate(take_l), type=pa.int64())
-        marg = pa.array(np.concatenate(marg_l))
-        arrays = [
-            pc.take(col["doc_id"], take),
-            pa.array(np.concatenate(ord_l), type=pa.int32()),
-            pc.if_else(marg, pa.scalar("marginalia"),
-                       pc.cast(pc.take(col["kind"], take), pa.string())),
-        ]
-        if include_payload:
-            arrays += [pc.take(col["text"], take), pc.take(col["media_ref"], take)]
-        arrays.append(pc.cast(pc.take(col["offset"], take), pa.int32()))
-        out.append(pa.RecordBatch.from_arrays(arrays, names=names_out))
 
-    def kernel(batches):
-        carry = None
-        for batch in batches:
-            if carry is not None and carry.num_rows:
-                batch = _concat(carry, batch)
-            carry = None
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = pc.dictionary_encode(batch.column(0)).indices.to_numpy(zero_copy_only=False)
-            neq_last = ids != ids[-1]
-            if not neq_last.any():
-                carry = batch  # whole batch is one doc: keep accumulating
-                continue
-            first_of_last = n - int(neq_last[::-1].argmax())
-            carry = batch.slice(first_of_last)
-            out: list = []
-            _process(batch.slice(0, first_of_last), out)
-            yield from out
-        if carry is not None and carry.num_rows:
-            out = []
-            _process(carry, out)
-            yield from out
+def _out_kind(col: dict, take: pa.Array, marg: pa.Array) -> pa.Array:
+    return pc.if_else(marg, pa.scalar("marginalia"),
+                      pc.cast(pc.take(col["kind"], take), pa.string()))
 
-    return kernel
+
+def _flat_output(col, starts, counts, take, marg, include_payload):
+    """FLAT_OUT_SCHEMA rows (without text / media_ref unless
+    include_payload), one per output span."""
+    payload = ["text", "media_ref"] if include_payload else []
+    return pa.RecordBatch.from_arrays(
+        [pc.take(col["doc_id"], take), pa.array(_ords(counts), type=pa.int32()),
+         _out_kind(col, take, marg)]
+        + [pc.take(col[c], take) for c in payload]
+        + [pc.cast(pc.take(col["offset"], take), pa.int32())],
+        names=["doc_id", "ord", "kind", *payload, "offset"])
+
+
+def _nested_output(col, starts, counts, take, marg, include_payload):
+    """OUT_SCHEMA rows, one per document: out_spans lists the spans in
+    reading order ([] for an empty document)."""
+    spans = pa.StructArray.from_arrays(
+        [_out_kind(col, take, marg), pc.take(col["text"], take),
+         pc.take(col["media_ref"], take),
+         pc.cast(pc.take(col["offset"], take), pa.int32())],
+        names=["kind", "text", "media_ref", "offset"])
+    offsets = pa.array(np.concatenate(([0], np.cumsum(counts))), type=pa.int32())
+    return pa.RecordBatch.from_arrays(
+        [pc.take(col["doc_id"], pa.array(starts)),
+         pa.ListArray.from_arrays(offsets, spans)],
+        names=["doc_id", "out_spans"])
+
+
+def _check_output(col, starts, counts, take, marg, include_payload):
+    """(doc_id, n_bad) per non-empty document: the number of spans whose
+    (ord, kind) differs from the input's (expected_rank, expected_kind)."""
+    gkind = _out_kind(col, take, marg).to_numpy(zero_copy_only=False)
+    ekind = pc.take(col["expected_kind"], take).to_numpy(zero_copy_only=False)
+    erank = _np(pc.take(col["expected_rank"], take), -1, np.int64)
+    bad = (_ords(counts) != erank) | (gkind != ekind)
+    n_bad = np.bincount(np.repeat(np.arange(len(counts)), counts),
+                        weights=bad, minlength=len(counts)).astype(np.int64)
+    keep = np.flatnonzero(counts)
+    return pa.RecordBatch.from_arrays(
+        [pc.take(col["doc_id"], pa.array(starts[keep])), pa.array(n_bad[keep])],
+        names=["doc_id", "n_bad"])
+
+
+_OUTPUTS = {"flat": _flat_output, "nested": _nested_output, "check": _check_output}
 
 
 def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = True,
-                                num_col_lower: int = 0, num_col_upper: int = 0):
-    """Whole-partition Arrow kernel: accumulate the partition, establish
-    the canonical (doc_id, offset) row order with ONE Arrow C++ sort, then
-    run the same per-doc-run kernel over the sorted table.
+                                num_col_lower: int = 0, num_col_upper: int = 0,
+                                output: str = "flat"):
+    """The mapInArrow layout kernel (iterator of RecordBatch -> iterator of
+    RecordBatch): accumulate the partition, establish the canonical
+    (doc_id, offset) row order with ONE Arrow C++ sort, compute every
+    document's reading-order permutation, and build the output columnwise
+    (C++ pc.take / pc.if_else — payload strings never become Python
+    objects).
 
-    This replaces the upstream `sortWithinPartitions` stage entirely: a
-    Tungsten per-partition sort of 10^7 UnsafeRows costs seconds per level
-    and scales poorly on one box (profiled r3), while pc.sort_indices +
-    pc.take on the Arrow table costs ~0.1 s per 300k-row partition inside
-    the Python worker that already holds the data. It also DROPS the
-    sorted-files requirement from the bucketed fast path: files must only
-    be doc-complete (never split a doc), not pre-sorted.
+    output: 'flat' -> FLAT_OUT_SCHEMA rows (text / media_ref only if
+    include_payload); 'nested' -> OUT_SCHEMA rows; 'check' -> (doc_id,
+    n_bad) for the extract_reading_order self-check, with the input
+    carrying expected_kind / expected_rank. The check is the in-kernel
+    equivalent of a full-outer join of the flat output with the expected
+    rows on (doc_id, offset): the valid-span sets on both sides coincide
+    (kind IS NULL <=> the offset = -1 empty-doc marker rows), offsets are
+    unique per doc and the output is always a permutation of the valid
+    spans, so the join's per-row test reduces to (ord != expected_rank)
+    | (kind != expected_kind) per span.
 
-    Memory: one partition resident per task — bounded by the salted
-    repartition (shuffled path) or spark.sql.files.maxPartitionBytes
-    (bucketed scan path), same bound the carry logic already implied."""
-    import pyarrow as pa
-
-    base = make_arrow_kernel(include_payload=include_payload, fail_fast=fail_fast,
-                             num_col_lower=num_col_lower, num_col_upper=num_col_upper)
-
-    def kernel(batches):
-        import pyarrow.compute as pc
-
-        tabs = list(batches)
-        if not tabs:
-            return
-        t = pa.Table.from_batches(tabs).combine_chunks()
-        del tabs
-        idx = pc.sort_indices(
-            t, sort_keys=[("doc_id", "ascending"), ("offset", "ascending")])
-        t = pc.take(t, idx)
-        # route through the carry-aware base kernel: take() can return
-        # multiple chunks (2 GB string-array cap) and a doc must never be
-        # processed across an unhandled batch boundary
-        yield from base(iter(t.to_batches()))
-
-    return kernel
-
-
-def make_expected_check_kernel(fail_fast: bool = True,
-                               num_col_lower: int = 0, num_col_upper: int = 0):
-    """Self-check kernel for the extract_reading_order oracle query:
-    per document, count the spans whose extracted (ord, kind) disagrees
-    with the generator's by-construction (expected_rank, expected_kind).
-
-    This is the in-kernel equivalent of the r5 full-outer join on
-    (doc_id, offset) — provably the same count: the valid-span sets on
-    both sides coincide (kind IS NULL <=> the offset = -1 empty-doc
-    marker rows, which the kernel skips and the expected side filters),
-    offsets are unique per doc, and the kernel's output is always a
-    permutation of the valid spans, so neither side can have a row the
-    other lacks; the join's per-row `bad` predicate reduces to the
-    per-span (ord != expected_rank) | (kind != expected_kind) test.
-    Computing it where the document already lives removes two of the
-    three corpus generations and both join shuffles from the r5 plan
-    (guide §2.4 / §8: decide with the data you already hold).
-
-    Expects the columns _SCAN_COLS_NARROW + expected_kind/expected_rank;
-    like make_partition_arrow_kernel it sorts the resident partition by
-    (doc_id, offset) itself, so the input only needs doc-complete
-    partitions, not sorted rows."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    The in-kernel sort replaces a Spark sort-within-partitions stage (a
+    Tungsten sort of 10^7 UnsafeRows costs seconds per level and scales
+    poorly on one box, profiled r3; pc.sort_indices + pc.take costs ~0.1 s
+    per 300k-row partition), and input only needs to be doc-complete per
+    partition: neither sorted nor batched at doc boundaries. Memory: one
+    partition resident per task — bounded by the repartition (shuffled
+    paths) or by the file size (bucketed scan path)."""
+    build = _OUTPUTS[output]
 
     def kernel(batches):
-        tabs = list(batches)
-        if not tabs:
+        batches = list(batches)
+        if not batches:
             return
-        t = pa.Table.from_batches(tabs).combine_chunks()
-        del tabs
+        t = pa.Table.from_batches(batches).combine_chunks()
+        del batches
         if t.num_rows == 0:
             return
-        t = pc.take(t, pc.sort_indices(
+        t = t.take(pc.sort_indices(
             t, sort_keys=[("doc_id", "ascending"), ("offset", "ascending")]))
-        col = {name: t.column(i) for i, name in enumerate(t.schema.names)}
-
-        def _np(c, fill, dtype):
-            return pc.fill_null(c, fill).to_numpy(zero_copy_only=False).astype(dtype)
-
-        ids = col["doc_id"].to_numpy(zero_copy_only=False)
-        kind = col["kind"].to_numpy(zero_copy_only=False)
-        ekind = col["expected_kind"].to_numpy(zero_copy_only=False)
-        erank = _np(col["expected_rank"], -1, np.int64)
-        valid = pc.is_valid(col["kind"]).to_numpy(zero_copy_only=False)
-        offs = _np(col["offset"], -1, np.int64)
-        x0 = _np(col["x0"], 0, np.float64); x1 = _np(col["x1"], 0, np.float64)
-        y0 = _np(col["y0"], 0, np.float64); y1 = _np(col["y1"], 0, np.float64)
-        W = _np(col["width"], 1, np.int64); H = _np(col["height"], 1, np.int64)
-        RT = _np(col["rtl"], False, np.bool_)
-        change = np.flatnonzero(ids[1:] != ids[:-1]) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(ids)]))
-        out_ids, out_bad = [], []
-        for s, e in zip(starts, ends):
-            v = valid[s:e]
-            if not v.any():
-                continue  # empty document: no rows on either join side
-            idx = np.arange(s, e) if v.all() else s + np.flatnonzero(v)
-            d = DocSpans(
-                kind=kind[idx], text=None, media_ref=None,
-                offset=offs[idx], x0=x0[idx], x1=x1[idx], y0=y0[idx], y1=y1[idx],
-                width=int(W[s]), height=int(H[s]), rtl=bool(RT[s]),
-                num_col_lower=num_col_lower, num_col_upper=num_col_upper,
-            )
-            perm, marg = _safe_permutation(d, fail_fast)
-            m = len(perm)
-            ord_in = np.empty(m, dtype=np.int64)
-            ord_in[perm] = np.arange(m)
-            marg_in = np.empty(m, dtype=bool)
-            marg_in[perm] = marg
-            gkind = np.where(marg_in, "marginalia", kind[idx])
-            bad = int(np.count_nonzero(
-                (ord_in != erank[idx]) | (gkind != ekind[idx])))
-            out_ids.append(ids[s])
-            out_bad.append(bad)
-        if out_ids:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=pa.string()),
-                 pa.array(out_bad, type=pa.int64())],
-                names=["doc_id", "n_bad"])
+        col = {name: t.column(name).combine_chunks() for name in t.column_names}
+        starts, counts, take, marg = _permutations(
+            col, fail_fast, num_col_lower, num_col_upper)
+        out = build(col, starts, counts, pa.array(take), pa.array(marg),
+                    include_payload)
+        if out.num_rows:
+            yield out
 
     return kernel
 
@@ -564,49 +339,26 @@ def extract(df: DataFrame, partitions: int | None = None, nested: bool = True,
         # CLI's page-extraction step; --ignore-page-extraction skips it)
         flat = filter_printspace(flat, margin_frac=printspace_margin,
                                  keep_null_spans=True)
-    flat = flat.sortWithinPartitions("doc_id", "offset")  # canonical per-doc row order -> bitwise-deterministic output
-    if nested:
-        return flat.mapInPandas(
-            make_kernel(True, fail_fast=fail_fast, num_col_lower=num_col_lower,
-                        num_col_upper=num_col_upper), schema=OUT_SCHEMA)
-    return flat.mapInArrow(
-        make_arrow_kernel(fail_fast=fail_fast, num_col_lower=num_col_lower,
-                          num_col_upper=num_col_upper), schema=FLAT_OUT_SCHEMA)
+    kern = make_partition_arrow_kernel(
+        fail_fast=fail_fast, num_col_lower=num_col_lower,
+        num_col_upper=num_col_upper, output="nested" if nested else "flat")
+    return flat.mapInArrow(kern, schema=OUT_SCHEMA if nested else FLAT_OUT_SCHEMA)
 
 
 def extract_flat_input(flat: DataFrame, partitions: int | None = None,
-                       nested: bool = False, strategy: str = "join",
-                       assume_doc_partitioned: bool = False,
                        fail_fast: bool = True,
                        num_col_lower: int = 0, num_col_upper: int = 0) -> DataFrame:
     """Same pipeline for already-flat span rows (doc_id, width, height,
     rtl, kind, text, media_ref, offset, x0..y1) — used when the corpus is
     generated distributed, skipping the nest/flatten round-trip.
 
-    strategy='join' (permutation join, THE DEFAULT since r2): the kernel
-    sees only the narrow numeric projection and emits (doc_id, ord,
-    kind, offset); the text / media_ref payload joins back JVM-side
-    (shuffled hash join — both sides hash-shuffle on the keys, no sort)
-    on (doc_id, offset) and never crosses into Python at all — the
-    wide-payload plan for 100 TB inputs.
-    strategy='inline': payload strings ride through the kernel stage
-    (permuted C++-side, but they still cross the JVM<->python socket).
-    With a bucketed input (assume_doc_partitioned) inline is the
-    ZERO-shuffle plan: scan -> kernel -> sink, nothing else.
-
-    Since r3 the canonical (doc_id, offset) row order is established
-    INSIDE the kernel (make_partition_arrow_kernel: one Arrow C++ sort
-    of the resident partition) instead of a `sortWithinPartitions`
-    stage — a Tungsten sort of 10^7 UnsafeRows per level was the single
-    largest non-kernel cost and scales poorly on one box.
-
-    assume_doc_partitioned: the input is already doc-complete per file
-    (an Iceberg table bucketed by doc_id — the recommended deployment
-    shape) -> skip the repartition shuffle entirely. The caller must
-    guarantee one file never splits a document AND files are smaller
-    than spark.sql.files.maxPartitionBytes (otherwise a file split could
-    separate a document's rows). Files do NOT need to be sorted — the
-    in-kernel sort canonicalizes.
+    Permutation join: the kernel sees only the narrow numeric projection
+    and emits (doc_id, ord, kind, offset); the text / media_ref payload
+    joins back JVM-side (shuffled hash join — both sides hash-shuffle on
+    the keys, no sort) on (doc_id, offset) and never crosses into Python
+    at all — the wide-payload plan for 100 TB inputs. For input that is
+    already doc-complete per file (a table bucketed by doc_id) use
+    extract_from_parquet_files, which needs no shuffle at all.
     """
     from eynollah_spark.packaging import ensure_distributed
 
@@ -614,39 +366,20 @@ def extract_flat_input(flat: DataFrame, partitions: int | None = None,
     ensure_distributed(spark)
     if partitions is None:
         partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if nested:
-        f = flat.select("doc_id", "width", "height", "rtl", "kind", "text",
-                        "media_ref", "offset", "x0", "x1", "y0", "y1")
-        f = f.repartition(partitions, F.xxhash64("doc_id"))
-        f = f.sortWithinPartitions("doc_id", "offset")
-        return f.mapInPandas(
-            make_kernel(True, fail_fast=fail_fast, num_col_lower=num_col_lower,
-                        num_col_upper=num_col_upper), schema=OUT_SCHEMA)
-    if strategy == "join":
-        narrow = flat.select("doc_id", "width", "height", "rtl", "kind",
-                             "offset", "x0", "x1", "y0", "y1")
-        if not assume_doc_partitioned:
-            narrow = narrow.repartition(partitions, F.xxhash64("doc_id"))
-        perm = narrow.mapInArrow(
-            make_partition_arrow_kernel(include_payload=False, fail_fast=fail_fast,
-                                        num_col_lower=num_col_lower,
-                                        num_col_upper=num_col_upper),
-            schema="doc_id string, ord int, kind string, offset int")
-        payload = flat.select("doc_id", "offset", "text", "media_ref")
-        # shuffle_hash: build a hash map per partition instead of sorting
-        # BOTH 10^9-row sides (sort-merge); measured ~20% faster here and
-        # strictly less work at scale. Spark >=3.1 hash joins can spill.
-        return perm.join(payload.hint("shuffle_hash"),
-                         ["doc_id", "offset"], "left").select(
-            "doc_id", "ord", "kind", "text", "media_ref", "offset")
-    f = flat.select("doc_id", "width", "height", "rtl", "kind", "text",
-                    "media_ref", "offset", "x0", "x1", "y0", "y1")
-    if not assume_doc_partitioned:
-        f = f.repartition(partitions, F.xxhash64("doc_id"))
-    return f.mapInArrow(make_partition_arrow_kernel(fail_fast=fail_fast,
-                                                    num_col_lower=num_col_lower,
-                                                    num_col_upper=num_col_upper),
-                        schema=FLAT_OUT_SCHEMA)
+    narrow = flat.select("doc_id", "width", "height", "rtl", "kind",
+                         "offset", "x0", "x1", "y0", "y1")
+    perm = narrow.repartition(partitions, F.xxhash64("doc_id")).mapInArrow(
+        make_partition_arrow_kernel(include_payload=False, fail_fast=fail_fast,
+                                    num_col_lower=num_col_lower,
+                                    num_col_upper=num_col_upper),
+        schema="doc_id string, ord int, kind string, offset int")
+    payload = flat.select("doc_id", "offset", "text", "media_ref")
+    # shuffle_hash: build a hash map per partition instead of sorting
+    # BOTH 10^9-row sides (sort-merge); measured ~20% faster here and
+    # strictly less work at scale. Spark >=3.1 hash joins can spill.
+    return perm.join(payload.hint("shuffle_hash"),
+                     ["doc_id", "offset"], "left").select(
+        "doc_id", "ord", "kind", "text", "media_ref", "offset")
 
 
 #: input columns the kernel needs (column projection for the task-side scan)
@@ -678,8 +411,8 @@ def extract_from_parquet_files(spark, paths: list[str], partitions: int | None =
     caller guarantees what the bucketed contract already required: every
     file is doc-complete. Files need not be sorted (in-kernel sort).
 
-    Correctness equivalence with extract_flat_input(assume_doc_partitioned)
-    is pinned by the bench checksum and tests/test_pipeline_spark.py."""
+    Correctness equivalence with extract_flat_input is pinned by the bench
+    checksum and tests/test_pipeline_spark.py."""
     from eynollah_spark.packaging import ensure_distributed
 
     ensure_distributed(spark)

@@ -1507,21 +1507,22 @@ def _extract_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (doc_id, offset) just to compare rows that are born colocated —
     corpus_flat_spark generates each document wholly inside one task.
     The comparison now runs inside the extraction kernel itself
-    (pipeline.make_expected_check_kernel, same per-row bad count — see
-    its docstring for the equivalence argument), so the plan is ONE
-    generation pass -> kernel -> tiny bucket aggregate, zero joins and
-    zero data shuffles (guide §2.4/§8)."""
+    (pipeline.make_partition_arrow_kernel(output='check'), same per-row
+    bad count — see its docstring for the equivalence argument), so the
+    plan is ONE generation pass -> kernel -> tiny bucket aggregate, zero
+    joins and zero data shuffles (guide §2.4/§8)."""
     from pyspark.sql import functions as F
 
     from eynollah_spark.corpus import corpus_flat_spark
-    from eynollah_spark.pipeline import make_expected_check_kernel
+    from eynollah_spark.pipeline import make_partition_arrow_kernel
 
     n = max(200, int(100_000 * sf_of(sf_dir)))
     flat = corpus_flat_spark(spark, n)
     per_doc = flat.select(
         "doc_id", "width", "height", "rtl", "kind", "offset",
         "x0", "x1", "y0", "y1", "expected_kind", "expected_rank",
-    ).mapInArrow(make_expected_check_kernel(), schema="doc_id string, n_bad long")
+    ).mapInArrow(make_partition_arrow_kernel(output="check"),
+                 schema="doc_id string, n_bad long")
     bucket = (F.substring("doc_id", 4, 8).cast("int") % 10)
     return (per_doc.groupBy(bucket.alias("bucket"))
             .agg(F.sum("n_bad").cast("bigint").alias("n_bad")))

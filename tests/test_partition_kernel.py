@@ -1,0 +1,106 @@
+"""Spark-free gates on the whole-partition Arrow kernel
+(pipeline.make_partition_arrow_kernel): the pinned 3000-doc permutation
+hash, independence from how a partition arrives in batches, and the
+nested output agreeing with the flat one."""
+
+import hashlib
+
+import numpy as np
+import pyarrow as pa
+import pytest
+
+from eynollah_spark.corpus import gen_doc
+from eynollah_spark.pipeline import make_partition_arrow_kernel
+
+#: sha256 over the flat output of docs 0..2999 (seed 42), see _digest
+GOLDEN_ROWS = 279117
+GOLDEN_SHA256 = "0cb0f2a8fc7a6236a0e877339ed6623c6b6167ea8b3e8c75cde8db8f17a27bd4"
+
+_INT = ("offset", "x0", "x1", "y0", "y1")
+_STR = ("kind", "text", "media_ref")
+
+
+def _partition(n_docs: int, seed: int = 42) -> pa.Table:
+    """Flat span rows of docs 0..n_docs-1, each doc's rows in generator
+    (shuffled) order; an empty doc is one null-kind row with offset -1."""
+    cols = {k: [] for k in ("doc_id", "width", "height", "rtl",
+                            *_STR, *_INT)}
+    for i in range(n_docs):
+        arrs, meta = gen_doc(i, seed)
+        n = len(arrs["kind"])
+        if n == 0:
+            n = 1
+            arrs = {k: np.array([None], dtype=object) for k in _STR}
+            arrs.update({k: np.zeros(1, dtype=np.int64) for k in _INT})
+            arrs["offset"] = np.array([-1])
+        cols["doc_id"].append(np.full(n, meta["doc_id"], dtype=object))
+        for k in ("width", "height", "rtl"):
+            cols[k].append(np.full(n, meta[k]))
+        for k in (*_STR, *_INT):
+            cols[k].append(arrs[k])
+    cat = {k: np.concatenate(v) for k, v in cols.items()}
+    types = {"doc_id": pa.string(), "rtl": pa.bool_(),
+             **{k: pa.string() for k in _STR},
+             **{k: pa.int32() for k in ("width", "height", *_INT)}}
+    return pa.table({k: pa.array(v, type=types[k]) for k, v in cat.items()})
+
+
+def _first_docs(t: pa.Table, n_docs: int) -> pa.Table:
+    ids = t.column("doc_id").to_numpy(zero_copy_only=False)
+    return t.slice(0, int(np.searchsorted(ids, f"doc{n_docs:08d}")))
+
+
+def _run(batches, **kw) -> pa.Table:
+    return pa.Table.from_batches(list(make_partition_arrow_kernel(**kw)(iter(batches))))
+
+
+def _digest(out: pa.Table) -> str:
+    out = out.sort_by([("doc_id", "ascending"), ("ord", "ascending")])
+    h = hashlib.sha256()
+    for r in out.to_pylist():
+        h.update(f"{r['doc_id']}\t{r['ord']}\t{r['kind']}\t{r['text']}\t"
+                 f"{r['media_ref']}\t{r['offset']}\n".encode())
+    return h.hexdigest()
+
+
+@pytest.fixture(scope="module")
+def partition():
+    return _partition(3000)
+
+
+def test_permutation_hash_pinned(partition):
+    """The deletion contract: the reading order of 3000 generated docs is
+    bit-identical to the pinned value."""
+    out = _run(partition.to_batches(), include_payload=True)
+    assert out.num_rows == GOLDEN_ROWS
+    assert _digest(out) == GOLDEN_SHA256
+
+
+def test_batch_boundaries_do_not_matter(partition):
+    """One batch, 7-row batches that split documents, and shuffled rows
+    all give the same output (docs 99, 198 and 399 are empty)."""
+    t = _first_docs(partition, 400)
+    whole = _run(t.combine_chunks().to_batches())
+    split = _run(t.to_batches(max_chunksize=7))
+    shuffled = _run(t.take(np.random.default_rng(0).permutation(t.num_rows))
+                    .to_batches(max_chunksize=1000))
+    assert whole.num_rows > 0
+    assert whole.equals(split)
+    assert whole.equals(shuffled)
+
+
+def test_nested_output_regroups_flat_output(partition):
+    """output='nested' is the flat output grouped per doc in ord order,
+    with an empty out_spans list for each empty doc."""
+    t = _first_docs(partition, 200)
+    flat = _run(t.to_batches()).to_pylist()
+    nested = _run(t.to_batches(), output="nested").to_pylist()
+    ids = list(dict.fromkeys(t.column("doc_id").to_pylist()))
+    assert [r["doc_id"] for r in nested] == ids
+    by_doc = {d: [] for d in ids}
+    for r in flat:
+        by_doc[r["doc_id"]].append(
+            {k: r[k] for k in ("kind", "text", "media_ref", "offset")})
+    assert {r["doc_id"]: r["out_spans"] for r in nested} == by_doc
+    assert sum(not r["out_spans"] for r in nested) == 2  # docs 99 and 198
+

@@ -42,13 +42,6 @@ def test_extract_flat_input_matches(spark, corpus):
     assert _mismatches(out, expected_spark(corpus)) == 0
 
 
-def test_extract_join_strategy_matches(spark, corpus):
-    # permutation-join plan: payload strings never cross into Python
-    out = extract_flat_input(corpus.drop("expected_kind", "expected_rank"),
-                             partitions=8, strategy="join")
-    assert _mismatches(out, expected_spark(corpus)) == 0
-
-
 def test_nested_output_preserves_empty_docs(spark, corpus):
     docs = nest_corpus(corpus)
     nested = extract(docs, partitions=8, nested=True)
@@ -202,14 +195,14 @@ _CHECK_COLS = ["doc_id", "width", "height", "rtl", "kind", "offset",
 
 def test_expected_check_kernel_equals_join_check(spark, corpus):
     """r6: extract_reading_order's self-check moved inside the kernel
-    (make_expected_check_kernel). The per-doc mismatch count must equal
-    the r5 full-outer-join formulation exactly — zero on the clean
+    (make_partition_arrow_kernel(output="check")). The per-doc mismatch
+    count must equal the r5 full-outer-join formulation exactly — zero on the clean
     corpus, and the same nonzero counts under injected corruption."""
-    from eynollah_spark.pipeline import make_expected_check_kernel
+    from eynollah_spark.pipeline import make_partition_arrow_kernel
 
     def kernel_bad(flat):
         return (flat.select(*_CHECK_COLS)
-                .mapInArrow(make_expected_check_kernel(),
+                .mapInArrow(make_partition_arrow_kernel(output="check"),
                             schema="doc_id string, n_bad long"))
 
     def join_bad(flat):

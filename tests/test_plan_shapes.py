@@ -40,20 +40,14 @@ def test_extraction_plan_has_single_shuffle(spark):
     from eynollah_spark.pipeline import extract_flat_input
 
     flat = corpus_flat_spark(spark, 50)
-    # inline strategy: exactly the kernel repartition (plus the corpus
-    # generator's own exchange); any more betrays an accidental shuffle
-    out = extract_flat_input(flat.drop("expected_kind", "expected_rank"),
-                             partitions=4, strategy="inline")
-    p = _plan(out)
-    assert p.count("Exchange") <= 2
-    assert "MapInArrow" in p or "ArrowEvalPython" in p or "MapInPandas" in p
-    # join strategy (default): kernel repartition + the two join-side
-    # exchanges, and the payload join must be a shuffled HASH join (no
-    # sort of either 10^9-row side), never a nested-loop/cartesian
+    # kernel repartition + the two join-side exchanges (plus the corpus
+    # generator's own), and the payload join must be a shuffled HASH join
+    # (no sort of either 10^9-row side), never a nested-loop/cartesian
     outj = extract_flat_input(flat.drop("expected_kind", "expected_rank"),
-                              partitions=4, strategy="join")
+                              partitions=4)
     pj = _plan(outj)
     assert pj.count("Exchange") <= 4
+    assert "MapInArrow" in pj
     assert "ShuffledHashJoin" in pj
     assert "CartesianProduct" not in pj and "BroadcastNestedLoop" not in pj
 

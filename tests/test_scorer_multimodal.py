@@ -146,30 +146,6 @@ def test_refine_kinds_with_mlp_scorer(spark):
     assert refined.filter(F.col("kind").isin("image", "separator", "table")).count() == base
 
 
-def test_onnx_scorer_numpy_fallback_rejects_garbage_accepts_model():
-    """r4: OnnxScorer no longer import-gates — without onnxruntime it
-    executes the model through the in-repo numpy ONNX runtime. Garbage
-    bytes fail loudly (not an ImportError), real model bytes work."""
-    import os
-
-    import pandas as pd
-    import pytest
-
-    from eynollah_spark.scorer import OnnxScorer
-
-    pdf = pd.DataFrame({
-        "kind": ["text"], "x0": [0], "x1": [10], "y0": [0], "y1": [10],
-        "width": [100], "height": [100]})
-    with pytest.raises(ValueError):
-        OnnxScorer(model_bytes=b"not a model").score_batch(pdf)
-    path = os.path.join(os.path.dirname(__file__), "..",
-                        "eynollah_spark", "models", "region_kind_mlp.onnx")
-    with open(path, "rb") as f:
-        out = OnnxScorer(model_bytes=f.read()).score_batch(pdf)
-    assert set(out.columns) == {"p_text", "p_heading", "p_drop_capital"}
-    assert len(out) == 1
-
-
 def test_binarize_enhance_kernels(spark):
     """B7/B8 hooks (F2/F3 CLI surfaces): deterministic batch kernels over
     the media table — real Arrow plumbing, stubbed codec."""
