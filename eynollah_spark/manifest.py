@@ -116,19 +116,26 @@ def read_as_of(spark: SparkSession, out_path: str,
     assign = _assignment(out_path, as_of=snapshot_id)
     if not assign:
         raise ValueError(f"no snapshots at or before {snapshot_id!r} in {out_path}")
+    recorded = {s["snapshot_id"]: s["parts"] for s in snapshots(out_path)}
     by_sid: dict[int, list[int]] = {}
     for p, sid in assign.items():
         by_sid.setdefault(sid, []).append(p)
     frames = []
     for sid, parts in sorted(by_sid.items()):
-        # ADVICE r5 (medium): run_extraction records EVERY bucket of a
-        # batch in the manifest, but partitionBy materializes no
-        # directory for a bucket that got zero docs — a missing part dir
-        # is an EMPTY relation, not an error. Skip absent paths instead
-        # of letting the reader throw PATH_NOT_FOUND.
-        paths = [pp for p in sorted(parts)
-                 if os.path.isdir(pp := os.path.join(_snap_dir(out_path, sid),
-                                                     f"part={p}"))]
+        # run_extraction records EVERY bucket of a batch in the manifest,
+        # but partitionBy materializes no directory for a bucket that got
+        # zero docs — a missing part dir the manifest recorded as empty is
+        # an EMPTY relation. One it recorded docs for was lost out of
+        # band: raise instead of silently serving a smaller table.
+        paths = []
+        for p in sorted(parts):
+            pp = os.path.join(_snap_dir(out_path, sid), f"part={p}")
+            if os.path.isdir(pp):
+                paths.append(pp)
+            elif (n := recorded[sid][str(p)]["docs"]) > 0:
+                raise FileNotFoundError(
+                    f"snapshot {sid} recorded {n} docs in part {p}, "
+                    f"but {pp} is missing")
         if paths:
             frames.append(
                 spark.read.option("basePath", _snap_dir(out_path, sid))

@@ -9,6 +9,7 @@ semantics, works in local and cluster mode.
 from __future__ import annotations
 
 import os
+import warnings
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -69,7 +70,16 @@ def ensure_distributed(spark: SparkSession) -> None:
         # mkdir inside the zip path)
         _shipped.add(key)
         return
-    zip_path = build_zip()
+    try:
+        zip_path = build_zip()
+    except OSError as e:
+        # e.g. an unwritable cache dir. Local mode does not need the zip
+        # when the workers find the package on their own path (a run from
+        # the checkout root, or an installed package).
+        warnings.warn(f"eynollah_spark: package zip not shipped ({e}); "
+                      "workers must import eynollah_spark from their path")
+        _shipped.add(key)
+        return
     try:
         # ADVICE r5: match the EXACT content-addressed basename, not any
         # '*eynollah_spark*.zip' — a session that shipped hash A must

@@ -165,3 +165,26 @@ def test_read_as_of_tolerates_empty_buckets(spark, tmp_path):
     empty = read_as_of(spark, out2)
     assert empty.count() == 0
     assert "doc_id" in empty.columns and "part" in empty.columns
+
+
+def test_read_as_of_raises_on_deleted_nonempty_part(spark, tmp_path):
+    """A part=<p> dir the manifest recorded with docs > 0 that is gone
+    from disk is data loss, not an empty bucket: read_as_of names the
+    missing path instead of serving a smaller table. Snapshots that do
+    not serve that part still read."""
+    import re
+    import shutil
+
+    from eynollah_spark.manifest import _snap_dir, read_as_of, snapshots
+
+    out = str(tmp_path / "lost")
+    docs = nest_corpus(corpus_flat_spark(spark, 40, partitions=2))
+    run_extraction(docs, out, n_parts=4, partitions=2, parts_per_batch=2)
+    n_v1 = read_as_of(spark, out, snapshot_id=1).count()
+    last = snapshots(out)[-1]
+    p = next(int(p) for p, m in last["parts"].items() if m["docs"] > 0)
+    lost = os.path.join(_snap_dir(out, last["snapshot_id"]), f"part={p}")
+    shutil.rmtree(lost)
+    with pytest.raises(FileNotFoundError, match=re.escape(lost)):
+        read_as_of(spark, out)
+    assert read_as_of(spark, out, snapshot_id=1).count() == n_v1

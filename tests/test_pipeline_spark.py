@@ -2,6 +2,7 @@
 table -> extract -> span-sequence equality vs the by-construction oracle."""
 
 import shutil
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -275,3 +276,44 @@ def test_salting_default_off_matches_forced_off(spark, corpus):
     opted = salted_repartition(docs, partitions=8, heavy_threshold=400)
     p_opt = opted._jdf.queryExecution().executedPlan().toString()
     assert "size(spans" in p_opt
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13),
+                    reason="3.13's zipimport reads the directory lazily")
+def test_workers_run_the_stat_keyed_zipimport_cache(spark):
+    """The package init replaces zipimport's per-task directory re-read in
+    every Python worker that runs our code: each of 16 tasks that imports
+    from eynollah_spark reports the package's invalidate_caches."""
+    from eynollah_spark.packaging import ensure_distributed
+
+    ensure_distributed(spark)
+
+    def probe(batches):
+        import zipimport
+
+        import pyarrow as pa
+
+        from eynollah_spark import KERNEL_VERSION  # noqa: F401
+
+        for _ in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"m": [zipimport.zipimporter.invalidate_caches.__module__]})
+
+    rows = (spark.range(16, numPartitions=16)
+            .mapInArrow(probe, "m string").collect())
+    assert [r["m"] for r in rows] == ["eynollah_spark"] * 16
+
+
+def test_ensure_distributed_survives_unbuildable_zip(spark, monkeypatch):
+    """An unwritable zip cache dir must not fail the job: shipping falls
+    back to nothing, with one warning."""
+    from eynollah_spark import packaging
+
+    def unwritable(cache_dir=None):
+        raise PermissionError("read-only cache dir")
+
+    monkeypatch.setattr(packaging, "_shipped", set())
+    monkeypatch.setattr(packaging, "build_zip", unwritable)
+    with pytest.warns(UserWarning, match="package zip not shipped"):
+        packaging.ensure_distributed(spark)
+    assert id(spark.sparkContext) in packaging._shipped
