@@ -3,11 +3,10 @@
 Stage plan (explicit shuffle boundaries, SURVEY.md §3.1 lifecycle):
 
   scan (nested documents table; column-pruned: media payloads never read)
-    -> wide-keyspace repartition on xxhash64(doc_id); heavy-tail salting
-       is OPT-IN (r6: on a shared-bandwidth box spreading the
-       bandwidth-bound heavy kernels costs more than it saves — see
-       salted_repartition; AQE skew handling does not apply to UDF
-       stages either way)
+    -> repartition on pmod(xxhash64(doc_id), 64 * partitions): one hash
+       exchange over a keyspace 64x wider than the partition count, so
+       every partition fills (AQE skew handling does not apply to UDF
+       stages)
     -> flatten (posexplode, narrow — preserves partitioning)
     -> mapInArrow(make_partition_arrow_kernel)  (the task holds its whole
        partition and sorts it ONCE by (doc_id, offset) with an Arrow C++
@@ -37,53 +36,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from eynollah_spark.kernels.layout import DocSpans, layout_permutation
 from eynollah_spark.schemas import FLAT_OUT_SCHEMA, OUT_SCHEMA
-
-
-def salted_repartition(df: DataFrame, partitions: int,
-                       heavy_threshold: int | None = None) -> DataFrame:
-    """Repartition documents by xxhash64(doc_id) over a wide bucket
-    keyspace; OPTIONALLY route the media-heavy tail (span count above
-    heavy_threshold) through an independent hash space (SURVEY.md §4
-    'salted repartition'; replaces the reference's fork-pool page
-    scheduling, eynollah.py:1994-2032).
-
-    heavy_threshold: None = salting OFF (r6 DEFAULT, VERDICT r5 item 2):
-    on the recorded skew bench the salted variant consistently burned
-    ~20% more executor CPU than unsalted at identical per-partition
-    balance — the heavy docs' kernel is memory-bandwidth-bound, and
-    SPREADING them raises the number of heavy kernels running
-    concurrently on one box, so every one of them slows down (the same
-    shared-bandwidth ceiling the e2e control hits). The r5 chunked-CC
-    kernel fix removed the superlinear pathology salting was defending
-    against, so the dense-tail default is plain wide-keyspace hashing.
-    int = static cutoff, opt in for sparse CLUMPED tails on multi-node
-    clusters where each node brings its own bandwidth."""
-    width = 64 * partitions
-    if heavy_threshold is None:
-        return df.repartition(
-            2 * partitions,
-            F.pmod(F.xxhash64("doc_id"), F.lit(width)).cast("int"))
-    # ONE scan, ONE exchange (r5; was two filter branches + union, which
-    # scanned the input twice). r6 (ADVICE r5 / guide §2.5): bucket ids
-    # span a keyspace 64x wider than the partition count — the r5 form
-    # hashed `partitions` distinct ids into 2*partitions partitions, so
-    # by balls-in-bins ~1/e of partitions stayed EMPTY and colliding ids
-    # stacked (measured on the 1%-heavy-tail bench corpus: 100/256
-    # partitions non-empty, max/mean span load 11.6 unsalted / 8.1
-    # salted — the salted default LOST to unsalted in wall clock, r5
-    # skew artifact). With 64x ids every partition fills and max/mean
-    # drops to 6.7 unsalted / 4.6 salted. Heavy docs still draw from an
-    # independent hash (seed 1) in their own id range, so a clump of
-    # heavy docs that collides under the light hash cannot also collide
-    # under the heavy one; partitions are mixed heavy+light, and the
-    # balance comes from the id spread, not from heavy isolation.
-    bucket = F.when(
-        F.size("spans") > heavy_threshold,
-        F.lit(width) + F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(width)),
-    ).otherwise(F.pmod(F.xxhash64("doc_id"), F.lit(width))).cast("int")
-    return (df.withColumn("_b", bucket)
-            .repartition(2 * partitions, F.col("_b"))
-            .drop("_b"))
 
 
 def filter_printspace(flat: DataFrame, frame=None,
@@ -317,7 +269,7 @@ def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = 
 
 
 def extract(df: DataFrame, partitions: int | None = None, nested: bool = True,
-            heavy_threshold: int | None = None, fail_fast: bool = True,
+            fail_fast: bool = True,
             num_col_lower: int = 0, num_col_upper: int = 0,
             printspace_margin: float = 0.0) -> DataFrame:
     """documents (nested) -> ordered out_spans.
@@ -332,7 +284,14 @@ def extract(df: DataFrame, partitions: int | None = None, nested: bool = True,
     ensure_distributed(spark)
     if partitions is None:
         partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    df = salted_repartition(df, partitions, heavy_threshold=heavy_threshold)
+    # bucket ids span 64x the partition count: hashing only `partitions`
+    # distinct ids into 2*partitions partitions left ~1/e of them empty
+    # by balls-in-bins (r6). The media-heavy tail is not salted into its
+    # own hash space: that measured +22% executor CPU on one box, as the
+    # heavy kernels are memory-bandwidth-bound.
+    df = df.repartition(
+        2 * partitions,
+        F.pmod(F.xxhash64("doc_id"), F.lit(64 * partitions)).cast("int"))
     flat = flatten(df)
     if printspace_margin > 0:
         # B9 page-frame filter as a pre-kernel codegen predicate (the

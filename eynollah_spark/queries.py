@@ -83,8 +83,72 @@ def load_views(spark: SparkSession, sf_dir: str, *names: str,
 
 
 def sf_of(sf_dir: str) -> float:
-    m = re.search(r"sf([0-9.]+)", sf_dir)
+    """Scale factor named by the LAST path component (``.../sf0.1`` ->
+    0.1); an ``sf<number>`` higher up the path is not this table set's."""
+    m = re.fullmatch(r"sf([0-9]+(?:\.[0-9]+)?)",
+                     sf_dir.rstrip("/").rsplit("/", 1)[-1])
     return float(m.group(1)) if m else 0.01
+
+
+def _table_stat(sf_dir: str, table: str) -> tuple:
+    """(path, st_mtime_ns, st_size) of the table's parquet file, or of
+    every file in it when the table is a directory: an in-place
+    overwrite changes it."""
+    import os
+
+    path = f"{sf_dir}/{table}.parquet"
+    paths = ([os.path.join(path, f) for f in sorted(os.listdir(path))]
+             if os.path.isdir(path) else [path])
+    return tuple((p, st.st_mtime_ns, st.st_size)
+                 for p in paths for st in [os.stat(p)])
+
+
+def _session_cached(table: str):
+    """Session cache for the materialize-once Spark queries.
+
+    The decorated ``build(spark)`` registers cached temp views over
+    `table` and returns ``(final, tmp, keep)``: the result DataFrame,
+    the per-call intermediates, and the handles kept cached across
+    calls. Each call unpersists `tmp`. While the key (same live
+    SparkSession, sf_dir and `_table_stat`) holds, it re-persists `tmp`
+    (recomputed from `keep` on the next action) and returns the
+    already-analyzed `final`: re-analysing the long SQL texts costs
+    ~0.7 s of driver time. Otherwise it unpersists `keep` and rebuilds;
+    a new scan of the same path is `sameResult` to the old one, so a
+    still-cached old relation would be served in its place. Handles
+    may belong to a stopped session, whose unpersist raises."""
+    import functools
+
+    from pyspark import StorageLevel
+
+    def unpersist(handles):
+        for h in handles:
+            try:
+                h.unpersist()
+            except Exception:
+                pass
+
+    def wrap(build):
+        state = {}
+
+        @functools.wraps(build)
+        def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+            load_views(spark, sf_dir, table, scan_floor=True)
+            key = (sf_dir, _table_stat(sf_dir, table))
+            if state:
+                unpersist(state["tmp"])
+                if state["spark"] is spark and state["key"] == key:
+                    for h in state["tmp"]:
+                        h.persist(StorageLevel.MEMORY_AND_DISK)
+                    return state["final"]
+                unpersist(state["keep"])
+            final, tmp, keep = build(spark)
+            state.update(spark=spark, key=key, final=final, tmp=tmp, keep=keep)
+            return final
+
+        return fn
+
+    return wrap
 
 
 # --------------------------------------------------------------------------
@@ -634,7 +698,8 @@ FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a JOIN sizes sb ON sb.doc_id = i
 WHERE CAST(i.common AS DOUBLE) / (sa.n + sb.n - i.common) >= 0.5"""
 
 
-def _ngram_jaccard_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_session_cached("documents")
+def _ngram_jaccard_spark(spark: SparkSession) -> tuple[DataFrame, list, list]:
     """MinHash-candidates + exact n-gram Jaccard, Spark side. The shingle
     relation is referenced FOUR times downstream (minhash aggregate,
     per-doc sizes, both intersection sides), and the candidate `pairs`
@@ -653,54 +718,27 @@ def _ngram_jaccard_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every statement below is therefore CTE-FREE: plain view references
     and nested subqueries, which DO substitute InMemoryTableScan.
 
-    The shingle cache is per (SparkSession, sf_dir): call 2..n in a
-    session reuse it (the bench's documented warm path — the one-time
-    tokenize is an ingest-time cost); any new session or sf_dir rebuilds
-    from the parquet input. The candidate chain and the exact-Jaccard
-    tail recompute on every call."""
+    The shingle cache lives as long as the `_session_cached` key: call
+    2..n in a session reuse it (the documented warm path — the one-time
+    tokenize is an ingest-time cost); a new session, sf_dir or documents
+    file rebuilds it from the parquet input. The candidate chain and the
+    exact-Jaccard tail recompute on every call."""
     from pyspark import StorageLevel
 
-    load_views(spark, sf_dir, "documents", scan_floor=True)
-    state = getattr(_ngram_jaccard_spark, "_state", None)
-    ds = None
-    if state is not None:
-        # unpersist the per-call intermediates unconditionally; keep the
-        # shingle cache only for the same live session + sf_dir. Handles
-        # may belong to an already-stopped SparkSession (ADVICE r4) —
-        # unpersist on a dead session raises, so guard it.
-        for h in state["tmp"]:
-            try:
-                h.unpersist()
-            except Exception:
-                pass
-        if state["spark"] is spark and state["sf"] == sf_dir:
-            # same session + input: reuse the shingle cache AND the
-            # already-analyzed plan objects (the 128-MIN SQL text costs
-            # ~0.7 s of driver-side analysis per call); re-persisting the
-            # unpersisted intermediates recomputes them from the cached
-            # shingles on the next action — only the plans are reused.
-            for h in state["tmp"]:
-                h.persist(StorageLevel.MEMORY_AND_DISK)
-            return state["final"]
-        try:
-            state["ds"].unpersist()
-        except Exception:
-            pass
-    if ds is None:
-        # NO DISTINCT here (r5): MIN is idempotent, so duplicate shingles
-        # cannot change a MinHash signature — deduping the FULL shingle
-        # relation cost a whole extra shuffle before the cache; the only
-        # consumers that need set semantics (sizes + exact intersection)
-        # get a DISTINCT on the candidate-restricted relation, which is
-        # broadcast-sized however large the corpus is.
-        ds = spark.sql(
-            f"WITH {_planted_docs_cte()},\n{_shingles_cte('spark', 'docs_nd')}\n"
-            "SELECT doc_id, sh FROM shingles")
-        # MEMORY_AND_DISK deliberately (VERDICT r4): at 100 TB the shingle
-        # relation exceeds executor memory — MEMORY_ONLY would silently
-        # evict and re-tokenize; spilling partitions to local disk keeps
-        # the materialize-once contract at any scale
-        ds.persist(StorageLevel.MEMORY_AND_DISK)
+    # NO DISTINCT here (r5): MIN is idempotent, so duplicate shingles
+    # cannot change a MinHash signature — deduping the FULL shingle
+    # relation cost a whole extra shuffle before the cache; the only
+    # consumers that need set semantics (sizes + exact intersection)
+    # get a DISTINCT on the candidate-restricted relation, which is
+    # broadcast-sized however large the corpus is.
+    ds = spark.sql(
+        f"WITH {_planted_docs_cte()},\n{_shingles_cte('spark', 'docs_nd')}\n"
+        "SELECT doc_id, sh FROM shingles")
+    # MEMORY_AND_DISK deliberately (VERDICT r4): at 100 TB the shingle
+    # relation exceeds executor memory — MEMORY_ONLY would silently
+    # evict and re-tokenize; spilling partitions to local disk keeps
+    # the materialize-once contract at any scale
+    ds.persist(StorageLevel.MEMORY_AND_DISK)
     ds.createOrReplaceTempView("_jacc_ds")
 
     # candidate pairs: the minhash chain of _minhash_chain_cte, written
@@ -765,9 +803,7 @@ JOIN (SELECT doc_id, COUNT(*) AS n FROM _jacc_dsc GROUP BY doc_id) sa
 JOIN (SELECT doc_id, COUNT(*) AS n FROM _jacc_dsc GROUP BY doc_id) sb
   ON sb.doc_id = i.doc_b
 WHERE CAST(i.common AS DOUBLE) / (sa.n + sb.n - i.common) >= 0.5""")
-    _ngram_jaccard_spark._state = {"spark": spark, "sf": sf_dir, "ds": ds,
-                                   "tmp": [pairs, dsc], "final": final}
-    return final
+    return final, [pairs, dsc], [ds]
 
 
 _fn("dedup_ngram_jaccard", ("documents",), _ngram_jaccard_spark, duck_sql=f"""
@@ -1217,7 +1253,8 @@ WHERE rk <= 5
 """
 
 
-def _ann_topk_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_session_cached("embeddings")
+def _ann_topk_spark(spark: SparkSession) -> tuple[DataFrame, list, list]:
     """Spark side of sim_ann_topk (same candidate set / sims as
     _ann_topk_sql('spark'), which stays the DuckDB oracle): the emb
     projection and the 6-table LSH bucket projection are materialized
@@ -1228,18 +1265,6 @@ def _ann_topk_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluated once per vector instead of once per pair side."""
     from pyspark import StorageLevel
 
-    load_views(spark, sf_dir, "embeddings", scan_floor=True)
-    state = getattr(_ann_topk_spark, "_state", None)
-    if state is not None:
-        for h in state["tmp"]:
-            try:
-                h.unpersist()
-            except Exception:
-                pass
-        if state["spark"] is spark and state["sf"] == sf_dir:
-            for h in state["tmp"]:
-                h.persist(StorageLevel.MEMORY_AND_DISK)
-            return state["final"]
     emb = spark.sql("""
 SELECT vec_id, v,
        SQRT(aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x)) AS nrm
@@ -1275,9 +1300,7 @@ FROM (SELECT query_id, vec_id, sim,
         JOIN _ann_emb eq ON eq.vec_id = c.query_id
         JOIN _ann_emb ev ON ev.vec_id = c.vec_id) scored)
 WHERE rk <= 5""")
-    _ann_topk_spark._state = {"spark": spark, "sf": sf_dir,
-                              "tmp": [emb, tabs], "final": final}
-    return final
+    return final, [emb, tabs], []
 
 
 _fn("sim_ann_topk", ("embeddings",), _ann_topk_spark,
@@ -1290,7 +1313,8 @@ _fn("sim_ann_topk", ("embeddings",), _ann_topk_spark,
 # deterministic candidate set, so the oracle comparison is exact.
 
 
-def _emb_nd_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_session_cached("embeddings")
+def _emb_nd_spark(spark: SparkSession) -> tuple[DataFrame, list, list]:
     """Spark side of dedup_embedding_neardup, restructured for plan
     shape (same candidate set and sims as _emb_nd_sql('spark'), which
     remains the DuckDB oracle's form):
@@ -1312,20 +1336,6 @@ def _emb_nd_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
       applies to the unrounded value exactly as the SQL form does."""
     from pyspark import StorageLevel
 
-    load_views(spark, sf_dir, "embeddings", scan_floor=True)
-    state = getattr(_emb_nd_spark, "_state", None)
-    if state is not None:
-        for h in state["tmp"]:
-            try:
-                h.unpersist()
-            except Exception:
-                pass
-        if state["spark"] is spark and state["sf"] == sf_dir:
-            # reuse the analyzed plan objects only: the re-persisted
-            # handles recompute from the parquet input on the next action
-            for h in state["tmp"]:
-                h.persist(StorageLevel.MEMORY_AND_DISK)
-            return state["final"]
     emb = spark.sql("""
 SELECT vec_id, v,
        SQRT(aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x)) AS nrm
@@ -1361,9 +1371,7 @@ FROM (
   JOIN _embnd ea ON ea.vec_id = c.vec_a
   JOIN _embnd eb ON eb.vec_id = c.vec_b) s
 WHERE sim >= 0.9""")
-    _emb_nd_spark._state = {"spark": spark, "sf": sf_dir,
-                            "tmp": [emb, cand], "final": final}
-    return final
+    return final, [emb, cand], []
 
 
 _fn("dedup_embedding_neardup", ("embeddings",), _emb_nd_spark,
@@ -1426,11 +1434,15 @@ WITH gaps AS (
 SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, COUNT(*) AS n_events
 FROM gaps GROUP BY user_id
 """.format(delta=(
-    "unix_timestamp(ts) - unix_timestamp(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))"
+    "timestampdiff(MICROSECOND, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id), ts)"
+    " / 1e6"
     if d == "spark" else
     "epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))")))
 # session windows via lag + running-flag cumsum (the batch equivalent of
-# the streaming sessionizer).
+# the streaming sessionizer). The Spark gap is an exact microsecond
+# difference, matching DuckDB's fractional epoch(): whole-second
+# unix_timestamp put a 1800.5 s gap in the old session. timestampdiff,
+# not unix_micros, because the tables' ts reads as TIMESTAMP_NTZ.
 
 _both("tpch_q6_revenue_delta", ("lineitem",), lambda d: """
 SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue

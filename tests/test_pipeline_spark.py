@@ -58,19 +58,6 @@ def test_nested_output_preserves_empty_docs(spark, corpus):
     assert chk.count() == 0
 
 
-def test_salted_repartition_isolates_heavy_tail(spark, corpus):
-    from eynollah_spark.pipeline import salted_repartition
-
-    docs = nest_corpus(corpus)
-    rep = salted_repartition(docs, partitions=8, heavy_threshold=400)
-    # partition weights: no partition may hold more than ~half the heavy docs
-    pw = rep.select(F.spark_partition_id().alias("pid"), F.size("spans").alias("n"))
-    heavy = pw.filter(F.col("n") > 400).groupBy("pid").count().collect()
-    n_heavy = sum(r["count"] for r in heavy)
-    if n_heavy >= 4:
-        assert max(r["count"] for r in heavy) <= max(1, n_heavy - 1)
-
-
 def test_manifest_resume(spark, corpus, tmp_path_factory):
     from eynollah_spark.manifest import completed_parts, run_extraction
 
@@ -249,33 +236,27 @@ def test_expected_check_kernel_equals_join_check(spark, corpus):
     assert k_map == j_map
 
 
-def test_salting_default_off_matches_forced_off(spark, corpus):
-    """r6 decision rule (VERDICT r5 item 2, option b): the DEFAULT
-    repartition is unsalted — identical row routing to the forced-off
-    threshold=2^30 form (the frozen bench's 'unsalted' leg), no
-    size(spans) evaluation in the plan — while an explicit threshold
-    still opts in to the heavy branch."""
+def test_extract_repartition_is_one_hash_exchange(spark, corpus):
+    """extract() repartitions once, on the wide xxhash64(doc_id)
+    keyspace and on nothing else: no size(spans) evaluation in the plan,
+    exactly ONE exchange beyond the input's, and every document lands in
+    the partition an explicit repartition(2p, pmod(xxhash64(doc_id), 64p))
+    gives it (flatten and mapInArrow are narrow)."""
     from eynollah_spark.corpus import nest_corpus
-    from eynollah_spark.pipeline import salted_repartition
 
     docs = nest_corpus(corpus)
-    default = salted_repartition(docs, partitions=8)
-    forced_off = salted_repartition(docs, partitions=8, heavy_threshold=1 << 30)
-    p_def = default._jdf.queryExecution().executedPlan().toString()
+    out = extract(docs, partitions=8, nested=True)
+    p_out = out._jdf.queryExecution().executedPlan().toString()
     p_in = docs._jdf.queryExecution().executedPlan().toString()
-    assert "size(spans" not in p_def
-    # exactly ONE exchange beyond whatever the nested input itself needs
-    assert p_def.count("Exchange") == p_in.count("Exchange") + 1
-    # same rows land in the same partition ids under both forms
-    a = (default.select("doc_id", F.spark_partition_id().alias("p"))
+    assert "size(spans" not in p_out
+    assert p_out.count("Exchange") == p_in.count("Exchange") + 1
+    ref = docs.repartition(16, F.pmod(F.xxhash64("doc_id"), F.lit(512)).cast("int"))
+    a = (out.select("doc_id", F.spark_partition_id().alias("p"))
          .orderBy("doc_id").collect())
-    b = (forced_off.select("doc_id", F.spark_partition_id().alias("p"))
+    b = (ref.select("doc_id", F.spark_partition_id().alias("p"))
          .orderBy("doc_id").collect())
+    assert len(a) == N_DOCS
     assert a == b
-    # opt-in still salts: heavy docs take the independent hash space
-    opted = salted_repartition(docs, partitions=8, heavy_threshold=400)
-    p_opt = opted._jdf.queryExecution().executedPlan().toString()
-    assert "size(spans" in p_opt
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 13),

@@ -1,0 +1,85 @@
+"""Query-registry behaviour outside the driver's one-shot oracle check:
+results after the input changes within a session, the sessionize gap
+at sub-second precision, and the scale factor read from the path."""
+
+import datetime as dt
+import shutil
+
+import duckdb
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+
+from eynollah_spark.queries import load_views, registry, sf_of
+
+SF_DIR = "/root/testdata/sf0.001"
+
+
+def _rows(records):
+    """Order-insensitive, float-rounded rows."""
+    return sorted(tuple(round(v, 6) if isinstance(v, float) else v for v in r)
+                  for r in records)
+
+
+def _oracle(sf_dir, table, name):
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW {table} AS SELECT * FROM '{sf_dir}/{table}.parquet'")
+    return _rows(con.sql(registry()[name]["duck_sql"]).fetchall())
+
+
+def test_jaccard_cache_sees_an_overwritten_input(spark, tmp_path):
+    """The shingle cache is keyed on the documents file, not only on the
+    session and path: overwriting the file in place between two calls in
+    one session must give the new file's answer."""
+    shutil.copy(f"{SF_DIR}/documents.parquet", tmp_path / "documents.parquet")
+    sf_dir = str(tmp_path)
+    fn = registry()["dedup_ngram_jaccard"]["spark_fn"]
+
+    before = _rows(fn(spark, sf_dir).collect())
+    assert before == _oracle(sf_dir, "documents", "dedup_ngram_jaccard")
+
+    docs = pq.read_table(tmp_path / "documents.parquet")
+    half = docs.filter(pc.less(docs["doc_id"], len(docs) // 2))
+    pq.write_table(half, tmp_path / "documents.parquet")
+    expected = _oracle(sf_dir, "documents", "dedup_ngram_jaccard")
+    assert expected and expected != before
+
+    assert _rows(fn(spark, sf_dir).collect()) == expected
+    # and an unchanged file is served from the cache, still correct
+    assert _rows(fn(spark, sf_dir).collect()) == expected
+
+
+def test_sessionize_gap_has_sub_second_precision(spark, tmp_path):
+    """A gap of 1800.5 s starts a new session and 1799.5 s does not, on
+    both engines (whole-second arithmetic truncated 1800.5 to 1800)."""
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    gaps = {1: 1800.5, 2: 1799.5}
+    rows = [(u, ts) for u, g in gaps.items()
+            for ts in (t0, t0 + dt.timedelta(seconds=g))]
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(rows)), pa.int64()),
+        "ts": pa.array([ts for _, ts in rows], pa.timestamp("us")),
+        "user_id": pa.array([u for u, _ in rows], pa.int64()),
+        "event_type": ["view"] * len(rows),
+        "value": [1.0] * len(rows),
+        "props": ["{}"] * len(rows),
+    }), tmp_path / "events.parquet")
+    sf_dir = str(tmp_path)
+
+    load_views(spark, sf_dir, "events")
+    got = _rows(spark.sql(registry()["events_sessionize"]["spark_sql"]).collect())
+    assert got == [(1, 2, 2), (2, 1, 2)]
+    assert got == _oracle(sf_dir, "events", "events_sessionize")
+
+
+@pytest.mark.parametrize("sf_dir, sf", [
+    ("/data/sf0.01", 0.01),
+    ("/data/sf0.1/", 0.1),
+    ("sf1", 1.0),
+    ("/x/sf1/run/sf0.01", 0.01),
+    ("/x/sf1/run", 0.01),
+    ("/x/sf0.1_copy", 0.01),
+])
+def test_sf_of_reads_the_last_path_component(sf_dir, sf):
+    assert sf_of(sf_dir) == sf
