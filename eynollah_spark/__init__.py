@@ -3,7 +3,7 @@ main-content extraction engine with the query semantics of qurator-spk/eynollah.
 
 Not a port: the reference's raster/CNN machinery (see /root/reference) is
 re-expressed as a relational DataFrame shell around small per-document numpy
-kernels that run inside Arrow-batched pandas UDFs. The preserved invariant is
+kernels that run inside one mapInArrow partition kernel. The preserved invariant is
 the reference's *output semantics*: per-document ordered span sequences
 (kind, text, media_ref, offset) equal to the PAGE-XML reading order the
 reference writes (writer.py:184-290, utils/xml.py:49-66).

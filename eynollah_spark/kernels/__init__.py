@@ -2,9 +2,10 @@
 
 These are the non-relational cores of the pipeline — the symbolic
 re-expression of eynollah's raster heuristics. Each kernel is a pure
-function of small per-document arrays, unit-testable without a
-SparkSession, and is invoked from Arrow-batched pandas UDFs in
-``eynollah_spark.pipeline``.
+function of small per-document arrays (the layout kernel's page stage
+takes a batch of documents and is exact per document), unit-testable
+without a SparkSession, and is invoked from the mapInArrow partition
+kernel in ``eynollah_spark.pipeline``.
 """
 
 from eynollah_spark.kernels.layout import DocSpans, layout_document  # noqa: F401

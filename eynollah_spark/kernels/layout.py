@@ -30,7 +30,11 @@ boxes instead of pixel rasters. Reference semantics preserved
 
 The kernel is a pure function of small per-document arrays; Spark's
 role (see eynollah_spark.pipeline) is to run millions of these in
-parallel inside Arrow-batched pandas UDFs.
+parallel inside the mapInArrow partition kernel. The page-analysis
+phases that need nothing from the rest of the pipeline (deskew scores,
+the page-level projection profiles and their valleys) run batched over
+many documents in analyze_pages; every batched step is exact per
+document, so a document's result never depends on its batch.
 """
 
 from __future__ import annotations
@@ -102,23 +106,56 @@ def _med(a):
     return 0.5 * (float(b[i]) + float(b[j]))
 
 
-def coverage_profile(x0, x1, weights, width, bins=1024):
-    """Weighted x-coverage histogram (the symbolic 'column sum' of the
-    text mask, cf. utils/__init__.py:277-279)."""
-    bins = int(min(max(int(width), 8), bins))
-    scale = bins / float(width)
-    w = np.asarray(weights, dtype=float)
-    lo = np.clip((np.asarray(x0) * scale).astype(np.int64), 0, bins - 1)
-    hi = np.clip((np.asarray(x1) * scale).astype(np.int64) + 1, 1, bins)
+def _seg_median(a, seg, bounds):
+    """_med of every segment ``a[bounds[k]:bounds[k+1]]`` (all non-empty;
+    ``seg`` the segment of each element): one segmented sort gives the
+    same two middle order statistics per segment."""
+    b = a[np.lexsort((a, seg))]
+    n = np.diff(bounds)
+    return 0.5 * (b[bounds[:-1] + (n - 1) // 2] + b[bounds[:-1] + n // 2])
+
+
+_BINS = 1024  # coverage-profile resolution cap
+
+
+def coverage_profiles(x0, x1, weights, bounds, width):
+    """Weighted x-coverage histograms (the symbolic 'column sum' of the
+    text mask, cf. utils/__init__.py:277-279) of S segments at once:
+    segment k is the spans ``[bounds[k], bounds[k+1])`` on a page of
+    ``width[k]``. Returns (P, bins, scale): row k of the S x _BINS matrix
+    P is segment k's profile over its first ``bins[k]`` columns (the
+    rest is not part of it), ``scale[k]`` bins per px.
+
+    One bincount over all segments keeps each bin's spans in their
+    original order and each row's prefix sum is sequential, so every row
+    is bit-identical to profiling its segment alone — for fractional
+    weights too (rotated geometry)."""
+    width = np.asarray(width, dtype=float)
+    bins = np.minimum(np.maximum(width.astype(np.int64), 8), _BINS)
+    scale = bins / width
+    seg = np.repeat(np.arange(len(width)), np.diff(bounds))
+    sc, nb = scale[seg], bins[seg]
+    lo = np.minimum(np.maximum((x0 * sc).astype(np.int64), 0), nb - 1)
+    hi = np.minimum(np.maximum((x1 * sc).astype(np.int64) + 1, 1), nb)
     # difference array via bincount (np.add.at is ~5x slower). NOTE: this
     # computes (sum of +w) - (sum of +w at hi) where add.at interleaved
     # signed weights into one accumulator; identical for the integral
     # span-height weights used here, but float rounding could differ for
     # fractional weights — if a fractional-weight caller appears, switch
     # to one signed bincount: bincount(concat(lo,hi), concat(w,-w)).
-    d = (np.bincount(lo, weights=w, minlength=bins + 1)
-         - np.bincount(hi, weights=w, minlength=bins + 1))
-    return np.cumsum(d)[:-1], scale
+    base = seg * (_BINS + 1)
+    size = len(width) * (_BINS + 1)
+    w = np.asarray(weights, dtype=float)
+    d = (np.bincount(base + lo, weights=w, minlength=size)
+         - np.bincount(base + hi, weights=w, minlength=size))
+    return d.reshape(-1, _BINS + 1).cumsum(axis=1)[:, :-1], bins, scale
+
+
+def coverage_profile(x0, x1, weights, width):
+    """coverage_profiles for one segment: (profile, scale)."""
+    P, bins, scale = coverage_profiles(np.asarray(x0), np.asarray(x1), weights,
+                                       [0, len(x0)], [width])
+    return P[0, :bins[0]], float(scale[0])
 
 
 _GAUSS_KERNELS: dict[float, np.ndarray] = {}
@@ -150,7 +187,7 @@ def _find_peaks(y, min_distance):
     if n < 3:
         return np.array([], dtype=np.int64)
     # RLE of equal-value runs
-    change = np.flatnonzero(np.diff(y) != 0) + 1
+    change = ((y[1:] - y[:-1]) != 0).nonzero()[0] + 1
     starts = np.concatenate(([0], change))
     ends = np.concatenate((change, [n]))
     vals = y[starts]
@@ -163,15 +200,16 @@ def _find_peaks(y, min_distance):
     if len(peaks) == 0:
         return peaks
     # min-distance suppression, keeping higher peaks (scipy semantics)
-    order = np.argsort(-y[peaks], kind="stable")
-    keep = np.ones(len(peaks), dtype=bool)
-    for oi in order:
+    yp = y[peaks]
+    pk, hv = peaks.tolist(), yp.tolist()
+    keep = [True] * len(pk)
+    for oi in (-yp).argsort(kind="stable").tolist():
         if not keep[oi]:
             continue
-        close = np.abs(peaks - peaks[oi]) < min_distance
-        close[oi] = False
-        keep &= ~(close & (y[peaks] <= y[peaks[oi]]))
-        keep[oi] = True
+        p0, h0 = pk[oi], hv[oi]
+        for j, (p, v) in enumerate(zip(pk, hv)):
+            if abs(p - p0) < min_distance and v <= h0 and j != oi:
+                keep[j] = False
     peaks = peaks[keep]
     peaks.sort()
     return peaks
@@ -186,14 +224,48 @@ def _prominences(y, peaks):
     prom = np.empty(len(peaks))
     for k, p in enumerate(peaks):
         lv = y[p]
-        gt = np.flatnonzero(y[:p] > lv)
+        gt = (y[:p] > lv).nonzero()[0]
         left = int(gt[-1]) + 1 if len(gt) else 0
         lmin = min(lv, float(y[left:p].min())) if p > left else lv
-        gt = np.flatnonzero(y[p + 1:] > lv)
+        gt = (y[p + 1:] > lv).nonzero()[0]
         right = p + 1 + int(gt[0]) if len(gt) else n
         rmin = min(lv, float(y[p + 1:right].min())) if right > p + 1 else lv
         prom[k] = lv - max(lmin, rmin)
     return prom
+
+
+def _marginal_profiles(x0, x1, y0, y1, bounds, width, height):
+    """split_main_and_marginal's profile phase for S segments of text
+    lines at once (segment k: lines ``[bounds[k], bounds[k+1])`` on a
+    ``width[k]`` x ``height[k]`` page): the column-sum projection of the
+    horizontally eroded lines. Per segment: (p, scale, mx, first_nz,
+    last_nz) — the projection, its bins per px, its max and the first
+    and last columns of its smoothed support — or None when the page is
+    too thin in text to have marginalia."""
+    width = np.asarray(width, dtype=float)
+    height = np.asarray(height, dtype=float)
+    out = [None] * len(width)
+    # horizontal erosion amount (marginals.py:25-38: 6x 1x5 plus 5-7x 5x5
+    # at reduced scale for pages taller than 1500/1800 px)
+    ex = np.where(height <= 1500, 12.0, np.where(height <= 1800, 22.0, 26.0))
+    seg = np.repeat(np.arange(len(width)), np.diff(bounds))
+    ex0, ex1 = x0 + ex[seg], x1 - ex[seg]
+    keepm = ex1 > ex0
+    live = np.flatnonzero(np.bincount(seg[keepm], minlength=len(width)))
+    if len(live) == 0:
+        return out
+    kb = np.concatenate(([0], np.cumsum(np.bincount(seg[keepm])[live])))
+    P, bins, scale = coverage_profiles(ex0[keepm], ex1[keepm],
+                                       np.maximum(y1 - y0, 1.0)[keepm], kb,
+                                       width[live])
+    mx = np.where(np.arange(_BINS) < bins[:, None], P, -np.inf).max(axis=1)
+    # bail out if the max text thickness is below 14% of page height
+    # (marginals.py:62)
+    for k in np.flatnonzero((mx > 0) & (100.0 * mx / height[live] >= 14.0)).tolist():
+        p, sc = P[k, :bins[k]], float(scale[k])
+        nz = (gaussian_smooth(p, 1.0 * sc) > 1e-9).nonzero()[0]
+        out[live[k]] = (p, sc, mx[k], int(nz[0]), int(nz[-1]))
+    return out
 
 
 def split_main_and_marginal(x0, x1, y0, y1, width, height, num_col):
@@ -216,25 +288,21 @@ def split_main_and_marginal(x0, x1, y0, y1, width, height, num_col):
     * text whose center falls outside [point_left, point_right] is
       marginalia (:155-166).
     """
+    x0, x1, y0, y1 = (np.asarray(a, dtype=float) for a in (x0, x1, y0, y1))
+    prof = (_marginal_profiles(x0, x1, y0, y1, [0, len(x0)], [width], [height])[0]
+            if len(x0) else None)
+    return _marginal_split(x0, x1, y0, y1, width, height, num_col, prof)
+
+
+def _marginal_split(x0, x1, y0, y1, width, height, num_col, prof):
+    """split_main_and_marginal after the profile phase (``prof``, one
+    _marginal_profiles entry)."""
     n = len(x0)
     marg = np.zeros(n, dtype=bool)
-    if n == 0 or num_col > 2:
+    if n == 0 or num_col > 2 or prof is None:
         return marg, 0.0, float(width)
-    # horizontal erosion amount (marginals.py:25-38: 6x 1x5 plus 5-7x 5x5
-    # at reduced scale for pages taller than 1500/1800 px)
-    ex = 12.0 if height <= 1500 else (22.0 if height <= 1800 else 26.0)
-    ex0, ex1 = x0 + ex, x1 - ex
-    keepm = ex1 > ex0
-    h = np.maximum(y1 - y0, 1.0)
-    if not keepm.any():
-        return marg, 0.0, float(width)
-    p, scale = coverage_profile(ex0[keepm], ex1[keepm], h[keepm], width)
-    mx = p.max()
-    if mx <= 0 or 100.0 * mx / height < 14.0:
-        return marg, 0.0, float(width)
+    p, scale, mx, first_nz, last_nz = prof
     min_thick = mx / 20.0
-    nz = np.flatnonzero(gaussian_smooth(p, 1.0 * scale) > 1e-9)
-    first_nz, last_nz = nz[0], nz[-1]
     mid = 0.5 * (first_nz + last_nz)
     third_l = (mid - first_nz) / 3.0
     third_r = (last_nz - mid) / 3.0
@@ -260,6 +328,7 @@ def split_main_and_marginal(x0, x1, y0, y1, width, height, num_col):
         point_left = peaks[left][int(np.argmax(scores[left]))] / scale
     if best_r is not None and (best_l is None or best_r >= 0.1 * best_l):
         point_right = peaks[right][int(np.argmax(scores[right]))] / scale
+    h = np.maximum(y1 - y0, 1.0)
     cx = (x0 + x1) / 2.0
     # symbolic-domain guards on top of min_text_thickness (marginals.py:42,83):
     # a true marginal column (a) recurs along the page (>=8% page-height
@@ -298,36 +367,43 @@ def split_main_and_marginal(x0, x1, y0, y1, width, height, num_col):
 
 # ------------------------------------------------------------ columns (C5) ---
 
-def find_gutters(x0, x1, y0, y1, width, vsep_cx=(), xlo=None, xhi=None):
-    """Column gutter x-positions among the given text lines.
+def _gutter_valleys(x0, x1, y0, y1, bounds, width):
+    """find_gutters' profile phase for S non-empty segments of lines at
+    once (segment k: lines ``[bounds[k], bounds[k+1])`` on a page of
+    ``width[k]``): the valley runs of each smoothed projection inside
+    the segment's ink extent, as x positions. Returns (valleys, lo, hi)
+    per segment: valleys is None where the projection has no ink or the
+    extent no interior (no gutters, whatever the separators)."""
+    width = np.asarray(width, dtype=float)
+    P, bins, scale = coverage_profiles(x0, x1, np.maximum(y1 - y0, 1.0),
+                                       bounds, width)
+    lo = np.minimum.reduceat(x0, bounds[:-1]).tolist()
+    hi = np.maximum.reduceat(x1, bounds[:-1]).tolist()
+    sigma = (np.maximum(1.0, width / 150.0) * scale).tolist()
+    valleys = []
+    for k, (b, sc) in enumerate(zip(bins.tolist(), scale.tolist())):
+        p = gaussian_smooth(P[k, :b], sigma[k])
+        mx = p.max()
+        ilo, ihi = int(lo[k] * sc) + 1, int(hi[k] * sc) - 1
+        if mx <= 0 or ihi <= ilo:
+            valleys.append(None)
+            continue
+        # valley runs inside the interior
+        below = p < _VALLEY_FRAC * mx
+        below[: max(ilo, 0)] = False
+        below[min(ihi, b):] = False
+        edge = np.concatenate(([False], below, [False]))
+        idx = (edge[1:] != edge[:-1]).nonzero()[0]
+        valleys.append(((idx[0::2] + idx[1::2]) / 2.0 / sc).tolist())
+    return valleys, lo, hi
 
-    Port of find_num_col semantics (utils/__init__.py:245-489): smoothed
-    projection valleys below a cutoff become column peaks; peaks closer
-    than a merge distance collapse (:409-433); unbalanced splits are
-    dropped (:390-405). Vertical separators contribute high-strength
-    candidates (the matrix_of_seps path, :1400-1417).
-    """
-    if len(x0) == 0:
+
+def _settle_gutters(valleys, x0, x1, y0, y1, lo, hi, width, vsep_cx):
+    """find_gutters after the profile phase: valley and separator
+    candidates, merged and balance-pruned over the segment's lines."""
+    if valleys is None:
         return []
-    h = np.maximum(y1 - y0, 1.0)
-    p_raw, scale = coverage_profile(x0, x1, h, width)
-    p = gaussian_smooth(p_raw, max(1.0, width / 150.0) * scale)
-    mx = p.max()
-    if mx <= 0:
-        return []
-    lo = float(np.min(x0)) if xlo is None else float(xlo)
-    hi = float(np.max(x1)) if xhi is None else float(xhi)
-    ilo, ihi = int(lo * scale) + 1, int(hi * scale) - 1
-    if ihi <= ilo:
-        return []
-    # valley runs inside the interior
-    below = p < _VALLEY_FRAC * mx
-    below[: max(ilo, 0)] = False
-    below[min(ihi, len(p)) :] = False
-    cand = []  # (x, strength)
-    idx = np.flatnonzero(np.diff(np.concatenate(([0], below.view(np.int8), [0]))))
-    for a, b in zip(idx[0::2], idx[1::2]):
-        cand.append(((a + b) / 2.0 / scale, 0.5))
+    cand = [(x, 0.5) for x in valleys]  # (x, strength)
     for v in vsep_cx:
         if lo < v < hi:
             cand.append((float(v), 1.0))
@@ -345,7 +421,7 @@ def find_gutters(x0, x1, y0, y1, width, vsep_cx=(), xlo=None, xhi=None):
             merged.append((x, s))
     gutters = merged
     # balance pruning (C5 :390-405): drop gutters bounding near-empty columns
-    area = np.maximum(x1 - x0, 1.0) * h
+    area = np.maximum(x1 - x0, 1.0) * np.maximum(y1 - y0, 1.0)
     total = area.sum()
     cx = (x0 + x1) / 2.0
     while gutters:
@@ -353,7 +429,7 @@ def find_gutters(x0, x1, y0, y1, width, vsep_cx=(), xlo=None, xhi=None):
         masses = np.array(
             [area[(cx >= edges[i]) & (cx < edges[i + 1])].sum() for i in range(len(edges) - 1)]
         )
-        weakest = int(np.argmin(masses))
+        weakest = int(masses.argmin())
         if masses[weakest] >= _COL_MIN_MASS * total:
             break
         # remove the weaker of the gutters bounding the weakest column
@@ -361,6 +437,34 @@ def find_gutters(x0, x1, y0, y1, width, vsep_cx=(), xlo=None, xhi=None):
         drop = min(adj, key=lambda i: gutters[i][1])
         gutters.pop(drop)
     return [g for g, _ in gutters]
+
+
+def gutter_sets(x0, x1, y0, y1, bounds, width, vsep_cx):
+    """find_gutters for several non-empty segments of lines on one page
+    (segment k: lines ``[bounds[k], bounds[k+1])``, vertical separators
+    ``vsep_cx[k]``), the profile phase batched."""
+    bounds = np.asarray(bounds, dtype=np.int64)
+    valleys, lo, hi = _gutter_valleys(x0, x1, y0, y1, bounds,
+                                      np.full(len(vsep_cx), float(width)))
+    b = bounds.tolist()
+    return [_settle_gutters(v, x0[s:e], x1[s:e], y0[s:e], y1[s:e], l, h, width, vs)
+            for v, s, e, l, h, vs in zip(valleys, b[:-1], b[1:], lo, hi, vsep_cx)]
+
+
+def find_gutters(x0, x1, y0, y1, width, vsep_cx=()):
+    """Column gutter x-positions among the given text lines.
+
+    Port of find_num_col semantics (utils/__init__.py:245-489): smoothed
+    projection valleys below a cutoff become column peaks; peaks closer
+    than a merge distance collapse (:409-433); unbalanced splits are
+    dropped (:390-405). Vertical separators contribute high-strength
+    candidates (the matrix_of_seps path, :1400-1417).
+    """
+    if len(x0) == 0:
+        return []
+    return gutter_sets(np.asarray(x0, dtype=float), np.asarray(x1, dtype=float),
+                       np.asarray(y0, dtype=float), np.asarray(y1, dtype=float),
+                       [0, len(x0)], width, [vsep_cx])[0]
 
 
 # --------------------------------------------------------- splitters (D2) ---
@@ -376,8 +480,28 @@ def _dedupe_splitters(ys, height):
     return out
 
 
+def _by_band(edges, y):
+    """Lines grouped by the band ``[edges[k], edges[k+1])`` that holds
+    their ``y`` (edges strictly increasing). Returns (band, order,
+    starts): band k's lines, in their original order, are
+    ``order[starts[k]:starts[k+1]]``; lines outside every band are left
+    out."""
+    band = np.searchsorted(edges, y, side="right") - 1
+    nb = len(edges) - 1
+    order = ((band >= 0) & (band < nb)).nonzero()[0]
+    order = order[band[order].argsort(kind="stable")]
+    return band, order, np.concatenate(([0], np.bincount(band[order], minlength=nb).cumsum()))
+
+
+def _band_vseps(vsep_cx, vseps, lo, hi):
+    """x-positions of the vertical separators whose y-extent overlaps the
+    band [lo, hi) by >=30% of the shorter of the two."""
+    return [v for v, (vy0, vy1) in zip(vsep_cx, vseps)
+            if min(vy1, hi) - max(vy0, lo) >= 0.3 * max(min(vy1 - vy0, hi - lo), 1.0)]
+
+
 def find_splitters(tx0, tx1, ty0, ty1, hseps, width, height, main_lo, main_hi,
-                   vseps=(), vsep_cx=(), band_gutters_out=None):
+                   vseps=(), vsep_cx=(), band_gutters_out=None, line_gutters=None):
     """y-positions that split the page into XY-cut bands — two passes,
     mirroring the reference's per-part re-analysis (D2 re-runs
     find_num_col per splitter part, utils/__init__.py:1444-1487).
@@ -395,7 +519,9 @@ def find_splitters(tx0, tx1, ty0, ty1, hseps, width, height, main_lo, main_hi,
     symbolic counterpart of D6's projection-valley banding (:1050-1076).
     Band-local gutters matter: a middle column of a 3-column band must
     not be mistaken for a spanning line just because it crosses another
-    band's gutter.
+    band's gutter. ``line_gutters``, if given, is find_gutters of all the
+    lines with ``vsep_cx``: a band that holds every line with the same
+    separators has exactly those gutters.
     """
     ys = [0.0, float(height)]
     mw = max(main_hi - main_lo, 1.0)
@@ -416,34 +542,42 @@ def find_splitters(tx0, tx1, ty0, ty1, hseps, width, height, main_lo, main_hi,
     cys = (ty0 + ty1) / 2.0
     cxs = (tx0 + tx1) / 2.0
     w = tx1 - tx0
+    # the pass-1 bands that hold lines; their gutters in one batch
+    _, order, bstart = _by_band(pass1, cys)
+    bands = (bstart[1:] > bstart[:-1]).nonzero()[0].tolist()
+    vbands = [_band_vseps(vsep_cx, vseps, pass1[k], pass1[k + 1]) for k in bands]
+    if (line_gutters is not None and len(bands) == 1
+            and len(order) == len(tx0) and vbands[0] == list(vsep_cx)):
+        gs = [list(line_gutters)]
+    else:
+        gs = gutter_sets(tx0[order], tx1[order], ty0[order], ty1[order],
+                         np.concatenate(([0], np.diff(bstart)[bands].cumsum())),
+                         width, vbands)
     extra = []
-    for lo, hi in zip(pass1[:-1], pass1[1:]):
-        m = (cys >= lo) & (cys < hi)
-        if not m.any():
-            continue
-        vband = [v for v, (vy0, vy1) in zip(vsep_cx, vseps)
-                 if min(vy1, hi) - max(vy0, lo) >= 0.3 * max(min(vy1 - vy0, hi - lo), 1.0)]
-        g = find_gutters(tx0[m], tx1[m], ty0[m], ty1[m], width, vsep_cx=vband)
+    for k, g in zip(bands, gs):
+        lo, hi = pass1[k], pass1[k + 1]
         if band_gutters_out is not None:
             # bands that survive into the final splitter list unchanged
             # reuse this gutter analysis in the D4 box loop (same inputs
-            # -> same outputs; saves a third of find_gutters calls)
+            # -> same outputs; saves a third of gutter analyses)
             band_gutters_out[(lo, hi)] = g
-        idx = np.flatnonzero(m)
+        idx = order[bstart[k]:bstart[k + 1]]
         if g:
-            sm = spanning_lines(tx0[m], tx1[m], g, width)
-            for i in idx[sm]:
+            sm = spanning_lines(tx0[idx], tx1[idx], g, width)
+            for i in idx[sm].tolist():
                 extra += [float(ty0[i]) - 0.5, float(ty1[i]) + 0.5]
         else:
             # 1-column band: centered short lines alone in their row
-            blo, bhi = float(tx0[m].min()), float(tx1[m].max())
+            blo, bhi = float(tx0[idx].min()), float(tx1[idx].max())
             bw = max(bhi - blo, 1.0)
             col_cx = blo + bw / 2.0
-            cand = idx[(w[m] <= 0.5 * bw) & (np.abs(cxs[m] - col_cx) <= 0.08 * bw)]
-            for i in cand:
-                mates = m & (np.abs(cys - cys[i]) < 0.6 * np.maximum(h, h[i]))
-                if mates.sum() <= 1:  # only itself
-                    extra += [float(ty0[i]) - 0.5, float(ty1[i]) + 0.5]
+            cand = idx[(w[idx] <= 0.5 * bw) & (np.abs(cxs[idx] - col_cx) <= 0.08 * bw)]
+            if len(cand):
+                bcy, bh = cys[idx], h[idx]
+                for i in cand.tolist():
+                    # only itself in its row
+                    if (np.abs(bcy - cys[i]) < 0.6 * np.maximum(bh, h[i])).sum() <= 1:
+                        extra += [float(ty0[i]) - 0.5, float(ty1[i]) + 0.5]
     return _dedupe_splitters(pass1 + extra, height)
 
 
@@ -489,10 +623,10 @@ def _group_by_label(labels):
     ORIGINAL index order (stable sort), and uniq is ascending — exactly
     what np.unique + per-group boolean masks produced, minus the
     O(regions x lines) rescans (profiled at ~10% of the kernel)."""
-    order = np.argsort(labels, kind="stable")
+    order = labels.argsort(kind="stable")
     sl = labels[order]
-    starts = np.flatnonzero(np.r_[True, sl[1:] != sl[:-1]])
-    return sl[starts], order, np.append(starts, len(sl))
+    starts = np.concatenate(([True], sl[1:] != sl[:-1])).nonzero()[0]
+    return sl[starts], order, np.concatenate((starts, [len(sl)]))
 
 
 def _group_minmax(vals, order, starts, mode):
@@ -567,10 +701,10 @@ def cluster_lines_into_regions(x0, x1, y0, y1, band=None, rtl=False):
     # dy <= factor*min(h_i,h_j)+4 <= factor*h_i+4, so the per-line
     # window is an exact superset of qualifying pairs that stays tight
     # when one tall media span would inflate a global window.
-    order = np.argsort(y0, kind="stable")
+    order = y0.argsort(kind="stable")
     sy0, sy1 = y0[order], y1[order]
     sh = h[order]
-    hi = np.searchsorted(sy0, sy1 + _REGION_GAP_FACTOR * sh + 4, side="right")
+    hi = sy0.searchsorted(sy1 + _REGION_GAP_FACTOR * sh + 4, side="right")
     cnt = np.maximum(hi - np.arange(1, n + 1), 0)
     total = int(cnt.sum())
     labels = np.arange(n, dtype=np.int64)
@@ -588,19 +722,21 @@ def cluster_lines_into_regions(x0, x1, y0, y1, band=None, rtl=False):
         chunk = 1 << 19
         for s in range(0, total, chunk):
             pos = np.arange(s, min(s + chunk, total))
-            ii = np.searchsorted(offs, pos, side="right") - 1
+            ii = offs.searchsorted(pos, side="right") - 1
             jj = pos - offs[ii] + ii + 1
             i, j = order[ii], order[jj]
+            hi_, hj = h[i], h[j]
+            hmin, hmax = np.minimum(hi_, hj), np.maximum(hi_, hj)
             dy = np.maximum(y0[j] - y1[i], 0.0)
             okp = (band[i] == band[j])
-            okp &= dy <= _REGION_GAP_FACTOR * np.minimum(h[i], h[j]) + 4
+            okp &= dy <= _REGION_GAP_FACTOR * hmin + 4
             ov = np.minimum(x1[i], x1[j]) - np.maximum(x0[i], x0[j])
             okp &= ov / np.minimum(w[i], w[j]) >= _REGION_XOVERLAP
-            okp &= np.abs(anchor[i] - anchor[j]) <= 1.2 * np.maximum(h[i], h[j])
+            okp &= np.abs(anchor[i] - anchor[j]) <= 1.2 * hmax
             # a span 3x+ taller than its neighbour is never the same
             # paragraph's line (drop capitals, C13/C14): merging one into
             # a paragraph drags the region bbox and corrupts D6 row order
-            okp &= np.maximum(h[i], h[j]) <= _REGION_H_RATIO * np.minimum(h[i], h[j])
+            okp &= hmax <= _REGION_H_RATIO * hmin
             labels = _cc_labels(n, i[okp], j[okp], init=labels)
 
     # Containment post-pass (the reference's actual C16 rule is
@@ -638,9 +774,9 @@ def cluster_lines_into_regions(x0, x1, y0, y1, band=None, rtl=False):
             # interleaved in the container's flow, not merely inside its
             # bounding box.
             new = labels.copy()
-            for i in np.flatnonzero(cont.any(axis=1)):
+            for i in cont.any(axis=1).nonzero()[0]:
                 best = None
-                for k in np.flatnonzero(cont[i]):
+                for k in cont[i].nonzero()[0]:
                     m = labels == uniq[k]
                     ovl = m & (np.minimum(x1, x1[i]) > np.maximum(x0, x0[i]))
                     if ((ovl & (y1 <= y0[i])).any()
@@ -657,17 +793,20 @@ def cluster_lines_into_regions(x0, x1, y0, y1, band=None, rtl=False):
 
 def _row_cluster(cy, thr):
     """Cluster sorted-by-cy items into rows; returns row ids aligned with input order."""
-    order = np.argsort(cy, kind="stable")
-    rows = np.zeros(len(cy), dtype=np.int64)
+    order = cy.argsort(kind="stable")
+    thr = float(thr)
+    out = []
     row = 0
     ref = None
-    for k in order:
-        if ref is not None and cy[k] - ref > thr:
+    for v in cy[order].tolist():
+        if ref is None:
+            ref = v
+        elif v - ref > thr:
             row += 1
-            ref = cy[k]
-        elif ref is None:
-            ref = cy[k]
-        rows[k] = row
+            ref = v
+        out.append(row)
+    rows = np.empty(len(out), dtype=np.int64)
+    rows[order] = out
     return rows
 
 
@@ -681,7 +820,7 @@ def order_lines_in_region(cx, cy, rtl, off=None):
     if n <= 1:
         return np.arange(n)
     scy = np.sort(cy)
-    d = np.diff(scy)
+    d = scy[1:] - scy[:-1]
     pos = d[d > 1e-9]
     pitch = _med(pos) if len(pos) else float("inf")
     rows = _row_cluster(cy, pitch / _LINE_ROW_DIV)
@@ -701,12 +840,88 @@ def layout_document(doc: DocSpans):
     return perm, out_kind
 
 
-def layout_permutation(doc: DocSpans):
+@dataclass
+class Page:
+    """One document's share of the batched page stage (analyze_pages)."""
+
+    x0: np.ndarray          # geometry after deskew, float64
+    x1: np.ndarray
+    y0: np.ndarray
+    y1: np.ndarray
+    cx: np.ndarray
+    cy: np.ndarray
+    is_sep: np.ndarray
+    tix: np.ndarray         # indices of the text lines
+    valleys: list | None    # page-level gutter valleys of the text lines
+    lo: float               # x extent of the text lines
+    hi: float
+    margins: tuple | None   # marginal projection of the text lines
+
+
+def analyze_pages(docs: list[DocSpans]) -> list[Page]:
+    """The page-analysis phases that need nothing from the per-document
+    remainder, run once for a batch of documents: C6 deskew (coarse and
+    fine angle scores; the rotation itself is per document) and the
+    coverage profiles, smoothing and valley masks behind the page-level
+    find_gutters and split_main_and_marginal. Every batched step is
+    exact per document, so a document's Page does not depend on which
+    others share its batch."""
+    from eynollah_spark.kernels.deskew import estimate_skews, rotate_boxes
+
+    D = len(docs)
+    n = np.array([d.n for d in docs], dtype=np.int64)
+    bounds = np.concatenate(([0], np.cumsum(n)))
+    kind = np.concatenate([d.kind for d in docs])
+    x0, x1, y0, y1 = (np.concatenate([np.asarray(getattr(d, c), dtype=float)
+                                      for d in docs])
+                      for c in ("x0", "x1", "y0", "y1"))
+    W = np.array([float(d.width) for d in docs])
+    H = np.array([float(d.height) for d in docs])
+    is_text = kind == KIND_TEXT
+    is_sep = kind == KIND_SEPARATOR
+    ti = is_text.nonzero()[0]
+    tseg = np.repeat(np.arange(D), n)[ti]
+    tb = np.concatenate(([0], np.cumsum(np.bincount(tseg, minlength=D))))
+
+    # --- C6/C8 deskew: estimate page skew from text-line sharpness and
+    # rotate all geometry before any projection work (run_deskew,
+    # eynollah.py:1522-1533; rotation utils/rotate.py:9-13)
+    ang = estimate_skews((x0[ti] + x1[ti]) / 2.0, (y0[ti] + y1[ti]) / 2.0,
+                         np.maximum(x1[ti] - x0[ti], 1.0),
+                         np.maximum(y1[ti] - y0[ti], 1.0), tb, W, H)
+    for d in (np.abs(ang) >= 0.75).nonzero()[0].tolist():
+        s, e = bounds[d], bounds[d + 1]
+        x0[s:e], x1[s:e], y0[s:e], y1[s:e] = rotate_boxes(
+            x0[s:e], x1[s:e], y0[s:e], y1[s:e], float(ang[d]), W[d] / 2.0, H[d] / 2.0)
+    cx, cy = (x0 + x1) / 2.0, (y0 + y1) / 2.0
+
+    # --- profiles of the text lines, for the documents that have any
+    tx0, tx1, ty0, ty1 = x0[ti], x1[ti], y0[ti], y1[ti]
+    has = (tb[1:] > tb[:-1]).nonzero()[0]
+    hb = np.concatenate(([0], np.cumsum(np.diff(tb)[has])))
+    valleys, lo, hi, margins = [None] * D, [0.0] * D, [0.0] * D, [None] * D
+    if len(has):
+        v, l, h = _gutter_valleys(tx0, tx1, ty0, ty1, hb, W[has])
+        m = _marginal_profiles(tx0, tx1, ty0, ty1, hb, W[has], H[has])
+        for j, d in enumerate(has.tolist()):
+            valleys[d], lo[d], hi[d], margins[d] = v[j], l[j], h[j], m[j]
+    pages = []
+    for d in range(D):
+        s, e = bounds[d], bounds[d + 1]
+        pages.append(Page(x0[s:e], x1[s:e], y0[s:e], y1[s:e], cx[s:e], cy[s:e],
+                          is_sep[s:e], ti[tb[d]:tb[d + 1]] - s,
+                          valleys[d], lo[d], hi[d], margins[d]))
+    return pages
+
+
+def layout_permutation(doc: DocSpans, page: Page | None = None):
     """Core per-document pipeline; returns (perm, marg_mask) where perm is
     the index permutation of doc spans in final reading order and
     marg_mask flags output positions whose kind refines to 'marginalia'.
     (`doc.text` / `doc.media_ref` are never read — the kernel is pure
-    geometry, so callers may pass placeholders.)
+    geometry, so callers may pass placeholders.) ``page`` is the doc's
+    analyze_pages result; without it the page stage runs on this doc
+    alone.
 
     Serialization order per D8 (utils/xml.py:49-66, writer.py:184-290):
     marg-L -> ordered text -> marg-R -> images -> separators -> tables.
@@ -714,49 +929,35 @@ def layout_permutation(doc: DocSpans):
     n = doc.n
     if n == 0:
         return np.array([], dtype=np.int64), np.array([], dtype=bool)
+    if page is None:
+        page = analyze_pages([doc])[0]
     kind = doc.kind
-    x0, x1, y0, y1 = (np.asarray(a, dtype=float) for a in (doc.x0, doc.x1, doc.y0, doc.y1))
-    cx, cy = (x0 + x1) / 2.0, (y0 + y1) / 2.0
+    x0, x1, y0, y1, cx, cy = page.x0, page.x1, page.y0, page.y1, page.cx, page.cy
     W, H = float(doc.width), float(doc.height)
-
-    # --- C6/C8 deskew: estimate page skew from text-line sharpness and
-    # rotate all geometry before any projection work (run_deskew,
-    # eynollah.py:1522-1533; rotation utils/rotate.py:9-13)
-    tmask = kind == KIND_TEXT
-    if tmask.sum() >= 8:
-        from eynollah_spark.kernels.deskew import estimate_skew, rotate_boxes
-
-        ang = estimate_skew(cx[tmask], cy[tmask],
-                            np.maximum(x1[tmask] - x0[tmask], 1.0),
-                            np.maximum(y1[tmask] - y0[tmask], 1.0), W, H)
-        if abs(ang) >= 0.75:
-            x0, x1, y0, y1 = rotate_boxes(x0, x1, y0, y1, ang, W / 2.0, H / 2.0)
-            cx, cy = (x0 + x1) / 2.0, (y0 + y1) / 2.0
-
-    is_text = kind == KIND_TEXT
-    is_img = kind == KIND_IMAGE
-    is_sep = kind == KIND_SEPARATOR
-    is_tab = kind == KIND_TABLE
-    tix = np.flatnonzero(is_text)
+    tix = page.tix
+    tx0, tx1, ty0, ty1 = x0[tix], x1[tix], y0[tix], y1[tix]
 
     # separator geometry split (C3, utils/__init__.py:187-219)
-    sep_ix = np.flatnonzero(is_sep)
-    sw, sh = x1[sep_ix] - x0[sep_ix], y1[sep_ix] - y0[sep_ix]
-    hsep_ix = sep_ix[sw >= sh]
-    vsep_ix = sep_ix[sw < sh]
-
-    vcx, vboxes = merge_vertical_separators(
-        cx[vsep_ix].tolist(), [(y0[i], y1[i]) for i in vsep_ix], W
-    )
+    sep_ix = page.is_sep.nonzero()[0]
+    vcx, vboxes, hseps = [], [], []
+    if len(sep_ix):
+        sw, sh = x1[sep_ix] - x0[sep_ix], y1[sep_ix] - y0[sep_ix]
+        hsep_ix = sep_ix[sw >= sh]
+        vsep_ix = sep_ix[sw < sh]
+        vcx, vboxes = merge_vertical_separators(
+            cx[vsep_ix].tolist(), [(y0[i], y1[i]) for i in vsep_ix], W
+        )
+        hseps = [(x0[i], x1[i], y0[i], y1[i]) for i in hsep_ix]
 
     # --- page-level column estimate (B5 heuristic stand-in: peak count of
     # the x-projection, cf. find_num_col utils/__init__.py:245-489). Only
     # substantial columns count (>=15% of ink mass) — the CNN column
     # classifier the reference uses never counts marginal humps.
-    gutters_all = find_gutters(x0[tix], x1[tix], y0[tix], y1[tix], W, vsep_cx=vcx)
+    gutters_all = _settle_gutters(page.valleys, tx0, tx1, ty0, ty1,
+                                  page.lo, page.hi, W, vcx)
     if gutters_all and len(tix):
         tcx = cx[tix]
-        tarea = np.maximum(x1[tix] - x0[tix], 1.0) * np.maximum(y1[tix] - y0[tix], 1.0)
+        tarea = np.maximum(tx1 - tx0, 1.0) * np.maximum(ty1 - ty0, 1.0)
         edges = [-np.inf] + list(gutters_all) + [np.inf]
         masses = np.array([
             tarea[(tcx >= edges[i]) & (tcx < edges[i + 1])].sum()
@@ -779,8 +980,8 @@ def layout_permutation(doc: DocSpans):
         num_col_est = hi if lo == hi else min(max(num_col_est, lo), hi)
 
     # --- C10 marginalia over text lines
-    marg_mask_t, main_lo, main_hi = split_main_and_marginal(
-        x0[tix], x1[tix], y0[tix], y1[tix], W, H, num_col_est
+    marg_mask_t, main_lo, main_hi = _marginal_split(
+        tx0, tx1, ty0, ty1, W, H, num_col_est, page.margins
     )
     marg_ix = tix[marg_mask_t]
     body_ix = tix[~marg_mask_t]
@@ -788,30 +989,29 @@ def layout_permutation(doc: DocSpans):
     off = np.asarray(doc.offset, dtype=np.int64)
     ordered_text = _order_body_text(
         body_ix, x0, x1, y0, y1, cx, cy, W, H,
-        hseps=[(x0[i], x1[i], y0[i], y1[i]) for i in hsep_ix],
+        hseps=hseps,
         vsep_cx=vcx,
         vsep_boxes=vboxes,
         main_lo=main_lo, main_hi=main_hi, rtl=doc.rtl, off=off,
+        # without marginalia the body is every text line: the page-level
+        # gutter analysis is the body's
+        body_gutters=None if len(marg_ix) else gutters_all,
     )
 
     # --- C11 marginal split + D1 within marginal regions
     marg_l, marg_r = _order_marginals(marg_ix, x0, x1, y0, y1, cx, cy, W, doc.rtl, off)
 
-    def _by_pos(ix):
-        if len(ix) == 0:
-            return ix
-        return ix[np.lexsort((doc.offset[ix], cx[ix], cy[ix]))]
-
-    perm = np.concatenate(
-        [
-            marg_l,
-            ordered_text,
-            marg_r,
-            _by_pos(np.flatnonzero(is_img)),
-            _by_pos(sep_ix),
-            _by_pos(np.flatnonzero(is_tab)),
-        ]
-    ).astype(np.int64)
+    parts = [marg_l, ordered_text, marg_r]
+    if len(ordered_text) + len(marg_ix) < n:
+        # images -> separators -> tables, each by position
+        for ix in ((kind == KIND_IMAGE).nonzero()[0], sep_ix,
+                   (kind == KIND_TABLE).nonzero()[0]):
+            if len(ix):
+                ix = ix[np.lexsort((doc.offset[ix], cx[ix], cy[ix]))]
+            parts.append(ix)
+    perm = np.concatenate(parts).astype(np.int64)
+    if len(marg_ix) == 0:
+        return perm, np.zeros(len(perm), dtype=bool)
     marg_mask = np.zeros(n, dtype=bool)
     marg_mask[marg_ix] = True
     return perm, marg_mask[perm]
@@ -826,16 +1026,19 @@ def _order_marginals(marg_ix, x0, x1, y0, y1, cx, cy, W, rtl, off):
     labels = cluster_lines_into_regions(x0[marg_ix], x1[marg_ix], y0[marg_ix], y1[marg_ix], rtl=rtl)
     out_l, out_r = [], []
     regs = []
-    for lab in np.unique(labels):
-        members = marg_ix[labels == lab]
+    _, gorder, gstarts = _group_by_label(labels)
+    gs = gstarts.tolist()
+    for a, b in zip(gs[:-1], gs[1:]):
+        members = marg_ix[gorder[a:b]]
         rcy = cy[members].mean()
         rcx = cx[members].mean()
         regs.append((rcy, rcx, int(off[members].min()), members))
     regs.sort(key=lambda t: (t[0], t[1], t[2]))
     for rcy, rcx, _roff, members in regs:
-        sub = order_lines_in_region(cx[members], cy[members], rtl, off[members])
-        seq = members[sub]
-        (out_l if rcx < W / 2.0 else out_r).extend(seq.tolist())
+        if len(members) > 1:
+            members = members[order_lines_in_region(cx[members], cy[members],
+                                                    rtl, off[members])]
+        (out_l if rcx < W / 2.0 else out_r).extend(members.tolist())
     return np.array(out_l, dtype=np.int64), np.array(out_r, dtype=np.int64)
 
 
@@ -884,8 +1087,10 @@ def _extend_box_span(edges, trail, ya, yb, lx0, lx1, ly0, ly1, lcy, rtl):
 
 
 def _order_body_text(body_ix, x0, x1, y0, y1, cx, cy, W, H,
-                     hseps, vsep_cx, vsep_boxes, main_lo, main_hi, rtl, off):
-    """D2 + D4 + D5 + D6 + D1 over the non-marginal text lines."""
+                     hseps, vsep_cx, vsep_boxes, main_lo, main_hi, rtl, off,
+                     body_gutters=None):
+    """D2 + D4 + D5 + D6 + D1 over the non-marginal text lines
+    (``body_gutters``: their find_gutters with ``vsep_cx``, if known)."""
     if len(body_ix) == 0:
         return body_ix.copy()
     bx0, bx1, by0, by1 = x0[body_ix], x1[body_ix], y0[body_ix], y1[body_ix]
@@ -897,7 +1102,8 @@ def _order_body_text(body_ix, x0, x1, y0, y1, cx, cy, W, H,
     splitters = find_splitters(bx0, bx1, by0, by1, hseps, W, H,
                                main_lo, main_hi,
                                vseps=vsep_boxes, vsep_cx=vsep_cx,
-                               band_gutters_out=band_gutters)
+                               band_gutters_out=band_gutters,
+                               line_gutters=body_gutters)
 
     # D4: boxes per band, columns left->right (RTL flips, :1522-1524,1866-1879).
     # Per-column recursion (utils/__init__.py:1794-1864): a PARTIAL-width
@@ -907,26 +1113,31 @@ def _order_body_text(body_ix, x0, x1, y0, y1, cx, cy, W, H,
     # emission order — each separator's sub-boxes follow every box whose
     # top edge sits above it (e.g. 2 cols, separator under col 1 only:
     # col1-above, col2-full, col1-below).
-    band_id = np.searchsorted(np.asarray(splitters), bcy, side="right") - 1
+    band_id, order, bstart = _by_band(splitters, bcy)
     # Collision-free cell keys: bands take ids [0, n_bands); each cut
     # column claims a fresh contiguous block of len(cuts)+1 ids above
     # that, so no cell can alias another band's or column's cells no
     # matter how many cuts/columns a pathological page has.
-    cell_id = band_id.astype(np.int64).copy()  # refined below at cuts
+    cell_id = band_id.astype(np.int64)  # refined below at cuts
     next_cell = max(len(splitters) - 1, 1)
+    bands = (bstart[1:] > bstart[:-1]).nonzero()[0].tolist()
+    # gutters of the bands find_splitters did not analyse, in one batch
+    todo = [k for k in bands if (splitters[k], splitters[k + 1]) not in band_gutters]
+    if todo:
+        rows = np.concatenate([order[bstart[k]:bstart[k + 1]] for k in todo])
+        gs = gutter_sets(bx0[rows], bx1[rows], by0[rows], by1[rows],
+                         np.concatenate(([0], np.diff(bstart)[todo].cumsum())), W,
+                         [_band_vseps(vsep_cx, vsep_boxes, splitters[k], splitters[k + 1])
+                          for k in todo])
+        for k, g in zip(todo, gs):
+            band_gutters[(splitters[k], splitters[k + 1])] = g
     boxes = []  # (bx0, bx1, by0, by1)
-    for bi, (lo, hi) in enumerate(zip(splitters[:-1], splitters[1:])):
-        in_band = (bcy >= lo) & (bcy < hi)
-        if not in_band.any():
-            continue
-        g = band_gutters.get((lo, hi))
-        if g is None:
-            vband = [v for v, (vy0, vy1) in zip(vsep_cx, vsep_boxes)
-                     if min(vy1, hi) - max(vy0, lo) >= 0.3 * max(min(vy1 - vy0, hi - lo), 1.0)]
-            g = find_gutters(bx0[in_band], bx1[in_band], by0[in_band], by1[in_band], W,
-                             vsep_cx=vband)
-        bbx0, bbx1 = bx0[in_band], bx1[in_band]
-        bby0, bby1, bbcy = by0[in_band], by1[in_band], bcy[in_band]
+    for k in bands:
+        lo, hi = splitters[k], splitters[k + 1]
+        g = band_gutters[(lo, hi)]
+        idx = order[bstart[k]:bstart[k + 1]]
+        bbx0, bbx1 = bx0[idx], bx1[idx]
+        bby0, bby1, bbcy = by0[idx], by1[idx], bcy[idx]
         ex0, ex1 = float(bbx0.min()), float(bbx1.max())
         edges = [ex0] + [x for x in g if ex0 < x < ex1] + [ex1]
         cols = list(zip(edges[:-1], edges[1:]))
@@ -972,7 +1183,7 @@ def _order_body_text(body_ix, x0, x1, y0, y1, cx, cy, W, H,
                 # sub-interval so a region never merges across a separator
                 # (the reference's region model treats the rule as a hard
                 # region boundary); cut-less columns keep the band cell.
-                in_col = in_band & (bcx >= cxa) & (bcx <= cxb)
+                in_col = (band_id == k) & (bcx >= cxa) & (bcx <= cxb)
                 cell_id[in_col] = (next_cell
                                    + np.searchsorted(np.asarray(cuts), bcy[in_col]))
                 next_cell += len(cuts) + 1
@@ -1007,7 +1218,7 @@ def _order_body_text(body_ix, x0, x1, y0, y1, cx, cy, W, H,
     box_of = np.zeros(len(uniq), dtype=np.int64)
     if has_strict.any():
         box_of[has_strict] = np.argmax(strict[has_strict], axis=1)
-    rest = np.flatnonzero(~has_strict)
+    rest = (~has_strict).nonzero()[0]
     if len(rest):
         centc = ((barr[None, :, 0] <= rcx[rest, None]) & (barr[None, :, 1] > rcx[rest, None])
                  & (barr[None, :, 2] <= rcy[rest, None]) & (barr[None, :, 3] > rcy[rest, None]))
@@ -1019,9 +1230,12 @@ def _order_body_text(body_ix, x0, x1, y0, y1, cx, cy, W, H,
 
     # D6 within box: row-cluster region centers, sort rows top-down, cx in row
     order_regions = []  # list of region indices in final order
-    for b in range(len(barr)):
-        rs = np.flatnonzero(box_of == b)
-        if len(rs) == 0:
+    by_box = box_of.argsort(kind="stable")
+    ends = np.bincount(box_of, minlength=len(barr)).cumsum().tolist()
+    for a, b in zip([0] + ends[:-1], ends):
+        rs = by_box[a:b]  # the box's regions, ascending
+        if b - a <= 1:
+            order_regions.extend(rs.tolist())
             continue
         heights = ry1[rs] - ry0[rs]
         thr = max(8.0, _ROW_THR_FRAC * _med(heights))
@@ -1032,9 +1246,12 @@ def _order_body_text(body_ix, x0, x1, y0, y1, cx, cy, W, H,
     # D1 within each region, concatenate (members come from the grouping
     # scaffold — stable sort keeps them in original index order, exactly
     # what the per-region flatnonzero rescan produced)
+    gs = gstarts.tolist()
     out = []
     for r in order_regions:
-        members = gorder[gstarts[r]:gstarts[r + 1]]
-        sub = order_lines_in_region(bcx[members], bcy[members], rtl, boff[members])
-        out.extend(body_ix[members[sub]].tolist())
-    return np.array(out, dtype=np.int64)
+        members = gorder[gs[r]:gs[r + 1]]
+        if len(members) > 1:
+            members = members[order_lines_in_region(bcx[members], bcy[members],
+                                                    rtl, boff[members])]
+        out.extend(members.tolist())
+    return body_ix[out]

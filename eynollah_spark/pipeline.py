@@ -16,6 +16,15 @@ Stage plan (explicit shuffle boundaries, SURVEY.md §3.1 lifecycle):
        a contiguous run for the per-document kernel; numerics reach
        numpy once per partition, payload strings are permuted C++-side
        and never materialize in Python)
+         - page stage: kernels.layout.analyze_pages over batches of 64
+           documents — deskew angle scores and the page-level projection
+           profiles, smoothing and valley masks, one numpy call per
+           batch instead of per document (each document's result is
+           bit-identical to analyzing it alone);
+         - then layout_permutation once per document with its page
+           result: gutters, marginalia, splitters, regions, order. A
+           batch whose page stage raises is re-run one document at a
+           time, so quarantine stays per document.
     -> sink (flat rows, or nested out_spans lists built in-kernel from
        the same permutation)
 
@@ -34,7 +43,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
-from eynollah_spark.kernels.layout import DocSpans, layout_permutation
+from eynollah_spark.kernels.layout import DocSpans, analyze_pages, layout_permutation
 from eynollah_spark.schemas import FLAT_OUT_SCHEMA, OUT_SCHEMA
 
 
@@ -101,14 +110,33 @@ def flatten(df: DataFrame) -> DataFrame:
     )
 
 
-def _safe_permutation(d: DocSpans, fail_fast: bool):
+#: documents per analyze_pages batch: large enough to amortize numpy
+#: dispatch, small enough that the batch's [docs x 1024] profile matrices
+#: stay in cache, and the re-run after a failed batch stays short
+_PAGE_BATCH = 64
+
+
+def _pages(docs: list[DocSpans], fail_fast: bool) -> list:
+    """analyze_pages over a batch of documents. If it raises, every
+    document of the batch gets None: layout_permutation then runs the page
+    stage on that document alone, so one bad document is quarantined
+    alone, never its whole batch."""
+    try:
+        return analyze_pages(docs)
+    except Exception:
+        if fail_fast:
+            raise
+        return [None] * len(docs)
+
+
+def _safe_permutation(d: DocSpans, fail_fast: bool, page=None):
     """Per-document failure quarantine: at 10^12 docs a single pathological
     page must not kill the job (the reference's halt_fail global abort,
     eynollah.py:2023-2028, is replaced by degrade-and-continue). On kernel
     failure the document falls back to input-offset order (total, kinds
     unchanged). fail_fast=True (tests/CI) re-raises instead."""
     try:
-        return layout_permutation(d)
+        return layout_permutation(d, page)
     except Exception:
         if fail_fast:
             raise
@@ -125,11 +153,12 @@ def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper:
     where every document is a contiguous run of rows. Returns (starts,
     counts, take, marg): each document's first row, its number of output
     spans (0 for an empty document: null-kind rows only), and for all
-    output spans in reading order their row index and marginalia flag."""
+    output spans in reading order their row index and marginalia flag.
+    The page stage runs per batch of _PAGE_BATCH documents, then
+    layout_permutation once per document."""
     ids = col["doc_id"]
     n = len(ids)
-    change = np.flatnonzero(
-        pc.not_equal(ids[1:], ids[:-1]).to_numpy(zero_copy_only=False)) + 1
+    change = pc.not_equal(ids[1:], ids[:-1]).to_numpy(zero_copy_only=False).nonzero()[0] + 1
     starts = np.concatenate(([0], change))
     ends = np.concatenate((change, [n]))
     # kinds as dictionary codes: one Python str per distinct kind, not per row
@@ -139,26 +168,29 @@ def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper:
     valid = pc.is_valid(col["kind"]).to_numpy(zero_copy_only=False)
     offs = _np(col["offset"], -1, np.int64)
     x0, x1, y0, y1 = (_np(col[c]) for c in ("x0", "x1", "y0", "y1"))
-    width = _np(col["width"], 1, np.int64)
-    height = _np(col["height"], 1, np.int64)
-    rtl = _np(col["rtl"], False, np.bool_)
+    width = _np(col["width"], 1, np.int64)[starts].tolist()
+    height = _np(col["height"], 1, np.int64)[starts].tolist()
+    rtl = _np(col["rtl"], False, np.bool_)[starts].tolist()
+    # rows of each document's spans (a slice unless it has null-kind rows)
+    nvalid = np.add.reduceat(valid, starts, dtype=np.int64)
+    rows = [(k, slice(s, e) if nv == e - s else s + valid[s:e].nonzero()[0])
+            for k, (s, e, nv) in enumerate(zip(starts.tolist(), ends.tolist(),
+                                                nvalid.tolist())) if nv]
     counts = np.zeros(len(starts), dtype=np.int64)
     take_l, marg_l = [np.empty(0, np.int64)], [np.empty(0, bool)]
-    for k, (s, e) in enumerate(zip(starts, ends)):
-        v = valid[s:e]
-        if not v.any():
-            continue  # empty document: no output spans
-        idx = np.arange(s, e) if v.all() else s + np.flatnonzero(v)
-        d = DocSpans(
+    for b in range(0, len(rows), _PAGE_BATCH):
+        batch = rows[b:b + _PAGE_BATCH]
+        docs = [DocSpans(
             kind=kind[idx], text=None, media_ref=None,
             offset=offs[idx], x0=x0[idx], x1=x1[idx], y0=y0[idx], y1=y1[idx],
-            width=int(width[s]), height=int(height[s]), rtl=bool(rtl[s]),
+            width=width[k], height=height[k], rtl=rtl[k],
             num_col_lower=num_col_lower, num_col_upper=num_col_upper,
-        )
-        perm, marg = _safe_permutation(d, fail_fast)
-        take_l.append(idx[perm])
-        marg_l.append(marg)
-        counts[k] = len(perm)
+        ) for k, idx in batch]
+        for (k, idx), d, page in zip(batch, docs, _pages(docs, fail_fast)):
+            perm, marg = _safe_permutation(d, fail_fast, page)
+            take_l.append(perm + idx.start if isinstance(idx, slice) else idx[perm])
+            marg_l.append(marg)
+            counts[k] = len(perm)
     return starts, counts, np.concatenate(take_l), np.concatenate(marg_l)
 
 

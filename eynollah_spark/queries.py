@@ -1951,6 +1951,9 @@ def _subline_split_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from eynollah_spark.packaging import ensure_distributed
+
+    ensure_distributed(spark)  # fn imports eynollah_spark on the workers
     load_views(spark, sf_dir, "documents")
     lines = spark.sql("""
 WITH rows_ AS (

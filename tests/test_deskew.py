@@ -36,3 +36,35 @@ def test_sparse_page_never_invents_skew():
     x0, x1, y0, y1 = _column(n=8)
     cx, cy = (x0 + x1) / 2, (y0 + y1) / 2
     assert estimate_skew(cx, cy, x1 - x0, y1 - y0, 1400, 2000) == 0.0
+
+
+def test_batched_scores_equal_single_page_scores():
+    """_score_angles over a batch of pages scores every page exactly as
+    it scores that page alone, for the shared coarse grid and for
+    per-page fine grids, on rotated (fractional) geometry too."""
+    from eynollah_spark.kernels.deskew import _score_angles
+
+    rng = np.random.default_rng(3)
+    pages = []
+    for k in range(12):
+        x0, x1, y0, y1 = _column(n=20 + k, x0=200.0 + 10 * k)
+        if k % 3 == 0:
+            x0, x1, y0, y1 = rotate_boxes(x0, x1, y0, y1, 2.5 - k / 4, 700, 1000)
+        pages.append(((x0 + x1) / 2, (y0 + y1) / 2, np.maximum(x1 - x0, 1.0),
+                      np.maximum(y1 - y0, 1.0)))
+    n = np.array([len(p[0]) for p in pages])
+    bounds = np.concatenate(([0], np.cumsum(n)))
+    seg = np.repeat(np.arange(len(pages)), n)
+    cx, cy, w, h = (np.concatenate([p[i] for p in pages]) for i in range(4))
+    bin_w = rng.uniform(4.0, 12.0, len(pages))
+    ox, oy = np.full(len(pages), 700.0), np.full(len(pages), 1000.0)
+    coarse = np.deg2rad(np.arange(-6.0, 6.0 + 1e-9, 0.5))
+    fine = rng.uniform(-0.1, 0.1, (len(pages), 11))
+    for angles in (coarse, fine):
+        got = _score_angles(cx, cy, w, h, seg, bounds, angles, bin_w, ox, oy)
+        for k, p in enumerate(pages):
+            one = _score_angles(*p, np.zeros(n[k], dtype=np.int64),
+                                np.array([0, n[k]]),
+                                angles if angles.ndim == 1 else angles[k:k + 1],
+                                bin_w[k:k + 1], ox[k:k + 1], oy[k:k + 1])
+            assert np.array_equal(got[k], one[0])

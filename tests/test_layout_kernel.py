@@ -388,3 +388,35 @@ def test_dense_blob_page_bounded():
     # the unchunked pathology was >1000x)
     assert wall < 400 * rep / 100 * base_wall + 2.0, (
         f"dense-blob page took {wall:.1f}s (base {base_wall*1000:.0f}ms)")
+
+
+def _gen_docs(n, seed):
+    from eynollah_spark.corpus import gen_doc
+
+    docs = []
+    for i in range(n):
+        a, m = gen_doc(i, seed)
+        if len(a["kind"]):
+            docs.append(DocSpans(
+                kind=a["kind"], text=None, media_ref=None, offset=a["offset"],
+                x0=a["x0"].astype(float), x1=a["x1"].astype(float),
+                y0=a["y0"].astype(float), y1=a["y1"].astype(float),
+                width=m["width"], height=m["height"], rtl=m["rtl"]))
+    return docs
+
+
+def test_page_stage_batch_equals_single_pages():
+    """analyze_pages over a batch gives every document exactly the Page
+    it gets alone: geometry, valleys and marginal projection."""
+    from eynollah_spark.kernels.layout import analyze_pages
+
+    docs = _gen_docs(150, seed=11)
+    for d, got in zip(docs, analyze_pages(docs)):
+        want = analyze_pages([d])[0]
+        for f in ("x0", "x1", "y0", "y1", "cx", "cy", "is_sep", "tix"):
+            assert np.array_equal(getattr(got, f), getattr(want, f)), f
+        assert (got.valleys, got.lo, got.hi) == (want.valleys, want.lo, want.hi)
+        assert (got.margins is None) == (want.margins is None)
+        if got.margins is not None:
+            assert np.array_equal(got.margins[0], want.margins[0])
+            assert got.margins[1:] == want.margins[1:]

@@ -1,12 +1,14 @@
 """Spark-free gates on the whole-partition Arrow kernel
 (pipeline.make_partition_arrow_kernel): the pinned 3000-doc permutation
-hash, independence from how a partition arrives in batches, and the
-nested output agreeing with the flat one."""
+hashes, independence from how a partition arrives in batches and from
+which documents share it, and the nested output agreeing with the flat
+one."""
 
 import hashlib
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 
 from eynollah_spark.corpus import gen_doc
@@ -15,6 +17,10 @@ from eynollah_spark.pipeline import make_partition_arrow_kernel
 #: sha256 over the flat output of docs 0..2999 (seed 42), see _digest
 GOLDEN_ROWS = 279117
 GOLDEN_SHA256 = "0cb0f2a8fc7a6236a0e877339ed6623c6b6167ea8b3e8c75cde8db8f17a27bd4"
+#: the same over docs 0..2999 at seed 7, computed with the per-document
+#: kernel of commit 2794a0d, before the page stage was batched
+GOLDEN7_ROWS = 290825
+GOLDEN7_SHA256 = "703874dbc531726a20c96a1ab1f6f40b8beb6e1da4698a6688a37ab3c7729094"
 
 _INT = ("offset", "x0", "x1", "y0", "y1")
 _STR = ("kind", "text", "media_ref")
@@ -74,6 +80,44 @@ def test_permutation_hash_pinned(partition):
     out = _run(partition.to_batches(), include_payload=True)
     assert out.num_rows == GOLDEN_ROWS
     assert _digest(out) == GOLDEN_SHA256
+
+
+def test_permutation_hash_pinned_seed7():
+    """A second pinned corpus, holding pages the kernel deskews (their
+    rotated geometry is not integer-valued) and right-to-left pages."""
+    from eynollah_spark.kernels.deskew import estimate_skews
+
+    part = _partition(3000, seed=7)
+    assert pc.any(part["rtl"]).as_py()
+    t = part.filter(pc.equal(part["kind"], "text")).sort_by(
+        [("doc_id", "ascending"), ("offset", "ascending")])
+    ids = t["doc_id"].to_numpy(zero_copy_only=False)
+    bounds = np.flatnonzero(np.concatenate(([True], ids[1:] != ids[:-1], [True])))
+    x0, x1, y0, y1 = (t[c].to_numpy().astype(float) for c in ("x0", "x1", "y0", "y1"))
+    first = bounds[:-1]
+    ang = estimate_skews((x0 + x1) / 2.0, (y0 + y1) / 2.0, np.maximum(x1 - x0, 1.0),
+                         np.maximum(y1 - y0, 1.0), bounds,
+                         t["width"].to_numpy()[first], t["height"].to_numpy()[first])
+    assert (np.abs(ang) >= 0.75).sum() >= 50  # the kernel's rotation gate
+    out = _run(part.to_batches(), include_payload=True)
+    assert out.num_rows == GOLDEN7_ROWS
+    assert _digest(out) == GOLDEN7_SHA256
+
+
+def test_neighbours_do_not_matter(partition):
+    """The partition run whole, as 13-doc sub-partitions and one doc at a
+    time gives the same output: nothing a document computes depends on
+    the documents batched with it."""
+    ids = partition.column("doc_id").to_numpy(zero_copy_only=False)
+    starts = np.flatnonzero(np.concatenate(([True], ids[1:] != ids[:-1])))
+    assert len(starts) == 3000
+    kern = make_partition_arrow_kernel()
+    whole = pa.Table.from_batches(list(kern(iter(partition.to_batches()))))
+    for k in (13, 1):
+        cuts = np.append(starts[::k], len(ids))
+        outs = [b for s, e in zip(cuts[:-1], cuts[1:])
+                for b in kern(iter(partition.slice(s, e - s).to_batches()))]
+        assert whole.equals(pa.Table.from_batches(outs))
 
 
 def test_batch_boundaries_do_not_matter(partition):

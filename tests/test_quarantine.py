@@ -4,10 +4,18 @@ manifest.run_extraction — the scale replacement for the reference's
 halt_fail global abort, eynollah.py:2023-2028)."""
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 
 import eynollah_spark.pipeline as pl
+from eynollah_spark.corpus import gen_corpus_flat
+from eynollah_spark.kernels import layout
 from eynollah_spark.kernels.layout import DocSpans
+
+#: the failing document carries this page width (no generated page has it)
+_MARK = 7777
+_VICTIM = "doc00000013"
 
 
 def _doc():
@@ -23,7 +31,7 @@ def _doc():
 
 
 def test_safe_permutation_falls_back(monkeypatch):
-    def boom(d):
+    def boom(d, page=None):
         raise ValueError("kernel bug")
 
     monkeypatch.setattr(pl, "layout_permutation", boom)
@@ -34,18 +42,70 @@ def test_safe_permutation_falls_back(monkeypatch):
         pl._safe_permutation(_doc(), fail_fast=True)
 
 
-def test_quarantined_doc_does_not_poison_batch(monkeypatch, spark):
-    from pyspark.sql import functions as F
+def _partition() -> pa.Table:
+    """Flat span rows of 30 generated docs, the victim's width marked."""
+    flat, _ = gen_corpus_flat(30)
+    cols = ("doc_id", "width", "height", "rtl", "kind", "text", "media_ref",
+            "offset", "x0", "x1", "y0", "y1")
+    t = pa.table({c: flat[c] for c in cols})
+    victim = pc.equal(t["doc_id"], _VICTIM)
+    assert pc.any(victim).as_py()
+    return t.set_column(1, "width", pc.if_else(victim, _MARK, t["width"]))
 
-    from eynollah_spark.corpus import corpus_flat_spark, expected_spark
-    from eynollah_spark.pipeline import extract_flat_input
 
-    flat = corpus_flat_spark(spark, 30, partitions=2).cache()
-    # healthy pipeline in production mode must equal the oracle
-    out = extract_flat_input(flat.drop("expected_kind", "expected_rank"),
-                             partitions=2, fail_fast=False)
-    exp = expected_spark(flat)
-    j = out.alias("g").join(exp.alias("e"), ["doc_id", "ord"], "full_outer")
-    bad = j.filter(F.col("g.offset") != F.col("e.offset")).count()
-    flat.unpersist()
-    assert bad == 0
+def _run(t: pa.Table, fail_fast: bool) -> pa.Table:
+    kern = pl.make_partition_arrow_kernel(fail_fast=fail_fast)
+    return pa.Table.from_batches(list(kern(iter(t.to_batches(max_chunksize=500)))))
+
+
+def _check_quarantined(t: pa.Table, out: pa.Table, ref: pa.Table):
+    """The victim comes out in offset order with its kinds unchanged; the
+    other 29 docs equal the fail_fast=True output."""
+    mine = pc.equal(out["doc_id"], _VICTIM)
+    v = out.filter(mine).sort_by("ord")
+    src = t.filter(pc.equal(t["doc_id"], _VICTIM)).sort_by("offset")
+    assert v["offset"].to_pylist() == src["offset"].to_pylist()
+    assert v["kind"].to_pylist() == src["kind"].to_pylist()
+    others = out.filter(pc.invert(mine))
+    assert others.num_rows > 0
+    assert others.equals(ref.filter(pc.not_equal(ref["doc_id"], _VICTIM)))
+
+
+def test_quarantined_doc_does_not_poison_batch(monkeypatch):
+    """One document raising inside layout_permutation."""
+    t = _partition()
+    ref = _run(t, fail_fast=True)
+    real = pl.layout_permutation
+
+    def flaky(d, page=None):
+        if d.width == _MARK:
+            raise ValueError("kernel bug")
+        return real(d, page)
+
+    monkeypatch.setattr(pl, "layout_permutation", flaky)
+    _check_quarantined(t, _run(t, fail_fast=False), ref)
+    with pytest.raises(ValueError):
+        _run(t, fail_fast=True)
+
+
+def test_page_stage_failure_quarantines_one_doc(monkeypatch):
+    """One document raising inside the batched page stage: its batch is
+    re-run one document at a time, so only that document degrades."""
+    t = _partition()
+    ref = _run(t, fail_fast=True)
+    real = layout.analyze_pages
+    sizes = []
+
+    def flaky(docs):
+        sizes.append(len(docs))
+        if any(d.width == _MARK for d in docs):
+            raise ValueError("page stage bug")
+        return real(docs)
+
+    monkeypatch.setattr(pl, "analyze_pages", flaky)
+    monkeypatch.setattr(layout, "analyze_pages", flaky)
+    _check_quarantined(t, _run(t, fail_fast=False), ref)
+    # one batch of all 30 docs, then each doc's page stage alone
+    assert sizes == [30] + [1] * 30
+    with pytest.raises(ValueError):
+        _run(t, fail_fast=True)

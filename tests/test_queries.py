@@ -83,3 +83,22 @@ def test_sessionize_gap_has_sub_second_precision(spark, tmp_path):
 ])
 def test_sf_of_reads_the_last_path_component(sf_dir, sf):
     assert sf_of(sf_dir) == sf
+
+
+def test_subline_split_ships_the_package(spark, monkeypatch):
+    """ro_subline_split runs eynollah_spark code on the workers, so it
+    ships the package first, as every other worker-side path does."""
+    from eynollah_spark import packaging
+
+    calls = []
+    real = packaging.ensure_distributed
+
+    def record(s):
+        calls.append(s)
+        real(s)
+
+    monkeypatch.setattr(packaging, "ensure_distributed", record)
+    fn = registry()["ro_subline_split"]["spark_fn"]
+    rows = _rows(fn(spark, SF_DIR).collect())
+    assert calls == [spark]
+    assert rows == _oracle(SF_DIR, "documents", "ro_subline_split")
