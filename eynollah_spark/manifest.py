@@ -8,9 +8,9 @@ anti-join against a manifest table (SURVEY.md A4).
 
 The unit of checkpointing is a *partition bucket*: part =
 pmod(xxhash64(doc_id), n_parts). Each run processes the buckets absent
-from the manifest and commits them as a SNAPSHOT (VERDICT r4 item 5 —
-the Iceberg contract emulated without the jar, which cannot enter this
-sandbox):
+from the manifest, a batch at a time, and commits each batch as a
+SNAPSHOT (VERDICT r4 item 5 — the Iceberg contract emulated without the
+catalog jar):
 
   {out}/data/snap-<id>/part=<p>/*.parquet   append-only data files
   {out}/_manifests/snap-<id>.json           the commit point (atomic
@@ -21,6 +21,11 @@ sandbox):
                                             same metadata-swap commit
                                             Iceberg uses)
 
+A batch is one Spark job whose tasks run the layout kernel, write one
+file per (task, bucket) and return its lineage row (docs, spans, kind
+histogram); the driver sums these into the manifest. As in Iceberg's
+manifests, file stats are recorded at commit time, with no re-read.
+
 Snapshot ids are monotonically increasing; the table state at any id is
 reconstructed by replaying the manifest log: each part is served by the
 LATEST snapshot <= id that wrote it (read_as_of). rollback(id) drops
@@ -30,8 +35,7 @@ reprocesses exactly those buckets into a fresh snapshot (ids never
 reuse an existing data dir, so rollback + resume is idempotent).
 Reads prune at the directory level: only the part=<p> dirs the
 assignment references are listed, so as-of reads stay partition-pruned
-at any snapshot count. On a real deployment write_bucket_iceberg
-replaces all of this with writeTo().overwritePartitions() snapshots.
+at any snapshot count.
 """
 
 from __future__ import annotations
@@ -39,11 +43,16 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
 
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from eynollah_spark import KERNEL_VERSION
-from eynollah_spark.pipeline import extract
+from eynollah_spark.pipeline import (_kernel_input, make_partition_arrow_kernel,
+                                     write_parquet_atomic)
 
 
 def _manifest_path(out_path: str) -> str:
@@ -123,8 +132,8 @@ def read_as_of(spark: SparkSession, out_path: str,
     frames = []
     for sid, parts in sorted(by_sid.items()):
         # run_extraction records EVERY bucket of a batch in the manifest,
-        # but partitionBy materializes no directory for a bucket that got
-        # zero docs — a missing part dir the manifest recorded as empty is
+        # but its tasks create no directory for a bucket that got no
+        # rows — a missing part dir the manifest recorded as empty is
         # an EMPTY relation. One it recorded docs for was lost out of
         # band: raise instead of silently serving a smaller table.
         paths = []
@@ -142,7 +151,7 @@ def read_as_of(spark: SparkSession, out_path: str,
                 .parquet(*paths))
     if not frames:
         # every referenced bucket was empty: an empty table with the
-        # documented flat sink schema (+ the part column partitionBy adds)
+        # documented flat sink schema (+ the part column of the part=<p> dirs)
         from pyspark.sql import types as T
 
         from eynollah_spark.schemas import FLAT_OUT_SCHEMA
@@ -169,124 +178,110 @@ def rollback(out_path: str, snapshot_id: int) -> int:
     return dropped
 
 
-def iceberg_available(spark: SparkSession, catalog: str = "spark_catalog") -> bool:
-    """True when an Iceberg catalog is wired into this session (the
-    runtime jar is not shipped in this sandbox; on a real deployment set
-    spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog)."""
-    impl = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
-    return impl is not None and "iceberg" in str(impl).lower()
-
-
-def write_bucket_iceberg(out, table: str, create: bool = False) -> None:
-    """North-star sink: one Iceberg snapshot per bucket batch via
-    dynamic partition overwrite — `writeTo(t).overwritePartitions()`
-    replaces exactly the `part` partitions present in `out`, which is
-    the transactional equivalent of the parquet directory emulation
-    below (same resume semantics, plus snapshot lineage/time travel).
-    Callable only when iceberg_available(); this sandbox has no Iceberg
-    runtime jar, so the path is exercised in production deployments
-    only (run_extraction(..., iceberg_table=...) selects it)."""
-    from pyspark.sql import functions as F
-
-    if create:
-        (out.writeTo(table).using("iceberg")
-            .partitionedBy(F.col("part")).createOrReplace())
-    else:
-        out.writeTo(table).overwritePartitions()
-
-
-def completed_parts(spark: SparkSession, out_path: str,
-                    as_of: int | None = None) -> set[int]:
-    """Buckets covered by the (replayed) manifest log. `spark` is unused
-    (the log is driver-side JSON) but kept for call-site compatibility."""
+def completed_parts(out_path: str, as_of: int | None = None) -> set[int]:
+    """Buckets covered by the (replayed) manifest log."""
     return set(_assignment(out_path, as_of=as_of))
+
+
+def _reserve_snapshot_dir(out_path: str) -> int:
+    """A snapshot id whose data dir this call created: creating a dir
+    another writer holds fails, and the id moves on to the next."""
+    sid = _next_snapshot_id(out_path)
+    while True:
+        try:
+            os.makedirs(_snap_dir(out_path, sid))
+            return sid
+        except FileExistsError:
+            sid += 1
+
+
+def _bucket_writer(snap_dir: str, kernel):
+    """The mapInArrow function of one batch: run the flat `kernel` over
+    the task's doc-complete partition, write each bucket's rows to
+    snap_dir/part=<p>/part-<task>.parquet (the flat sink columns; the
+    bucket is in the path only) and yield one lineage row per bucket."""
+
+    def write(batches):
+        ids, parts = [], []  # the input's (doc_id, part), payload not held
+
+        def tap(batches):
+            for b in batches:
+                ids.append(b.column("doc_id"))
+                parts.append(b.column("part"))
+                yield b
+
+        task = TaskContext.get().partitionId()
+        lineage = []
+        for out in kernel(tap(batches)):
+            part = pc.take(pa.concat_arrays(parts), pc.index_in(
+                out.column("doc_id"), value_set=pa.concat_arrays(ids)))
+            for p in pc.unique(part).to_pylist():
+                rows = out.filter(pc.equal(part, p))
+                write_parquet_atomic(pa.Table.from_batches([rows]), os.path.join(
+                    snap_dir, f"part={p}", f"part-{task:05d}.parquet"))
+                hist = pc.value_counts(rows.column("kind"))
+                lineage.append({
+                    "part": p, "spans": rows.num_rows,
+                    "docs": pc.count_distinct(rows.column("doc_id")).as_py(),
+                    "kind_hist": json.dumps(dict(zip(
+                        hist.field("values").to_pylist(),
+                        hist.field("counts").to_pylist())))})
+        if lineage:
+            yield pa.RecordBatch.from_pylist(lineage)
+
+    return write
 
 
 def run_extraction(docs: DataFrame, out_path: str, n_parts: int = 8,
                    partitions: int | None = None, parts_per_batch: int = 4,
-                   iceberg_table: str | None = None,
                    extract_kwargs: dict | None = None) -> dict:
     """Extract with per-bucket checkpointing; resumable.
 
     Returns summary metrics. Re-running after a failure skips buckets
-    already recorded in the manifest (idempotent: bucket output is
-    overwritten atomically per directory partition).
-
-    iceberg_table: when set AND an Iceberg catalog is configured, bucket
-    output goes through writeTo(table).overwritePartitions() — one
-    snapshot per bucket batch (the BASELINE.json north-star sink); the
-    parquet directory emulation below is the sandbox fallback with the
-    same resume semantics.
+    already recorded in the manifest. Each batch of `parts_per_batch`
+    buckets is one Spark job over extract()'s plan and flat kernel
+    (`partitions`; `extract_kwargs`: num_col_lower, num_col_upper,
+    printspace_margin) with fail_fast=False, whose tasks write the
+    snapshot's data files and return the lineage the manifest commits.
     """
-    spark = docs.sparkSession
-    use_iceberg = iceberg_table is not None and iceberg_available(spark)
-    docs = docs.withColumn("part", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int"))
-    done = completed_parts(spark, out_path)
+    kw = dict(extract_kwargs or {})
+    margin = kw.pop("printspace_margin", 0.0)
+    kernel = make_partition_arrow_kernel(fail_fast=False, **kw)
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int")
+    done = completed_parts(out_path)
     todo = [p for p in range(n_parts) if p not in done]
     summary = {"n_parts": n_parts, "skipped": len(done), "processed": 0, "docs": 0, "spans": 0}
     os.makedirs(_manifest_path(out_path), exist_ok=True)
     for i in range(0, len(todo), parts_per_batch):
         batch = todo[i:i + parts_per_batch]
         t0 = time.time()
-        sub = docs.filter(F.col("part").isin(batch))
-        out = extract(sub.drop("part"), partitions=partitions, nested=False,
-                      fail_fast=False, **(extract_kwargs or {}))
-        out = out.withColumn("part", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int"))
-        sid = _next_snapshot_id(out_path)
-        if use_iceberg:
-            write_bucket_iceberg(out, iceberg_table, create=(i == 0 and not done))
-        else:
-            # append-only snapshot data dir; the manifest json below is
-            # the commit point — a crash between the two leaves an
-            # orphan dir the log never references (ids are not reused)
-            out.write.partitionBy("part").parquet(_snap_dir(out_path, sid))
-        # lineage + metrics per bucket (span counts, kind histogram) —
-        # computed from the parquet files just written, NOT by
-        # re-aggregating the uncached `out` plan (which would re-run the
-        # whole kernel stage a second time per batch); this also makes
-        # the recorded metrics reflect the committed files.
-        sd = _snap_dir(out_path, sid)
-        if use_iceberg:
-            committed = spark.table(iceberg_table)
-        elif os.path.isdir(sd) and any(d.startswith("part=")
-                                       for d in os.listdir(sd)):
-            committed = spark.read.parquet(sd)
-        else:
-            # ADVICE r5: an all-empty batch materializes no part dirs —
-            # there is nothing to re-read ('unable to infer schema');
-            # every bucket records zero docs below
-            committed = None
-        if committed is None:
-            rows = {}
-        else:
-            written = committed.filter(F.col("part").isin(batch))
-            stats = (written.groupBy("part")
-                     .agg(F.count("*").alias("spans"),
-                          F.countDistinct("doc_id").alias("docs")))
-            hist = (written.groupBy("part", "kind").count()
-                    .groupBy("part")
-                    .agg(F.to_json(F.map_from_entries(
-                        F.collect_list(F.struct("kind", "count")))).alias("kind_hist")))
-            rows = {r["part"]: r.asDict()
-                    for r in stats.join(hist, "part", "left").collect()}
+        sid = _reserve_snapshot_dir(out_path)
+        flat = _kernel_input(docs.filter(bucket.isin(batch)), partitions, margin)
+        rows = (flat.withColumn("part", bucket)
+                .mapInArrow(_bucket_writer(_snap_dir(out_path, sid), kernel),
+                            "part long, spans long, docs long, kind_hist string")
+                .collect())
+        parts_meta = {p: {"docs": 0, "spans": 0, "kind_hist": Counter()}
+                      for p in batch}
+        for r in rows:
+            m = parts_meta[r["part"]]
+            m["docs"] += r["docs"]
+            m["spans"] += r["spans"]
+            m["kind_hist"].update(json.loads(r["kind_hist"]))
         wall = time.time() - t0
-        parts_meta = {}
-        for p in batch:
-            r = rows.get(p, {"spans": 0, "docs": 0, "kind_hist": "{}"})
-            parts_meta[str(p)] = {
-                "docs": r["docs"], "spans": r["spans"],
-                "kind_hist": r.get("kind_hist") or "{}",
-                "wall_sec": round(wall / len(batch), 3),
-            }
-            summary["processed"] += 1
-            summary["docs"] += r["docs"]
-            summary["spans"] += r["spans"]
+        for m in parts_meta.values():
+            m["kind_hist"] = json.dumps(dict(sorted(m["kind_hist"].items())),
+                                        separators=(",", ":"))
+            m["wall_sec"] = round(wall / len(batch), 3)
+            summary["docs"] += m["docs"]
+            summary["spans"] += m["spans"]
+        summary["processed"] += len(batch)
         manifest = {
             "snapshot_id": sid,
             "parent_id": current_snapshot_id(out_path),
             "kernel_version": KERNEL_VERSION,
             "n_parts": n_parts,
-            "parts": parts_meta,
+            "parts": {str(p): m for p, m in parts_meta.items()},
             "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         tmp = os.path.join(_manifest_path(out_path), f".snap-{sid:06d}.json.tmp")

@@ -300,16 +300,10 @@ def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = 
     return kernel
 
 
-def extract(df: DataFrame, partitions: int | None = None, nested: bool = True,
-            fail_fast: bool = True,
-            num_col_lower: int = 0, num_col_upper: int = 0,
-            printspace_margin: float = 0.0) -> DataFrame:
-    """documents (nested) -> ordered out_spans.
-
-    ``nested=True`` returns FIXTURES.md §2 rows (doc_id, out_spans);
-    ``nested=False`` returns the flat sink shape (doc_id, ord, kind,
-    text, media_ref, offset) — preferable at scale.
-    """
+def _kernel_input(df: DataFrame, partitions: int | None,
+                  printspace_margin: float) -> DataFrame:
+    """extract()'s pre-kernel plan: nested documents -> flat span rows in
+    doc-complete hash partitions, with the optional printspace filter."""
     from eynollah_spark.packaging import ensure_distributed
 
     spark = df.sparkSession
@@ -330,10 +324,24 @@ def extract(df: DataFrame, partitions: int | None = None, nested: bool = True,
         # CLI's page-extraction step; --ignore-page-extraction skips it)
         flat = filter_printspace(flat, margin_frac=printspace_margin,
                                  keep_null_spans=True)
+    return flat
+
+
+def extract(df: DataFrame, partitions: int | None = None, nested: bool = True,
+            fail_fast: bool = True,
+            num_col_lower: int = 0, num_col_upper: int = 0,
+            printspace_margin: float = 0.0) -> DataFrame:
+    """documents (nested) -> ordered out_spans.
+
+    ``nested=True`` returns FIXTURES.md §2 rows (doc_id, out_spans);
+    ``nested=False`` returns the flat sink shape (doc_id, ord, kind,
+    text, media_ref, offset) — preferable at scale.
+    """
     kern = make_partition_arrow_kernel(
         fail_fast=fail_fast, num_col_lower=num_col_lower,
         num_col_upper=num_col_upper, output="nested" if nested else "flat")
-    return flat.mapInArrow(kern, schema=OUT_SCHEMA if nested else FLAT_OUT_SCHEMA)
+    return _kernel_input(df, partitions, printspace_margin).mapInArrow(
+        kern, schema=OUT_SCHEMA if nested else FLAT_OUT_SCHEMA)
 
 
 def extract_flat_input(flat: DataFrame, partitions: int | None = None,
@@ -373,6 +381,25 @@ def extract_flat_input(flat: DataFrame, partitions: int | None = None,
         "doc_id", "ord", "kind", "text", "media_ref", "offset")
 
 
+def write_parquet_atomic(table: pa.Table, final: str) -> None:
+    """Task-side parquet write, committed by os.replace of an
+    attempt-unique hidden temp file (ADVICE r3): a killed or speculative
+    attempt never leaves a truncated `final`, and a crashed one's '.'
+    leftover is skipped by Spark's file listing. Callers name `final`
+    after the task, so a retried attempt rewrites the same doc-complete
+    bytes. On an object store: PUT to a temp key + a manifest commit."""
+    import os
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    head, name = os.path.split(final)
+    os.makedirs(head, exist_ok=True)
+    tmp = os.path.join(head, f".{name}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}")
+    pq.write_table(table, tmp)
+    os.replace(tmp, final)
+
+
 #: input columns the kernel needs (column projection for the task-side scan)
 _SCAN_COLS_NARROW = ["doc_id", "width", "height", "rtl", "kind",
                      "offset", "x0", "x1", "y0", "y1"]
@@ -402,10 +429,6 @@ def extract_from_parquet_files(spark, paths: list[str], partitions: int | None =
     caller guarantees what the bucketed contract already required: every
     file is doc-complete. Files need not be sorted (in-kernel sort).
 
-    The task count no longer carries a ~0.25 s CPU tax per task: the
-    package init stops each Python worker from re-parsing its zips before
-    every task.
-
     Correctness equivalence with extract_flat_input is pinned by the bench
     checksum and tests/test_pipeline_spark.py."""
     from eynollah_spark.packaging import ensure_distributed
@@ -420,9 +443,6 @@ def extract_from_parquet_files(spark, paths: list[str], partitions: int | None =
     narrow_names = ["doc_id", "ord", "kind", "offset"]
 
     def gen(batches):
-        import os
-        import uuid
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -435,26 +455,10 @@ def extract_from_parquet_files(spark, paths: list[str], partitions: int | None =
                     t = pq.read_table(fp, columns=cols)
                     outs = list(kern(iter(t.to_batches())))
                     if write_dir is not None and outs:
-                        # task-side columnar WRITE (the sink mirror of the
-                        # task-side scan): the full ordered output lands
-                        # as one doc-complete file per input file. At
-                        # 100 TB this is the object-store write the job
-                        # actually ships, with a manifest row per file
-                        # for resume. Commit protocol (ADVICE r3): write
-                        # under an attempt-unique temp name, then
-                        # os.replace — atomic on POSIX, so a killed or
-                        # speculative duplicate attempt can never leave a
-                        # truncated file at the final path (a loser's
-                        # replace rewrites identical doc-complete bytes).
-                        # On an object store, PUT is already atomic; the
-                        # analogue is PUT-to-temp-key + manifest commit,
-                        # and verify_written checks the manifest either
-                        # way. Disable speculation for belt-and-braces
-                        # (spark.speculation=false is the default).
-                        final = f"{write_dir}/part-{int(tid)}-{k}.parquet"
-                        tmp = f"{final}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-                        pq.write_table(pa.Table.from_batches(outs), tmp)
-                        os.replace(tmp, final)
+                        # one doc-complete output file per input file
+                        write_parquet_atomic(
+                            pa.Table.from_batches(outs),
+                            f"{write_dir}/part-{int(tid)}-{k}.parquet")
                     if stats_only:
                         n_task += sum(ob.num_rows for ob in outs)
                     elif write_dir is not None and not include_payload:

@@ -13,9 +13,8 @@ Two implementations:
   (B12, eynollah.py:866-877) + main-vs-heading split rule (C12,
   utils/__init__.py:916-920: wide/short aspect => heading) and the
   column-count classifier clamp (B5, eynollah.py:411-416).
-* KerasScorer (optional): broadcasts weights, runs batch inference.
-  TF is not in this container -> import-gated stub with the exact batch
-  interface a real model would use.
+* NumpyMLPScorer: a trained region-kind MLP whose weights are broadcast
+  and applied per Arrow batch in numpy (no deep-learning runtime).
 """
 
 from __future__ import annotations
@@ -198,30 +197,6 @@ class NumpyMLPScorer:
             "p_heading": np.where(is_text, p[:, 1], 0.0),
             "p_drop_capital": np.where(is_text, p[:, 2], 0.0),
         })
-
-
-class KerasScorer:
-    """Broadcast-weights CNN scorer (stub: TF absent in this container).
-
-    Real deployment: `weights = spark.sparkContext.broadcast(path_or_bytes)`
-    at driver; executors lazily `tf.keras.models.load_model` once per
-    python worker and run `model.predict(batch)` per Arrow batch —
-    mirroring the reference's per-model rebatching table
-    (predictor.py:104-122) via spark.sql.execution.arrow.maxRecordsPerBatch.
-    """
-
-    def __init__(self, weights_broadcast=None):
-        self.weights = weights_broadcast
-
-    def score_batch(self, pdf: pd.DataFrame) -> pd.DataFrame:
-        try:
-            import tensorflow  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "KerasScorer requires tensorflow (not available in this "
-                "container); use HeuristicScorer"
-            ) from e
-        raise NotImplementedError("wire model.predict here")
 
 
 def refine_kinds(flat: DataFrame, scorer=None, threshold: float = 0.5,

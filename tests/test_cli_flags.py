@@ -153,3 +153,40 @@ def test_layout_cmd_accepts_flags_resumable(run_cli, spark, tmp_path):
                        "--n-parts", "2", "--num-col-upper", "1",
                        "--printspace-margin", "0.05"])
     assert summary["processed"] == 2 and summary["docs"] == 20
+
+
+def test_layout_cmd_flags_reach_kernel(run_cli, spark, tmp_path):
+    """`cli layout`'s flags reach run_extraction's kernel and printspace
+    filter: a pinned num_col of 3 leaves no marginalia, the printspace
+    margin drops edge spans, and a document whose every span falls
+    outside the frame commits no rows and is not counted."""
+    from eynollah_spark.corpus import corpus_flat_spark, nest_corpus
+    from eynollah_spark.manifest import read_as_of
+
+    flat = corpus_flat_spark(spark, 80)  # docs 65-74 carry marginalia
+    # every span of the first document at x = 0, outside any printspace
+    victim = flat.select("doc_id").orderBy("doc_id").first()["doc_id"]
+    off = F.col("doc_id") == victim
+    flat = (flat.withColumn("x0", F.when(off, F.lit(0)).otherwise(F.col("x0")))
+            .withColumn("x1", F.when(off, F.lit(0)).otherwise(F.col("x1"))))
+    nested = str(tmp_path / "nested.parquet")
+    nest_corpus(flat).write.parquet(nested)
+
+    def layout(name, *flags):
+        out = str(tmp_path / name)
+        summary = run_cli(["layout", "--input", nested, "--output", out,
+                           "--n-parts", "2", *flags])
+        return summary, read_as_of(spark, out)
+
+    base, base_rows = layout("base")
+    pinned, pinned_rows = layout("pinned", "--num-col-upper", "3")
+    cropped, cropped_rows = layout("cropped", "--printspace-margin", "0.2")
+    assert base_rows.filter(F.col("kind") == "marginalia").count() > 0
+    assert pinned_rows.filter(F.col("kind") == "marginalia").count() == 0
+    assert pinned["spans"] == base["spans"]
+    assert cropped["spans"] < base["spans"] == base_rows.count()
+    assert cropped["spans"] == cropped_rows.count()
+    assert base_rows.filter(F.col("doc_id") == victim).count() > 0
+    assert cropped_rows.filter(F.col("doc_id") == victim).count() == 0
+    assert cropped["docs"] == cropped_rows.select("doc_id").distinct().count()
+    assert cropped["docs"] < base["docs"]

@@ -65,7 +65,7 @@ def test_manifest_resume(spark, corpus, tmp_path_factory):
     docs = nest_corpus(corpus).cache()
     s1 = run_extraction(docs, out_dir, n_parts=4, partitions=8, parts_per_batch=2)
     assert s1["processed"] == 4 and s1["skipped"] == 0
-    assert completed_parts(spark, out_dir) == {0, 1, 2, 3}
+    assert completed_parts(out_dir) == {0, 1, 2, 3}
     # resume: nothing left to do
     s2 = run_extraction(docs, out_dir, n_parts=4, partitions=8)
     assert s2["processed"] == 0 and s2["skipped"] == 4

@@ -2,7 +2,6 @@
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -33,13 +32,6 @@ def test_refine_kinds_roundtrip(spark):
     # only text rows were touched
     assert refined.filter(F.col("kind") == "image").count() == \
         flat.filter(F.col("kind") == "image").count()
-
-
-def test_keras_scorer_is_gated():
-    from eynollah_spark.scorer import KerasScorer
-
-    with pytest.raises(NotImplementedError):
-        KerasScorer().score_batch(pd.DataFrame({"kind": []}))
 
 
 def test_multimodal_decode_embed(spark):
