@@ -310,7 +310,7 @@ def gen_corpus_flat(n_docs: int, seed: int = 42, start: int = 0):
     """Concatenated flat span arrays for docs [start, start+n_docs)."""
     cols = {k: [] for k in ("doc_id", "kind", "text", "media_ref", "offset",
                             "x0", "x1", "y0", "y1", "width", "height", "rtl",
-                            "expected_kind", "expected_rank")}
+                            "expected_kind", "expected_rank", "expected_n")}
     metas = []
     for d in range(start, start + n_docs):
         arrs, meta = gen_doc(d, seed)
@@ -325,6 +325,7 @@ def gen_corpus_flat(n_docs: int, seed: int = 42, start: int = 0):
         cols["width"].append(np.full(n, meta["width"], dtype=np.int64))
         cols["height"].append(np.full(n, meta["height"], dtype=np.int64))
         cols["rtl"].append(np.full(n, meta["rtl"], dtype=bool))
+        cols["expected_n"].append(np.full(n, n, dtype=np.int64))
     out = {k: (np.concatenate(v) if v else np.array([], dtype=object)) for k, v in cols.items()}
     return out, metas
 
@@ -334,7 +335,7 @@ def gen_corpus_flat(n_docs: int, seed: int = 42, start: int = 0):
 _FLAT_CORPUS_DDL = (
     "doc_id string, kind string, text string, media_ref string, offset int, "
     "x0 int, x1 int, y0 int, y1 int, width int, height int, rtl boolean, "
-    "expected_kind string, expected_rank int"
+    "expected_kind string, expected_rank int, expected_n int"
 )
 
 
@@ -343,7 +344,9 @@ def corpus_flat_spark(spark, n_docs: int, seed: int = 42, partitions: int | None
     doc_id range independently (this is the 10^12-doc story — the corpus
     is a pure function of doc_index, so no driver materialization and no
     shuffle is needed to create it). Empty documents emit one marker row
-    with offset = -1 so they survive the nesting group-by."""
+    with offset = -1 so they survive the nesting group-by. Every row
+    carries its document's span count, expected_n, so a check downstream
+    sees rows that went missing on the way."""
     import pandas as pd
 
     from eynollah_spark.packaging import ensure_distributed
@@ -366,6 +369,7 @@ def corpus_flat_spark(spark, n_docs: int, seed: int = 42, partitions: int | None
                         "y0": [0], "y1": [0], "width": [meta["width"]],
                         "height": [meta["height"]], "rtl": [meta["rtl"]],
                         "expected_kind": [None], "expected_rank": [-1],
+                        "expected_n": [0],
                     }))
                     continue
                 frames.append(pd.DataFrame({
@@ -379,6 +383,7 @@ def corpus_flat_spark(spark, n_docs: int, seed: int = 42, partitions: int | None
                     "rtl": meta["rtl"],
                     "expected_kind": arrs["expected_kind"],
                     "expected_rank": arrs["expected_rank"].astype(np.int32),
+                    "expected_n": np.int32(n),
                 }))
             if frames:
                 yield pd.concat(frames, ignore_index=True)

@@ -30,11 +30,16 @@ boxes instead of pixel rasters. Reference semantics preserved
 
 The kernel is a pure function of small per-document arrays; Spark's
 role (see eynollah_spark.pipeline) is to run millions of these in
-parallel inside the mapInArrow partition kernel. The page-analysis
-phases that need nothing from the rest of the pipeline (deskew scores,
-the page-level projection profiles and their valleys) run batched over
-many documents in analyze_pages; every batched step is exact per
-document, so a document's result never depends on its batch.
+parallel inside the mapInArrow partition kernel, a batch of documents
+at a time. analyze_pages runs the page stage (deskew scores, the
+page-level projection profiles and their valleys); layout_permutations
+runs the rest phase by phase: the per-document glue (separators, column
+estimate, marginal split, splitter pass 1, D4 boxes and cells, D5, D8)
+in Python loops over the documents, and the band gutters, the region
+clustering, D1 in-region order and D6 in-box order each as one numpy
+pass over the whole batch, its documents as segments. Every batched
+step is exact per segment, so a document's result never depends on its
+batch; layout_permutation is the batch of one.
 """
 
 from __future__ import annotations
@@ -90,26 +95,12 @@ class DocSpans:
 
 # ---------------------------------------------------------------- profiles ---
 
-def _med(a):
-    """np.median for 1-D arrays without its dispatch overhead (the kernel
-    calls medians ~6x per document; np.median costs ~65us per call on
-    small arrays). Identical semantics: mean of the two middle order
-    statistics."""
-    a = np.asarray(a, dtype=float)
-    n = a.size
-    if n == 0:
-        return float("nan")
-    if n == 1:
-        return float(a[0])
-    i, j = (n - 1) // 2, n // 2
-    b = np.partition(a, (i, j))
-    return 0.5 * (float(b[i]) + float(b[j]))
-
-
 def _seg_median(a, seg, bounds):
-    """_med of every segment ``a[bounds[k]:bounds[k+1]]`` (all non-empty;
-    ``seg`` the segment of each element): one segmented sort gives the
-    same two middle order statistics per segment."""
+    """np.median of every segment ``a[bounds[k]:bounds[k+1]]`` (all
+    non-empty; ``seg`` the segment of each element), without its
+    per-call dispatch: one segmented sort gives each segment's two
+    middle order statistics, and their mean is computed as np.median
+    computes it."""
     b = a[np.lexsort((a, seg))]
     n = np.diff(bounds)
     return 0.5 * (b[bounds[:-1] + (n - 1) // 2] + b[bounds[:-1] + n // 2])
@@ -137,12 +128,12 @@ def coverage_profiles(x0, x1, weights, bounds, width):
     sc, nb = scale[seg], bins[seg]
     lo = np.minimum(np.maximum((x0 * sc).astype(np.int64), 0), nb - 1)
     hi = np.minimum(np.maximum((x1 * sc).astype(np.int64) + 1, 1), nb)
-    # difference array via bincount (np.add.at is ~5x slower). NOTE: this
-    # computes (sum of +w) - (sum of +w at hi) where add.at interleaved
-    # signed weights into one accumulator; identical for the integral
-    # span-height weights used here, but float rounding could differ for
-    # fractional weights — if a fractional-weight caller appears, switch
-    # to one signed bincount: bincount(concat(lo,hi), concat(w,-w)).
+    # difference array as two bincounts (the weights summed at each
+    # span's first bin, minus those summed one past its last), which is
+    # ~5x faster than np.add.at. Deskewed geometry makes the weights
+    # fractional, so the float rounding of exactly this formulation is
+    # part of the pinned permutations: a rewrite (one signed bincount,
+    # say) must reproduce it bit for bit.
     base = seg * (_BINS + 1)
     size = len(width) * (_BINS + 1)
     w = np.asarray(weights, dtype=float)
@@ -440,15 +431,17 @@ def _settle_gutters(valleys, x0, x1, y0, y1, lo, hi, width, vsep_cx):
 
 
 def gutter_sets(x0, x1, y0, y1, bounds, width, vsep_cx):
-    """find_gutters for several non-empty segments of lines on one page
-    (segment k: lines ``[bounds[k], bounds[k+1])``, vertical separators
-    ``vsep_cx[k]``), the profile phase batched."""
+    """find_gutters for several non-empty segments of lines (segment k:
+    lines ``[bounds[k], bounds[k+1])`` on a page of ``width[k]``, or of
+    ``width`` for all, with vertical separators ``vsep_cx[k]``), the
+    profile phase batched."""
     bounds = np.asarray(bounds, dtype=np.int64)
-    valleys, lo, hi = _gutter_valleys(x0, x1, y0, y1, bounds,
-                                      np.full(len(vsep_cx), float(width)))
+    width = np.broadcast_to(np.asarray(width, dtype=float), (len(vsep_cx),))
+    valleys, lo, hi = _gutter_valleys(x0, x1, y0, y1, bounds, width)
     b = bounds.tolist()
-    return [_settle_gutters(v, x0[s:e], x1[s:e], y0[s:e], y1[s:e], l, h, width, vs)
-            for v, s, e, l, h, vs in zip(valleys, b[:-1], b[1:], lo, hi, vsep_cx)]
+    return [_settle_gutters(v, x0[s:e], x1[s:e], y0[s:e], y1[s:e], l, h, wd, vs)
+            for v, s, e, l, h, wd, vs in zip(valleys, b[:-1], b[1:], lo, hi,
+                                              width.tolist(), vsep_cx)]
 
 
 def find_gutters(x0, x1, y0, y1, width, vsep_cx=()):
@@ -500,35 +493,31 @@ def _band_vseps(vsep_cx, vseps, lo, hi):
             if min(vy1, hi) - max(vy0, lo) >= 0.3 * max(min(vy1 - vy0, hi - lo), 1.0)]
 
 
-def find_splitters(tx0, tx1, ty0, ty1, hseps, width, height, main_lo, main_hi,
-                   vseps=(), vsep_cx=(), band_gutters_out=None, line_gutters=None):
-    """y-positions that split the page into XY-cut bands — two passes,
-    mirroring the reference's per-part re-analysis (D2 re-runs
-    find_num_col per splitter part, utils/__init__.py:1444-1487).
+def _gutter_jobs(x0, x1, y0, y1, jobs):
+    """gutter_sets over bands of any number of documents in one batch:
+    ``jobs`` lists (rows, width, vsep_cx) per band — its rows of x0..y1,
+    its page width and its vertical separators."""
+    if not jobs:
+        return []
+    rows = np.concatenate([r for r, _, _ in jobs])
+    bounds = np.cumsum([0] + [len(r) for r, _, _ in jobs])
+    return gutter_sets(x0[rows], x1[rows], y0[rows], y1[rows], bounds,
+                       [w for _, w, _ in jobs], [v for _, _, v in jobs])
 
-    Pass 1 (structural): full-main-width horizontal separators
-    (:1444-1457) and vertical-separator y-extent edges (D4's sweep walks
-    each separator's y-range, :1794-1864 — below the last vertical
-    separator the band reverts to full width; edges are guarded so they
-    never cut a text line roughly in half).
 
-    Pass 2 (per pass-1 band, using the band's OWN column structure):
-    lines spanning >=2 of the band's columns split into their own band
-    via top/baseline pairs (:1708-1721); in 1-column bands, centered
-    short lines alone in their row (section headings) split bands — the
-    symbolic counterpart of D6's projection-valley banding (:1050-1076).
-    Band-local gutters matter: a middle column of a 3-column band must
-    not be mistaken for a spanning line just because it crosses another
-    band's gutter. ``line_gutters``, if given, is find_gutters of all the
-    lines with ``vsep_cx``: a band that holds every line with the same
-    separators has exactly those gutters.
-    """
+def _splitter_bands(tx0, tx1, ty0, ty1, hseps, height, main_lo, main_hi,
+                    vseps, vsep_cx):
+    """find_splitters pass 1 and the pass-1 bands that hold lines:
+    returns (pass1, order, bstart, bands, vbands) — band k = bands[i]
+    holds the lines ``order[bstart[k]:bstart[k + 1]]`` and overlaps the
+    vertical separators ``vbands[i]``."""
     ys = [0.0, float(height)]
     mw = max(main_hi - main_lo, 1.0)
     for sx0, sx1, sy0, sy1 in hseps:
         if sx0 <= main_lo + _SPLITTER_X0 * mw and sx1 >= main_lo + _SPLITTER_X1 * mw:
             ys.append((sy0 + sy1) / 2.0)
-    h = np.maximum(ty1 - ty0, 1.0)
+    if len(vseps):
+        h = np.maximum(ty1 - ty0, 1.0)
     for vy0, vy1 in vseps:
         for y in (float(vy0) - 0.5, float(vy1) + 0.5):
             strad = (ty0 < y) & (ty1 > y)
@@ -538,23 +527,41 @@ def find_splitters(tx0, tx1, ty0, ty1, hseps, width, height, main_lo, main_hi,
                     continue
             ys.append(y)
     pass1 = _dedupe_splitters(ys, height)
+    _, order, bstart = _by_band(pass1, (ty0 + ty1) / 2.0)
+    bands = (bstart[1:] > bstart[:-1]).nonzero()[0].tolist()
+    vbands = [_band_vseps(vsep_cx, vseps, pass1[k], pass1[k + 1]) for k in bands]
+    return pass1, order, bstart, bands, vbands
 
+
+def _reused_gutters(pass1_bands, n, vsep_cx, line_gutters):
+    """The gutters of the pass-1 bands when ``line_gutters`` (find_gutters
+    of all ``n`` lines with ``vsep_cx``) answers them — one band holding
+    every line with the same separators — else None."""
+    _, order, _, bands, vbands = pass1_bands
+    if (line_gutters is not None and len(bands) == 1
+            and len(order) == n and vbands[0] == list(vsep_cx)):
+        return [list(line_gutters)]
+    return None
+
+
+def _band_jobs(pass1_bands, base, width):
+    """_gutter_jobs entries of the pass-1 bands, rows offset by ``base``."""
+    _, order, bstart, bands, vbands = pass1_bands
+    return [(order[bstart[k]:bstart[k + 1]] + base, width, vb)
+            for k, vb in zip(bands, vbands)]
+
+
+def _split_bands(tx0, tx1, ty0, ty1, width, height, pass1_bands, gutters,
+                 band_gutters_out=None):
+    """find_splitters pass 2 over the pass-1 bands, given their
+    ``gutters``: the final splitter list."""
+    pass1, order, bstart, bands, _ = pass1_bands
     cys = (ty0 + ty1) / 2.0
     cxs = (tx0 + tx1) / 2.0
     w = tx1 - tx0
-    # the pass-1 bands that hold lines; their gutters in one batch
-    _, order, bstart = _by_band(pass1, cys)
-    bands = (bstart[1:] > bstart[:-1]).nonzero()[0].tolist()
-    vbands = [_band_vseps(vsep_cx, vseps, pass1[k], pass1[k + 1]) for k in bands]
-    if (line_gutters is not None and len(bands) == 1
-            and len(order) == len(tx0) and vbands[0] == list(vsep_cx)):
-        gs = [list(line_gutters)]
-    else:
-        gs = gutter_sets(tx0[order], tx1[order], ty0[order], ty1[order],
-                         np.concatenate(([0], np.diff(bstart)[bands].cumsum())),
-                         width, vbands)
+    h = np.maximum(ty1 - ty0, 1.0)
     extra = []
-    for k, g in zip(bands, gs):
+    for k, g in zip(bands, gutters):
         lo, hi = pass1[k], pass1[k + 1]
         if band_gutters_out is not None:
             # bands that survive into the final splitter list unchanged
@@ -579,6 +586,42 @@ def find_splitters(tx0, tx1, ty0, ty1, hseps, width, height, main_lo, main_hi,
                     if (np.abs(bcy - cys[i]) < 0.6 * np.maximum(bh, h[i])).sum() <= 1:
                         extra += [float(ty0[i]) - 0.5, float(ty1[i]) + 0.5]
     return _dedupe_splitters(pass1 + extra, height)
+
+
+def find_splitters(tx0, tx1, ty0, ty1, hseps, width, height, main_lo, main_hi,
+                   vseps=(), vsep_cx=(), band_gutters_out=None, line_gutters=None):
+    """y-positions that split the page into XY-cut bands — two passes,
+    mirroring the reference's per-part re-analysis (D2 re-runs
+    find_num_col per splitter part, utils/__init__.py:1444-1487).
+
+    Pass 1 (structural): full-main-width horizontal separators
+    (:1444-1457) and vertical-separator y-extent edges (D4's sweep walks
+    each separator's y-range, :1794-1864 — below the last vertical
+    separator the band reverts to full width; edges are guarded so they
+    never cut a text line roughly in half).
+
+    Pass 2 (per pass-1 band, using the band's OWN column structure):
+    lines spanning >=2 of the band's columns split into their own band
+    via top/baseline pairs (:1708-1721); in 1-column bands, centered
+    short lines alone in their row (section headings) split bands — the
+    symbolic counterpart of D6's projection-valley banding (:1050-1076).
+    Band-local gutters matter: a middle column of a 3-column band must
+    not be mistaken for a spanning line just because it crosses another
+    band's gutter. ``line_gutters``, if given, is find_gutters of all the
+    lines with ``vsep_cx``: a band that holds every line with the same
+    separators has exactly those gutters.
+
+    layout_permutations runs the same three steps (_splitter_bands, the
+    band gutters, _split_bands) with the gutters of a whole batch of
+    documents in one gutter_sets call.
+    """
+    bands = _splitter_bands(tx0, tx1, ty0, ty1, hseps, height, main_lo, main_hi,
+                            vseps, vsep_cx)
+    gs = _reused_gutters(bands, len(tx0), vsep_cx, line_gutters)
+    if gs is None:
+        gs = _gutter_jobs(tx0, tx1, ty0, ty1, _band_jobs(bands, 0, width))
+    return _split_bands(tx0, tx1, ty0, ty1, width, height, bands, gs,
+                        band_gutters_out)
 
 
 def merge_vertical_separators(vcx, vboxes, width):
@@ -674,7 +717,29 @@ def _cc_labels(n, a, b, init=None):
             labels = nxt
 
 
-def cluster_lines_into_regions(x0, x1, y0, y1, band=None, rtl=False):
+def _ragged_arange(starts, lengths):
+    """concatenate(arange(s, s + n) for s, n in zip(starts, lengths))."""
+    ends = np.cumsum(lengths)
+    total = int(ends[-1]) if len(ends) else 0
+    return np.repeat(starts - (ends - lengths), lengths) + np.arange(total)
+
+
+def _segments(bounds):
+    """The segment of every element, segment k being
+    ``[bounds[k], bounds[k+1])``."""
+    bounds = np.asarray(bounds, dtype=np.int64)
+    return np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
+
+
+def _lex_key(major, minor):
+    """Complex keys that numpy sorts and searches lexicographically by
+    (major, minor) — both stored exactly, no arithmetic."""
+    k = np.empty(len(major), dtype=complex)
+    k.real, k.imag = major, minor
+    return k
+
+
+def cluster_lines_into_regions(x0, x1, y0, y1, band=None, rtl=False, bounds=None):
     """Group text lines into regions (paragraph blocks).
 
     Inverse of the reference's C16 (lines are assigned to model-detected
@@ -684,27 +749,38 @@ def cluster_lines_into_regions(x0, x1, y0, y1, band=None, rtl=False):
     for RTL — justified text aligns there, neighboring columns never
     do), and lie in the same XY-cut band (a splitter between two lines
     is a region boundary by construction, cf. D4).
+
+    ``bounds`` clusters many segments (documents) at once: segment k is
+    the lines ``[bounds[k], bounds[k+1])``, right-to-left where
+    ``rtl[k]``. Lines of different segments never merge, and labels are
+    minimum member indices, so a segment's labels minus its start are
+    exactly the labels of clustering it alone.
     """
     n = len(x0)
     if n == 0:
         return np.arange(n)
     if band is None:
         band = np.zeros(n, dtype=np.int64)
+    if bounds is None:
+        bounds, rtl = [0, n], [rtl]
+    seg = _segments(bounds)
 
     h = np.maximum(y1 - y0, 1.0)
     w = np.maximum(x1 - x0, 1.0)
-    anchor = x1 if rtl else x0
+    anchor = np.where(np.asarray(rtl, dtype=bool)[seg], x1, x0)
 
-    # vectorized candidate-pair enumeration: sort by y0; for each line i,
-    # candidates j follow it with y0[j] <= y1[i] + gap_bound(i). The
-    # bound uses h[i], not h.max(): the gap predicate needs
-    # dy <= factor*min(h_i,h_j)+4 <= factor*h_i+4, so the per-line
-    # window is an exact superset of qualifying pairs that stays tight
-    # when one tall media span would inflate a global window.
-    order = y0.argsort(kind="stable")
-    sy0, sy1 = y0[order], y1[order]
-    sh = h[order]
-    hi = sy0.searchsorted(sy1 + _REGION_GAP_FACTOR * sh + 4, side="right")
+    # vectorized candidate-pair enumeration: sort by (segment, y0); for
+    # each line i, candidates j follow it in its segment with y0[j] <=
+    # y1[i] + gap_bound(i). The bound uses h[i], not h.max(): the gap
+    # predicate needs dy <= factor*min(h_i,h_j)+4 <= factor*h_i+4, so the
+    # per-line window is an exact superset of qualifying pairs that stays
+    # tight when one tall media span would inflate a global window. The
+    # (segment, y) keys are searched lexicographically, so a window ends
+    # at its segment's end.
+    order = np.lexsort((y0, seg))
+    sseg = seg[order]
+    hi = _lex_key(sseg, y0[order]).searchsorted(
+        _lex_key(sseg, y1[order] + _REGION_GAP_FACTOR * h[order] + 4), side="right")
     cnt = np.maximum(hi - np.arange(1, n + 1), 0)
     total = int(cnt.sum())
     labels = np.arange(n, dtype=np.int64)
@@ -738,93 +814,125 @@ def cluster_lines_into_regions(x0, x1, y0, y1, band=None, rtl=False):
             # a paragraph drags the region bbox and corrupts D6 row order
             okp &= hmax <= _REGION_H_RATIO * hmin
             labels = _cc_labels(n, i[okp], j[okp], init=labels)
+    return _join_containers(labels, x0, x1, y0, y1, band, seg)
 
-    # Containment post-pass (the reference's actual C16 rule is
-    # point-in-REGION-polygon, eynollah.py:946-980 — a line lying inside
-    # a merged contour belongs to it no matter its indent): a line whose
-    # bbox falls strictly inside ANOTHER region's bbox (same band) joins
-    # that region. Without this, an indented single-line region
-    # vertically interleaved in a paragraph block makes the final order
-    # depend on a 1-px gap-rule boundary (fixture-margin finding, r3):
-    # no ordering of the two region UNITS preserves the flow, while
-    # in-region D1 row ordering restores it exactly.
+
+def _join_containers(labels, x0, x1, y0, y1, band, seg):
+    """Containment post-pass (the reference's actual C16 rule is
+    point-in-REGION-polygon, eynollah.py:946-980 — a line lying inside a
+    merged contour belongs to it no matter its indent): a line whose bbox
+    falls strictly inside ANOTHER region's bbox (same segment and band)
+    joins that region. Without this, an indented single-line region
+    vertically interleaved in a paragraph block makes the final order
+    depend on a 1-px gap-rule boundary (fixture-margin finding, r3): no
+    ordering of the two region UNITS preserves the flow, while in-region
+    D1 row ordering restores it exactly."""
     uniq, gorder, gstarts = _group_by_label(labels)
-    if len(uniq) > 1:
-        # one vectorized pass over the ORIGINAL region bboxes; a line
-        # contained in several picks the container with the smallest
-        # (area, x0, y0, x1, y1) — a purely geometric key, so the result
-        # is invariant to input row order
-        R = len(uniq)
-        rx0 = _group_minmax(x0, gorder, gstarts, "min")
-        rx1 = _group_minmax(x1, gorder, gstarts, "max")
-        ry0 = _group_minmax(y0, gorder, gstarts, "min")
-        ry1 = _group_minmax(y1, gorder, gstarts, "max")
-        rb = band[gorder[gstarts[:-1]]]
-        area = (rx1 - rx0) * (ry1 - ry0)
-        rank = np.empty(R, dtype=np.int64)
-        rank[np.lexsort((ry1, rx1, ry0, rx0, area))] = np.arange(R)
-        cont = ((x0[:, None] >= rx0) & (x1[:, None] <= rx1)
-                & (y0[:, None] >= ry0) & (y1[:, None] <= ry1)
-                & (band[:, None] == rb) & (labels[:, None] != uniq))
-        if cont.any():
-            # bbox containment over-approximates the contour (an L-shaped
-            # title+column region's bbox swallows the neighbour column):
-            # require the container to have member lines x-overlapping
-            # the candidate BOTH above and below — i.e. the line is truly
-            # interleaved in the container's flow, not merely inside its
-            # bounding box.
-            new = labels.copy()
-            for i in cont.any(axis=1).nonzero()[0]:
-                best = None
-                for k in cont[i].nonzero()[0]:
-                    m = labels == uniq[k]
-                    ovl = m & (np.minimum(x1, x1[i]) > np.maximum(x0, x0[i]))
-                    if ((ovl & (y1 <= y0[i])).any()
-                            and (ovl & (y0 >= y1[i])).any()):
-                        if best is None or rank[k] < rank[best]:
-                            best = k
-                if best is not None:
-                    new[i] = uniq[best]
-            labels = new
-    return labels
+    if len(uniq) <= 1:
+        return labels
+    # every (line, region) pair of the same segment and band, over the
+    # ORIGINAL region bboxes; a line contained in several picks the
+    # container with the smallest (area, x0, y0, x1, y1) — a purely
+    # geometric key, so the result is invariant to input row order
+    R = len(uniq)
+    rx0 = _group_minmax(x0, gorder, gstarts, "min")
+    rx1 = _group_minmax(x1, gorder, gstarts, "max")
+    ry0 = _group_minmax(y0, gorder, gstarts, "min")
+    ry1 = _group_minmax(y1, gorder, gstarts, "max")
+    area = (rx1 - rx0) * (ry1 - ry0)
+    rank = np.empty(R, dtype=np.int64)
+    rank[np.lexsort((ry1, rx1, ry0, rx0, area))] = np.arange(R)
+    rord = np.lexsort((band[uniq], seg[uniq]))
+    rkey = _lex_key(seg[uniq][rord], band[uniq][rord])
+    lkey = _lex_key(seg, band)
+    lo = rkey.searchsorted(lkey, side="left")
+    cnt = rkey.searchsorted(lkey, side="right") - lo
+    li = np.repeat(np.arange(len(labels)), cnt)
+    rk = rord[_ragged_arange(lo, cnt)]
+    cont = ((x0[li] >= rx0[rk]) & (x1[li] <= rx1[rk])
+            & (y0[li] >= ry0[rk]) & (y1[li] <= ry1[rk]) & (labels[li] != uniq[rk]))
+    if not cont.any():
+        return labels
+    # bbox containment over-approximates the contour (an L-shaped
+    # title+column region's bbox swallows the neighbour column): require
+    # the container to have member lines x-overlapping the candidate
+    # BOTH above and below — i.e. the line is truly interleaved in the
+    # container's flow, not merely inside its bounding box.
+    li, rk = li[cont], rk[cont]
+    size = gstarts[rk + 1] - gstarts[rk]
+    p = np.repeat(np.arange(len(li)), size)
+    m = gorder[_ragged_arange(gstarts[rk], size)]
+    i = li[p]
+    ovl = np.minimum(x1[m], x1[i]) > np.maximum(x0[m], x0[i])
+    above = np.bincount(p, weights=ovl & (y1[m] <= y0[i]), minlength=len(li))
+    below = np.bincount(p, weights=ovl & (y0[m] >= y1[i]), minlength=len(li))
+    ok = (above > 0) & (below > 0)
+    if not ok.any():
+        return labels
+    li, rk = li[ok], rk[ok]
+    best = np.lexsort((rank[rk], li))
+    li, rk = li[best], rk[best]
+    first = np.concatenate(([True], li[1:] != li[:-1]))
+    new = labels.copy()
+    new[li[first]] = uniq[rk[first]]
+    return new
 
 
 # --------------------------------------------------- ordering (D4/D5/D6/D1) ---
 
-def _row_cluster(cy, thr):
-    """Cluster sorted-by-cy items into rows; returns row ids aligned with input order."""
-    order = cy.argsort(kind="stable")
-    thr = float(thr)
+def _row_clusters(cy, seg, thr):
+    """D1/D6 row clustering of many segments at once: items sorted by
+    (segment, cy) form rows, a new row starting at each segment and where
+    cy exceeds the row's first item by more than the segment's ``thr``.
+    Returns row ids aligned with the input, increasing through the
+    segments (``seg`` non-decreasing), so sorting by row keeps each
+    segment's items together and in segment order."""
+    order = np.lexsort((cy, seg))
     out = []
-    row = 0
-    ref = None
-    for v in cy[order].tolist():
-        if ref is None:
-            ref = v
-        elif v - ref > thr:
+    row, cur, ref = -1, -1, 0.0
+    for v, s, t in zip(cy[order].tolist(), seg.tolist(),
+                       np.asarray(thr, dtype=float)[seg].tolist()):
+        if s != cur or v - ref > t:
             row += 1
-            ref = v
+            cur, ref = s, v
         out.append(row)
     rows = np.empty(len(out), dtype=np.int64)
     rows[order] = out
     return rows
 
 
-def order_lines_in_region(cx, cy, rtl, off=None):
+def order_lines_in_region(cx, cy, rtl, off=None, bounds=None):
     """D1 (eynollah.py:891-944): row-cluster line centers with threshold
     median-pitch/1.5, rows top-down, left-right (or RTL) within a row.
 
     `off` (span offsets) is the final tie-break so geometrically identical
-    lines order deterministically regardless of input row order."""
+    lines order deterministically regardless of input row order.
+
+    ``bounds`` orders many regions at once: region k is the lines
+    ``[bounds[k], bounds[k+1])``, right-to-left where ``rtl[k]``, and its
+    pitch is its own. The result lists region 0's lines in order, then
+    region 1's, and so on."""
     n = len(cx)
-    if n <= 1:
-        return np.arange(n)
-    scy = np.sort(cy)
+    if bounds is None:
+        if n <= 1:
+            return np.arange(n)
+        bounds, rtl = [0, n], [rtl]
+    seg = _segments(bounds)
+    S = len(bounds) - 1
+    # each region's pitch: the median of its positive cy gaps, inf if none
+    so = np.lexsort((cy, seg))
+    scy = cy[so]
     d = scy[1:] - scy[:-1]
-    pos = d[d > 1e-9]
-    pitch = _med(pos) if len(pos) else float("inf")
-    rows = _row_cluster(cy, pitch / _LINE_ROW_DIV)
-    xkey = -cx if rtl else cx
+    gap = (d > 1e-9) & (seg[1:] == seg[:-1])
+    pseg = seg[1:][gap]
+    npos = np.bincount(pseg, minlength=S)
+    pitch = np.full(S, np.inf)
+    has = npos > 0
+    if has.any():
+        pitch[has] = _seg_median(d[gap], pseg,
+                                 np.concatenate(([0], np.cumsum(npos[has]))))
+    rows = _row_clusters(cy, seg, pitch / _LINE_ROW_DIV)
+    xkey = np.where(np.asarray(rtl, dtype=bool)[seg], -cx, cx)
     if off is None:
         return np.lexsort((xkey, rows))
     return np.lexsort((np.asarray(off), xkey, rows))
@@ -914,6 +1022,7 @@ def analyze_pages(docs: list[DocSpans]) -> list[Page]:
     return pages
 
 
+
 def layout_permutation(doc: DocSpans, page: Page | None = None):
     """Core per-document pipeline; returns (perm, marg_mask) where perm is
     the index permutation of doc spans in final reading order and
@@ -921,220 +1030,264 @@ def layout_permutation(doc: DocSpans, page: Page | None = None):
     (`doc.text` / `doc.media_ref` are never read — the kernel is pure
     geometry, so callers may pass placeholders.) ``page`` is the doc's
     analyze_pages result; without it the page stage runs on this doc
-    alone.
+    alone. A batch of one for layout_permutations.
 
     Serialization order per D8 (utils/xml.py:49-66, writer.py:184-290):
     marg-L -> ordered text -> marg-R -> images -> separators -> tables.
     """
-    n = doc.n
-    if n == 0:
-        return np.array([], dtype=np.int64), np.array([], dtype=bool)
-    if page is None:
-        page = analyze_pages([doc])[0]
-    kind = doc.kind
-    x0, x1, y0, y1, cx, cy = page.x0, page.x1, page.y0, page.y1, page.cx, page.cy
-    W, H = float(doc.width), float(doc.height)
-    tix = page.tix
-    tx0, tx1, ty0, ty1 = x0[tix], x1[tix], y0[tix], y1[tix]
+    return layout_permutations([doc], None if page is None else [page])[0]
 
-    # separator geometry split (C3, utils/__init__.py:187-219)
-    sep_ix = page.is_sep.nonzero()[0]
-    vcx, vboxes, hseps = [], [], []
-    if len(sep_ix):
-        sw, sh = x1[sep_ix] - x0[sep_ix], y1[sep_ix] - y0[sep_ix]
-        hsep_ix = sep_ix[sw >= sh]
-        vsep_ix = sep_ix[sw < sh]
-        vcx, vboxes = merge_vertical_separators(
-            cx[vsep_ix].tolist(), [(y0[i], y1[i]) for i in vsep_ix], W
+
+class _Doc:
+    """One document's state between the phases of layout_permutations.
+    Construction is the first phase: separators, the page-level column
+    estimate and the marginal split."""
+
+    def __init__(self, doc: DocSpans, page: Page):
+        self.doc, self.page = doc, page
+        x0, x1, y0, y1, cx = page.x0, page.x1, page.y0, page.y1, page.cx
+        self.W, self.H = W, H = float(doc.width), float(doc.height)
+        self.rtl = doc.rtl
+        tix = page.tix
+        tx0, tx1, ty0, ty1 = x0[tix], x1[tix], y0[tix], y1[tix]
+
+        # separator geometry split (C3, utils/__init__.py:187-219)
+        self.sep_ix = sep_ix = page.is_sep.nonzero()[0]
+        self.vcx, self.vboxes, self.hseps = [], [], []
+        if len(sep_ix):
+            sw, sh = x1[sep_ix] - x0[sep_ix], y1[sep_ix] - y0[sep_ix]
+            hsep_ix = sep_ix[sw >= sh]
+            vsep_ix = sep_ix[sw < sh]
+            self.vcx, self.vboxes = merge_vertical_separators(
+                cx[vsep_ix].tolist(), [(y0[i], y1[i]) for i in vsep_ix], W
+            )
+            self.hseps = [(x0[i], x1[i], y0[i], y1[i]) for i in hsep_ix]
+
+        # --- page-level column estimate (B5 heuristic stand-in: peak count
+        # of the x-projection, cf. find_num_col utils/__init__.py:245-489).
+        # Only substantial columns count (>=15% of ink mass) — the CNN
+        # column classifier the reference uses never counts marginal humps.
+        gutters_all = _settle_gutters(page.valleys, tx0, tx1, ty0, ty1,
+                                      page.lo, page.hi, W, self.vcx)
+        if gutters_all and len(tix):
+            tcx = cx[tix]
+            tarea = np.maximum(tx1 - tx0, 1.0) * np.maximum(ty1 - ty0, 1.0)
+            edges = [-np.inf] + list(gutters_all) + [np.inf]
+            masses = np.array([
+                tarea[(tcx >= edges[i]) & (tcx < edges[i + 1])].sum()
+                for i in range(len(edges) - 1)
+            ])
+            num_col_est = max(1, int((masses >= 0.15 * masses.sum()).sum()))
+        else:
+            num_col_est = 1
+        # B5 user bounds, matching the reference's branch structure exactly
+        # (eynollah.py:322-335 and 391-416): a SINGLE bound PINS num_col to
+        # that value (upper-only or lower-only forces it — the reference
+        # skips the classifier entirely); both-set-and-equal also pins;
+        # only both-set-and-unequal clamps the estimate from both sides.
+        lo, hi = int(doc.num_col_lower or 0), int(doc.num_col_upper or 0)
+        if hi and not lo:
+            num_col_est = hi
+        elif lo and not hi:
+            num_col_est = lo
+        elif lo and hi:
+            num_col_est = hi if lo == hi else min(max(num_col_est, lo), hi)
+
+        # --- C10 marginalia over text lines
+        marg_mask_t, self.main_lo, self.main_hi = _marginal_split(
+            tx0, tx1, ty0, ty1, W, H, num_col_est, page.margins
         )
-        hseps = [(x0[i], x1[i], y0[i], y1[i]) for i in hsep_ix]
-
-    # --- page-level column estimate (B5 heuristic stand-in: peak count of
-    # the x-projection, cf. find_num_col utils/__init__.py:245-489). Only
-    # substantial columns count (>=15% of ink mass) — the CNN column
-    # classifier the reference uses never counts marginal humps.
-    gutters_all = _settle_gutters(page.valleys, tx0, tx1, ty0, ty1,
-                                  page.lo, page.hi, W, vcx)
-    if gutters_all and len(tix):
-        tcx = cx[tix]
-        tarea = np.maximum(tx1 - tx0, 1.0) * np.maximum(ty1 - ty0, 1.0)
-        edges = [-np.inf] + list(gutters_all) + [np.inf]
-        masses = np.array([
-            tarea[(tcx >= edges[i]) & (tcx < edges[i + 1])].sum()
-            for i in range(len(edges) - 1)
-        ])
-        num_col_est = max(1, int((masses >= 0.15 * masses.sum()).sum()))
-    else:
-        num_col_est = 1
-    # B5 user bounds, matching the reference's branch structure exactly
-    # (eynollah.py:322-335 and 391-416): a SINGLE bound PINS num_col to
-    # that value (upper-only or lower-only forces it — the reference
-    # skips the classifier entirely); both-set-and-equal also pins; only
-    # both-set-and-unequal clamps the estimate from both sides.
-    lo, hi = int(doc.num_col_lower or 0), int(doc.num_col_upper or 0)
-    if hi and not lo:
-        num_col_est = hi
-    elif lo and not hi:
-        num_col_est = lo
-    elif lo and hi:
-        num_col_est = hi if lo == hi else min(max(num_col_est, lo), hi)
-
-    # --- C10 marginalia over text lines
-    marg_mask_t, main_lo, main_hi = _marginal_split(
-        tx0, tx1, ty0, ty1, W, H, num_col_est, page.margins
-    )
-    marg_ix = tix[marg_mask_t]
-    body_ix = tix[~marg_mask_t]
-
-    off = np.asarray(doc.offset, dtype=np.int64)
-    ordered_text = _order_body_text(
-        body_ix, x0, x1, y0, y1, cx, cy, W, H,
-        hseps=hseps,
-        vsep_cx=vcx,
-        vsep_boxes=vboxes,
-        main_lo=main_lo, main_hi=main_hi, rtl=doc.rtl, off=off,
+        self.marg_ix = tix[marg_mask_t]
+        self.body_ix = tix[~marg_mask_t]
         # without marginalia the body is every text line: the page-level
         # gutter analysis is the body's
-        body_gutters=None if len(marg_ix) else gutters_all,
-    )
+        self.body_gutters = None if len(self.marg_ix) else gutters_all
+        self.off = np.asarray(doc.offset, dtype=np.int64)
 
-    # --- C11 marginal split + D1 within marginal regions
-    marg_l, marg_r = _order_marginals(marg_ix, x0, x1, y0, y1, cx, cy, W, doc.rtl, off)
 
-    parts = [marg_l, ordered_text, marg_r]
-    if len(ordered_text) + len(marg_ix) < n:
+def layout_permutations(docs: list[DocSpans], pages: list[Page] | None = None):
+    """layout_permutation of a batch of documents, run phase by phase:
+    the per-document glue (separators, column estimate, marginal split,
+    splitter pass 1, D4 box and cell emission, D5 and the D8
+    concatenation) loops over the documents, while the band gutters, the
+    region clustering, D1 in-region order and D6 in-box order each run
+    once for the whole batch. ``pages`` is analyze_pages(docs), computed
+    here if not given. Every batched step is exact per document, so a
+    document's result does not depend on which others share its batch."""
+    if pages is None:
+        pages = analyze_pages(docs)
+    out = [(np.array([], dtype=np.int64), np.array([], dtype=bool)) for _ in docs]
+    live = [k for k, d in enumerate(docs) if d.n]
+    if not live:
+        return out
+    ws = [_Doc(docs[k], pages[k]) for k in live]
+    D = len(ws)
+
+    # the batch's line table: every document's body lines, then every
+    # document's marginal lines — segment d < D is document d's body,
+    # segment D + d its marginalia
+    first = np.cumsum([0] + [w.doc.n for w in ws])[:-1]
+    rows = np.concatenate([w.body_ix + f for w, f in zip(ws, first)]
+                          + [w.marg_ix + f for w, f in zip(ws, first)])
+    X = [np.concatenate([getattr(w.page, c) for w in ws])[rows]
+         for c in ("x0", "x1", "y0", "y1", "cx", "cy")]
+    off = np.concatenate([w.off for w in ws])[rows]
+    ix = np.concatenate([w.body_ix for w in ws] + [w.marg_ix for w in ws])
+    bounds = np.cumsum([0] + [len(w.body_ix) for w in ws]
+                       + [len(w.marg_ix) for w in ws])
+    rtl = np.array([bool(w.rtl) for w in ws] * 2)
+    for d, w in enumerate(ws):
+        w.body = slice(int(bounds[d]), int(bounds[d + 1]))
+
+    # D2 + D4, then regions from lines (C16 inverse), band/cell-aware;
+    # marginal lines all share one cell
+    cells = _body_cells(ws, X)
+    if len(rows) == 0:
+        empty = np.array([], dtype=np.int64)
+        body, margs = [empty] * D, [(empty, empty)] * D
+    else:
+        band = np.concatenate((cells, np.zeros(len(rows) - len(cells), dtype=np.int64)))
+        labels = cluster_lines_into_regions(*X[:4], band=band, rtl=rtl, bounds=bounds)
+        # regions of segment s are rfirst[s]:rfirst[s + 1]; D1 within each
+        # (members come from the grouping scaffold — stable sort keeps
+        # them in original index order)
+        uniq, gorder, gstarts = _group_by_label(labels)
+        rfirst = uniq.searchsorted(bounds)
+        rrtl = rtl[_segments(rfirst)]
+        ordered = gorder[order_lines_in_region(X[4][gorder], X[5][gorder], rrtl,
+                                               off[gorder], bounds=gstarts)]
+        regions = (gorder, gstarts, rfirst, rrtl, ix[ordered])
+        body = _order_body_text(ws, X, off, regions)
+        margs = _order_marginals(ws, X, off, regions)
+    for k, w, b, (ml, mr) in zip(live, ws, body, margs):
+        out[k] = _serialize(w, ml, b, mr)
+    return out
+
+
+def _serialize(w, marg_l, body, marg_r):
+    """D8 (utils/xml.py:49-66, writer.py:184-290): marg-L -> ordered text
+    -> marg-R -> images -> separators -> tables; returns (perm,
+    marg_mask)."""
+    doc, page = w.doc, w.page
+    n = doc.n
+    parts = [marg_l, body, marg_r]
+    if len(body) + len(w.marg_ix) < n:
         # images -> separators -> tables, each by position
-        for ix in ((kind == KIND_IMAGE).nonzero()[0], sep_ix,
-                   (kind == KIND_TABLE).nonzero()[0]):
+        cx, cy = page.cx, page.cy
+        for ix in ((doc.kind == KIND_IMAGE).nonzero()[0], w.sep_ix,
+                   (doc.kind == KIND_TABLE).nonzero()[0]):
             if len(ix):
                 ix = ix[np.lexsort((doc.offset[ix], cx[ix], cy[ix]))]
             parts.append(ix)
     perm = np.concatenate(parts).astype(np.int64)
-    if len(marg_ix) == 0:
+    if len(w.marg_ix) == 0:
         return perm, np.zeros(len(perm), dtype=bool)
     marg_mask = np.zeros(n, dtype=bool)
-    marg_mask[marg_ix] = True
+    marg_mask[w.marg_ix] = True
     return perm, marg_mask[perm]
 
 
-def _order_marginals(marg_ix, x0, x1, y0, y1, cx, cy, W, rtl, off):
-    """C11 (eynollah.py:1923-1947): split marginals at the page midline,
-    order each side's regions top-down, lines in D1 order within.
-    Ties between geometrically identical regions/lines break by offset."""
-    if len(marg_ix) == 0:
-        return marg_ix.copy(), marg_ix.copy()
-    labels = cluster_lines_into_regions(x0[marg_ix], x1[marg_ix], y0[marg_ix], y1[marg_ix], rtl=rtl)
-    out_l, out_r = [], []
-    regs = []
-    _, gorder, gstarts = _group_by_label(labels)
-    gs = gstarts.tolist()
-    for a, b in zip(gs[:-1], gs[1:]):
-        members = marg_ix[gorder[a:b]]
-        rcy = cy[members].mean()
-        rcx = cx[members].mean()
-        regs.append((rcy, rcx, int(off[members].min()), members))
-    regs.sort(key=lambda t: (t[0], t[1], t[2]))
-    for rcy, rcx, _roff, members in regs:
-        if len(members) > 1:
-            members = members[order_lines_in_region(cx[members], cy[members],
-                                                    rtl, off[members])]
-        (out_l if rcx < W / 2.0 else out_r).extend(members.tolist())
-    return np.array(out_l, dtype=np.int64), np.array(out_r, dtype=np.int64)
+def _order_marginals(ws, X, off, regions):
+    """C11 (eynollah.py:1923-1947) for every document: split marginals at
+    the page midline, order each side's regions top-down, lines in D1
+    order within. Ties between geometrically identical regions break by
+    offset. Returns (left, right) span indices per document."""
+    gorder, gstarts, rfirst, _, ordered_ix = regions
+    cx, cy = X[4:]
+    D = len(ws)
+    empty = np.array([], dtype=np.int64)
+    out = []
+    for d, w in enumerate(ws):
+        a, b = rfirst[D + d], rfirst[D + d + 1]
+        if a == b:
+            out.append((empty, empty))
+            continue
+        regs = []
+        gs = gstarts[a:b + 1].tolist()
+        for s, e in zip(gs[:-1], gs[1:]):
+            members = gorder[s:e]
+            regs.append((cy[members].mean(), cx[members].mean(),
+                         int(off[members].min()), s, e))
+        regs.sort(key=lambda t: (t[0], t[1], t[2]))
+        out_l, out_r = [], []
+        for _rcy, rcx, _roff, s, e in regs:
+            (out_l if rcx < w.W / 2.0 else out_r).extend(ordered_ix[s:e].tolist())
+        out.append((np.array(out_l, dtype=np.int64), np.array(out_r, dtype=np.int64)))
+    return out
 
 
-def _extend_box_span(edges, trail, ya, yb, lx0, lx1, ly0, ly1, lcy, rtl):
-    """D4 get_span column-merge refinement (utils/__init__.py:1794-1864):
-    a box emitted below a partial-width separator advances past following
-    columns that its content actually spans — the walk returns the
-    right-most column boundary such that merging does not cut a region,
-    guarded by the reference's text-coverage rule (text at the boundary
-    column must cover > 10% of the box height, :1824-1826).
-
-    Wide spanning components already became their own bands in
-    find_splitters pass 2 (the reference's big-parts path, :1708-1761);
-    this extension handles the NARROW overhangs that stay: a region
-    crossing a column edge by more than a couple px but less than the
-    banding margin. `trail` is the box's trailing edge in reading order
-    (right edge for LTR, left for RTL); returns the extended edge."""
-    inb = (lcy >= ya) & (lcy < yb)
-    if not inb.any():
-        return trail
-    bx0, bx1 = lx0[inb], lx1[inb]
-    bh = ly1[inb] - ly0[inb]
-    cur = float(trail)
-    # at most len(edges) extensions; each strictly advances
-    for _ in range(len(edges) + 1):
-        if not rtl:
-            cross = (bx0 < cur - 2.0) & (bx1 > cur + 2.0)
-            if not cross.any() or bh[cross].sum() <= 0.1 * (yb - ya):
-                break
-            target = float(bx1[cross].max())
-            nxt = [e for e in edges if e > cur + 1e-9]
-            cand = [e for e in nxt if e >= target - 1e-9]
-            new = cand[0] if cand else (nxt[-1] if nxt else cur)
-        else:
-            cross = (bx1 > cur + 2.0) & (bx0 < cur - 2.0)
-            if not cross.any() or bh[cross].sum() <= 0.1 * (yb - ya):
-                break
-            target = float(bx0[cross].min())
-            nxt = [e for e in edges if e < cur - 1e-9]
-            cand = [e for e in nxt if e <= target + 1e-9]
-            new = cand[-1] if cand else (nxt[0] if nxt else cur)
-        if abs(new - cur) <= 1e-9:
-            break
-        cur = new
-    return cur
-
-
-def _order_body_text(body_ix, x0, x1, y0, y1, cx, cy, W, H,
-                     hseps, vsep_cx, vsep_boxes, main_lo, main_hi, rtl, off,
-                     body_gutters=None):
-    """D2 + D4 + D5 + D6 + D1 over the non-marginal text lines
-    (``body_gutters``: their find_gutters with ``vsep_cx``, if known)."""
-    if len(body_ix) == 0:
-        return body_ix.copy()
-    bx0, bx1, by0, by1 = x0[body_ix], x1[body_ix], y0[body_ix], y1[body_ix]
-    bcx, bcy = cx[body_ix], cy[body_ix]
-    boff = off[body_ix]
-
+def _body_cells(ws, X):
+    """D2 + D4 over every document's body lines (``X``: the line table's
+    x0, x1, y0, y1, cx, cy; document w's body lines are ``X[..][w.body]``):
+    the band splitters (find_splitters), then per band its column boxes
+    and per line its clustering cell. The band gutters of find_splitters
+    pass 2 and those of the D4 bands it did not analyse are one
+    gutter_sets call each for the whole batch. Sets ``w.barr``, the boxes
+    in emission order; returns the cells of all body lines."""
+    x0, x1, y0, y1, cx, cy = X
+    body = [w for w in ws if w.body.stop > w.body.start]
     # band splitters (D2, two-pass per-band analysis)
-    band_gutters: dict = {}
-    splitters = find_splitters(bx0, bx1, by0, by1, hseps, W, H,
-                               main_lo, main_hi,
-                               vseps=vsep_boxes, vsep_cx=vsep_cx,
-                               band_gutters_out=band_gutters,
-                               line_gutters=body_gutters)
+    jobs = []
+    for w in body:
+        s = w.body
+        w.bands = _splitter_bands(x0[s], x1[s], y0[s], y1[s], w.hseps, w.H,
+                                  w.main_lo, w.main_hi, w.vboxes, w.vcx)
+        w.gutters = _reused_gutters(w.bands, s.stop - s.start, w.vcx, w.body_gutters)
+        if w.gutters is None:
+            w.jobs = _band_jobs(w.bands, s.start, w.W)
+            jobs += w.jobs
+    gs = iter(_gutter_jobs(x0, x1, y0, y1, jobs))
+    jobs = []
+    for w in body:
+        s = w.body
+        if w.gutters is None:
+            w.gutters = [next(gs) for _ in w.jobs]
+        w.band_gutters = {}
+        w.splitters = sp = _split_bands(x0[s], x1[s], y0[s], y1[s], w.W, w.H,
+                                        w.bands, w.gutters, w.band_gutters)
+        w.band_id, w.order, w.bstart = _by_band(sp, cy[s])
+        bs = w.bstart
+        w.todo = [k for k in (bs[1:] > bs[:-1]).nonzero()[0].tolist()
+                  if (sp[k], sp[k + 1]) not in w.band_gutters]
+        jobs += [(w.order[bs[k]:bs[k + 1]] + s.start, w.W,
+                  _band_vseps(w.vcx, w.vboxes, sp[k], sp[k + 1])) for k in w.todo]
+    # gutters of the bands find_splitters did not analyse, in one batch
+    gs = iter(_gutter_jobs(x0, x1, y0, y1, jobs))
+    cells = [np.empty(0, dtype=np.int64)]
+    for w in body:
+        for k in w.todo:
+            w.band_gutters[(w.splitters[k], w.splitters[k + 1])] = next(gs)
+        s = w.body
+        w.barr, cell = _band_boxes(w, x0[s], x1[s], y0[s], y1[s], cx[s], cy[s])
+        cells.append(cell)
+    return np.concatenate(cells)
 
-    # D4: boxes per band, columns left->right (RTL flips, :1522-1524,1866-1879).
-    # Per-column recursion (utils/__init__.py:1794-1864): a PARTIAL-width
-    # horizontal separator (spanning some but not all of a band's columns)
-    # splits exactly the columns it covers into top/bottom sub-boxes; the
-    # final box order (y0, then x) reproduces the reference walk's
-    # emission order — each separator's sub-boxes follow every box whose
-    # top edge sits above it (e.g. 2 cols, separator under col 1 only:
-    # col1-above, col2-full, col1-below).
-    band_id, order, bstart = _by_band(splitters, bcy)
+
+def _band_boxes(w, bx0, bx1, by0, by1, bcx, bcy):
+    """D4 for one document's body lines: boxes per band, columns
+    left->right (RTL flips, :1522-1524,1866-1879). Returns (boxes in
+    emission order as a B x 4 array of x0, x1, y0, y1; the clustering
+    cell of every line).
+
+    Per-column recursion (utils/__init__.py:1794-1864): a PARTIAL-width
+    horizontal separator (spanning some but not all of a band's columns)
+    splits exactly the columns it covers into top/bottom sub-boxes; the
+    final box order (y0, then x) reproduces the reference walk's
+    emission order — each separator's sub-boxes follow every box whose
+    top edge sits above it (e.g. 2 cols, separator under col 1 only:
+    col1-above, col2-full, col1-below)."""
+    splitters, band_id, order, bstart = w.splitters, w.band_id, w.order, w.bstart
+    rtl, hseps = w.rtl, w.hseps
     # Collision-free cell keys: bands take ids [0, n_bands); each cut
     # column claims a fresh contiguous block of len(cuts)+1 ids above
     # that, so no cell can alias another band's or column's cells no
     # matter how many cuts/columns a pathological page has.
     cell_id = band_id.astype(np.int64)  # refined below at cuts
     next_cell = max(len(splitters) - 1, 1)
-    bands = (bstart[1:] > bstart[:-1]).nonzero()[0].tolist()
-    # gutters of the bands find_splitters did not analyse, in one batch
-    todo = [k for k in bands if (splitters[k], splitters[k + 1]) not in band_gutters]
-    if todo:
-        rows = np.concatenate([order[bstart[k]:bstart[k + 1]] for k in todo])
-        gs = gutter_sets(bx0[rows], bx1[rows], by0[rows], by1[rows],
-                         np.concatenate(([0], np.diff(bstart)[todo].cumsum())), W,
-                         [_band_vseps(vsep_cx, vsep_boxes, splitters[k], splitters[k + 1])
-                          for k in todo])
-        for k, g in zip(todo, gs):
-            band_gutters[(splitters[k], splitters[k + 1])] = g
     boxes = []  # (bx0, bx1, by0, by1)
-    for k in bands:
+    for k in (bstart[1:] > bstart[:-1]).nonzero()[0].tolist():
         lo, hi = splitters[k], splitters[k + 1]
-        g = band_gutters[(lo, hi)]
+        g = w.band_gutters[(lo, hi)]
         idx = order[bstart[k]:bstart[k + 1]]
         bbx0, bbx1 = bx0[idx], bx1[idx]
         bby0, bby1, bbcy = by0[idx], by1[idx], bcy[idx]
@@ -1188,38 +1341,30 @@ def _order_body_text(body_ix, x0, x1, y0, y1, cx, cy, W, H,
                                    + np.searchsorted(np.asarray(cuts), bcy[in_col]))
                 next_cell += len(cuts) + 1
     if not boxes:
-        boxes = [(0.0, W, 0.0, H)]
+        boxes = [(0.0, w.W, 0.0, w.H)]
     barr = np.array(boxes)
     okey = np.lexsort(((-barr[:, 0] if rtl else barr[:, 0]), barr[:, 2]))
-    barr = barr[okey]
-    bcenx, bceny = (barr[:, 0] + barr[:, 1]) / 2.0, (barr[:, 2] + barr[:, 3]) / 2.0
+    return barr[okey], cell_id
 
-    # regions from lines (C16 inverse), band/cell-aware
-    labels = cluster_lines_into_regions(bx0, bx1, by0, by1, band=cell_id, rtl=rtl)
-    uniq, gorder, gstarts = _group_by_label(labels)
-    rx0 = _group_minmax(bx0, gorder, gstarts, "min")
-    rx1 = _group_minmax(bx1, gorder, gstarts, "max")
-    ry0 = _group_minmax(by0, gorder, gstarts, "min")
-    ry1 = _group_minmax(by1, gorder, gstarts, "max")
-    roff = _group_minmax(boff, gorder, gstarts, "min")
-    rcx, rcy = (rx0 + rx1) / 2.0, (ry0 + ry1) / 2.0
 
-    # D5: assign each region to a box. Strict containment takes the FIRST
-    # box in emission order (the reference's match_boxes breaks on the
-    # first containing box, eynollah.py:1166-1179 — matters when get_span
-    # widened boxes overlap full-height column boxes); fallback is the
-    # nearest center among center-containing boxes (:1181-1187).
-    # (vectorized R x B: argmax picks the FIRST containing box; the
-    # center-containment fallback masks non-candidates to +inf so argmin
-    # keeps the original among-candidates / lowest-index tie-break)
+def _box_of(barr, rx0, rx1, ry0, ry1, rcx, rcy):
+    """D5: assign each region to a box. Strict containment takes the
+    FIRST box in emission order (the reference's match_boxes breaks on
+    the first containing box, eynollah.py:1166-1179 — matters when
+    get_span widened boxes overlap full-height column boxes); fallback is
+    the nearest center among center-containing boxes (:1181-1187).
+    (vectorized R x B: argmax picks the FIRST containing box; the
+    center-containment fallback masks non-candidates to +inf so argmin
+    keeps the original among-candidates / lowest-index tie-break)"""
     strict = ((barr[None, :, 0] <= rx0[:, None]) & (barr[None, :, 1] >= rx1[:, None])
               & (barr[None, :, 2] <= ry0[:, None]) & (barr[None, :, 3] >= ry1[:, None]))
     has_strict = strict.any(axis=1)
-    box_of = np.zeros(len(uniq), dtype=np.int64)
+    box_of = np.zeros(len(rx0), dtype=np.int64)
     if has_strict.any():
         box_of[has_strict] = np.argmax(strict[has_strict], axis=1)
     rest = (~has_strict).nonzero()[0]
     if len(rest):
+        bcenx, bceny = (barr[:, 0] + barr[:, 1]) / 2.0, (barr[:, 2] + barr[:, 3]) / 2.0
         centc = ((barr[None, :, 0] <= rcx[rest, None]) & (barr[None, :, 1] > rcx[rest, None])
                  & (barr[None, :, 2] <= rcy[rest, None]) & (barr[None, :, 3] > rcy[rest, None]))
         d = ((bcenx[None, :] - rcx[rest, None]) ** 2
@@ -1227,31 +1372,105 @@ def _order_body_text(body_ix, x0, x1, y0, y1, cx, cy, W, H,
         mask = ~centc & centc.any(axis=1)[:, None]
         d[mask] = np.inf
         box_of[rest] = np.argmin(d, axis=1)
+    return box_of
 
-    # D6 within box: row-cluster region centers, sort rows top-down, cx in row
-    order_regions = []  # list of region indices in final order
-    by_box = box_of.argsort(kind="stable")
-    ends = np.bincount(box_of, minlength=len(barr)).cumsum().tolist()
-    for a, b in zip([0] + ends[:-1], ends):
-        rs = by_box[a:b]  # the box's regions, ascending
-        if b - a <= 1:
-            order_regions.extend(rs.tolist())
-            continue
-        heights = ry1[rs] - ry0[rs]
-        thr = max(8.0, _ROW_THR_FRAC * _med(heights))
-        rows = _row_cluster(rcy[rs], thr)
-        xkey = -rcx[rs] if rtl else rcx[rs]
-        order_regions.extend(rs[np.lexsort((roff[rs], rcy[rs], xkey, rows))].tolist())
 
-    # D1 within each region, concatenate (members come from the grouping
-    # scaffold — stable sort keeps them in original index order, exactly
-    # what the per-region flatnonzero rescan produced)
-    gs = gstarts.tolist()
-    out = []
-    for r in order_regions:
-        members = gorder[gs[r]:gs[r + 1]]
-        if len(members) > 1:
-            members = members[order_lines_in_region(bcx[members], bcy[members],
-                                                    rtl, boff[members])]
-        out.extend(members.tolist())
-    return body_ix[out]
+def _extend_box_span(edges, trail, ya, yb, lx0, lx1, ly0, ly1, lcy, rtl):
+    """D4 get_span column-merge refinement (utils/__init__.py:1794-1864):
+    a box emitted below a partial-width separator advances past following
+    columns that its content actually spans — the walk returns the
+    right-most column boundary such that merging does not cut a region,
+    guarded by the reference's text-coverage rule (text at the boundary
+    column must cover > 10% of the box height, :1824-1826).
+
+    Wide spanning components already became their own bands in
+    find_splitters pass 2 (the reference's big-parts path, :1708-1761);
+    this extension handles the NARROW overhangs that stay: a region
+    crossing a column edge by more than a couple px but less than the
+    banding margin. `trail` is the box's trailing edge in reading order
+    (right edge for LTR, left for RTL); returns the extended edge."""
+    inb = (lcy >= ya) & (lcy < yb)
+    if not inb.any():
+        return trail
+    bx0, bx1 = lx0[inb], lx1[inb]
+    bh = ly1[inb] - ly0[inb]
+    cur = float(trail)
+    # at most len(edges) extensions; each strictly advances
+    for _ in range(len(edges) + 1):
+        if not rtl:
+            cross = (bx0 < cur - 2.0) & (bx1 > cur + 2.0)
+            if not cross.any() or bh[cross].sum() <= 0.1 * (yb - ya):
+                break
+            target = float(bx1[cross].max())
+            nxt = [e for e in edges if e > cur + 1e-9]
+            cand = [e for e in nxt if e >= target - 1e-9]
+            new = cand[0] if cand else (nxt[-1] if nxt else cur)
+        else:
+            cross = (bx1 > cur + 2.0) & (bx0 < cur - 2.0)
+            if not cross.any() or bh[cross].sum() <= 0.1 * (yb - ya):
+                break
+            target = float(bx0[cross].min())
+            nxt = [e for e in edges if e < cur - 1e-9]
+            cand = [e for e in nxt if e <= target + 1e-9]
+            new = cand[-1] if cand else (nxt[0] if nxt else cur)
+        if abs(new - cur) <= 1e-9:
+            break
+        cur = new
+    return cur
+
+
+def _order_in_boxes(rcx, rcy, rh, roff, rtl, bounds):
+    """D6 (utils/__init__.py:1021-1145) for many boxes at once: box k
+    holds the regions ``[bounds[k], bounds[k+1])`` (centers rcx, rcy,
+    heights rh, least offsets roff). Row-cluster region centers with the
+    threshold max(8, half the box's median region height), rows
+    top-down, cx in a row (right-to-left where ``rtl[k]``). Returns the
+    regions' order, box by box."""
+    seg = _segments(bounds)
+    thr = np.maximum(8.0, _ROW_THR_FRAC * _seg_median(rh, seg, bounds))
+    rows = _row_clusters(rcy, seg, thr)
+    xkey = np.where(np.asarray(rtl, dtype=bool)[seg], -rcx, rcx)
+    return np.lexsort((roff, rcy, xkey, rows))
+
+
+def _order_body_text(ws, X, off, regions):
+    """D5 + D6 + D1 concatenation over every document's body regions:
+    each region goes to a box (D5, per document), the regions of each box
+    are row-clustered and ordered (D6, rows top-down, cx in a row — one
+    pass over all boxes of the batch), and each region contributes its
+    lines in D1 order. Returns the body's span indices per document."""
+    gorder, gstarts, rfirst, rrtl, ordered_ix = regions
+    D = len(ws)
+    ends = np.cumsum([len(w.body_ix) for w in ws]).tolist()
+    if rfirst[D] == 0:
+        return [ordered_ix[:0]] * D
+    x0, x1, y0, y1 = X[:4]
+    rx0 = _group_minmax(x0, gorder, gstarts, "min")
+    rx1 = _group_minmax(x1, gorder, gstarts, "max")
+    ry0 = _group_minmax(y0, gorder, gstarts, "min")
+    ry1 = _group_minmax(y1, gorder, gstarts, "max")
+    roff = _group_minmax(off, gorder, gstarts, "min")
+    rcx, rcy = (rx0 + rx1) / 2.0, (ry0 + ry1) / 2.0
+
+    # D5 per document; boxes numbered through the batch
+    box, nbox = [], 0
+    for d, w in enumerate(ws):
+        a, b = rfirst[d], rfirst[d + 1]
+        if b > a:
+            box.append(nbox + _box_of(w.barr, rx0[a:b], rx1[a:b], ry0[a:b],
+                                      ry1[a:b], rcx[a:b], rcy[a:b]))
+            nbox += len(w.barr)
+    box = np.concatenate(box)
+    # D6 within each box, all boxes of the batch at once
+    by_box = box.argsort(kind="stable")
+    sb = box[by_box]
+    bounds = np.append(np.concatenate(([True], sb[1:] != sb[:-1])).nonzero()[0], len(sb))
+    order_regions = by_box[_order_in_boxes(
+        rcx[by_box], rcy[by_box], (ry1 - ry0)[by_box], roff[by_box],
+        rrtl[by_box][bounds[:-1]], bounds)]
+
+    # each region's lines in D1 order; boxes, and so regions, run
+    # document by document
+    size = gstarts[1:] - gstarts[:-1]
+    lines = ordered_ix[_ragged_arange(gstarts[order_regions], size[order_regions])]
+    return [lines[a:b] for a, b in zip([0] + ends[:-1], ends)]

@@ -23,8 +23,9 @@ catalog jar):
 
 A batch is one Spark job whose tasks run the layout kernel, write one
 file per (task, bucket) and return its lineage row (docs, spans, kind
-histogram); the driver sums these into the manifest. As in Iceberg's
-manifests, file stats are recorded at commit time, with no re-read.
+histogram, quarantined docs); the driver sums these into the manifest.
+As in Iceberg's manifests, file stats are recorded at commit time, with
+no re-read.
 
 Snapshot ids are monotonically increasing; the table state at any id is
 reconstructed by replaying the manifest log: each part is served by the
@@ -51,7 +52,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from eynollah_spark import KERNEL_VERSION
-from eynollah_spark.pipeline import (_kernel_input, make_partition_arrow_kernel,
+from eynollah_spark.pipeline import (_flat_output, _kernel_input, layout_partition,
                                      write_parquet_atomic)
 
 
@@ -195,37 +196,38 @@ def _reserve_snapshot_dir(out_path: str) -> int:
             sid += 1
 
 
-def _bucket_writer(snap_dir: str, kernel):
-    """The mapInArrow function of one batch: run the flat `kernel` over
-    the task's doc-complete partition, write each bucket's rows to
+def _bucket_writer(snap_dir: str, kernel_kwargs: dict):
+    """The mapInArrow function of one batch: run the flat layout kernel
+    (fail_fast=False, ``kernel_kwargs``) over the task's doc-complete
+    partition, write each bucket's rows to
     snap_dir/part=<p>/part-<task>.parquet (the flat sink columns; the
     bucket is in the path only) and yield one lineage row per bucket."""
 
     def write(batches):
-        ids, parts = [], []  # the input's (doc_id, part), payload not held
-
-        def tap(batches):
-            for b in batches:
-                ids.append(b.column("doc_id"))
-                parts.append(b.column("part"))
-                yield b
-
+        res = layout_partition(batches, fail_fast=False, **kernel_kwargs)
+        if res is None:
+            return
+        col, starts, counts, take, marg, status = res
+        take = pa.array(take)
+        out = _flat_output(col, starts, counts, take, pa.array(marg),
+                           include_payload=True)
+        part = pc.take(col["part"], take)
+        doc_part = pc.take(col["part"], pa.array(starts)).to_pylist()
+        quarantined = Counter(p for p, st in zip(doc_part, status) if st)
         task = TaskContext.get().partitionId()
         lineage = []
-        for out in kernel(tap(batches)):
-            part = pc.take(pa.concat_arrays(parts), pc.index_in(
-                out.column("doc_id"), value_set=pa.concat_arrays(ids)))
-            for p in pc.unique(part).to_pylist():
-                rows = out.filter(pc.equal(part, p))
-                write_parquet_atomic(pa.Table.from_batches([rows]), os.path.join(
-                    snap_dir, f"part={p}", f"part-{task:05d}.parquet"))
-                hist = pc.value_counts(rows.column("kind"))
-                lineage.append({
-                    "part": p, "spans": rows.num_rows,
-                    "docs": pc.count_distinct(rows.column("doc_id")).as_py(),
-                    "kind_hist": json.dumps(dict(zip(
-                        hist.field("values").to_pylist(),
-                        hist.field("counts").to_pylist())))})
+        for p in pc.unique(part).to_pylist():
+            rows = out.filter(pc.equal(part, p))
+            write_parquet_atomic(pa.Table.from_batches([rows]), os.path.join(
+                snap_dir, f"part={p}", f"part-{task:05d}.parquet"))
+            hist = pc.value_counts(rows.column("kind"))
+            lineage.append({
+                "part": p, "spans": rows.num_rows,
+                "docs": pc.count_distinct(rows.column("doc_id")).as_py(),
+                "kind_hist": json.dumps(dict(zip(
+                    hist.field("values").to_pylist(),
+                    hist.field("counts").to_pylist()))),
+                "quarantined": quarantined[p]})
         if lineage:
             yield pa.RecordBatch.from_pylist(lineage)
 
@@ -237,7 +239,8 @@ def run_extraction(docs: DataFrame, out_path: str, n_parts: int = 8,
                    extract_kwargs: dict | None = None) -> dict:
     """Extract with per-bucket checkpointing; resumable.
 
-    Returns summary metrics. Re-running after a failure skips buckets
+    Returns summary metrics (``quarantined``: documents the kernel failed
+    on, emitted in offset order). Re-running after a failure skips buckets
     already recorded in the manifest. Each batch of `parts_per_batch`
     buckets is one Spark job over extract()'s plan and flat kernel
     (`partitions`; `extract_kwargs`: num_col_lower, num_col_upper,
@@ -246,11 +249,11 @@ def run_extraction(docs: DataFrame, out_path: str, n_parts: int = 8,
     """
     kw = dict(extract_kwargs or {})
     margin = kw.pop("printspace_margin", 0.0)
-    kernel = make_partition_arrow_kernel(fail_fast=False, **kw)
     bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int")
     done = completed_parts(out_path)
     todo = [p for p in range(n_parts) if p not in done]
-    summary = {"n_parts": n_parts, "skipped": len(done), "processed": 0, "docs": 0, "spans": 0}
+    summary = {"n_parts": n_parts, "skipped": len(done), "processed": 0,
+               "docs": 0, "spans": 0, "quarantined": 0}
     os.makedirs(_manifest_path(out_path), exist_ok=True)
     for i in range(0, len(todo), parts_per_batch):
         batch = todo[i:i + parts_per_batch]
@@ -258,23 +261,24 @@ def run_extraction(docs: DataFrame, out_path: str, n_parts: int = 8,
         sid = _reserve_snapshot_dir(out_path)
         flat = _kernel_input(docs.filter(bucket.isin(batch)), partitions, margin)
         rows = (flat.withColumn("part", bucket)
-                .mapInArrow(_bucket_writer(_snap_dir(out_path, sid), kernel),
-                            "part long, spans long, docs long, kind_hist string")
+                .mapInArrow(_bucket_writer(_snap_dir(out_path, sid), kw),
+                            "part long, spans long, docs long, kind_hist string, "
+                            "quarantined long")
                 .collect())
-        parts_meta = {p: {"docs": 0, "spans": 0, "kind_hist": Counter()}
-                      for p in batch}
+        parts_meta = {p: {"docs": 0, "spans": 0, "kind_hist": Counter(),
+                          "quarantined": 0} for p in batch}
         for r in rows:
             m = parts_meta[r["part"]]
-            m["docs"] += r["docs"]
-            m["spans"] += r["spans"]
+            for k in ("docs", "spans", "quarantined"):
+                m[k] += r[k]
             m["kind_hist"].update(json.loads(r["kind_hist"]))
         wall = time.time() - t0
         for m in parts_meta.values():
             m["kind_hist"] = json.dumps(dict(sorted(m["kind_hist"].items())),
                                         separators=(",", ":"))
             m["wall_sec"] = round(wall / len(batch), 3)
-            summary["docs"] += m["docs"]
-            summary["spans"] += m["spans"]
+            for k in ("docs", "spans", "quarantined"):
+                summary[k] += m[k]
         summary["processed"] += len(batch)
         manifest = {
             "snapshot_id": sid,

@@ -16,15 +16,18 @@ Stage plan (explicit shuffle boundaries, SURVEY.md §3.1 lifecycle):
        a contiguous run for the per-document kernel; numerics reach
        numpy once per partition, payload strings are permuted C++-side
        and never materialize in Python)
-         - page stage: kernels.layout.analyze_pages over batches of 64
-           documents — deskew angle scores and the page-level projection
-           profiles, smoothing and valley masks, one numpy call per
-           batch instead of per document (each document's result is
-           bit-identical to analyzing it alone);
-         - then layout_permutation once per document with its page
-           result: gutters, marginalia, splitters, regions, order. A
-           batch whose page stage raises is re-run one document at a
-           time, so quarantine stays per document.
+         - batches of 64 documents: kernels.layout.analyze_pages (the
+           page stage: deskew angle scores, page-level projection
+           profiles, smoothing and valleys), then
+           kernels.layout.layout_permutations (the rest, phase by
+           phase: per-document glue in Python loops, and band gutters,
+           region clustering, in-region and in-box order as one numpy
+           pass per batch). Each document's result is bit-identical to
+           running it alone;
+         - a batch that raises anywhere is re-run one document at a
+           time, and a document that still raises is quarantined: it
+           falls back to offset order and its status is counted (the
+           manifest records the count per bucket).
     -> sink (flat rows, or nested out_spans lists built in-kernel from
        the same permutation)
 
@@ -32,8 +35,8 @@ extract_flat_input keeps the payload out of the kernel stage entirely and
 joins it back JVM-side; extract_from_parquet_files is the zero-shuffle
 path over doc-complete bucketed files.
 
-The kernel itself is eynollah_spark.kernels.layout.layout_permutation —
-see that module for reference-semantics citations.
+The kernel itself is eynollah_spark.kernels.layout.layout_permutations
+— see that module for reference-semantics citations.
 """
 
 from __future__ import annotations
@@ -43,7 +46,10 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
-from eynollah_spark.kernels.layout import DocSpans, analyze_pages, layout_permutation
+# layout_permutation is bound here for perfbench's kernel tracing, which
+# patches this module's attribute
+from eynollah_spark.kernels.layout import (  # noqa: F401
+    DocSpans, analyze_pages, layout_permutation, layout_permutations)
 from eynollah_spark.schemas import FLAT_OUT_SCHEMA, OUT_SCHEMA
 
 
@@ -110,38 +116,32 @@ def flatten(df: DataFrame) -> DataFrame:
     )
 
 
-#: documents per analyze_pages batch: large enough to amortize numpy
-#: dispatch, small enough that the batch's [docs x 1024] profile matrices
-#: stay in cache, and the re-run after a failed batch stays short
+#: documents per layout_permutations batch: large enough to amortize
+#: numpy dispatch, small enough that the batch's [docs x 1024] profile
+#: matrices stay in cache, and the re-run after a failed batch stays short
 _PAGE_BATCH = 64
 
 
-def _pages(docs: list[DocSpans], fail_fast: bool) -> list:
-    """analyze_pages over a batch of documents. If it raises, every
-    document of the batch gets None: layout_permutation then runs the page
-    stage on that document alone, so one bad document is quarantined
-    alone, never its whole batch."""
+def _safe_permutations(docs: list[DocSpans], fail_fast: bool):
+    """The layout kernel over one batch of documents, with per-document
+    failure quarantine: at 10^12 docs a single pathological page must not
+    kill the job (the reference's halt_fail global abort,
+    eynollah.py:2023-2028, is replaced by degrade-and-continue). If the
+    batch raises, in analyze_pages or layout_permutations, each document
+    is re-run alone; one that still raises falls back to input-offset
+    order (total, kinds unchanged). Returns ((perm, marg) per document,
+    status per document: None, or the class name of the exception that
+    quarantined it). fail_fast=True (tests/CI) re-raises instead."""
     try:
-        return analyze_pages(docs)
-    except Exception:
+        return layout_permutations(docs, analyze_pages(docs)), [None] * len(docs)
+    except Exception as e:
         if fail_fast:
             raise
-        return [None] * len(docs)
-
-
-def _safe_permutation(d: DocSpans, fail_fast: bool, page=None):
-    """Per-document failure quarantine: at 10^12 docs a single pathological
-    page must not kill the job (the reference's halt_fail global abort,
-    eynollah.py:2023-2028, is replaced by degrade-and-continue). On kernel
-    failure the document falls back to input-offset order (total, kinds
-    unchanged). fail_fast=True (tests/CI) re-raises instead."""
-    try:
-        return layout_permutation(d, page)
-    except Exception:
-        if fail_fast:
-            raise
-        perm = np.argsort(d.offset, kind="stable").astype(np.int64)
-        return perm, np.zeros(len(perm), dtype=bool)
+        if len(docs) > 1:
+            alone = [_safe_permutations([d], fail_fast) for d in docs]
+            return [r[0][0] for r in alone], [r[1][0] for r in alone]
+        perm = np.argsort(docs[0].offset, kind="stable").astype(np.int64)
+        return [(perm, np.zeros(len(perm), dtype=bool))], [type(e).__name__]
 
 
 def _np(col, fill=0, dtype=np.float64) -> np.ndarray:
@@ -149,13 +149,13 @@ def _np(col, fill=0, dtype=np.float64) -> np.ndarray:
 
 
 def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper: int):
-    """The per-document loop over a partition sorted by (doc_id, offset),
-    where every document is a contiguous run of rows. Returns (starts,
-    counts, take, marg): each document's first row, its number of output
-    spans (0 for an empty document: null-kind rows only), and for all
-    output spans in reading order their row index and marginalia flag.
-    The page stage runs per batch of _PAGE_BATCH documents, then
-    layout_permutation once per document."""
+    """The layout kernel over a partition sorted by (doc_id, offset),
+    where every document is a contiguous run of rows, _PAGE_BATCH
+    documents at a time. Returns (starts, counts, take, marg, status):
+    each document's first row, its number of output spans (0 for an
+    empty document: null-kind rows only), for all output spans in reading
+    order their row index and marginalia flag, and each document's
+    _safe_permutations status (None unless quarantined)."""
     ids = col["doc_id"]
     n = len(ids)
     change = pc.not_equal(ids[1:], ids[:-1]).to_numpy(zero_copy_only=False).nonzero()[0] + 1
@@ -177,6 +177,7 @@ def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper:
             for k, (s, e, nv) in enumerate(zip(starts.tolist(), ends.tolist(),
                                                 nvalid.tolist())) if nv]
     counts = np.zeros(len(starts), dtype=np.int64)
+    status = [None] * len(starts)
     take_l, marg_l = [np.empty(0, np.int64)], [np.empty(0, bool)]
     for b in range(0, len(rows), _PAGE_BATCH):
         batch = rows[b:b + _PAGE_BATCH]
@@ -186,12 +187,13 @@ def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper:
             width=width[k], height=height[k], rtl=rtl[k],
             num_col_lower=num_col_lower, num_col_upper=num_col_upper,
         ) for k, idx in batch]
-        for (k, idx), d, page in zip(batch, docs, _pages(docs, fail_fast)):
-            perm, marg = _safe_permutation(d, fail_fast, page)
+        perms, st = _safe_permutations(docs, fail_fast)
+        for (k, idx), (perm, marg), st_k in zip(batch, perms, st):
             take_l.append(perm + idx.start if isinstance(idx, slice) else idx[perm])
             marg_l.append(marg)
             counts[k] = len(perm)
-    return starts, counts, np.concatenate(take_l), np.concatenate(marg_l)
+            status[k] = st_k
+    return starts, counts, np.concatenate(take_l), np.concatenate(marg_l), status
 
 
 def _ords(counts: np.ndarray) -> np.ndarray:
@@ -232,15 +234,18 @@ def _nested_output(col, starts, counts, take, marg, include_payload):
 
 
 def _check_output(col, starts, counts, take, marg, include_payload):
-    """(doc_id, n_bad) per non-empty document: the number of spans whose
-    (ord, kind) differs from the input's (expected_rank, expected_kind)."""
+    """(doc_id, n_bad) per document with spans: the number of spans whose
+    (ord, kind) differs from the input's (expected_rank, expected_kind),
+    plus how far its span count is from the generator's expected_n (rows
+    lost or duplicated on the way to the kernel)."""
     gkind = _out_kind(col, take, marg).to_numpy(zero_copy_only=False)
     ekind = pc.take(col["expected_kind"], take).to_numpy(zero_copy_only=False)
     erank = _np(pc.take(col["expected_rank"], take), -1, np.int64)
     bad = (_ords(counts) != erank) | (gkind != ekind)
     n_bad = np.bincount(np.repeat(np.arange(len(counts)), counts),
                         weights=bad, minlength=len(counts)).astype(np.int64)
-    keep = np.flatnonzero(counts)
+    n_bad += np.abs(counts - _np(col["expected_n"], 0, np.int64)[starts])
+    keep = np.flatnonzero(counts | n_bad)
     return pa.RecordBatch.from_arrays(
         [pc.take(col["doc_id"], pa.array(starts[keep])), pa.array(n_bad[keep])],
         names=["doc_id", "n_bad"])
@@ -262,13 +267,14 @@ def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = 
     output: 'flat' -> FLAT_OUT_SCHEMA rows (text / media_ref only if
     include_payload); 'nested' -> OUT_SCHEMA rows; 'check' -> (doc_id,
     n_bad) for the extract_reading_order self-check, with the input
-    carrying expected_kind / expected_rank. The check is the in-kernel
-    equivalent of a full-outer join of the flat output with the expected
-    rows on (doc_id, offset): the valid-span sets on both sides coincide
-    (kind IS NULL <=> the offset = -1 empty-doc marker rows), offsets are
-    unique per doc and the output is always a permutation of the valid
-    spans, so the join's per-row test reduces to (ord != expected_rank)
-    | (kind != expected_kind) per span.
+    carrying expected_kind / expected_rank / expected_n. The check is the
+    in-kernel equivalent of a full-outer join of the flat output with the
+    expected rows on (doc_id, offset): offsets are unique per doc and the
+    output is always a permutation of the valid input spans (kind IS NULL
+    <=> the offset = -1 empty-doc marker rows), so the join's per-row
+    test reduces to (ord != expected_rank) | (kind != expected_kind) per
+    span, and the expected rows the input lacks (or holds twice) are
+    |spans - expected_n| per doc.
 
     The in-kernel sort replaces a Spark sort-within-partitions stage (a
     Tungsten sort of 10^7 UnsafeRows costs seconds per level and scales
@@ -280,24 +286,35 @@ def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = 
     build = _OUTPUTS[output]
 
     def kernel(batches):
-        batches = list(batches)
-        if not batches:
+        res = layout_partition(batches, fail_fast, num_col_lower, num_col_upper)
+        if res is None:
             return
-        t = pa.Table.from_batches(batches).combine_chunks()
-        del batches
-        if t.num_rows == 0:
-            return
-        t = t.take(pc.sort_indices(
-            t, sort_keys=[("doc_id", "ascending"), ("offset", "ascending")]))
-        col = {name: t.column(name).combine_chunks() for name in t.column_names}
-        starts, counts, take, marg = _permutations(
-            col, fail_fast, num_col_lower, num_col_upper)
+        col, starts, counts, take, marg, _ = res
         out = build(col, starts, counts, pa.array(take), pa.array(marg),
                     include_payload)
         if out.num_rows:
             yield out
 
     return kernel
+
+
+def layout_partition(batches, fail_fast: bool = True, num_col_lower: int = 0,
+                     num_col_upper: int = 0):
+    """The body of the partition kernel, for callers that build their own
+    output: the partition's columns in canonical (doc_id, offset) order
+    and _permutations' (starts, counts, take, marg, status) — or None for
+    an empty partition."""
+    batches = list(batches)
+    if not batches:
+        return None
+    t = pa.Table.from_batches(batches).combine_chunks()
+    del batches
+    if t.num_rows == 0:
+        return None
+    t = t.take(pc.sort_indices(
+        t, sort_keys=[("doc_id", "ascending"), ("offset", "ascending")]))
+    col = {name: t.column(name).combine_chunks() for name in t.column_names}
+    return (col, *_permutations(col, fail_fast, num_col_lower, num_col_upper))
 
 
 def _kernel_input(df: DataFrame, partitions: int | None,

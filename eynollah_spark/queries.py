@@ -1508,8 +1508,8 @@ def _extract_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full XY-cut extraction, self-checked against the generator's
     by-construction reading order (oracle-by-construction, VERDICT r1
     item 9): returns per-bucket mismatch counts vs expected_rank /
-    expected_kind — dropped rows, extra rows, wrong order and wrong kind
-    all count. The DuckDB oracle is the all-zeros table: the value-hash
+    expected_kind — wrong order and wrong kind count per span, and
+    dropped or extra rows count against each row's expected_n. The DuckDB oracle is the all-zeros table: the value-hash
     comparison therefore certifies span-exact extraction for every
     document.
 
@@ -1532,7 +1532,7 @@ def _extract_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat = corpus_flat_spark(spark, n)
     per_doc = flat.select(
         "doc_id", "width", "height", "rtl", "kind", "offset",
-        "x0", "x1", "y0", "y1", "expected_kind", "expected_rank",
+        "x0", "x1", "y0", "y1", "expected_kind", "expected_rank", "expected_n",
     ).mapInArrow(make_partition_arrow_kernel(output="check"),
                  schema="doc_id string, n_bad long")
     bucket = (F.substring("doc_id", 4, 8).cast("int") % 10)

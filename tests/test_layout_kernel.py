@@ -420,3 +420,99 @@ def test_page_stage_batch_equals_single_pages():
         if got.margins is not None:
             assert np.array_equal(got.margins[0], want.margins[0])
             assert got.margins[1:] == want.margins[1:]
+
+
+@pytest.fixture(scope="module")
+def mixed_docs():
+    """~150 generated documents — LTR and RTL, rotated pages,
+    marginalia, multi-band pages, media, one-line and all-separator
+    pages — plus the empty ones, as DocSpans."""
+    from eynollah_spark.corpus import gen_doc
+
+    docs = []
+    for i in range(150):
+        a, m = gen_doc(i, 42)
+        docs.append(DocSpans(
+            kind=a["kind"], text=None, media_ref=None, offset=a["offset"],
+            x0=a["x0"].astype(float), x1=a["x1"].astype(float),
+            y0=a["y0"].astype(float), y1=a["y1"].astype(float),
+            width=m["width"], height=m["height"], rtl=m["rtl"]))
+    assert any(d.rtl for d in docs) and any(d.n == 0 for d in docs)
+    return docs
+
+
+def _stage_calls(monkeypatch, name, docs):
+    """Run layout_permutations over ``docs`` as one batch, recording
+    each call of its stage function ``name``. Returns (the unrecorded
+    function, [(args, kwargs, result) per call])."""
+    from eynollah_spark.kernels import layout
+
+    real = getattr(layout, name)
+    calls = []
+
+    def rec(*a, **kw):
+        out = real(*a, **kw)
+        calls.append((a, kw, out))
+        return out
+
+    monkeypatch.setattr(layout, name, rec)
+    layout.layout_permutations(docs)
+    monkeypatch.setattr(layout, name, real)
+    return real, calls
+
+
+def test_band_gutters_batch_equals_single(monkeypatch, mixed_docs):
+    """The batch's band gutters (find_splitters pass 2 and the D4 bands,
+    one gutter_sets call each) equal each band's gutters alone."""
+    real, calls = _stage_calls(monkeypatch, "gutter_sets", mixed_docs)
+    assert len(calls) == 2
+    widths = set()
+    for (x0, x1, y0, y1, bounds, width, vseps), _, got in calls:
+        assert len(got) == len(vseps) > 1
+        for k, (s, e) in enumerate(zip(bounds[:-1], bounds[1:])):
+            assert got[k] == real(x0[s:e], x1[s:e], y0[s:e], y1[s:e], [0, e - s],
+                                  width[k], [vseps[k]])[0]
+        widths |= set(width)
+    assert len(widths) > 20  # bands of many documents
+
+
+def test_region_clustering_batch_equals_single(monkeypatch, mixed_docs):
+    """One clustering call for every document's body and marginal lines;
+    each segment's labels, less its start, are the labels of clustering
+    it alone."""
+    real, calls = _stage_calls(monkeypatch, "cluster_lines_into_regions", mixed_docs)
+    [((x0, x1, y0, y1), kw, got)] = calls
+    bounds, band, rtl = kw["bounds"], kw["band"], kw["rtl"]
+    assert rtl.any() and not rtl.all()
+    merged = 0
+    for k, (s, e) in enumerate(zip(bounds[:-1], bounds[1:])):
+        want = real(x0[s:e], x1[s:e], y0[s:e], y1[s:e], band=band[s:e], rtl=rtl[k])
+        assert np.array_equal(got[s:e] - s, want), k
+        merged += len(np.unique(want)) < e - s
+    assert merged > 100
+
+
+def test_in_region_order_batch_equals_single(monkeypatch, mixed_docs):
+    """D1 over every region of the batch in one pass equals ordering each
+    region alone (its own pitch, its own direction)."""
+    real, calls = _stage_calls(monkeypatch, "order_lines_in_region", mixed_docs)
+    [((cx, cy, rtl, off), kw, got)] = calls
+    bounds = kw["bounds"]
+    multi = 0
+    for k, (s, e) in enumerate(zip(bounds[:-1], bounds[1:])):
+        assert np.array_equal(got[s:e] - s, real(cx[s:e], cy[s:e], rtl[k], off[s:e])), k
+        multi += e - s > 2
+    assert multi > 100 and rtl.any()
+
+
+def test_in_box_order_batch_equals_single(monkeypatch, mixed_docs):
+    """D6 over every box of the batch in one pass equals ordering each
+    box's regions alone."""
+    real, calls = _stage_calls(monkeypatch, "_order_in_boxes", mixed_docs)
+    [((rcx, rcy, rh, roff, rtl, bounds), _, got)] = calls
+    multi = 0
+    for k, (s, e) in enumerate(zip(bounds[:-1], bounds[1:])):
+        want = real(rcx[s:e], rcy[s:e], rh[s:e], roff[s:e], rtl[k:k + 1], [0, e - s])
+        assert np.array_equal(got[s:e] - s, want), k
+        multi += e - s > 1
+    assert multi >= 10  # most boxes of this corpus hold one region

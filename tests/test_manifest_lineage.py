@@ -224,3 +224,30 @@ def test_run_extraction_reads_nothing_it_wrote(spark, tmp_path, monkeypatch):
         names = os.listdir(d)
         assert names and all(re.fullmatch(r"part-\d{5}\.parquet", n)
                              for n in names), names
+
+
+def test_quarantined_docs_are_counted(spark, tmp_path):
+    """run_extraction runs the kernel with fail_fast=False: a document it
+    fails on (here a zero page width) is written in offset order and
+    counted in the summary and in its bucket's manifest entry; a clean
+    run counts none."""
+    from eynollah_spark.manifest import read_as_of, snapshots
+
+    victim = "doc00000003"
+    flat = corpus_flat_spark(spark, 40, partitions=2)
+    bad = flat.withColumn("width", F.when(F.col("doc_id") == victim, 0)
+                          .otherwise(F.col("width")))
+    victim_part = spark.range(1).select(
+        F.pmod(F.xxhash64(F.lit(victim)), F.lit(4))).first()[0]
+    for name, frame, want in (("clean", flat, 0), ("bad", bad, 1)):
+        out = str(tmp_path / name)
+        s = run_extraction(nest_corpus(frame), out, n_parts=4, partitions=2,
+                           parts_per_batch=4)
+        assert s["quarantined"] == want
+        parts = snapshots(out)[0]["parts"]
+        assert {int(p): m["quarantined"] for p, m in parts.items()} == {
+            p: want * (p == victim_part) for p in range(4)}
+    rows = (read_as_of(spark, out).filter(F.col("doc_id") == victim)
+            .orderBy("ord").collect())
+    assert len(rows) > 1
+    assert [r["offset"] for r in rows] == sorted(r["offset"] for r in rows)

@@ -21,6 +21,10 @@ GOLDEN_SHA256 = "0cb0f2a8fc7a6236a0e877339ed6623c6b6167ea8b3e8c75cde8db8f17a27bd
 #: kernel of commit 2794a0d, before the page stage was batched
 GOLDEN7_ROWS = 290825
 GOLDEN7_SHA256 = "703874dbc531726a20c96a1ab1f6f40b8beb6e1da4698a6688a37ab3c7729094"
+#: docs 0..2999 at seed 42 under num_col_upper=3, computed with the
+#: kernel of commit 638366f, before the per-document remainder was batched
+GOLDEN_NC3_ROWS = 279117
+GOLDEN_NC3_SHA256 = "86374ee1c33001ee291ddbff30f0ba1610379fb58aefa5a22f486a44f59dbcb4"
 
 _INT = ("offset", "x0", "x1", "y0", "y1")
 _STR = ("kind", "text", "media_ref")
@@ -102,6 +106,49 @@ def test_permutation_hash_pinned_seed7():
     out = _run(part.to_batches(), include_payload=True)
     assert out.num_rows == GOLDEN7_ROWS
     assert _digest(out) == GOLDEN7_SHA256
+
+
+def test_permutation_hash_pinned_num_col(partition):
+    """A third pinned run: a column count pinned to 3 turns the marginal
+    split off on every page, so marginal lines join the body (300 of the
+    3000 documents order differently). The pins (1, 2) would pin nothing
+    new: they leave every document of this corpus as it is."""
+    out = _run(partition.to_batches(), include_payload=True, num_col_upper=3)
+    assert out.num_rows == GOLDEN_NC3_ROWS
+    assert _digest(out) == GOLDEN_NC3_SHA256
+
+
+def test_check_output_counts_lost_and_extra_rows():
+    """output='check' counts a document's rows lost or duplicated before
+    the kernel, wherever they sit in reading order: a dropped last-rank
+    row leaves every remaining rank right, and only expected_n sees it."""
+    from eynollah_spark.corpus import gen_corpus_flat
+
+    flat, _ = gen_corpus_flat(30)
+    cols = ("doc_id", "width", "height", "rtl", "kind", "offset", "x0", "x1",
+            "y0", "y1", "expected_kind", "expected_rank", "expected_n")
+    t = pa.table({c: flat[c] for c in cols})
+
+    def n_bad(table):
+        out = _run(table.to_batches(max_chunksize=500), output="check")
+        return dict(zip(out["doc_id"].to_pylist(), out["n_bad"].to_pylist()))
+
+    clean = n_bad(t)
+    assert len(clean) >= 29 and not any(clean.values())
+    victim = "doc00000001"
+    rows = np.flatnonzero(flat["doc_id"] == victim)
+    rank = flat["expected_rank"][rows]
+    keep = np.ones(t.num_rows, dtype=bool)
+    cases = {}
+    for name, r in (("mid", rank.max() // 2), ("last", rank.max())):
+        k = keep.copy()
+        k[rows[rank == r]] = False
+        cases[name] = t.filter(pa.array(k))
+    cases["dup"] = pa.concat_tables([t, t.slice(int(rows[0]), 1)])
+    for name, table in cases.items():
+        got = n_bad(table)
+        assert got.pop(victim) > 0, name
+        assert not any(got.values()), name
 
 
 def test_neighbours_do_not_matter(partition):

@@ -178,7 +178,8 @@ def test_task_side_scan_empty_file_list(spark):
 
 
 _CHECK_COLS = ["doc_id", "width", "height", "rtl", "kind", "offset",
-               "x0", "x1", "y0", "y1", "expected_kind", "expected_rank"]
+               "x0", "x1", "y0", "y1", "expected_kind", "expected_rank",
+               "expected_n"]
 
 
 def test_expected_check_kernel_equals_join_check(spark, corpus):

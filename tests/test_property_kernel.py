@@ -79,13 +79,16 @@ def test_input_order_invariance(doc, rnd):
 @given(st.lists(st.floats(min_value=-1e6, max_value=1e6, allow_nan=False),
                 min_size=1, max_size=60))
 def test_fast_median_equals_numpy(xs):
-    """_med must be bit-identical to np.median (it replaced np.median in
-    the kernel hot path for speed; any semantic drift silently changes
-    row clustering thresholds)."""
-    from eynollah_spark.kernels.layout import _med
+    """_seg_median must be bit-identical to np.median per segment (it
+    replaced np.median in the kernel hot path for speed; any semantic
+    drift silently changes row clustering thresholds)."""
+    from eynollah_spark.kernels.layout import _seg_median
 
     a = np.array(xs, dtype=float)
-    assert _med(a) == float(np.median(a))
+    bounds = np.array(sorted({0, len(a) // 3, len(a)}))
+    seg = np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
+    assert _seg_median(a, seg, bounds).tolist() == [
+        float(np.median(a[s:e])) for s, e in zip(bounds[:-1], bounds[1:])]
 
 
 @settings(max_examples=100, deadline=None)

@@ -31,15 +31,16 @@ def _doc():
 
 
 def test_safe_permutation_falls_back(monkeypatch):
-    def boom(d, page=None):
+    def boom(docs, pages=None):
         raise ValueError("kernel bug")
 
-    monkeypatch.setattr(pl, "layout_permutation", boom)
-    perm, marg = pl._safe_permutation(_doc(), fail_fast=False)
+    monkeypatch.setattr(pl, "layout_permutations", boom)
+    [(perm, marg)], status = pl._safe_permutations([_doc()], fail_fast=False)
     # degraded but total: input-offset order
     assert perm.tolist() == [1, 0] and not marg.any()
+    assert status == ["ValueError"]
     with pytest.raises(ValueError):
-        pl._safe_permutation(_doc(), fail_fast=True)
+        pl._safe_permutations([_doc()], fail_fast=True)
 
 
 def _partition() -> pa.Table:
@@ -72,17 +73,17 @@ def _check_quarantined(t: pa.Table, out: pa.Table, ref: pa.Table):
 
 
 def test_quarantined_doc_does_not_poison_batch(monkeypatch):
-    """One document raising inside layout_permutation."""
+    """One document raising inside layout_permutations."""
     t = _partition()
     ref = _run(t, fail_fast=True)
-    real = pl.layout_permutation
+    real = pl.layout_permutations
 
-    def flaky(d, page=None):
-        if d.width == _MARK:
+    def flaky(docs, pages=None):
+        if any(d.width == _MARK for d in docs):
             raise ValueError("kernel bug")
-        return real(d, page)
+        return real(docs, pages)
 
-    monkeypatch.setattr(pl, "layout_permutation", flaky)
+    monkeypatch.setattr(pl, "layout_permutations", flaky)
     _check_quarantined(t, _run(t, fail_fast=False), ref)
     with pytest.raises(ValueError):
         _run(t, fail_fast=True)
