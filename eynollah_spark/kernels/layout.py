@@ -33,18 +33,24 @@ role (see eynollah_spark.pipeline) is to run millions of these in
 parallel inside the mapInArrow partition kernel, a batch of documents
 at a time. analyze_pages runs the page stage (deskew scores, the
 page-level projection profiles and their valleys); layout_permutations
-runs the rest phase by phase: the per-document glue (separators, column
-estimate, marginal split, splitter pass 1, D4 boxes and cells, D5, D8)
-in Python loops over the documents, and the band gutters, the region
-clustering, D1 in-region order and D6 in-box order each as one numpy
-pass over the whole batch, its documents as segments. Every batched
-step is exact per segment, so a document's result never depends on its
-batch; layout_permutation is the batch of one.
+runs the rest phase by phase, every phase one numpy pass over the whole
+batch with its documents as segments: separators, the page-level column
+estimate, the marginal split (peak search on the run-length encoding of
+the [documents x bins] profile matrix), both splitter passes, the band
+gutters, D4 boxes and cells, the region clustering, D1, D5, D6 and the
+D8 order. Segments meet through (segment, element) pair tables, keys
+searched lexicographically on (segment, value), and bincounts or
+reduceats per segment. Python loops remain only where a step is
+sequential by nature and rare: min-distance peak suppression, greedy
+merges of close candidates, and the columns a partial-width separator
+cuts. Every batched step is exact per segment, so a document's result
+never depends on its batch; layout_permutation is the batch of one.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from types import SimpleNamespace
 
 import numpy as np
 
@@ -168,83 +174,168 @@ def gaussian_smooth(p, sigma):
     return np.convolve(p, k, mode="same")
 
 
+# ------------------------------------------------------------ segments ---
+#
+# The batched phases work on flat arrays of many segments (documents,
+# bands, regions): segment k's elements are ``[bounds[k], bounds[k+1])``.
+
+def _segments(bounds):
+    """The segment of every element, segment k being
+    ``[bounds[k], bounds[k+1])``."""
+    bounds = np.asarray(bounds, dtype=np.int64)
+    return np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
+
+
+def _seg_bounds(seg, n_seg):
+    """The bounds of ``n_seg`` segments from the (non-decreasing) segment
+    of every element."""
+    return np.concatenate(([0], np.cumsum(np.bincount(seg, minlength=n_seg))))
+
+
+def _firsts(seg):
+    """The first index of every run of equal values in ``seg``."""
+    if not len(seg):
+        return np.empty(0, dtype=np.int64)
+    return np.flatnonzero(np.concatenate(([True], seg[1:] != seg[:-1])))
+
+
+def _ragged_arange(starts, lengths):
+    """concatenate(arange(s, s + n) for s, n in zip(starts, lengths))."""
+    ends = np.cumsum(lengths)
+    total = int(ends[-1]) if len(ends) else 0
+    return np.repeat(starts - (ends - lengths), lengths) + np.arange(total)
+
+
+def _pairs(seg, bounds):
+    """Every element i paired with every element of its segment
+    ``seg[i]`` of another table (segment s: ``[bounds[s], bounds[s+1])``),
+    i-major: returns (i, j) index arrays."""
+    bounds = np.asarray(bounds, dtype=np.int64)
+    cnt = (bounds[1:] - bounds[:-1])[seg]
+    return np.repeat(np.arange(len(seg)), cnt), _ragged_arange(bounds[:-1][seg], cnt)
+
+
+def _lex_key(major, minor):
+    """Complex keys that numpy sorts and searches lexicographically by
+    (major, minor) — both stored exactly, no arithmetic."""
+    k = np.empty(len(major), dtype=complex)
+    k.real, k.imag = major, minor
+    return k
+
+
+def _smooth_rows(P, bins, sigma):
+    """gaussian_smooth of the first ``bins[k]`` columns of every row k of
+    ``P`` (one np.convolve per row: rows differ in sigma, and a matrix
+    form would not round as np.convolve does). Returns (S, n): row k of S
+    holds the smoothed row in its first ``n[k]`` columns, zeros after
+    (np.convolve's 'same' output outgrows the row when the kernel is the
+    longer of the two)."""
+    rows = [gaussian_smooth(P[k, :b], s)
+            for k, (b, s) in enumerate(zip(bins.tolist(), sigma.tolist()))]
+    n = np.fromiter(map(len, rows), dtype=np.int64, count=len(rows))
+    S = np.zeros((len(rows), max(_BINS, int(n.max()) if len(n) else 0)))
+    if len(rows):
+        S[np.repeat(np.arange(len(rows)), n), _ragged_arange(np.zeros_like(n), n)] = \
+            np.concatenate(rows)
+    return S, n
+
+
 # ------------------------------------------------------- marginalia (C10) ---
 
-def _find_peaks(y, min_distance):
-    """Plateau-aware local maxima with min-distance suppression
-    (stand-in for scipy.signal.find_peaks as used at
-    utils/marginals.py:74-78). Vectorized via run-length encoding."""
-    n = len(y)
-    if n < 3:
-        return np.array([], dtype=np.int64)
-    # RLE of equal-value runs
-    change = ((y[1:] - y[:-1]) != 0).nonzero()[0] + 1
-    starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [n]))
-    vals = y[starts]
-    k = len(vals)
-    if k < 3:
-        return np.array([], dtype=np.int64)
-    is_max = np.zeros(k, dtype=bool)
-    is_max[1:-1] = (vals[1:-1] > vals[:-2]) & (vals[1:-1] > vals[2:])
-    peaks = ((starts[is_max] + ends[is_max] - 1) // 2).astype(np.int64)
-    if len(peaks) == 0:
-        return peaks
-    # min-distance suppression, keeping higher peaks (scipy semantics)
-    yp = y[peaks]
-    pk, hv = peaks.tolist(), yp.tolist()
+def _suppress(peaks, heights, min_distance):
+    """scipy's min-distance suppression on one profile's peaks, keeping
+    higher peaks: returns the keep mask."""
+    pk, hv = peaks.tolist(), heights.tolist()
     keep = [True] * len(pk)
-    for oi in (-yp).argsort(kind="stable").tolist():
+    for oi in (-heights).argsort(kind="stable").tolist():
         if not keep[oi]:
             continue
         p0, h0 = pk[oi], hv[oi]
         for j, (p, v) in enumerate(zip(pk, hv)):
             if abs(p - p0) < min_distance and v <= h0 and j != oi:
                 keep[j] = False
-    peaks = peaks[keep]
-    peaks.sort()
-    return peaks
+    return keep
 
 
-def _prominences(y, peaks):
-    """Prominence per peak (walk until a higher value on each side; min
-    along the way is the base). Vectorized per peak: the walk boundary is
-    the nearest strictly-higher sample, the base is the min of the walked
-    slice — identical values to the elementwise walk."""
-    n = len(y)
-    prom = np.empty(len(peaks))
-    for k, p in enumerate(peaks):
-        lv = y[p]
-        gt = (y[:p] > lv).nonzero()[0]
-        left = int(gt[-1]) + 1 if len(gt) else 0
-        lmin = min(lv, float(y[left:p].min())) if p > left else lv
-        gt = (y[p + 1:] > lv).nonzero()[0]
-        right = p + 1 + int(gt[0]) if len(gt) else n
-        rmin = min(lv, float(y[p + 1:right].min())) if right > p + 1 else lv
-        prom[k] = lv - max(lmin, rmin)
-    return prom
+def _find_peaks(Y, n, min_distance):
+    """Plateau-aware local maxima with min-distance suppression (stand-in
+    for scipy.signal.find_peaks as used at utils/marginals.py:74-78) of
+    every row of ``Y`` at once, row k being its first ``n[k]`` columns,
+    via run-length encoding: a peak is the middle of a run of equal
+    values higher than the runs on both sides. Suppression runs only on
+    the rows holding two peaks closer than their ``min_distance``.
+    Returns the runs (row, value, bounds: row k's are
+    ``[bounds[k], bounds[k+1])``) and the peaks (row, column, run), by
+    row and column."""
+    R, C = Y.shape
+    brk = np.empty((R, C), dtype=bool)
+    brk[:, 0] = True
+    brk[:, 1:] = (Y[:, 1:] - Y[:, :-1]) != 0
+    brk &= np.arange(C) < n[:, None]
+    rrow, rstart = brk.nonzero()
+    rb = _seg_bounds(rrow, R)
+    rend = np.append(rstart[1:], 0)
+    has = rb[1:] > rb[:-1]
+    rend[rb[1:][has] - 1] = n[has]
+    rval = Y[rrow, rstart]
+    run = np.flatnonzero((rrow[1:-1] == rrow[:-2]) & (rrow[1:-1] == rrow[2:])
+                         & (rval[1:-1] > rval[:-2]) & (rval[1:-1] > rval[2:])) + 1
+    prow = rrow[run]
+    ppos = (rstart[run] + rend[run] - 1) // 2
+    close = (prow[1:] == prow[:-1]) & (ppos[1:] - ppos[:-1] < min_distance[prow[1:]])
+    if close.any():
+        keep = np.ones(len(run), dtype=bool)
+        for r in np.unique(prow[1:][close]).tolist():
+            k = np.flatnonzero(prow == r)
+            keep[k] = _suppress(ppos[k], Y[r, ppos[k]], int(min_distance[r]))
+        prow, ppos, run = prow[keep], ppos[keep], run[keep]
+    return (rrow, rval, rb), (prow, ppos, run)
+
+
+def _prominences(rval, rb, prow, run):
+    """Prominence of every peak (run ``run`` of row ``prow``; runs as
+    _find_peaks returns them): walking its row's runs until a higher one
+    on each side, the lower of the two walks' minima is the base. Equal
+    to the walk over samples, a run being a stretch of equal samples."""
+    if not len(run):
+        return np.empty(0)
+    lv = rval[run]
+    q, j = _pairs(prow, rb)
+    v, pj = rval[j], run[q]
+    higher = v > lv[q]
+    st = np.concatenate(([0], np.cumsum(np.diff(rb)[prow])[:-1]))
+    left = np.maximum.reduceat(np.where(higher & (j < pj), j, -1), st)
+    right = np.minimum.reduceat(np.where(higher & (j > pj), j, len(rval)), st)
+    lmin = np.minimum.reduceat(np.where((j > left[q]) & (j < pj), v, np.inf), st)
+    rmin = np.minimum.reduceat(np.where((j > pj) & (j < right[q]), v, np.inf), st)
+    return lv - np.maximum(np.minimum(lmin, lv), np.minimum(rmin, lv))
+
+
+_NO_PROFILES = (np.empty(0, dtype=np.int64), np.empty((0, _BINS)),
+                np.empty(0, dtype=np.int64), np.empty(0), np.empty(0),
+                np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
 
 
 def _marginal_profiles(x0, x1, y0, y1, bounds, width, height):
     """split_main_and_marginal's profile phase for S segments of text
     lines at once (segment k: lines ``[bounds[k], bounds[k+1])`` on a
     ``width[k]`` x ``height[k]`` page): the column-sum projection of the
-    horizontally eroded lines. Per segment: (p, scale, mx, first_nz,
-    last_nz) — the projection, its bins per px, its max and the first
-    and last columns of its smoothed support — or None when the page is
-    too thin in text to have marginalia."""
+    horizontally eroded lines. Returns (seg, P, bins, scale, mx, first,
+    last): the segments thick enough in text to have marginalia,
+    ascending, and for each its projection (the first bins[k] columns of
+    row k of P), bins per px, max, and the first and last columns of its
+    smoothed support."""
     width = np.asarray(width, dtype=float)
     height = np.asarray(height, dtype=float)
-    out = [None] * len(width)
     # horizontal erosion amount (marginals.py:25-38: 6x 1x5 plus 5-7x 5x5
     # at reduced scale for pages taller than 1500/1800 px)
     ex = np.where(height <= 1500, 12.0, np.where(height <= 1800, 22.0, 26.0))
-    seg = np.repeat(np.arange(len(width)), np.diff(bounds))
+    seg = _segments(bounds)
     ex0, ex1 = x0 + ex[seg], x1 - ex[seg]
     keepm = ex1 > ex0
     live = np.flatnonzero(np.bincount(seg[keepm], minlength=len(width)))
     if len(live) == 0:
-        return out
+        return _NO_PROFILES
     kb = np.concatenate(([0], np.cumsum(np.bincount(seg[keepm])[live])))
     P, bins, scale = coverage_profiles(ex0[keepm], ex1[keepm],
                                        np.maximum(y1 - y0, 1.0)[keepm], kb,
@@ -252,11 +343,112 @@ def _marginal_profiles(x0, x1, y0, y1, bounds, width, height):
     mx = np.where(np.arange(_BINS) < bins[:, None], P, -np.inf).max(axis=1)
     # bail out if the max text thickness is below 14% of page height
     # (marginals.py:62)
-    for k in np.flatnonzero((mx > 0) & (100.0 * mx / height[live] >= 14.0)).tolist():
-        p, sc = P[k, :bins[k]], float(scale[k])
-        nz = (gaussian_smooth(p, 1.0 * sc) > 1e-9).nonzero()[0]
-        out[live[k]] = (p, sc, mx[k], int(nz[0]), int(nz[-1]))
-    return out
+    k = np.flatnonzero((mx > 0) & (100.0 * mx / height[live] >= 14.0))
+    P, bins, scale, mx = P[k], bins[k], scale[k], mx[k]
+    S, n = _smooth_rows(P, bins, 1.0 * scale)
+    nz = S > 1e-9
+    first = nz.argmax(axis=1)
+    last = S.shape[1] - 1 - nz[:, ::-1].argmax(axis=1)
+    return live[k], P, bins, scale, mx, first, last
+
+
+def _best_peaks(side, prow, ppos, score, R):
+    """Per row, the best-scoring peak of those flagged ``side`` (the
+    first by column among equals): (score, column), NaN score where the
+    row has none."""
+    q = np.flatnonzero(side)
+    o = q[np.lexsort((ppos[q], -score[q], prow[q]))]
+    f = o[_firsts(prow[o])]
+    best, pos = np.full(R, np.nan), np.zeros(R, dtype=np.int64)
+    best[prow[f]], pos[prow[f]] = score[f], ppos[f]
+    return best, pos
+
+
+def _seg_extreme(op, vals, mask, bounds, fill):
+    """op (np.minimum / np.maximum) of the ``mask``-ed values of every
+    non-empty segment, ``fill`` where none is."""
+    return op.reduceat(np.where(mask, vals, fill), bounds[:-1])
+
+
+def _marginal_split(x0, x1, y0, y1, bounds, width, height, num_col, prof):
+    """split_main_and_marginal after the profile phase for S segments of
+    text lines at once (segment k: lines ``[bounds[k], bounds[k+1])`` on
+    a ``width[k]`` x ``height[k]`` page of ``num_col[k]`` columns;
+    ``prof`` is their _marginal_profiles). Returns (the marginalia flag
+    of every line, main_lo, main_hi per segment)."""
+    width, bounds = np.asarray(width, dtype=float), np.asarray(bounds)
+    marg = np.zeros(len(x0), dtype=bool)
+    main_lo, main_hi = np.zeros(len(width)), width.copy()
+    k = np.flatnonzero(num_col[prof[0]] <= 2)
+    if not len(k):
+        return marg, main_lo, main_hi
+    pseg, P, bins, scale, mx, first, last = (a[k] for a in prof)
+    R = len(pseg)
+    rev = mx[:, None] - P
+    (_, rval, rb), (prow, ppos, run) = _find_peaks(
+        rev, bins, np.maximum(2, (30 * scale).astype(np.int64)))
+    # valleys kept only where the projection is below max/20
+    # (min_text_thickness, marginals.py:42), scored prominence*height
+    ok = (ppos > first[prow]) & (ppos < last[prow]) & (P[prow, ppos] < (mx / 20.0)[prow])
+    prow, ppos, run = prow[ok], ppos[ok], run[ok]
+    score = _prominences(rval, rb, prow, run) * rval[run]
+    # valleys beyond the midpoint (1 column) or mid+-1/3 (2 columns)
+    # (marginals.py:85-92)
+    mid = 0.5 * (first + last)
+    one = num_col[pseg] == 1
+    lcut = np.where(one, mid, mid - (mid - first) / 3.0)
+    rcut = np.where(one, mid, mid + (last - mid) / 3.0)
+    bl, pl = _best_peaks(ppos < lcut[prow], prow, ppos, score, R)
+    br, pr = _best_peaks(ppos > rcut[prow], prow, ppos, score, R)
+    hl, hr = ~np.isnan(bl), ~np.isnan(br)
+    # a side scoring <0.1x the other is dropped (marginals.py:106-129)
+    with np.errstate(invalid="ignore"):
+        use_l = hl & (~hr | (bl >= 0.1 * br))
+        use_r = hr & (~hl | (br >= 0.1 * bl))
+    live = np.flatnonzero(hl | hr)
+    if not len(live):
+        return marg, main_lo, main_hi
+    s = pseg[live]
+    PL = np.where(use_l, pl / scale, 0.0)[live]
+    PR = np.where(use_r, pr / scale, width[pseg])[live]
+
+    # symbolic-domain guards on top of min_text_thickness (marginals.py:42,83):
+    # a true marginal column (a) recurs along the page (>=8% page-height
+    # coverage — not a stray page number / catch-word), and (b) is small
+    # next to the main text (<25% of its ink area, <50% of its width —
+    # a real column is never marginalia even when a valley qualifies)
+    n = (bounds[1:] - bounds[:-1])[s]
+    li = _ragged_arange(bounds[:-1][s], n)
+    q = np.repeat(np.arange(len(s)), n)
+    lb = np.concatenate(([0], np.cumsum(n)))
+    lx0, lx1 = x0[li], x1[li]
+    h = np.maximum(y1[li] - y0[li], 1.0)
+    cx = (lx0 + lx1) / 2.0
+    area = np.maximum(lx1 - lx0, 1.0) * h
+    L = len(s)
+
+    def drop(side, body):
+        has_s = np.logical_or.reduceat(side, lb[:-1])
+        has_b = np.logical_or.reduceat(body, lb[:-1])
+        thin = np.bincount(q, weights=np.where(side, h, 0.0), minlength=L) < 0.08 * height[s]
+        a_s = np.bincount(q, weights=np.where(side, area, 0.0), minlength=L)
+        a_b = np.bincount(q, weights=np.where(body, area, 0.0), minlength=L)
+        side_w = (_seg_extreme(np.maximum, lx1, side, lb, -np.inf)
+                  - _seg_extreme(np.minimum, lx0, side, lb, np.inf))
+        body_w = (_seg_extreme(np.maximum, lx1, body, lb, -np.inf)
+                  - _seg_extreme(np.minimum, lx0, body, lb, np.inf))
+        return has_s & (thin | (has_b & ((a_s >= 0.25 * a_b) | (side_w >= 0.5 * body_w))))
+
+    # the left side first: the right side's body excludes a kept left side
+    PL = np.where(drop(cx < PL[q], ~((cx < PL[q]) | (cx > PR[q]))), 0.0, PL)
+    PR = np.where(drop(cx > PR[q], ~((cx < PL[q]) | (cx > PR[q]))), width[s], PR)
+    m = (cx < PL[q]) | (cx > PR[q])
+    # no main text left -> treat all as main (marginals.py:183-185)
+    some = ~np.logical_and.reduceat(m, lb[:-1])
+    marg[li[some[q]]] = m[some[q]]
+    main_lo[s[some]] = _seg_extreme(np.minimum, lx0, ~m, lb, np.inf)[some]
+    main_hi[s[some]] = _seg_extreme(np.maximum, lx1, ~m, lb, -np.inf)[some]
+    return marg, main_lo, main_hi
 
 
 def split_main_and_marginal(x0, x1, y0, y1, width, height, num_col):
@@ -278,82 +470,16 @@ def split_main_and_marginal(x0, x1, y0, y1, width, height, num_col):
       a side scoring <0.1x the other is dropped (:106-129);
     * text whose center falls outside [point_left, point_right] is
       marginalia (:155-166).
+
+    layout_permutations runs it (_marginal_profiles, _marginal_split)
+    for a whole batch of documents; this is the batch of one.
     """
     x0, x1, y0, y1 = (np.asarray(a, dtype=float) for a in (x0, x1, y0, y1))
-    prof = (_marginal_profiles(x0, x1, y0, y1, [0, len(x0)], [width], [height])[0]
-            if len(x0) else None)
-    return _marginal_split(x0, x1, y0, y1, width, height, num_col, prof)
-
-
-def _marginal_split(x0, x1, y0, y1, width, height, num_col, prof):
-    """split_main_and_marginal after the profile phase (``prof``, one
-    _marginal_profiles entry)."""
-    n = len(x0)
-    marg = np.zeros(n, dtype=bool)
-    if n == 0 or num_col > 2 or prof is None:
-        return marg, 0.0, float(width)
-    p, scale, mx, first_nz, last_nz = prof
-    min_thick = mx / 20.0
-    mid = 0.5 * (first_nz + last_nz)
-    third_l = (mid - first_nz) / 3.0
-    third_r = (last_nz - mid) / 3.0
-    rev = mx - p
-    peaks = _find_peaks(rev, max(2, int(30 * scale)))
-    if len(peaks) == 0:
-        return marg, 0.0, float(width)
-    ok = (peaks > first_nz) & (peaks < last_nz) & (p[peaks] < min_thick)
-    peaks = peaks[ok]
-    scores = _prominences(rev, peaks) * rev[peaks]
-    if num_col == 1:
-        left = peaks < mid
-        right = peaks > mid
-    else:
-        left = peaks < mid - third_l
-        right = peaks > mid + third_r
-    best_l = scores[left].max() if left.any() else None
-    best_r = scores[right].max() if right.any() else None
-    if best_l is None and best_r is None:
-        return marg, 0.0, float(width)
-    point_left, point_right = 0.0, float(width)
-    if best_l is not None and (best_r is None or best_l >= 0.1 * best_r):
-        point_left = peaks[left][int(np.argmax(scores[left]))] / scale
-    if best_r is not None and (best_l is None or best_r >= 0.1 * best_l):
-        point_right = peaks[right][int(np.argmax(scores[right]))] / scale
-    h = np.maximum(y1 - y0, 1.0)
-    cx = (x0 + x1) / 2.0
-    # symbolic-domain guards on top of min_text_thickness (marginals.py:42,83):
-    # a true marginal column (a) recurs along the page (>=8% page-height
-    # coverage — not a stray page number / catch-word), and (b) is small
-    # next to the main text (<25% of its ink area, <50% of its width —
-    # a real column is never marginalia even when a valley qualifies)
-    area = np.maximum(x1 - x0, 1.0) * h
-    for side_mask, reset in (
-        (cx < point_left, "l"),
-        (cx > point_right, "r"),
-    ):
-        drop = False
-        if side_mask.any():
-            body_m = ~((cx < point_left) | (cx > point_right))
-            if h[side_mask].sum() < 0.08 * height:
-                drop = True
-            elif body_m.any():
-                if area[side_mask].sum() >= 0.25 * area[body_m].sum():
-                    drop = True
-                side_w = x1[side_mask].max() - x0[side_mask].min()
-                body_w = x1[body_m].max() - x0[body_m].min()
-                if side_w >= 0.5 * body_w:
-                    drop = True
-        if drop:
-            if reset == "l":
-                point_left = 0.0
-            else:
-                point_right = float(width)
-    marg = (cx < point_left) | (cx > point_right)
-    # no main text left -> treat all as main (marginals.py:183-185)
-    if marg.all():
-        return np.zeros(n, dtype=bool), 0.0, float(width)
-    body = ~marg
-    return marg, float(np.min(x0[body])), float(np.max(x1[body]))
+    b = [0, len(x0)]
+    W, H = np.array([float(width)]), np.array([float(height)])
+    marg, lo, hi = _marginal_split(x0, x1, y0, y1, b, W, H, np.array([num_col]),
+                                   _marginal_profiles(x0, x1, y0, y1, b, W, H))
+    return marg, float(lo[0]), float(hi[0])
 
 
 # ------------------------------------------------------------ columns (C5) ---
@@ -362,86 +488,117 @@ def _gutter_valleys(x0, x1, y0, y1, bounds, width):
     """find_gutters' profile phase for S non-empty segments of lines at
     once (segment k: lines ``[bounds[k], bounds[k+1])`` on a page of
     ``width[k]``): the valley runs of each smoothed projection inside
-    the segment's ink extent, as x positions. Returns (valleys, lo, hi)
-    per segment: valleys is None where the projection has no ink or the
-    extent no interior (no gutters, whatever the separators)."""
+    the segment's ink extent, as x positions. Returns (vx, vseg, ok, lo,
+    hi): every valley and its segment, by segment and x; whether the
+    segment's projection has ink and its extent an interior (if not, it
+    has no gutters, whatever the separators); and the extent."""
     width = np.asarray(width, dtype=float)
     P, bins, scale = coverage_profiles(x0, x1, np.maximum(y1 - y0, 1.0),
                                        bounds, width)
-    lo = np.minimum.reduceat(x0, bounds[:-1]).tolist()
-    hi = np.maximum.reduceat(x1, bounds[:-1]).tolist()
-    sigma = (np.maximum(1.0, width / 150.0) * scale).tolist()
-    valleys = []
-    for k, (b, sc) in enumerate(zip(bins.tolist(), scale.tolist())):
-        p = gaussian_smooth(P[k, :b], sigma[k])
-        mx = p.max()
-        ilo, ihi = int(lo[k] * sc) + 1, int(hi[k] * sc) - 1
-        if mx <= 0 or ihi <= ilo:
-            valleys.append(None)
-            continue
-        # valley runs inside the interior
-        below = p < _VALLEY_FRAC * mx
-        below[: max(ilo, 0)] = False
-        below[min(ihi, b):] = False
-        edge = np.concatenate(([False], below, [False]))
-        idx = (edge[1:] != edge[:-1]).nonzero()[0]
-        valleys.append(((idx[0::2] + idx[1::2]) / 2.0 / sc).tolist())
-    return valleys, lo, hi
+    lo = np.minimum.reduceat(x0, bounds[:-1])
+    hi = np.maximum.reduceat(x1, bounds[:-1])
+    S, n = _smooth_rows(P, bins, np.maximum(1.0, width / 150.0) * scale)
+    col = np.arange(S.shape[1])
+    mx = np.where(col < n[:, None], S, -np.inf).max(axis=1)
+    ilo = (lo * scale).astype(np.int64) + 1
+    ihi = (hi * scale).astype(np.int64) - 1
+    ok = (mx > 0) & (ihi > ilo)
+    # valley runs inside the interior
+    below = np.zeros((len(P), S.shape[1] + 2), dtype=bool)
+    below[:, 1:-1] = ((S < _VALLEY_FRAC * mx[:, None]) & ok[:, None]
+                      & (col >= np.maximum(ilo, 0)[:, None])
+                      & (col < np.minimum(ihi, bins)[:, None]))
+    row, idx = (below[:, 1:] != below[:, :-1]).nonzero()
+    return ((idx[0::2] + idx[1::2]) / 2.0 / scale[row[0::2]], row[0::2], ok, lo, hi)
 
 
-def _settle_gutters(valleys, x0, x1, y0, y1, lo, hi, width, vsep_cx):
-    """find_gutters after the profile phase: valley and separator
-    candidates, merged and balance-pruned over the segment's lines."""
-    if valleys is None:
-        return []
-    cand = [(x, 0.5) for x in valleys]  # (x, strength)
-    for v in vsep_cx:
-        if lo < v < hi:
-            cand.append((float(v), 1.0))
-    if not cand:
-        return []
-    cand.sort()
-    # merge close candidates, keeping the stronger (C5 :409-433)
-    merged = []
-    merge_d = _GUTTER_MERGE_FRAC * width
-    for x, s in cand:
-        if merged and x - merged[-1][0] < merge_d:
-            if s > merged[-1][1]:
-                merged[-1] = (x, s)
+def _merge_close(x, s, seg, d):
+    """C5 :409-433, one flat pass over the candidates (x, strength) of
+    many segments, sorted by (segment, x, strength): a candidate closer
+    than ``d[segment]`` to the last kept gutter of its segment merges
+    into it, the stronger taking its place. Only the segments holding
+    such a pair are walked."""
+    close = (seg[1:] == seg[:-1]) & (x[1:] - x[:-1] < d[seg[1:]])
+    if not close.any():
+        return x, s, seg
+    walk = np.isin(seg, seg[1:][close])
+    keep = ~walk
+    x, s = x.copy(), s.copy()
+    xl, sl, gl, dl = x.tolist(), s.tolist(), seg.tolist(), d.tolist()
+    last, cur = -1, -1
+    for i in np.flatnonzero(walk).tolist():
+        if gl[i] == cur and xl[i] - x[last] < dl[cur]:
+            if sl[i] > s[last]:
+                x[last], s[last] = xl[i], sl[i]
         else:
-            merged.append((x, s))
-    gutters = merged
-    # balance pruning (C5 :390-405): drop gutters bounding near-empty columns
+            keep[i], last, cur = True, i, gl[i]
+    return x[keep], s[keep], seg[keep]
+
+
+def _settle_gutters(vx, vseg, ok, sx, sseg, lo, hi, width, x0, x1, y0, y1, bounds):
+    """find_gutters after the profile phase for S segments of lines at
+    once (segment k: lines ``[bounds[k], bounds[k+1])`` with ink extent
+    ``(lo[k], hi[k])`` on a page of ``width[k]``): valley candidates
+    ``vx`` of segment ``vseg`` and separator candidates ``sx`` of
+    ``sseg`` inside the extent, none where not ``ok``, merged and
+    balance-pruned. Returns the gutters and their segments, by segment
+    and x."""
+    S = len(lo)
+    # candidates (x, strength), sorted per segment
+    sin = ok[sseg] & (lo[sseg] < sx) & (sx < hi[sseg])
+    vin = ok[vseg]
+    gx = np.concatenate((vx[vin], sx[sin]))
+    gs = np.repeat([0.5, 1.0], [int(vin.sum()), int(sin.sum())])
+    gseg = np.concatenate((vseg[vin], sseg[sin]))
+    o = np.lexsort((gs, gx, gseg))
+    gx, gs, gseg = _merge_close(gx[o], gs[o], gseg[o], _GUTTER_MERGE_FRAC * width)
+    # balance pruning (C5 :390-405): drop gutters bounding near-empty
+    # columns, one per segment and round
+    lseg = _segments(bounds)
     area = np.maximum(x1 - x0, 1.0) * np.maximum(y1 - y0, 1.0)
-    total = area.sum()
     cx = (x0 + x1) / 2.0
-    while gutters:
-        edges = [lo] + [g for g, _ in gutters] + [hi]
-        masses = np.array(
-            [area[(cx >= edges[i]) & (cx < edges[i + 1])].sum() for i in range(len(edges) - 1)]
-        )
-        weakest = int(masses.argmin())
-        if masses[weakest] >= _COL_MIN_MASS * total:
+    total = np.bincount(lseg, weights=area, minlength=S)
+    inside = (cx >= lo[lseg]) & (cx < hi[lseg])
+    while len(gx):
+        G = np.bincount(gseg, minlength=S)
+        gb = np.concatenate(([0], np.cumsum(G)))
+        cb = np.concatenate(([0], np.cumsum(G + 1)))
+        col = _lex_key(gseg, gx).searchsorted(_lex_key(lseg, cx), side="right") - gb[lseg]
+        m = inside & (G[lseg] > 0)
+        mass = np.bincount(cb[lseg[m]] + col[m], weights=area[m], minlength=int(cb[-1]))
+        cseg = _segments(cb)
+        o = np.lexsort((mass, cseg))
+        weakest = o[_firsts(cseg[o])]
+        drop = (G > 0) & (mass[weakest] < _COL_MIN_MASS * total)
+        if not drop.any():
             break
         # remove the weaker of the gutters bounding the weakest column
-        adj = [i for i in (weakest - 1, weakest) if 0 <= i < len(gutters)]
-        drop = min(adj, key=lambda i: gutters[i][1])
-        gutters.pop(drop)
-    return [g for g, _ in gutters]
+        # (the left one of two equals)
+        d = np.flatnonzero(drop)
+        w = weakest[d] - cb[d]
+        a, b = gb[d] + w - 1, gb[d] + w
+        left = (w > 0) & ((w == G[d]) | (gs[np.maximum(a, 0)] <= gs[np.minimum(b, len(gs) - 1)]))
+        keep = np.ones(len(gx), dtype=bool)
+        keep[np.where(left, a, b)] = False
+        gx, gs, gseg = gx[keep], gs[keep], gseg[keep]
+    return gx, gseg
 
 
 def gutter_sets(x0, x1, y0, y1, bounds, width, vsep_cx):
     """find_gutters for several non-empty segments of lines (segment k:
     lines ``[bounds[k], bounds[k+1])`` on a page of ``width[k]``, or of
-    ``width`` for all, with vertical separators ``vsep_cx[k]``), the
-    profile phase batched."""
+    ``width`` for all, with vertical separators ``vsep_cx[k]``), every
+    phase batched. Returns each segment's gutter list."""
     bounds = np.asarray(bounds, dtype=np.int64)
-    width = np.broadcast_to(np.asarray(width, dtype=float), (len(vsep_cx),))
-    valleys, lo, hi = _gutter_valleys(x0, x1, y0, y1, bounds, width)
-    b = bounds.tolist()
-    return [_settle_gutters(v, x0[s:e], x1[s:e], y0[s:e], y1[s:e], l, h, wd, vs)
-            for v, s, e, l, h, wd, vs in zip(valleys, b[:-1], b[1:], lo, hi,
-                                              width.tolist(), vsep_cx)]
+    S = len(vsep_cx)
+    width = np.broadcast_to(np.asarray(width, dtype=float), (S,))
+    vx, vseg, ok, lo, hi = _gutter_valleys(x0, x1, y0, y1, bounds, width)
+    nv = [len(v) for v in vsep_cx]
+    sx = np.concatenate([np.asarray(v, dtype=float) for v in vsep_cx] + [np.empty(0)])
+    gx, gseg = _settle_gutters(vx, vseg, ok, sx, np.repeat(np.arange(S), nv), lo, hi,
+                               width, x0, x1, y0, y1, bounds)
+    g, gb = gx.tolist(), _seg_bounds(gseg, S).tolist()
+    return [g[a:b] for a, b in zip(gb[:-1], gb[1:])]
 
 
 def find_gutters(x0, x1, y0, y1, width, vsep_cx=()):
@@ -460,136 +617,185 @@ def find_gutters(x0, x1, y0, y1, width, vsep_cx=()):
                        [0, len(x0)], width, [vsep_cx])[0]
 
 
+def _column_counts(gx, gseg, cx, area, lseg, S):
+    """Page-level column estimate (B5 heuristic stand-in: peak count of
+    the x-projection, cf. find_num_col utils/__init__.py:245-489) of S
+    segments: only substantial columns count (>=15% of ink mass) — the
+    CNN column classifier the reference uses never counts marginal
+    humps. 1 where a segment has no gutter."""
+    G = np.bincount(gseg, minlength=S)
+    gb = np.concatenate(([0], np.cumsum(G)))
+    cb = np.concatenate(([0], np.cumsum(G + 1)))
+    col = _lex_key(gseg, gx).searchsorted(_lex_key(lseg, cx), side="right") - gb[lseg]
+    mass = np.bincount(cb[lseg] + col, weights=area, minlength=int(cb[-1]))
+    cseg = _segments(cb)
+    total = np.bincount(cseg, weights=mass, minlength=S)
+    n = np.bincount(cseg, weights=mass >= 0.15 * total[cseg], minlength=S)
+    return np.where(G > 0, np.maximum(n, 1), 1).astype(np.int64)
+
+
 # --------------------------------------------------------- splitters (D2) ---
 
-def _dedupe_splitters(ys, height):
-    ys = sorted(set(ys))
-    out = [ys[0]]
-    for y in ys[1:]:
-        if y - out[-1] > 1.0:
-            out.append(y)
-    if out[-1] < height:
-        out[-1] = float(height)
-    return out
+def _dedupe_splitters(ys, seg, height):
+    """Every segment's splitters sorted, each within 1 px of the last kept
+    one dropped, and the last raised to the page height ``height[s]``.
+    Returns (splitters, bounds: segment s's are
+    ``[bounds[s], bounds[s+1])``); every segment has some."""
+    o = np.lexsort((ys, seg))
+    y, s = ys[o], seg[o]
+    close = np.concatenate(([False], (s[1:] == s[:-1]) & (y[1:] - y[:-1] <= 1.0)))
+    keep = ~close
+    chain = close[1:] & close[:-1]
+    if chain.any():
+        # a splitter close to a dropped one compares with the last kept
+        yl, sl = y.tolist(), s.tolist()
+        last, cur = 0.0, -1
+        for i in np.flatnonzero(np.isin(s, s[1:][chain])).tolist():
+            if sl[i] != cur or yl[i] - last > 1.0:
+                keep[i], last, cur = True, yl[i], sl[i]
+    y, s = y[keep], s[keep]
+    sb = _seg_bounds(s, len(height))
+    top = sb[1:] - 1
+    y[top] = np.maximum(y[top], height)
+    return y, sb
 
 
-def _by_band(edges, y):
-    """Lines grouped by the band ``[edges[k], edges[k+1])`` that holds
-    their ``y`` (edges strictly increasing). Returns (band, order,
-    starts): band k's lines, in their original order, are
-    ``order[starts[k]:starts[k+1]]``; lines outside every band are left
-    out."""
-    band = np.searchsorted(edges, y, side="right") - 1
-    nb = len(edges) - 1
-    order = ((band >= 0) & (band < nb)).nonzero()[0]
-    order = order[band[order].argsort(kind="stable")]
-    return band, order, np.concatenate(([0], np.bincount(band[order], minlength=nb).cumsum()))
+def _by_band(ey, eb, y, seg):
+    """Lines grouped by the band of their segment that holds their ``y``:
+    segment s's bands are ``[ey[i], ey[i+1])`` for i in ``[eb[s],
+    eb[s+1] - 1)`` (edges strictly increasing). Returns (band, order,
+    bands, bstart): every line's band, as an index into its segment's
+    bands (-1 below the first edge, the band count at or above the
+    last); the lines inside a band, band by band, each band's in their
+    original order; the bands that hold lines, as the index of their
+    lower edge; and band k's lines, ``order[bstart[k]:bstart[k+1]]``."""
+    pos = _lex_key(_segments(eb), ey).searchsorted(_lex_key(seg, y), side="right") - 1
+    band = pos - eb[:-1][seg]
+    order = np.flatnonzero((band >= 0) & (band < (eb[1:] - eb[:-1])[seg] - 1))
+    order = order[pos[order].argsort(kind="stable")]
+    f = _firsts(pos[order])
+    return band, order, pos[order][f], np.append(f, len(order))
 
 
-def _band_vseps(vsep_cx, vseps, lo, hi):
-    """x-positions of the vertical separators whose y-extent overlaps the
-    band [lo, hi) by >=30% of the shorter of the two."""
-    return [v for v, (vy0, vy1) in zip(vsep_cx, vseps)
-            if min(vy1, hi) - max(vy0, lo) >= 0.3 * max(min(vy1 - vy0, hi - lo), 1.0)]
+def _band_vseps(bseg, lo, hi, vseps):
+    """The vertical separators whose y-extent overlaps band k ``[lo[k],
+    hi[k])`` of segment ``bseg[k]`` by >=30% of the shorter of the two,
+    as (band, separator) pairs, by band."""
+    vb = vseps[4]
+    q, j = _pairs(bseg, vb)
+    vlo, vhi, blo, bhi = vseps[2][j], vseps[3][j], lo[q], hi[q]
+    ov = (np.minimum(vhi, bhi) - np.maximum(vlo, blo)
+          >= 0.3 * np.maximum(np.minimum(vhi - vlo, bhi - blo), 1.0))
+    return q[ov], j[ov]
 
 
-def _gutter_jobs(x0, x1, y0, y1, jobs):
-    """gutter_sets over bands of any number of documents in one batch:
-    ``jobs`` lists (rows, width, vsep_cx) per band — its rows of x0..y1,
-    its page width and its vertical separators."""
-    if not jobs:
-        return []
-    rows = np.concatenate([r for r, _, _ in jobs])
-    bounds = np.cumsum([0] + [len(r) for r, _, _ in jobs])
-    return gutter_sets(x0[rows], x1[rows], y0[rows], y1[rows], bounds,
-                       [w for _, w, _ in jobs], [v for _, _, v in jobs])
+def _band_gutters(x0, x1, y0, y1, order, bstart, width, vq, vj, vcx, src, known):
+    """Every band's gutters (band k: the lines
+    ``order[bstart[k]:bstart[k+1]]`` on a page of ``width[k]``, with the
+    separators ``vcx[vj[vq == k]]``): a band with ``src[k] >= 0`` has the
+    same lines and separators as row ``src[k]`` of an earlier analysis
+    ``known`` = (gx, gb), and takes its gutters; the others get theirs in
+    one gutter_sets call. Returns (gx, gb): band k's gutters
+    ``gx[gb[k]:gb[k+1]]``, ascending."""
+    jobs = np.flatnonzero(src < 0)
+    gx, band = np.empty(0), np.empty(0, dtype=np.int64)
+    if len(jobs):
+        cnt = bstart[jobs + 1] - bstart[jobs]
+        rows = order[_ragged_arange(bstart[jobs], cnt)]
+        v = vcx[vj[np.isin(vq, jobs)]].tolist()
+        vb = np.concatenate(([0], np.cumsum(np.bincount(vq, minlength=len(src))[jobs]))).tolist()
+        gs = gutter_sets(x0[rows], x1[rows], y0[rows], y1[rows],
+                         np.concatenate(([0], np.cumsum(cnt))), width[jobs],
+                         [v[a:b] for a, b in zip(vb[:-1], vb[1:])])
+        gx = np.array([g for gl in gs for g in gl], dtype=float)
+        band = np.repeat(jobs, [len(gl) for gl in gs])
+    r = np.flatnonzero(src >= 0)
+    kx, kb = known
+    cnt = (kb[1:] - kb[:-1])[src[r]]
+    gx = np.concatenate((gx, kx[_ragged_arange(kb[src[r]], cnt)]))
+    band = np.concatenate((band, np.repeat(r, cnt)))
+    o = band.argsort(kind="stable")
+    return gx[o], _seg_bounds(band[o], len(src))
 
 
-def _splitter_bands(tx0, tx1, ty0, ty1, hseps, height, main_lo, main_hi,
-                    vseps, vsep_cx):
-    """find_splitters pass 1 and the pass-1 bands that hold lines:
-    returns (pass1, order, bstart, bands, vbands) — band k = bands[i]
-    holds the lines ``order[bstart[k]:bstart[k + 1]]`` and overlaps the
-    vertical separators ``vbands[i]``."""
-    ys = [0.0, float(height)]
-    mw = max(main_hi - main_lo, 1.0)
-    for sx0, sx1, sy0, sy1 in hseps:
-        if sx0 <= main_lo + _SPLITTER_X0 * mw and sx1 >= main_lo + _SPLITTER_X1 * mw:
-            ys.append((sy0 + sy1) / 2.0)
-    if len(vseps):
-        h = np.maximum(ty1 - ty0, 1.0)
-    for vy0, vy1 in vseps:
-        for y in (float(vy0) - 0.5, float(vy1) + 0.5):
-            strad = (ty0 < y) & (ty1 > y)
-            if strad.any():
-                frac = np.minimum(y - ty0[strad], ty1[strad] - y) / h[strad]
-                if (frac > 0.3).any():
-                    continue
-            ys.append(y)
-    pass1 = _dedupe_splitters(ys, height)
-    _, order, bstart = _by_band(pass1, (ty0 + ty1) / 2.0)
-    bands = (bstart[1:] > bstart[:-1]).nonzero()[0].tolist()
-    vbands = [_band_vseps(vsep_cx, vseps, pass1[k], pass1[k + 1]) for k in bands]
-    return pass1, order, bstart, bands, vbands
+def _splitters(x0, x1, y0, y1, cx, cy, bounds, W, H, main_lo, main_hi, hseps, vseps,
+               page_gutters=None):
+    """find_splitters for S segments of body lines at once (segment s:
+    lines ``[bounds[s], bounds[s+1])`` on a ``W[s]`` x ``H[s]`` page with
+    main text ``[main_lo[s], main_hi[s]]``). ``hseps`` is (seg, x0, x1,
+    y0, y1) of the horizontal separators, by segment; ``vseps`` (seg, cx,
+    y0, y1, bounds) of the merged vertical ones, by segment and cx.
+    ``page_gutters``, if given, is (gx, gb, ok): segment s's page-level
+    gutters ``gx[gb[s]:gb[s+1]]``, the find_gutters of all its lines
+    with all its separators when ``ok[s]``.
 
+    Returns (sy, sb, bands): segment s's splitters ``sy[sb[s]:sb[s+1]]``,
+    and the pass-1 bands that hold lines as (seg, lo, hi, gx, gb), band
+    k's gutters ``gx[gb[k]:gb[k+1]]``."""
+    S = len(W)
+    lseg = _segments(bounds)
+    h = np.maximum(y1 - y0, 1.0)
+    hseg, hx0, hx1, hy0, hy1 = hseps
+    vseg, vcx, vy0, vy1, vb = vseps
+    # pass 1: page edges, full-main-width horizontal separators and the
+    # vertical separators' y-extent edges that cut no line roughly in half
+    mw = np.maximum(main_hi - main_lo, 1.0)
+    full = ((hx0 <= main_lo[hseg] + _SPLITTER_X0 * mw[hseg])
+            & (hx1 >= main_lo[hseg] + _SPLITTER_X1 * mw[hseg]))
+    ey = np.concatenate((vy0 - 0.5, vy1 + 0.5))
+    es = np.concatenate((vseg, vseg))
+    q, j = _pairs(es, bounds)
+    yq = ey[q]
+    halves = ((y0[j] < yq) & (y1[j] > yq)
+              & (np.minimum(yq - y0[j], y1[j] - yq) / h[j] > 0.3))
+    ok = np.bincount(q[halves], minlength=len(ey)) == 0
+    sy1, sb1 = _dedupe_splitters(
+        np.concatenate((np.zeros(S), H, (hy0[full] + hy1[full]) / 2.0, ey[ok])),
+        np.concatenate((np.arange(S), np.arange(S), hseg[full], es[ok])), H)
 
-def _reused_gutters(pass1_bands, n, vsep_cx, line_gutters):
-    """The gutters of the pass-1 bands when ``line_gutters`` (find_gutters
-    of all ``n`` lines with ``vsep_cx``) answers them — one band holding
-    every line with the same separators — else None."""
-    _, order, _, bands, vbands = pass1_bands
-    if (line_gutters is not None and len(bands) == 1
-            and len(order) == n and vbands[0] == list(vsep_cx)):
-        return [list(line_gutters)]
-    return None
+    # the pass-1 bands that hold lines, and their gutters: a segment's
+    # one band holding every line with every separator reuses the page's
+    _, order, b1, bstart = _by_band(sy1, sb1, cy, lseg)
+    bseg = _segments(sb1)[b1]
+    blo, bhi = sy1[b1], sy1[b1 + 1]
+    nb = len(b1)
+    vq, vj = _band_vseps(bseg, blo, bhi, vseps)
+    src, known = np.full(nb, -1), (np.empty(0), np.zeros(1, dtype=np.int64))
+    if page_gutters is not None:
+        *known, pok = page_gutters
+        whole = ((np.bincount(bseg, minlength=S) == 1)
+                 & (np.bincount(bseg, weights=np.diff(bstart), minlength=S)
+                    == np.diff(bounds)))
+        reuse = (pok & whole)[bseg] & (np.bincount(vq, minlength=nb) == np.diff(vb)[bseg])
+        src = np.where(reuse, bseg, -1)
+    gx, gb = _band_gutters(x0, x1, y0, y1, order, bstart, W[bseg], vq, vj, vcx, src, known)
 
-
-def _band_jobs(pass1_bands, base, width):
-    """_gutter_jobs entries of the pass-1 bands, rows offset by ``base``."""
-    _, order, bstart, bands, vbands = pass1_bands
-    return [(order[bstart[k]:bstart[k + 1]] + base, width, vb)
-            for k, vb in zip(bands, vbands)]
-
-
-def _split_bands(tx0, tx1, ty0, ty1, width, height, pass1_bands, gutters,
-                 band_gutters_out=None):
-    """find_splitters pass 2 over the pass-1 bands, given their
-    ``gutters``: the final splitter list."""
-    pass1, order, bstart, bands, _ = pass1_bands
-    cys = (ty0 + ty1) / 2.0
-    cxs = (tx0 + tx1) / 2.0
-    w = tx1 - tx0
-    h = np.maximum(ty1 - ty0, 1.0)
-    extra = []
-    for k, g in zip(bands, gutters):
-        lo, hi = pass1[k], pass1[k + 1]
-        if band_gutters_out is not None:
-            # bands that survive into the final splitter list unchanged
-            # reuse this gutter analysis in the D4 box loop (same inputs
-            # -> same outputs; saves a third of gutter analyses)
-            band_gutters_out[(lo, hi)] = g
-        idx = order[bstart[k]:bstart[k + 1]]
-        if g:
-            sm = spanning_lines(tx0[idx], tx1[idx], g, width)
-            for i in idx[sm].tolist():
-                extra += [float(ty0[i]) - 0.5, float(ty1[i]) + 0.5]
-        else:
-            # 1-column band: centered short lines alone in their row
-            blo, bhi = float(tx0[idx].min()), float(tx1[idx].max())
-            bw = max(bhi - blo, 1.0)
-            col_cx = blo + bw / 2.0
-            cand = idx[(w[idx] <= 0.5 * bw) & (np.abs(cxs[idx] - col_cx) <= 0.08 * bw)]
-            if len(cand):
-                bcy, bh = cys[idx], h[idx]
-                for i in cand.tolist():
-                    # only itself in its row
-                    if (np.abs(bcy - cys[i]) < 0.6 * np.maximum(bh, h[i])).sum() <= 1:
-                        extra += [float(ty0[i]) - 0.5, float(ty1[i]) + 0.5]
-    return _dedupe_splitters(pass1 + extra, height)
+    # pass 2: lines spanning a gutter of their band, as (line, gutter)
+    # pairs, and in 1-column bands the centered short lines alone in
+    # their row, as (candidate, band line) pairs
+    lband = np.repeat(np.arange(nb), np.diff(bstart))
+    ox0, ox1 = x0[order], x1[order]
+    span = order[_spanning(ox0, ox1, lband, gx, gb, W[lseg[order]])]
+    alone = np.empty(0, dtype=np.int64)
+    if nb:
+        blo_x = np.minimum.reduceat(ox0, bstart[:-1])
+        bw = np.maximum(np.maximum.reduceat(ox1, bstart[:-1]) - blo_x, 1.0)
+        ccx = blo_x + bw / 2.0
+        c = np.flatnonzero((gb[1:] == gb[:-1])[lband] & (ox1 - ox0 <= 0.5 * bw[lband])
+                           & (np.abs(cx[order] - ccx[lband]) <= 0.08 * bw[lband]))
+        q, j = _pairs(lband[c], bstart)
+        ci, lj = order[c[q]], order[j]
+        near = np.abs(cy[lj] - cy[ci]) < 0.6 * np.maximum(h[lj], h[ci])
+        alone = order[c[np.bincount(q, weights=near, minlength=len(c)) <= 1]]
+    extra = np.concatenate((span, alone))
+    sy, sb = _dedupe_splitters(
+        np.concatenate((sy1, y0[extra] - 0.5, y1[extra] + 0.5)),
+        np.concatenate((_segments(sb1), lseg[extra], lseg[extra])), H)
+    return sy, sb, (bseg, blo, bhi, gx, gb)
 
 
 def find_splitters(tx0, tx1, ty0, ty1, hseps, width, height, main_lo, main_hi,
-                   vseps=(), vsep_cx=(), band_gutters_out=None, line_gutters=None):
+                   vseps=(), vsep_cx=()):
     """y-positions that split the page into XY-cut bands — two passes,
     mirroring the reference's per-part re-analysis (D2 re-runs
     find_num_col per splitter part, utils/__init__.py:1444-1487).
@@ -607,21 +813,38 @@ def find_splitters(tx0, tx1, ty0, ty1, hseps, width, height, main_lo, main_hi,
     symbolic counterpart of D6's projection-valley banding (:1050-1076).
     Band-local gutters matter: a middle column of a 3-column band must
     not be mistaken for a spanning line just because it crosses another
-    band's gutter. ``line_gutters``, if given, is find_gutters of all the
-    lines with ``vsep_cx``: a band that holds every line with the same
-    separators has exactly those gutters.
+    band's gutter.
 
-    layout_permutations runs the same three steps (_splitter_bands, the
-    band gutters, _split_bands) with the gutters of a whole batch of
-    documents in one gutter_sets call.
+    layout_permutations runs it (_splitters) for a whole batch of
+    documents, their band gutters in one gutter_sets call; this is the
+    batch of one.
     """
-    bands = _splitter_bands(tx0, tx1, ty0, ty1, hseps, height, main_lo, main_hi,
-                            vseps, vsep_cx)
-    gs = _reused_gutters(bands, len(tx0), vsep_cx, line_gutters)
-    if gs is None:
-        gs = _gutter_jobs(tx0, tx1, ty0, ty1, _band_jobs(bands, 0, width))
-    return _split_bands(tx0, tx1, ty0, ty1, width, height, bands, gs,
-                        band_gutters_out)
+    x0, x1, y0, y1 = (np.asarray(a, dtype=float) for a in (tx0, tx1, ty0, ty1))
+    hs = np.asarray(hseps, dtype=float).reshape(-1, 4)
+    vs = np.asarray(vseps, dtype=float).reshape(-1, 2)
+    sy, _, _ = _splitters(
+        x0, x1, y0, y1, (x0 + x1) / 2.0, (y0 + y1) / 2.0, [0, len(x0)],
+        *(np.array([float(v)]) for v in (width, height, main_lo, main_hi)),
+        (np.zeros(len(hs), dtype=np.int64), *hs.T),
+        (np.zeros(len(vs), dtype=np.int64), np.asarray(vsep_cx, dtype=float), *vs.T,
+         np.array([0, len(vs)])))
+    return sy.tolist()
+
+
+def _merge_vseps(seg, cx, y0, y1, width):
+    """merge_vertical_separators for S segments at once, one flat pass:
+    (seg, cx, y0, y1) of the merged separators, by segment and cx."""
+    o = np.lexsort((cx, seg))
+    d = (_GUTTER_MERGE_FRAC * np.asarray(width, dtype=float)).tolist()
+    merged = []  # [seg, cx, y0, y1]
+    for s, c, a, b in zip(seg[o].tolist(), cx[o].tolist(), y0[o].tolist(), y1[o].tolist()):
+        if merged and merged[-1][0] == s and c - merged[-1][1] < d[s]:
+            m = merged[-1]
+            m[2], m[3] = min(m[2], a), max(m[3], b)
+        else:
+            merged.append([s, c, a, b])
+    m = np.array(merged, dtype=float).reshape(-1, 4)
+    return m[:, 0].astype(np.int64), m[:, 1], m[:, 2], m[:, 3]
 
 
 def merge_vertical_separators(vcx, vboxes, width):
@@ -629,31 +852,31 @@ def merge_vertical_separators(vcx, vboxes, width):
     common in historical prints) into one separator with the union of
     their y-extents — mirrors the reference's morphology step that fuses
     them into one contour (utils/__init__.py:1337-1349)."""
-    if not vcx:
-        return [], []
-    order = np.argsort(vcx)
-    merged = []  # [cx, y0, y1]
-    d = _GUTTER_MERGE_FRAC * width
-    for k in order:
-        if merged and vcx[k] - merged[-1][0] < d:
-            m = merged[-1]
-            m[1] = min(m[1], vboxes[k][0])
-            m[2] = max(m[2], vboxes[k][1])
-        else:
-            merged.append([float(vcx[k]), float(vboxes[k][0]), float(vboxes[k][1])])
-    return [m[0] for m in merged], [(m[1], m[2]) for m in merged]
+    vb = np.asarray(vboxes, dtype=float).reshape(-1, 2)
+    _, cx, y0, y1 = _merge_vseps(np.zeros(len(vb), dtype=np.int64),
+                                 np.asarray(vcx, dtype=float), vb[:, 0], vb[:, 1], [width])
+    return cx.tolist(), list(zip(y0.tolist(), y1.tolist()))
+
+
+def _spanning(x0, x1, band, gx, gb, width):
+    """The lines crossing >=1 gutter of their band with margin on both
+    sides (the 'large components spanning >=2 columns' rule,
+    utils/__init__.py:1723-1761), as (line, gutter) pairs: line i lies in
+    band ``band[i]`` on a page ``width[i]`` wide, band k's gutters are
+    ``gx[gb[k]:gb[k+1]]``. Returns the lines' indices, ascending."""
+    q, g = _pairs(band, gb)
+    m = _SPAN_MARGIN_FRAC * width[q]
+    return np.unique(q[(x0[q] < gx[g] - m) & (x1[q] > gx[g] + m)])
 
 
 def spanning_lines(tx0, tx1, gutters, width):
-    """Mask of lines crossing >=1 column gutter with margin on both sides
-    (the 'large components spanning >=2 columns' rule, utils/__init__.py:1723-1761)."""
-    n = len(tx0)
-    mask = np.zeros(n, dtype=bool)
-    if not gutters or n == 0:
-        return mask
-    m = _SPAN_MARGIN_FRAC * width
-    for g in gutters:
-        mask |= (tx0 < g - m) & (tx1 > g + m)
+    """Mask of lines crossing >=1 column gutter with margin on both sides;
+    the batch of one of find_splitters' pass-2 rule (_spanning)."""
+    x0 = np.asarray(tx0, dtype=float)
+    g = np.asarray(gutters, dtype=float)
+    mask = np.zeros(len(x0), dtype=bool)
+    mask[_spanning(x0, np.asarray(tx1, dtype=float), np.zeros(len(x0), dtype=np.int64),
+                   g, np.array([0, len(g)]), np.full(len(x0), float(width)))] = True
     return mask
 
 
@@ -668,7 +891,7 @@ def _group_by_label(labels):
     O(regions x lines) rescans (profiled at ~10% of the kernel)."""
     order = labels.argsort(kind="stable")
     sl = labels[order]
-    starts = np.concatenate(([True], sl[1:] != sl[:-1])).nonzero()[0]
+    starts = _firsts(sl)
     return sl[starts], order, np.concatenate((starts, [len(sl)]))
 
 
@@ -715,28 +938,6 @@ def _cc_labels(n, a, b, init=None):
             if bool((nxt == labels).all()):  # same-dtype arrays: skip
                 break                        # np.array_equal dispatch
             labels = nxt
-
-
-def _ragged_arange(starts, lengths):
-    """concatenate(arange(s, s + n) for s, n in zip(starts, lengths))."""
-    ends = np.cumsum(lengths)
-    total = int(ends[-1]) if len(ends) else 0
-    return np.repeat(starts - (ends - lengths), lengths) + np.arange(total)
-
-
-def _segments(bounds):
-    """The segment of every element, segment k being
-    ``[bounds[k], bounds[k+1])``."""
-    bounds = np.asarray(bounds, dtype=np.int64)
-    return np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
-
-
-def _lex_key(major, minor):
-    """Complex keys that numpy sorts and searches lexicographically by
-    (major, minor) — both stored exactly, no arithmetic."""
-    k = np.empty(len(major), dtype=complex)
-    k.real, k.imag = major, minor
-    return k
 
 
 def cluster_lines_into_regions(x0, x1, y0, y1, band=None, rtl=False, bounds=None):
@@ -888,16 +1089,43 @@ def _row_clusters(cy, seg, thr):
     segments (``seg`` non-decreasing), so sorting by row keeps each
     segment's items together and in segment order."""
     order = np.lexsort((cy, seg))
-    out = []
-    row, cur, ref = -1, -1, 0.0
-    for v, s, t in zip(cy[order].tolist(), seg.tolist(),
-                       np.asarray(thr, dtype=float)[seg].tolist()):
-        if s != cur or v - ref > t:
-            row += 1
-            cur, ref = s, v
-        out.append(row)
-    rows = np.empty(len(out), dtype=np.int64)
-    rows[order] = out
+    v = cy[order]
+    t = np.asarray(thr, dtype=float)[seg]
+    n = len(v)
+    i = np.arange(n)
+    end = np.searchsorted(seg, seg, side="right")
+    # the row a row-starting item i opens ends before nxt[i], the first
+    # item of its segment with v - v[i] > t: a search on v + t, moved to
+    # where that exact test flips
+    nxt = _lex_key(seg, v).searchsorted(_lex_key(seg, v + t), side="right")
+    while True:
+        m = np.flatnonzero(nxt - 1 > i)
+        m = m[v[nxt[m] - 1] - v[m] > t[m]]
+        if not len(m):
+            break
+        nxt[m] -= 1
+    while True:
+        m = np.flatnonzero(nxt < end)
+        m = m[~(v[nxt[m]] - v[m] > t[m])]
+        if not len(m):
+            break
+        nxt[m] += 1
+    # row starts: each segment's first item and its chain of nxt jumps,
+    # by pointer doubling (the chain's first 2^k items, then 2^(k+1))
+    jump = np.append(np.where(nxt < end, nxt, n), n)
+    start = np.zeros(n, dtype=bool)
+    nodes = _firsts(seg)
+    start[nodes] = True
+    while True:
+        new = jump[nodes]
+        new = new[new < n]
+        if not len(new):
+            break
+        start[new] = True
+        nodes = np.concatenate((nodes, new))
+        jump = jump[jump]
+    rows = np.empty(n, dtype=np.int64)
+    rows[order] = np.cumsum(start) - 1
     return rows
 
 
@@ -948,31 +1176,45 @@ def layout_document(doc: DocSpans):
     return perm, out_kind
 
 
-@dataclass
-class Page:
-    """One document's share of the batched page stage (analyze_pages)."""
+#: span kinds by code; any other kind is code len(_KINDS)
+_KINDS = (KIND_TEXT, KIND_IMAGE, KIND_SEPARATOR, KIND_TABLE)
 
+
+@dataclass
+class Pages:
+    """analyze_pages' result for a batch of documents, as flat arrays:
+    document d's spans are ``[bounds[d], bounds[d+1])``, its text lines
+    ``ti[tb[d]:tb[d+1]]``."""
+
+    bounds: np.ndarray
+    code: np.ndarray        # span kind as an index into _KINDS
+    off: np.ndarray         # span offset, int64
     x0: np.ndarray          # geometry after deskew, float64
     x1: np.ndarray
     y0: np.ndarray
     y1: np.ndarray
     cx: np.ndarray
     cy: np.ndarray
-    is_sep: np.ndarray
-    tix: np.ndarray         # indices of the text lines
-    valleys: list | None    # page-level gutter valleys of the text lines
-    lo: float               # x extent of the text lines
-    hi: float
-    margins: tuple | None   # marginal projection of the text lines
+    W: np.ndarray           # per document: page size, direction and
+    H: np.ndarray           # num_col bounds
+    rtl: np.ndarray
+    num_col_lower: np.ndarray
+    num_col_upper: np.ndarray
+    ti: np.ndarray
+    tb: np.ndarray
+    lo: np.ndarray          # x extent of each document's text lines
+    hi: np.ndarray
+    valleys: tuple          # (x, document, ok): page-level gutter valleys
+    margins: tuple          # _marginal_profiles, segments as documents
 
 
-def analyze_pages(docs: list[DocSpans]) -> list[Page]:
+def analyze_pages(docs: list[DocSpans]) -> Pages:
     """The page-analysis phases that need nothing from the per-document
     remainder, run once for a batch of documents: C6 deskew (coarse and
     fine angle scores; the rotation itself is per document) and the
     coverage profiles, smoothing and valley masks behind the page-level
     find_gutters and split_main_and_marginal. Every batched step is
-    exact per document, so a document's Page does not depend on which
+    exact per document, so a document's part of the Pages does not depend on which
     others share its batch."""
     from eynollah_spark.kernels.deskew import estimate_skews, rotate_boxes
 
@@ -980,16 +1222,16 @@ def analyze_pages(docs: list[DocSpans]) -> list[Page]:
     n = np.array([d.n for d in docs], dtype=np.int64)
     bounds = np.concatenate(([0], np.cumsum(n)))
     kind = np.concatenate([d.kind for d in docs])
+    code = np.full(len(kind), len(_KINDS), dtype=np.int64)
+    for c, k in enumerate(_KINDS):
+        code[kind == k] = c
     x0, x1, y0, y1 = (np.concatenate([np.asarray(getattr(d, c), dtype=float)
                                       for d in docs])
                       for c in ("x0", "x1", "y0", "y1"))
     W = np.array([float(d.width) for d in docs])
     H = np.array([float(d.height) for d in docs])
-    is_text = kind == KIND_TEXT
-    is_sep = kind == KIND_SEPARATOR
-    ti = is_text.nonzero()[0]
-    tseg = np.repeat(np.arange(D), n)[ti]
-    tb = np.concatenate(([0], np.cumsum(np.bincount(tseg, minlength=D))))
+    ti = (code == 0).nonzero()[0]
+    tb = np.searchsorted(ti, bounds)
 
     # --- C6/C8 deskew: estimate page skew from text-line sharpness and
     # rotate all geometry before any projection work (run_deskew,
@@ -1001,273 +1243,251 @@ def analyze_pages(docs: list[DocSpans]) -> list[Page]:
         s, e = bounds[d], bounds[d + 1]
         x0[s:e], x1[s:e], y0[s:e], y1[s:e] = rotate_boxes(
             x0[s:e], x1[s:e], y0[s:e], y1[s:e], float(ang[d]), W[d] / 2.0, H[d] / 2.0)
-    cx, cy = (x0 + x1) / 2.0, (y0 + y1) / 2.0
 
     # --- profiles of the text lines, for the documents that have any
     tx0, tx1, ty0, ty1 = x0[ti], x1[ti], y0[ti], y1[ti]
     has = (tb[1:] > tb[:-1]).nonzero()[0]
     hb = np.concatenate(([0], np.cumsum(np.diff(tb)[has])))
-    valleys, lo, hi, margins = [None] * D, [0.0] * D, [0.0] * D, [None] * D
+    lo, hi, ok = np.zeros(D), np.zeros(D), np.zeros(D, dtype=bool)
+    valleys, margins = (np.empty(0), np.empty(0, dtype=np.int64), ok), _NO_PROFILES
     if len(has):
-        v, l, h = _gutter_valleys(tx0, tx1, ty0, ty1, hb, W[has])
-        m = _marginal_profiles(tx0, tx1, ty0, ty1, hb, W[has], H[has])
-        for j, d in enumerate(has.tolist()):
-            valleys[d], lo[d], hi[d], margins[d] = v[j], l[j], h[j], m[j]
-    pages = []
-    for d in range(D):
-        s, e = bounds[d], bounds[d + 1]
-        pages.append(Page(x0[s:e], x1[s:e], y0[s:e], y1[s:e], cx[s:e], cy[s:e],
-                          is_sep[s:e], ti[tb[d]:tb[d + 1]] - s,
-                          valleys[d], lo[d], hi[d], margins[d]))
-    return pages
+        vx, vseg, ok[has], lo[has], hi[has] = _gutter_valleys(tx0, tx1, ty0, ty1, hb, W[has])
+        valleys = (vx, has[vseg], ok)
+        margins = _marginal_profiles(tx0, tx1, ty0, ty1, hb, W[has], H[has])
+        margins = (has[margins[0]], *margins[1:])
+    return Pages(
+        bounds, code, np.concatenate([np.asarray(d.offset, dtype=np.int64) for d in docs]),
+        x0, x1, y0, y1, (x0 + x1) / 2.0, (y0 + y1) / 2.0, W, H,
+        np.array([bool(d.rtl) for d in docs]),
+        np.array([int(d.num_col_lower or 0) for d in docs]),
+        np.array([int(d.num_col_upper or 0) for d in docs]),
+        ti, tb, lo, hi, valleys, margins)
 
 
+@dataclass
+class BatchOrder:
+    """layout_permutations' result: every document's spans in reading
+    order, as spans of the batch (document d's being ``[bounds[d],
+    bounds[d+1])``), document by document, ``counts[d]`` of them, with a
+    marginalia flag each. ``order[d]`` and iterating give each
+    document's (perm, marg_mask), perm indexing its own spans."""
 
-def layout_permutation(doc: DocSpans, page: Page | None = None):
+    perm: np.ndarray
+    marg: np.ndarray
+    counts: np.ndarray
+    bounds: np.ndarray
+
+    def __len__(self):
+        return len(self.counts)
+
+    def __getitem__(self, d):
+        if not 0 <= d < len(self):
+            raise IndexError(d)
+        a = int(self.counts[:d].sum())
+        b = a + int(self.counts[d])
+        return self.perm[a:b] - self.bounds[d], self.marg[a:b]
+
+    @classmethod
+    def concat(cls, parts):
+        """The BatchOrder of the documents of ``parts``, in order."""
+        n = np.array([p.bounds[-1] for p in parts], dtype=np.int64)
+        first = np.concatenate(([0], np.cumsum(n)[:-1]))
+        return cls(
+            np.concatenate([p.perm + f for p, f in zip(parts, first)]),
+            np.concatenate([p.marg for p in parts]),
+            np.concatenate([p.counts for p in parts]),
+            np.concatenate([[0]] + [p.bounds[1:] + f for p, f in zip(parts, first)]))
+
+
+def layout_permutation(doc: DocSpans):
     """Core per-document pipeline; returns (perm, marg_mask) where perm is
     the index permutation of doc spans in final reading order and
     marg_mask flags output positions whose kind refines to 'marginalia'.
     (`doc.text` / `doc.media_ref` are never read — the kernel is pure
-    geometry, so callers may pass placeholders.) ``page`` is the doc's
-    analyze_pages result; without it the page stage runs on this doc
-    alone. A batch of one for layout_permutations.
+    geometry, so callers may pass placeholders.) A batch of one for
+    layout_permutations.
 
     Serialization order per D8 (utils/xml.py:49-66, writer.py:184-290):
     marg-L -> ordered text -> marg-R -> images -> separators -> tables.
     """
-    return layout_permutations([doc], None if page is None else [page])[0]
+    return layout_permutations([doc])[0]
 
 
-class _Doc:
-    """One document's state between the phases of layout_permutations.
-    Construction is the first phase: separators, the page-level column
-    estimate and the marginal split."""
-
-    def __init__(self, doc: DocSpans, page: Page):
-        self.doc, self.page = doc, page
-        x0, x1, y0, y1, cx = page.x0, page.x1, page.y0, page.y1, page.cx
-        self.W, self.H = W, H = float(doc.width), float(doc.height)
-        self.rtl = doc.rtl
-        tix = page.tix
-        tx0, tx1, ty0, ty1 = x0[tix], x1[tix], y0[tix], y1[tix]
-
-        # separator geometry split (C3, utils/__init__.py:187-219)
-        self.sep_ix = sep_ix = page.is_sep.nonzero()[0]
-        self.vcx, self.vboxes, self.hseps = [], [], []
-        if len(sep_ix):
-            sw, sh = x1[sep_ix] - x0[sep_ix], y1[sep_ix] - y0[sep_ix]
-            hsep_ix = sep_ix[sw >= sh]
-            vsep_ix = sep_ix[sw < sh]
-            self.vcx, self.vboxes = merge_vertical_separators(
-                cx[vsep_ix].tolist(), [(y0[i], y1[i]) for i in vsep_ix], W
-            )
-            self.hseps = [(x0[i], x1[i], y0[i], y1[i]) for i in hsep_ix]
-
-        # --- page-level column estimate (B5 heuristic stand-in: peak count
-        # of the x-projection, cf. find_num_col utils/__init__.py:245-489).
-        # Only substantial columns count (>=15% of ink mass) — the CNN
-        # column classifier the reference uses never counts marginal humps.
-        gutters_all = _settle_gutters(page.valleys, tx0, tx1, ty0, ty1,
-                                      page.lo, page.hi, W, self.vcx)
-        if gutters_all and len(tix):
-            tcx = cx[tix]
-            tarea = np.maximum(tx1 - tx0, 1.0) * np.maximum(ty1 - ty0, 1.0)
-            edges = [-np.inf] + list(gutters_all) + [np.inf]
-            masses = np.array([
-                tarea[(tcx >= edges[i]) & (tcx < edges[i + 1])].sum()
-                for i in range(len(edges) - 1)
-            ])
-            num_col_est = max(1, int((masses >= 0.15 * masses.sum()).sum()))
-        else:
-            num_col_est = 1
-        # B5 user bounds, matching the reference's branch structure exactly
-        # (eynollah.py:322-335 and 391-416): a SINGLE bound PINS num_col to
-        # that value (upper-only or lower-only forces it — the reference
-        # skips the classifier entirely); both-set-and-equal also pins;
-        # only both-set-and-unequal clamps the estimate from both sides.
-        lo, hi = int(doc.num_col_lower or 0), int(doc.num_col_upper or 0)
-        if hi and not lo:
-            num_col_est = hi
-        elif lo and not hi:
-            num_col_est = lo
-        elif lo and hi:
-            num_col_est = hi if lo == hi else min(max(num_col_est, lo), hi)
-
-        # --- C10 marginalia over text lines
-        marg_mask_t, self.main_lo, self.main_hi = _marginal_split(
-            tx0, tx1, ty0, ty1, W, H, num_col_est, page.margins
-        )
-        self.marg_ix = tix[marg_mask_t]
-        self.body_ix = tix[~marg_mask_t]
-        # without marginalia the body is every text line: the page-level
-        # gutter analysis is the body's
-        self.body_gutters = None if len(self.marg_ix) else gutters_all
-        self.off = np.asarray(doc.offset, dtype=np.int64)
-
-
-def layout_permutations(docs: list[DocSpans], pages: list[Page] | None = None):
-    """layout_permutation of a batch of documents, run phase by phase:
-    the per-document glue (separators, column estimate, marginal split,
-    splitter pass 1, D4 box and cell emission, D5 and the D8
-    concatenation) loops over the documents, while the band gutters, the
-    region clustering, D1 in-region order and D6 in-box order each run
-    once for the whole batch. ``pages`` is analyze_pages(docs), computed
-    here if not given. Every batched step is exact per document, so a
-    document's result does not depend on which others share its batch."""
+def layout_permutations(docs: list[DocSpans], pages: Pages | None = None) -> BatchOrder:
+    """layout_permutation of a batch of documents, run phase by phase,
+    each phase once for the whole batch with the documents as segments.
+    ``pages`` is analyze_pages(docs), computed here if not given. Every
+    batched step is exact per document, so a document's result does not
+    depend on which others share its batch."""
     if pages is None:
         pages = analyze_pages(docs)
-    out = [(np.array([], dtype=np.int64), np.array([], dtype=bool)) for _ in docs]
-    live = [k for k, d in enumerate(docs) if d.n]
-    if not live:
-        return out
-    ws = [_Doc(docs[k], pages[k]) for k in live]
-    D = len(ws)
+    return _serialize(pages, _layout_batch(pages))
+
+
+def _layout_batch(p: Pages):
+    """Every phase of layout_permutations before D8, over the batch
+    ``p``. Returns the batch's state: per document its separators, page
+    gutters, column count, marginal split, splitters and boxes; the
+    line table (body lines of every document, then marginal lines); and
+    the text lines in reading order, as span indices: ``body`` (each
+    document's, document by document) and ``margs``/``marg_part`` (the
+    marginal lines and their D8 part: 0 left, 2 right). Every field is
+    set, also for a batch without text lines."""
+    D = len(p.W)
+    st = SimpleNamespace()
+    spanseg = _segments(p.bounds)
+    ti, tb = p.ti, p.tb
+    tseg = spanseg[ti]
+
+    # separator geometry split (C3, utils/__init__.py:187-219)
+    sep = (p.code == _KINDS.index(KIND_SEPARATOR)).nonzero()[0]
+    horiz = p.x1[sep] - p.x0[sep] >= p.y1[sep] - p.y0[sep]
+    hs, vs = sep[horiz], sep[~horiz]
+    st.hseps = (spanseg[hs], p.x0[hs], p.x1[hs], p.y0[hs], p.y1[hs])
+    vseg, vcx, vy0, vy1 = _merge_vseps(spanseg[vs], p.cx[vs], p.y0[vs], p.y1[vs], p.W)
+    st.vseps = (vseg, vcx, vy0, vy1, _seg_bounds(vseg, D))
+
+    # --- page-level column estimate (B5), with the user bounds matching
+    # the reference's branch structure exactly (eynollah.py:322-335 and
+    # 391-416): a SINGLE bound PINS num_col to that value (upper-only or
+    # lower-only forces it — the reference skips the classifier
+    # entirely); both-set-and-equal also pins; only
+    # both-set-and-unequal clamps the estimate from both sides.
+    tx0, tx1, ty0, ty1, tcx = p.x0[ti], p.x1[ti], p.y0[ti], p.y1[ti], p.cx[ti]
+    vx, vdoc, vok = p.valleys
+    gx, gseg = _settle_gutters(vx, vdoc, vok, vcx, vseg, p.lo, p.hi, p.W,
+                               tx0, tx1, ty0, ty1, tb)
+    st.page_gutters = (gx, _seg_bounds(gseg, D))
+    est = _column_counts(gx, gseg, tcx, np.maximum(tx1 - tx0, 1.0) * np.maximum(ty1 - ty0, 1.0),
+                         tseg, D)
+    lo, hi = p.num_col_lower, p.num_col_upper
+    st.num_col = np.where((lo != 0) & (hi != 0) & (lo != hi), np.minimum(np.maximum(est, lo), hi),
+                          np.where((lo != 0) | (hi != 0), np.where(lo != 0, lo, hi), est))
+
+    # --- C10 marginalia over text lines
+    st.tmarg, st.main_lo, st.main_hi = _marginal_split(tx0, tx1, ty0, ty1, tb, p.W, p.H,
+                                                       st.num_col, p.margins)
+    tmarg = st.tmarg
 
     # the batch's line table: every document's body lines, then every
     # document's marginal lines — segment d < D is document d's body,
     # segment D + d its marginalia
-    first = np.cumsum([0] + [w.doc.n for w in ws])[:-1]
-    rows = np.concatenate([w.body_ix + f for w, f in zip(ws, first)]
-                          + [w.marg_ix + f for w, f in zip(ws, first)])
-    X = [np.concatenate([getattr(w.page, c) for w in ws])[rows]
-         for c in ("x0", "x1", "y0", "y1", "cx", "cy")]
-    off = np.concatenate([w.off for w in ws])[rows]
-    ix = np.concatenate([w.body_ix for w in ws] + [w.marg_ix for w in ws])
-    bounds = np.cumsum([0] + [len(w.body_ix) for w in ws]
-                       + [len(w.marg_ix) for w in ws])
-    rtl = np.array([bool(w.rtl) for w in ws] * 2)
-    for d, w in enumerate(ws):
-        w.body = slice(int(bounds[d]), int(bounds[d + 1]))
+    rows = np.concatenate((ti[~tmarg], ti[tmarg]))
+    nmarg = np.bincount(tseg[tmarg], minlength=D)
+    bounds = np.concatenate(([0], np.cumsum(np.concatenate(
+        (np.bincount(tseg[~tmarg], minlength=D), nmarg)))))
+    X = [getattr(p, c)[rows] for c in ("x0", "x1", "y0", "y1", "cx", "cy")]
+    off = p.off[rows]
+    rtl = np.concatenate((p.rtl, p.rtl))
+    st.lines = (rows, bounds)
 
-    # D2 + D4, then regions from lines (C16 inverse), band/cell-aware;
-    # marginal lines all share one cell
-    cells = _body_cells(ws, X)
-    if len(rows) == 0:
-        empty = np.array([], dtype=np.int64)
-        body, margs = [empty] * D, [(empty, empty)] * D
-    else:
-        band = np.concatenate((cells, np.zeros(len(rows) - len(cells), dtype=np.int64)))
-        labels = cluster_lines_into_regions(*X[:4], band=band, rtl=rtl, bounds=bounds)
-        # regions of segment s are rfirst[s]:rfirst[s + 1]; D1 within each
-        # (members come from the grouping scaffold — stable sort keeps
-        # them in original index order)
-        uniq, gorder, gstarts = _group_by_label(labels)
-        rfirst = uniq.searchsorted(bounds)
-        rrtl = rtl[_segments(rfirst)]
-        ordered = gorder[order_lines_in_region(X[4][gorder], X[5][gorder], rrtl,
-                                               off[gorder], bounds=gstarts)]
-        regions = (gorder, gstarts, rfirst, rrtl, ix[ordered])
-        body = _order_body_text(ws, X, off, regions)
-        margs = _order_marginals(ws, X, off, regions)
-    for k, w, b, (ml, mr) in zip(live, ws, body, margs):
-        out[k] = _serialize(w, ml, b, mr)
-    return out
+    # D2 + D4 over the body lines, then regions from lines (C16 inverse),
+    # band/cell-aware; marginal lines all share one cell
+    st.splitters, st.boxes, st.cells = _body_cells(X, bounds[:D + 1], nmarg == 0, p, st)
+    band = np.concatenate((st.cells, np.zeros(len(rows) - len(st.cells), dtype=np.int64)))
+    labels = cluster_lines_into_regions(*X[:4], band=band, rtl=rtl, bounds=bounds)
+    # regions of segment s are rfirst[s]:rfirst[s + 1]; D1 within each
+    # (members come from the grouping scaffold — stable sort keeps them
+    # in original index order)
+    uniq, gorder, gstarts = _group_by_label(labels)
+    rfirst = uniq.searchsorted(bounds)
+    rrtl = rtl[_segments(rfirst)]
+    ordered = gorder[order_lines_in_region(X[4][gorder], X[5][gorder], rrtl,
+                                           off[gorder], bounds=gstarts)]
+    regions = (gorder, gstarts, rfirst, rrtl, rows[ordered])
+    st.body = _order_body_text(X, off, regions, st)
+    st.margs, st.marg_part = _order_marginals(X, off, regions, p.W)
+    return st
 
 
-def _serialize(w, marg_l, body, marg_r):
-    """D8 (utils/xml.py:49-66, writer.py:184-290): marg-L -> ordered text
-    -> marg-R -> images -> separators -> tables; returns (perm,
-    marg_mask)."""
-    doc, page = w.doc, w.page
-    n = doc.n
-    parts = [marg_l, body, marg_r]
-    if len(body) + len(w.marg_ix) < n:
-        # images -> separators -> tables, each by position
-        cx, cy = page.cx, page.cy
-        for ix in ((doc.kind == KIND_IMAGE).nonzero()[0], w.sep_ix,
-                   (doc.kind == KIND_TABLE).nonzero()[0]):
-            if len(ix):
-                ix = ix[np.lexsort((doc.offset[ix], cx[ix], cy[ix]))]
-            parts.append(ix)
-    perm = np.concatenate(parts).astype(np.int64)
-    if len(w.marg_ix) == 0:
-        return perm, np.zeros(len(perm), dtype=bool)
-    marg_mask = np.zeros(n, dtype=bool)
-    marg_mask[w.marg_ix] = True
-    return perm, marg_mask[perm]
+def _serialize(p: Pages, st) -> BatchOrder:
+    """D8 (utils/xml.py:49-66, writer.py:184-290) for the whole batch in
+    one lexsort on (document, part, key): marg-L -> ordered text ->
+    marg-R -> images -> separators -> tables, the text parts in their
+    reading order and the others by position. Spans of any other kind
+    are left out."""
+    part = np.array([6, 3, 4, 5, 6])[p.code]
+    rank = np.zeros(len(part), dtype=np.int64)
+    part[st.body] = 1
+    rank[st.body] = np.arange(len(st.body))
+    part[st.margs] = st.marg_part
+    rank[st.margs] = np.arange(len(st.margs))
+    seg = _segments(p.bounds)
+    o = np.lexsort((p.off, p.cx, p.cy, rank, part, seg))
+    o = o[part[o] < 6]
+    marg = np.zeros(len(part), dtype=bool)
+    marg[st.margs] = True
+    return BatchOrder(o, marg[o], np.bincount(seg[o], minlength=len(p.W)), p.bounds)
 
 
-def _order_marginals(ws, X, off, regions):
-    """C11 (eynollah.py:1923-1947) for every document: split marginals at
-    the page midline, order each side's regions top-down, lines in D1
-    order within. Ties between geometrically identical regions break by
-    offset. Returns (left, right) span indices per document."""
+def _order_marginals(X, off, regions, W):
+    """C11 (eynollah.py:1923-1947) for every document at once: split
+    marginals at the page midline, order each side's regions top-down,
+    lines in D1 order within. Ties between geometrically identical
+    regions break by offset. Returns the marginal lines in reading order
+    and their D8 part (0 left, 2 right)."""
     gorder, gstarts, rfirst, _, ordered_ix = regions
+    D = len(W)
+    a, b = rfirst[D], rfirst[2 * D]
+    if a == b:
+        return ordered_ix[:0], ordered_ix[:0]
     cx, cy = X[4:]
-    D = len(ws)
-    empty = np.array([], dtype=np.int64)
-    out = []
-    for d, w in enumerate(ws):
-        a, b = rfirst[D + d], rfirst[D + d + 1]
-        if a == b:
-            out.append((empty, empty))
-            continue
-        regs = []
-        gs = gstarts[a:b + 1].tolist()
-        for s, e in zip(gs[:-1], gs[1:]):
-            members = gorder[s:e]
-            regs.append((cy[members].mean(), cx[members].mean(),
-                         int(off[members].min()), s, e))
-        regs.sort(key=lambda t: (t[0], t[1], t[2]))
-        out_l, out_r = [], []
-        for _rcy, rcx, _roff, s, e in regs:
-            (out_l if rcx < w.W / 2.0 else out_r).extend(ordered_ix[s:e].tolist())
-        out.append((np.array(out_l, dtype=np.int64), np.array(out_r, dtype=np.int64)))
-    return out
+    st = gstarts[a:b + 1]
+    size = np.diff(st)
+    rcy = np.add.reduceat(cy[gorder], st[:-1]) / size
+    rcx = np.add.reduceat(cx[gorder], st[:-1]) / size
+    roff = np.minimum.reduceat(off[gorder], st[:-1])
+    rdoc = _segments(rfirst[D:] - a)
+    ro = np.lexsort((roff, rcx, rcy, rdoc))
+    lines = ordered_ix[_ragged_arange(st[ro], size[ro])]
+    return lines, np.repeat(np.where(rcx[ro] < W[rdoc[ro]] / 2.0, 0, 2), size[ro])
 
 
-def _body_cells(ws, X):
+def _body_cells(X, bounds, whole, p: Pages, st):
     """D2 + D4 over every document's body lines (``X``: the line table's
-    x0, x1, y0, y1, cx, cy; document w's body lines are ``X[..][w.body]``):
-    the band splitters (find_splitters), then per band its column boxes
-    and per line its clustering cell. The band gutters of find_splitters
-    pass 2 and those of the D4 bands it did not analyse are one
-    gutter_sets call each for the whole batch. Sets ``w.barr``, the boxes
-    in emission order; returns the cells of all body lines."""
-    x0, x1, y0, y1, cx, cy = X
-    body = [w for w in ws if w.body.stop > w.body.start]
-    # band splitters (D2, two-pass per-band analysis)
-    jobs = []
-    for w in body:
-        s = w.body
-        w.bands = _splitter_bands(x0[s], x1[s], y0[s], y1[s], w.hseps, w.H,
-                                  w.main_lo, w.main_hi, w.vboxes, w.vcx)
-        w.gutters = _reused_gutters(w.bands, s.stop - s.start, w.vcx, w.body_gutters)
-        if w.gutters is None:
-            w.jobs = _band_jobs(w.bands, s.start, w.W)
-            jobs += w.jobs
-    gs = iter(_gutter_jobs(x0, x1, y0, y1, jobs))
-    jobs = []
-    for w in body:
-        s = w.body
-        if w.gutters is None:
-            w.gutters = [next(gs) for _ in w.jobs]
-        w.band_gutters = {}
-        w.splitters = sp = _split_bands(x0[s], x1[s], y0[s], y1[s], w.W, w.H,
-                                        w.bands, w.gutters, w.band_gutters)
-        w.band_id, w.order, w.bstart = _by_band(sp, cy[s])
-        bs = w.bstart
-        w.todo = [k for k in (bs[1:] > bs[:-1]).nonzero()[0].tolist()
-                  if (sp[k], sp[k + 1]) not in w.band_gutters]
-        jobs += [(w.order[bs[k]:bs[k + 1]] + s.start, w.W,
-                  _band_vseps(w.vcx, w.vboxes, sp[k], sp[k + 1])) for k in w.todo]
-    # gutters of the bands find_splitters did not analyse, in one batch
-    gs = iter(_gutter_jobs(x0, x1, y0, y1, jobs))
-    cells = [np.empty(0, dtype=np.int64)]
-    for w in body:
-        for k in w.todo:
-            w.band_gutters[(w.splitters[k], w.splitters[k + 1])] = next(gs)
-        s = w.body
-        w.barr, cell = _band_boxes(w, x0[s], x1[s], y0[s], y1[s], cx[s], cy[s])
-        cells.append(cell)
-    return np.concatenate(cells)
+    x0, x1, y0, y1, cx, cy; document d's body lines are
+    ``[bounds[d], bounds[d+1])``, all its text lines where ``whole[d]``):
+    the band splitters (find_splitters),
+    then per band its column boxes and per line its clustering cell. The
+    band gutters of find_splitters pass 2 and those of the D4 bands it
+    did not analyse are one gutter_sets call each for the whole batch.
+    Returns (the splitters, as (sy, sb); the boxes, as _band_boxes
+    returns them; the cells of all body lines)."""
+    x0, x1, y0, y1, cx, cy = (v[:bounds[-1]] for v in X)
+    lseg = _segments(bounds)
+    # band splitters (D2, two-pass per-band analysis); a body of every
+    # text line has the page-level gutters
+    sy, sb, (b1seg, b1lo, b1hi, g1x, g1b) = _splitters(
+        x0, x1, y0, y1, cx, cy, bounds, p.W, p.H, st.main_lo, st.main_hi, st.hseps,
+        st.vseps, (*st.page_gutters, whole))
+    band, order, fb, bstart = _by_band(sy, sb, cy, lseg)
+    fseg = _segments(sb)[fb]
+    flo, fhi = sy[fb], sy[fb + 1]
+    # bands that survive from pass 1 unchanged reuse its gutter analysis
+    # (same lines, same separators); the others get theirs in one batch
+    p1 = np.minimum(_lex_key(b1seg, b1lo).searchsorted(_lex_key(fseg, flo)),
+                    max(len(b1lo) - 1, 0))
+    same = (len(b1lo) > 0) & (b1seg[p1] == fseg) & (b1lo[p1] == flo) & (b1hi[p1] == fhi)
+    vq, vj = _band_vseps(fseg, flo, fhi, st.vseps)
+    gx, gb = _band_gutters(x0, x1, y0, y1, order, bstart, p.W[fseg], vq, vj, st.vseps[1],
+                           np.where(same, p1, -1), (g1x, g1b))
+    boxes, bb, cells = _band_boxes(x0, x1, y0, y1, cx, cy, bounds, band, order, fseg,
+                                   fb - sb[fseg], flo, fhi, bstart, gx, gb, np.diff(sb),
+                                   st.hseps, p.rtl, p.W, p.H)
+    return (sy, sb), (boxes, bb), cells
 
 
-def _band_boxes(w, bx0, bx1, by0, by1, bcx, bcy):
-    """D4 for one document's body lines: boxes per band, columns
-    left->right (RTL flips, :1522-1524,1866-1879). Returns (boxes in
-    emission order as a B x 4 array of x0, x1, y0, y1; the clustering
-    cell of every line).
+def _band_boxes(x0, x1, y0, y1, cx, cy, bounds, band, order, bseg, bloc, blo, bhi,
+                bstart, gx, gb, nsplit, hseps, rtl, W, H):
+    """D4 for S segments of body lines at once (segment s: lines
+    ``[bounds[s], bounds[s+1])``, ``nsplit[s]`` splitters, each line's
+    band index ``band``): band k — local band ``bloc[k]`` of segment
+    ``bseg[k]``, y-range ``[blo[k], bhi[k])``, lines
+    ``order[bstart[k]:bstart[k+1]]``, gutters ``gx[gb[k]:gb[k+1]]`` —
+    gets its column boxes, columns left->right (RTL flips,
+    :1522-1524,1866-1879). Returns ((seg, x0, x1, y0, y1) of the boxes,
+    by segment and in emission order; their bounds per segment; the
+    clustering cell of every line).
 
     Per-column recursion (utils/__init__.py:1794-1864): a PARTIAL-width
     horizontal separator (spanning some but not all of a band's columns)
@@ -1275,104 +1495,133 @@ def _band_boxes(w, bx0, bx1, by0, by1, bcx, bcy):
     final box order (y0, then x) reproduces the reference walk's
     emission order — each separator's sub-boxes follow every box whose
     top edge sits above it (e.g. 2 cols, separator under col 1 only:
-    col1-above, col2-full, col1-below)."""
-    splitters, band_id, order, bstart = w.splitters, w.band_id, w.order, w.bstart
-    rtl, hseps = w.rtl, w.hseps
-    # Collision-free cell keys: bands take ids [0, n_bands); each cut
-    # column claims a fresh contiguous block of len(cuts)+1 ids above
-    # that, so no cell can alias another band's or column's cells no
-    # matter how many cuts/columns a pathological page has.
-    cell_id = band_id.astype(np.int64)  # refined below at cuts
-    next_cell = max(len(splitters) - 1, 1)
-    boxes = []  # (bx0, bx1, by0, by1)
-    for k in (bstart[1:] > bstart[:-1]).nonzero()[0].tolist():
-        lo, hi = splitters[k], splitters[k + 1]
-        g = w.band_gutters[(lo, hi)]
+    col1-above, col2-full, col1-below). Only the columns such a
+    separator covers take the per-column path."""
+    S, nb = len(W), len(bseg)
+    # column edges per band: the ink extent and the gutters inside it
+    if nb:
+        ex0 = np.minimum.reduceat(x0[order], bstart[:-1])
+        ex1 = np.maximum.reduceat(x1[order], bstart[:-1])
+    else:
+        ex0 = ex1 = np.empty(0)
+    gband = _segments(gb)
+    inner = (gx > ex0[gband]) & (gx < ex1[gband])
+    e = np.concatenate((ex0, gx[inner], ex1))
+    eband = np.concatenate((np.arange(nb), gband[inner], np.arange(nb)))
+    o = np.lexsort((np.repeat([0, 1, 2], [nb, int(inner.sum()), nb]), eband))
+    e, eband = e[o], eband[o]
+    c = np.flatnonzero(eband[1:] == eband[:-1])
+    cxa, cxb, cband = e[c], e[c + 1], eband[c]
+    ncol = np.bincount(cband, minlength=nb)
+    j = c - (np.cumsum(ncol + 1) - (ncol + 1))[cband]
+    # creation order: left to right, right to left on RTL pages
+    rank = np.where(rtl[bseg[cband]], ncol[cband] - 1 - j, j)
+    colw = np.maximum(cxb - cxa, 1.0)
+    # separators covering a column's middle half, strictly inside the
+    # band (full-main-width ones already became band splitters in
+    # find_splitters pass 1), as (column, separator) pairs
+    hseg, hx0, hx1, hy0, hy1 = hseps
+    multi = np.flatnonzero(ncol[cband] > 1)
+    q, h = _pairs(bseg[cband[multi]], _seg_bounds(hseg, S))
+    cq = multi[q]
+    hc = (hy0[h] + hy1[h]) / 2.0
+    covers = ((blo[cband[cq]] + 2.0 < hc) & (hc < bhi[cband[cq]] - 2.0)
+              & (hx0[h] <= cxa[cq] + 0.25 * colw[cq]) & (hx1[h] >= cxb[cq] - 0.25 * colw[cq]))
+    cut = np.zeros(len(c), dtype=bool)
+    cut[cq[covers]] = True
+    plain = ~cut
+    cb = cband[plain]
+    boxes = [(bseg[cb], cxa[plain], cxb[plain], blo[cb], bhi[cb], cb, rank[plain],
+              np.zeros(len(cb), dtype=np.int64))]
+    cell = band.astype(np.int64)
+    if cut.any():
+        boxes.append(_cut_boxes(np.flatnonzero(cut), cband, rank, cxa, cxb, e, eband,
+                                hc[covers], cq[covers], x0, x1, y0, y1, cx, cy, bounds,
+                                band, order, bseg, bloc, blo, bhi, bstart, nsplit, rtl, cell))
+    # a segment with lines but no band: one page box
+    bare = np.flatnonzero((np.diff(bounds) > 0) & (np.bincount(bseg, minlength=S) == 0))
+    z = np.zeros(len(bare))
+    boxes.append((bare, z, W[bare], z, H[bare], z, z, z))
+    bs, bx0, bx1, by0, by1, k, r, sub = (np.concatenate(v) for v in zip(*boxes))
+    bs = bs.astype(np.int64)
+    o = np.lexsort((sub, r, k, np.where(rtl[bs], -bx0, bx0), by0, bs))
+    return (bs[o], bx0[o], bx1[o], by0[o], by1[o]), _seg_bounds(bs, S), cell
+
+
+def _cut_boxes(cols, cband, rank, cxa, cxb, e, eband, hc, hcol, x0, x1, y0, y1, cx, cy,
+               bounds, band, order, bseg, bloc, blo, bhi, bstart, nsplit, rtl, cell):
+    """The sub-boxes of the columns ``cols`` that separators cut (at
+    ``hc``, of column ``hcol``), with the D4 get_span refinement; the
+    lines of a cut column get their own clustering cell per
+    sub-interval, written into ``cell``. Returns the boxes as
+    _band_boxes collects them."""
+    out = []
+    # each cut column claims a fresh contiguous block of len(cuts)+1 cell
+    # ids above its segment's band ids, in creation order
+    next_cell = np.maximum(nsplit - 1, 1).tolist()
+    for i in cols[np.lexsort((rank[cols], cband[cols]))].tolist():
+        k = cband[i]
+        s, lo, hi = int(bseg[k]), float(blo[k]), float(bhi[k])
+        cuts = sorted(set(hc[hcol == i].tolist()))
+        # vertical dedup (utils/__init__.py:36-161): double-rule
+        # separators print as two parallel lines a few px apart — they
+        # are ONE reading-order cut
+        dd = [cuts[0]]
+        for y in cuts[1:]:
+            if y - dd[-1] > 8.0:
+                dd.append(y)
+        cuts = dd
         idx = order[bstart[k]:bstart[k + 1]]
-        bbx0, bbx1 = bx0[idx], bx1[idx]
-        bby0, bby1, bbcy = by0[idx], by1[idx], bcy[idx]
-        ex0, ex1 = float(bbx0.min()), float(bbx1.max())
-        edges = [ex0] + [x for x in g if ex0 < x < ex1] + [ex1]
-        cols = list(zip(edges[:-1], edges[1:]))
-        if rtl:
-            cols = cols[::-1]
-        n_cols = len(cols)
-        for cxa, cxb in cols:
-            colw = max(cxb - cxa, 1.0)
-            cuts = []
-            if n_cols > 1:
-                # separators covering this column's middle half, strictly
-                # inside the band (full-main-width ones already became
-                # band splitters in find_splitters pass 1)
-                cuts = sorted({
-                    float((sy0 + sy1) / 2.0) for (sx0, sx1, sy0, sy1) in hseps
-                    if lo + 2.0 < (sy0 + sy1) / 2.0 < hi - 2.0
-                    and sx0 <= cxa + 0.25 * colw and sx1 >= cxb - 0.25 * colw
-                })
-                # vertical dedup (utils/__init__.py:36-161): double-rule
-                # separators print as two parallel lines a few px apart —
-                # they are ONE reading-order cut
-                if len(cuts) > 1:
-                    dd = [cuts[0]]
-                    for y in cuts[1:]:
-                        if y - dd[-1] > 8.0:
-                            dd.append(y)
-                    cuts = dd
-            ys = [lo] + cuts + [hi]
-            for ya, yb in zip(ys[:-1], ys[1:]):
-                xa, xb = cxa, cxb
-                if cuts:
-                    # D4 get_span refinement: a sub-box of a cut column
-                    # advances past following columns its content spans
-                    if rtl:
-                        xa = _extend_box_span(edges, cxa, ya, yb,
-                                              bbx0, bbx1, bby0, bby1, bbcy, True)
-                    else:
-                        xb = _extend_box_span(edges, cxb, ya, yb,
-                                              bbx0, bbx1, bby0, bby1, bbcy, False)
-                boxes.append((xa, xb, ya, yb))
-            if cuts:
-                # lines in a cut column get their own clustering cell per
-                # sub-interval so a region never merges across a separator
-                # (the reference's region model treats the rule as a hard
-                # region boundary); cut-less columns keep the band cell.
-                in_col = (band_id == k) & (bcx >= cxa) & (bcx <= cxb)
-                cell_id[in_col] = (next_cell
-                                   + np.searchsorted(np.asarray(cuts), bcy[in_col]))
-                next_cell += len(cuts) + 1
-    if not boxes:
-        boxes = [(0.0, w.W, 0.0, w.H)]
-    barr = np.array(boxes)
-    okey = np.lexsort(((-barr[:, 0] if rtl else barr[:, 0]), barr[:, 2]))
-    return barr[okey], cell_id
+        edges = e[eband == k].tolist()
+        ys = [lo] + cuts + [hi]
+        for sub, (ya, yb) in enumerate(zip(ys[:-1], ys[1:])):
+            # D4 get_span refinement: a sub-box of a cut column advances
+            # past following columns its content spans
+            xa, xb = float(cxa[i]), float(cxb[i])
+            if rtl[s]:
+                xa = _extend_box_span(edges, xa, ya, yb, x0[idx], x1[idx], y0[idx],
+                                      y1[idx], cy[idx], True)
+            else:
+                xb = _extend_box_span(edges, xb, ya, yb, x0[idx], x1[idx], y0[idx],
+                                      y1[idx], cy[idx], False)
+            out.append((s, xa, xb, ya, yb, k, rank[i], sub))
+        # a region never merges across a separator (the reference's
+        # region model treats the rule as a hard region boundary);
+        # cut-less columns keep the band cell
+        a, b = bounds[s], bounds[s + 1]
+        in_col = a + np.flatnonzero((band[a:b] == bloc[k]) & (cx[a:b] >= cxa[i])
+                                    & (cx[a:b] <= cxb[i]))
+        cell[in_col] = next_cell[s] + np.searchsorted(np.asarray(cuts), cy[in_col])
+        next_cell[s] += len(cuts) + 1
+    return tuple(np.array(v) for v in zip(*out))
 
 
-def _box_of(barr, rx0, rx1, ry0, ry1, rcx, rcy):
-    """D5: assign each region to a box. Strict containment takes the
-    FIRST box in emission order (the reference's match_boxes breaks on
-    the first containing box, eynollah.py:1166-1179 — matters when
-    get_span widened boxes overlap full-height column boxes); fallback is
-    the nearest center among center-containing boxes (:1181-1187).
-    (vectorized R x B: argmax picks the FIRST containing box; the
-    center-containment fallback masks non-candidates to +inf so argmin
-    keeps the original among-candidates / lowest-index tie-break)"""
-    strict = ((barr[None, :, 0] <= rx0[:, None]) & (barr[None, :, 1] >= rx1[:, None])
-              & (barr[None, :, 2] <= ry0[:, None]) & (barr[None, :, 3] >= ry1[:, None]))
-    has_strict = strict.any(axis=1)
-    box_of = np.zeros(len(rx0), dtype=np.int64)
-    if has_strict.any():
-        box_of[has_strict] = np.argmax(strict[has_strict], axis=1)
-    rest = (~has_strict).nonzero()[0]
-    if len(rest):
-        bcenx, bceny = (barr[:, 0] + barr[:, 1]) / 2.0, (barr[:, 2] + barr[:, 3]) / 2.0
-        centc = ((barr[None, :, 0] <= rcx[rest, None]) & (barr[None, :, 1] > rcx[rest, None])
-                 & (barr[None, :, 2] <= rcy[rest, None]) & (barr[None, :, 3] > rcy[rest, None]))
-        d = ((bcenx[None, :] - rcx[rest, None]) ** 2
-             + (bceny[None, :] - rcy[rest, None]) ** 2)
-        mask = ~centc & centc.any(axis=1)[:, None]
-        d[mask] = np.inf
-        box_of[rest] = np.argmin(d, axis=1)
-    return box_of
+def _box_of(rx0, rx1, ry0, ry1, rcx, rcy, rseg, boxes, bb):
+    """D5 for the regions of S segments at once, one pass over the
+    (region, box of its segment) pairs: region r goes to one of segment
+    ``rseg[r]``'s boxes ``[bb[s], bb[s+1])`` (x0, x1, y0, y1 of
+    ``boxes``). Strict containment takes the FIRST box in emission order
+    (the reference's match_boxes breaks on the first containing box,
+    eynollah.py:1166-1179 — matters when get_span widened boxes overlap
+    full-height column boxes); fallback is the nearest center among
+    center-containing boxes (:1181-1187), or among all if none contains
+    it, the lowest box index on ties."""
+    bx0, bx1, by0, by1 = boxes
+    q, j = _pairs(rseg, bb)
+    strict = (bx0[j] <= rx0[q]) & (bx1[j] >= rx1[q]) & (by0[j] <= ry0[q]) & (by1[j] >= ry1[q])
+    box = np.full(len(rx0), -1, dtype=np.int64)
+    sq, sj = q[strict], j[strict]
+    f = _firsts(sq)
+    box[sq[f]] = sj[f]
+    rest = box[q] < 0
+    q, j = q[rest], j[rest]
+    cen = ((bx0[j] <= rcx[q]) & (bx1[j] > rcx[q]) & (by0[j] <= rcy[q]) & (by1[j] > rcy[q]))
+    d = (((bx0[j] + bx1[j]) / 2.0 - rcx[q]) ** 2 + ((by0[j] + by1[j]) / 2.0 - rcy[q]) ** 2)
+    d[~cen & (np.bincount(q, weights=cen, minlength=len(rx0)) > 0)[q]] = np.inf
+    o = np.lexsort((j, d, q))
+    f = o[_firsts(q[o])]
+    box[q[f]] = j[f]
+    return box
 
 
 def _extend_box_span(edges, trail, ya, yb, lx0, lx1, ly0, ly1, lcy, rtl):
@@ -1433,17 +1682,18 @@ def _order_in_boxes(rcx, rcy, rh, roff, rtl, bounds):
     return np.lexsort((roff, rcy, xkey, rows))
 
 
-def _order_body_text(ws, X, off, regions):
+def _order_body_text(X, off, regions, st):
     """D5 + D6 + D1 concatenation over every document's body regions:
-    each region goes to a box (D5, per document), the regions of each box
-    are row-clustered and ordered (D6, rows top-down, cx in a row — one
-    pass over all boxes of the batch), and each region contributes its
-    lines in D1 order. Returns the body's span indices per document."""
+    each region goes to a box (D5), the regions of each box are
+    row-clustered and ordered (D6, rows top-down, cx in a row), and each
+    region contributes its lines in D1 order — each phase one pass over
+    the batch. Returns the body lines in reading order, document by
+    document."""
     gorder, gstarts, rfirst, rrtl, ordered_ix = regions
-    D = len(ws)
-    ends = np.cumsum([len(w.body_ix) for w in ws]).tolist()
+    boxes, bb = st.boxes[0][1:], st.boxes[1]
+    D = len(bb) - 1
     if rfirst[D] == 0:
-        return [ordered_ix[:0]] * D
+        return ordered_ix[:0]
     x0, x1, y0, y1 = X[:4]
     rx0 = _group_minmax(x0, gorder, gstarts, "min")
     rx1 = _group_minmax(x1, gorder, gstarts, "max")
@@ -1451,26 +1701,17 @@ def _order_body_text(ws, X, off, regions):
     ry1 = _group_minmax(y1, gorder, gstarts, "max")
     roff = _group_minmax(off, gorder, gstarts, "min")
     rcx, rcy = (rx0 + rx1) / 2.0, (ry0 + ry1) / 2.0
-
-    # D5 per document; boxes numbered through the batch
-    box, nbox = [], 0
-    for d, w in enumerate(ws):
-        a, b = rfirst[d], rfirst[d + 1]
-        if b > a:
-            box.append(nbox + _box_of(w.barr, rx0[a:b], rx1[a:b], ry0[a:b],
-                                      ry1[a:b], rcx[a:b], rcy[a:b]))
-            nbox += len(w.barr)
-    box = np.concatenate(box)
+    # D5; boxes numbered through the batch, so by document
+    R = rfirst[D]
+    box = _box_of(rx0[:R], rx1[:R], ry0[:R], ry1[:R], rcx[:R], rcy[:R],
+                  _segments(rfirst[:D + 1]), boxes, bb)
     # D6 within each box, all boxes of the batch at once
     by_box = box.argsort(kind="stable")
     sb = box[by_box]
-    bounds = np.append(np.concatenate(([True], sb[1:] != sb[:-1])).nonzero()[0], len(sb))
+    bounds = np.append(_firsts(sb), len(sb))
     order_regions = by_box[_order_in_boxes(
         rcx[by_box], rcy[by_box], (ry1 - ry0)[by_box], roff[by_box],
         rrtl[by_box][bounds[:-1]], bounds)]
-
-    # each region's lines in D1 order; boxes, and so regions, run
-    # document by document
+    # each region's lines in D1 order
     size = gstarts[1:] - gstarts[:-1]
-    lines = ordered_ix[_ragged_arange(gstarts[order_regions], size[order_regions])]
-    return [lines[a:b] for a, b in zip([0] + ends[:-1], ends)]
+    return ordered_ix[_ragged_arange(gstarts[order_regions], size[order_regions])]

@@ -20,10 +20,11 @@ Stage plan (explicit shuffle boundaries, SURVEY.md §3.1 lifecycle):
            page stage: deskew angle scores, page-level projection
            profiles, smoothing and valleys), then
            kernels.layout.layout_permutations (the rest, phase by
-           phase: per-document glue in Python loops, and band gutters,
-           region clustering, in-region and in-box order as one numpy
-           pass per batch). Each document's result is bit-identical to
-           running it alone;
+           phase, each phase one numpy pass over the batch with the
+           documents as segments). It returns the batch's output spans
+           in reading order as one array, which indexes the
+           partition's valid rows directly. Each document's result is
+           bit-identical to running it alone;
          - a batch that raises anywhere is re-run one document at a
            time, and a document that still raises is quarantined: it
            falls back to offset order and its status is counted (the
@@ -49,7 +50,7 @@ from pyspark.sql import DataFrame, functions as F
 # layout_permutation is bound here for perfbench's kernel tracing, which
 # patches this module's attribute
 from eynollah_spark.kernels.layout import (  # noqa: F401
-    DocSpans, analyze_pages, layout_permutation, layout_permutations)
+    BatchOrder, DocSpans, analyze_pages, layout_permutation, layout_permutations)
 from eynollah_spark.schemas import FLAT_OUT_SCHEMA, OUT_SCHEMA
 
 
@@ -129,7 +130,7 @@ def _safe_permutations(docs: list[DocSpans], fail_fast: bool):
     eynollah.py:2023-2028, is replaced by degrade-and-continue). If the
     batch raises, in analyze_pages or layout_permutations, each document
     is re-run alone; one that still raises falls back to input-offset
-    order (total, kinds unchanged). Returns ((perm, marg) per document,
+    order (total, kinds unchanged). Returns (the batch's BatchOrder,
     status per document: None, or the class name of the exception that
     quarantined it). fail_fast=True (tests/CI) re-raises instead."""
     try:
@@ -139,9 +140,10 @@ def _safe_permutations(docs: list[DocSpans], fail_fast: bool):
             raise
         if len(docs) > 1:
             alone = [_safe_permutations([d], fail_fast) for d in docs]
-            return [r[0][0] for r in alone], [r[1][0] for r in alone]
+            return BatchOrder.concat([r[0] for r in alone]), [r[1][0] for r in alone]
         perm = np.argsort(docs[0].offset, kind="stable").astype(np.int64)
-        return [(perm, np.zeros(len(perm), dtype=bool))], [type(e).__name__]
+        return (BatchOrder(perm, np.zeros(len(perm), dtype=bool), np.array([len(perm)]),
+                           np.array([0, len(perm)])), [type(e).__name__])
 
 
 def _np(col, fill=0, dtype=np.float64) -> np.ndarray:
@@ -171,14 +173,18 @@ def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper:
     width = _np(col["width"], 1, np.int64)[starts].tolist()
     height = _np(col["height"], 1, np.int64)[starts].tolist()
     rtl = _np(col["rtl"], False, np.bool_)[starts].tolist()
-    # rows of each document's spans (a slice unless it has null-kind rows)
+    # rows of each document's spans (a slice unless it has null-kind
+    # rows); the valid rows of all documents are the kernel's spans, so a
+    # batch's output spans index them directly
     nvalid = np.add.reduceat(valid, starts, dtype=np.int64)
     rows = [(k, slice(s, e) if nv == e - s else s + valid[s:e].nonzero()[0])
             for k, (s, e, nv) in enumerate(zip(starts.tolist(), ends.tolist(),
                                                 nvalid.tolist())) if nv]
+    spans = valid.nonzero()[0]
     counts = np.zeros(len(starts), dtype=np.int64)
     status = [None] * len(starts)
     take_l, marg_l = [np.empty(0, np.int64)], [np.empty(0, bool)]
+    first = 0
     for b in range(0, len(rows), _PAGE_BATCH):
         batch = rows[b:b + _PAGE_BATCH]
         docs = [DocSpans(
@@ -187,11 +193,13 @@ def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper:
             width=width[k], height=height[k], rtl=rtl[k],
             num_col_lower=num_col_lower, num_col_upper=num_col_upper,
         ) for k, idx in batch]
-        perms, st = _safe_permutations(docs, fail_fast)
-        for (k, idx), (perm, marg), st_k in zip(batch, perms, st):
-            take_l.append(perm + idx.start if isinstance(idx, slice) else idx[perm])
-            marg_l.append(marg)
-            counts[k] = len(perm)
+        order, st = _safe_permutations(docs, fail_fast)
+        take_l.append(spans[first + order.perm])
+        marg_l.append(order.marg)
+        first += int(order.bounds[-1])
+        ks = [k for k, _ in batch]
+        counts[ks] = order.counts
+        for k, st_k in zip(ks, st):
             status[k] = st_k
     return starts, counts, np.concatenate(take_l), np.concatenate(marg_l), status
 

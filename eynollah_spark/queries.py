@@ -1401,7 +1401,8 @@ GROUP BY l_returnflag, l_linestatus
 
 _both("tpch_q3_topk", ("customer", "orders", "lineitem"), lambda d: """
 SELECT l.l_orderkey,
-       ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+       CAST(ROUND(CAST(SUM(l.l_extendedprice * (1 - l.l_discount)) AS DECIMAL(38,6)), 2)
+            AS DOUBLE) AS revenue,
        o.o_orderdate
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
@@ -1411,6 +1412,9 @@ GROUP BY l.l_orderkey, o.o_orderdate
 ORDER BY revenue DESC, l.l_orderkey ASC
 LIMIT 10
 """)
+# revenue rounds a DECIMAL(38,6) cast: ROUND(double) rounds a half-cent
+# tie up in Spark (through a decimal) and down in DuckDB (0.285 is
+# 0.28499999999999998), so the two engines would disagree by 0.01.
 
 # (The r3 `join_region_nation_rollup` flat star-join aggregate was a
 # grouping-set subset of rollup_region_nation below and was
@@ -1523,13 +1527,18 @@ def _extract_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad count — see its docstring for the equivalence argument), so the
     plan is ONE generation pass -> kernel -> tiny bucket aggregate, zero
     joins and zero data shuffles (guide §2.4/§8)."""
+    from eynollah_spark.corpus import corpus_flat_spark
+
+    return _reading_order_check(corpus_flat_spark(spark, max(200, int(100_000 * sf_of(sf_dir)))))
+
+
+def _reading_order_check(flat: DataFrame) -> DataFrame:
+    """_extract_corpus after the generation pass: the self-checking
+    kernel over the generated rows ``flat``, then per-bucket sums."""
     from pyspark.sql import functions as F
 
-    from eynollah_spark.corpus import corpus_flat_spark
     from eynollah_spark.pipeline import make_partition_arrow_kernel
 
-    n = max(200, int(100_000 * sf_of(sf_dir)))
-    flat = corpus_flat_spark(spark, n)
     per_doc = flat.select(
         "doc_id", "width", "height", "rtl", "kind", "offset",
         "x0", "x1", "y0", "y1", "expected_kind", "expected_rank", "expected_n",

@@ -406,20 +406,28 @@ def _gen_docs(n, seed):
 
 
 def test_page_stage_batch_equals_single_pages():
-    """analyze_pages over a batch gives every document exactly the Page
-    it gets alone: geometry, valleys and marginal projection."""
+    """analyze_pages over a batch gives every document exactly the part
+    of the Pages it gets alone: geometry, valleys and marginal profile."""
     from eynollah_spark.kernels.layout import analyze_pages
 
     docs = _gen_docs(150, seed=11)
-    for d, got in zip(docs, analyze_pages(docs)):
-        want = analyze_pages([d])[0]
-        for f in ("x0", "x1", "y0", "y1", "cx", "cy", "is_sep", "tix"):
-            assert np.array_equal(getattr(got, f), getattr(want, f)), f
-        assert (got.valleys, got.lo, got.hi) == (want.valleys, want.lo, want.hi)
-        assert (got.margins is None) == (want.margins is None)
-        if got.margins is not None:
-            assert np.array_equal(got.margins[0], want.margins[0])
-            assert got.margins[1:] == want.margins[1:]
+    got = analyze_pages(docs)
+    vx, vdoc, vok = got.valleys
+    mdoc, P, bins, *rest = got.margins
+    for d, doc in enumerate(docs):
+        want = analyze_pages([doc])
+        s, e = got.bounds[d], got.bounds[d + 1]
+        for f in ("code", "x0", "x1", "y0", "y1", "cx", "cy"):
+            assert np.array_equal(getattr(got, f)[s:e], getattr(want, f)), f
+        assert np.array_equal(got.ti[got.tb[d]:got.tb[d + 1]] - s, want.ti)
+        assert (got.lo[d], got.hi[d], vok[d]) == (want.lo[0], want.hi[0], want.valleys[2][0])
+        assert np.array_equal(vx[vdoc == d], want.valleys[0])
+        k, (_, P1, bins1, *rest1) = np.flatnonzero(mdoc == d), want.margins
+        assert len(k) == len(bins1) <= 1
+        if len(k):
+            assert np.array_equal(P[k[0], :bins[k[0]]], P1[0, :bins1[0]])
+            for v, w in zip(rest, rest1):
+                assert np.array_equal(v[k[0]], w[0])
 
 
 @pytest.fixture(scope="module")
@@ -516,3 +524,218 @@ def test_in_box_order_batch_equals_single(monkeypatch, mixed_docs):
         assert np.array_equal(got[s:e] - s, want), k
         multi += e - s > 1
     assert multi >= 10  # most boxes of this corpus hold one region
+
+
+# ---- the per-document phases, segmented: every one of them over the
+# batch gives each document exactly what it gets alone
+
+@pytest.fixture(scope="module")
+def phase_docs(mixed_docs):
+    """The mixed documents, then the first 100 again with num_col pinned
+    to 1: their column gutters become marginal-split candidates, which
+    runs the C10 side guards on many pages."""
+    import dataclasses
+
+    return mixed_docs + [dataclasses.replace(d, num_col_lower=1, num_col_upper=1)
+                         for d in mixed_docs[:100]]
+
+
+@pytest.fixture(scope="module")
+def phase_states(phase_docs):
+    """(batch, [single per document]): analyze_pages and _layout_batch
+    state of the phase documents as one batch and of each alone."""
+    from eynollah_spark.kernels import layout
+
+    def state(docs):
+        pages = layout.analyze_pages(docs)
+        return pages, layout._layout_batch(pages)
+
+    return state(phase_docs), [state([d]) for d in phase_docs]
+
+
+def test_marginal_split_batch_equals_single(phase_states):
+    """C10 (_marginal_split over the [docs x bins] profiles): each
+    document's marginal flags and main-text extent."""
+    (pages, st), singles = phase_states
+    marg_docs = 0
+    for d, (p1, s1) in enumerate(singles):
+        a, b = pages.tb[d], pages.tb[d + 1]
+        assert np.array_equal(st.tmarg[a:b], s1.tmarg), d
+        assert (st.main_lo[d], st.main_hi[d]) == (s1.main_lo[0], s1.main_hi[0]), d
+        marg_docs += bool(s1.tmarg.any())
+    assert marg_docs >= 10
+
+
+def _peaks_by_samples(y, min_distance):
+    """Reference for one profile: local maxima of equal-value runs,
+    min-distance suppression keeping higher peaks, and each kept peak's
+    prominence from the walk over samples."""
+    n = len(y)
+    change = np.flatnonzero(y[1:] != y[:-1]) + 1
+    starts, ends = np.concatenate(([0], change)), np.concatenate((change, [n]))
+    v = y[starts]
+    inner = [k for k in range(1, len(v) - 1) if v[k] > v[k - 1] and v[k] > v[k + 1]]
+    peaks = [(starts[k] + ends[k] - 1) // 2 for k in inner]
+    keep = [True] * len(peaks)
+    for oi in sorted(range(len(peaks)), key=lambda i: -y[peaks[i]]):
+        if keep[oi]:
+            for j, p in enumerate(peaks):
+                if j != oi and abs(p - peaks[oi]) < min_distance and y[p] <= y[peaks[oi]]:
+                    keep[j] = False
+    peaks = [p for p, k in zip(peaks, keep) if k]
+    prom = []
+    for p in peaks:
+        lv = y[p]
+        left = max([i + 1 for i in range(p) if y[i] > lv], default=0)
+        right = min([i for i in range(p + 1, n) if y[i] > lv], default=n)
+        prom.append(lv - max(min([lv, *y[left:p]]), min([lv, *y[p + 1:right]])))
+    return peaks, prom
+
+
+def test_find_peaks_batch_equals_single():
+    """C10's peak search over a matrix of profiles, each row with its own
+    length and min_distance, equals each row alone and the walk over
+    samples — on rows dense in close peaks, which the generated corpus
+    never suppresses."""
+    from eynollah_spark.kernels.layout import _BINS, _find_peaks, _prominences
+
+    rng = np.random.default_rng(3)
+    R = 60
+    n = rng.integers(8, 300, R)
+    md = rng.integers(2, 40, R)
+    md[0] = 2  # a batch-wide min_distance would take the first row's
+    Y = np.zeros((R, _BINS))
+    for k in range(R):
+        Y[k, :n[k]] = np.repeat(rng.integers(0, 5, n[k]), rng.integers(1, 6, n[k]))[:n[k]]
+
+    def run(Y, n, md):
+        (_, rval, rb), (prow, ppos, run) = _find_peaks(Y, n, md)
+        return prow, ppos, _prominences(rval, rb, prow, run)
+
+    prow, ppos, prom = run(Y, n, md)
+    suppressed = 0
+    for k in range(R):
+        _, pk, pr = run(Y[k:k + 1], n[k:k + 1], md[k:k + 1])
+        assert np.array_equal(ppos[prow == k], pk) and np.array_equal(prom[prow == k], pr), k
+        want, want_prom = _peaks_by_samples(Y[k, :n[k]], md[k])
+        assert pk.tolist() == want and pr.tolist() == want_prom, k
+        suppressed += len(want) < len(_peaks_by_samples(Y[k, :n[k]], 1)[0])
+    assert suppressed > 20
+
+
+def test_column_estimate_batch_equals_single(phase_states):
+    """C5/B5 (_settle_gutters and _column_counts over every page): each
+    document's page-level gutters and column count."""
+    (pages, st), singles = phase_states
+    gx, gb = st.page_gutters
+    counts = set()
+    for d, (p1, s1) in enumerate(singles):
+        assert np.array_equal(gx[gb[d]:gb[d + 1]], s1.page_gutters[0]), d
+        assert st.num_col[d] == s1.num_col[0], d
+        counts.add(int(st.num_col[d]))
+    assert counts == {1, 2} and (np.diff(gb) > 0).sum() >= 60
+
+
+def test_num_col_bound_is_set_when_nonzero(mixed_docs):
+    """B5's user bounds: a bound is set when it is non-zero, whatever its
+    sign — a single bound pins num_col, two unequal ones clamp the
+    estimate."""
+    import dataclasses
+
+    from eynollah_spark.kernels import layout
+
+    docs = [d for d in mixed_docs if (d.kind == layout.KIND_TEXT).sum() > 10][:20]
+    est = layout._layout_batch(layout.analyze_pages(docs)).num_col
+    for lo, hi, want in ((0, -1, np.full(len(docs), -1)), (-2, 0, np.full(len(docs), -2)),
+                         (-1, 3, np.clip(est, -1, 3)), (2, 2, np.full(len(docs), 2))):
+        bounded = [dataclasses.replace(d, num_col_lower=lo, num_col_upper=hi) for d in docs]
+        got = layout._layout_batch(layout.analyze_pages(bounded)).num_col
+        assert np.array_equal(got, want), (lo, hi)
+
+
+def test_splitters_batch_equals_single(phase_states):
+    """D2 (both splitter passes, _by_band and the dedupe over every
+    document): each document's final splitters."""
+    (pages, st), singles = phase_states
+    sy, sb = st.splitters
+    banded = 0
+    for d, (p1, s1) in enumerate(singles):
+        assert np.array_equal(sy[sb[d]:sb[d + 1]], s1.splitters[0]), d
+        banded += sb[d + 1] - sb[d] > 2
+    assert banded >= 20
+
+
+def test_band_boxes_batch_equals_single(phase_states):
+    """D4 (_band_boxes over every band): each document's boxes in
+    emission order, and the clustering cell of each body line."""
+    (pages, st), singles = phase_states
+    (bs, *bx), bb = st.boxes
+    rows, lb = st.lines
+    multi = rtl_multi = 0
+    for d, (p1, s1) in enumerate(singles):
+        (_, *bx1), _ = s1.boxes
+        for v, w in zip(bx, bx1):
+            assert np.array_equal(v[bb[d]:bb[d + 1]], w), d
+        assert np.array_equal(st.cells[lb[d]:lb[d + 1]], s1.cells), d
+        multi += bb[d + 1] - bb[d] > 1
+        rtl_multi += bool(p1.rtl[0]) and bb[d + 1] - bb[d] > 1
+    assert multi >= 20 and rtl_multi >= 2
+
+
+def test_box_assignment_batch_equals_single(monkeypatch, phase_docs):
+    """D5 (_box_of over the batch's (region, box) pairs): each region's
+    box, as an index into its document's boxes."""
+    real, calls = _stage_calls(monkeypatch, "_box_of", phase_docs)
+    [(args, _, got)] = calls
+    rseg, bb = args[6], args[8]
+    for d in np.unique(rseg).tolist():
+        _, single = _stage_calls(monkeypatch, "_box_of", [phase_docs[d]])
+        [(_, _, want)] = single
+        assert np.array_equal(got[rseg == d] - bb[d], want), d
+    assert len(np.unique(rseg)) > 100 and (np.diff(bb) > 1).sum() > 20
+
+
+def test_serialize_batch_equals_single(phase_docs):
+    """D8 (one lexsort on (document, part, key) for the batch): each
+    document's permutation and marginalia flags."""
+    from eynollah_spark.kernels.layout import layout_permutations
+
+    batch = layout_permutations(phase_docs)
+    assert len(batch) == len(phase_docs)
+    for d, (perm, marg) in enumerate(batch):
+        want_perm, want_marg = layout_permutations([phase_docs[d]])[0]
+        assert np.array_equal(perm, want_perm) and np.array_equal(marg, want_marg), d
+    assert batch.marg.any() and (batch.counts == 0).any()
+
+
+def test_traced_kernel_phases_resolve(mixed_docs):
+    """Every (module, name) that perfbench's traced run wraps
+    (perfbench/tracing.py KERNEL_PHASES), and pipeline.layout_permutation,
+    which it patches too, still resolves: a renamed phase fails here, not
+    in the traced benchmark. The kernel runs unchanged under the
+    wrappers."""
+    import importlib
+    import importlib.util
+    import pathlib
+    import sys
+
+    from eynollah_spark import pipeline
+    from eynollah_spark.kernels.layout import layout_permutations
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "perfbench" / "tracing.py"
+    spec = importlib.util.spec_from_file_location("perfbench_tracing", path)
+    tracing = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = tracing
+    try:
+        spec.loader.exec_module(tracing)
+        for mod, name in tracing.KERNEL_PHASES:
+            assert callable(getattr(importlib.import_module(f"eynollah_spark.kernels.{mod}"),
+                                    name)), (mod, name)
+        assert callable(pipeline.layout_permutation)
+        want = layout_permutations(mixed_docs[:20])
+        tracer = tracing.Tracer()
+        with tracing.kernel_phase_spans(tracer):
+            got = layout_permutations(mixed_docs[:20])
+        assert np.array_equal(got.perm, want.perm) and tracer.spans
+    finally:
+        del sys.modules[spec.name]

@@ -237,6 +237,28 @@ def test_expected_check_kernel_equals_join_check(spark, corpus):
     assert k_map == j_map
 
 
+def test_reading_order_check_sees_lost_and_duplicated_rows(corpus):
+    """extract_reading_order's plan (generation -> self-checking kernel
+    -> bucket sums) over rows corrupted after corpus_flat_spark, inside
+    their own partitions: a document's dropped last-rank row, or one
+    duplicated row, gives n_bad > 0; the clean rows give 0."""
+    from eynollah_spark.queries import _reading_order_check
+
+    victim = F.col("doc_id") == "doc00000003"
+    last = victim & (F.col("expected_rank") == F.col("expected_n") - 1)
+    dup = (corpus.withColumn("_n", F.explode(F.sequence(
+        F.lit(1), F.when(victim & (F.col("expected_rank") == 0), 2).otherwise(1))))
+        .drop("_n"))
+    assert dup.count() == corpus.count() + 1
+
+    def n_bad(flat):
+        return sum(r["n_bad"] for r in _reading_order_check(flat).collect())
+
+    assert n_bad(corpus) == 0
+    assert n_bad(corpus.filter(~last)) > 0
+    assert n_bad(dup) > 0
+
+
 def test_extract_repartition_is_one_hash_exchange(spark, corpus):
     """extract() repartitions once, on the wide xxhash64(doc_id)
     keyspace and on nothing else: no size(spans) evaluation in the plan,

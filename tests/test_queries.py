@@ -73,6 +73,35 @@ def test_sessionize_gap_has_sub_second_precision(spark, tmp_path):
     assert got == _oracle(sf_dir, "events", "events_sessionize")
 
 
+def test_q3_rounds_half_cent_ties_like_the_oracle(spark, tmp_path):
+    """tpch_q3_topk's revenue on a half-cent tie: SUM(double) is
+    0.28499999999999998 for 0.285, which Spark's ROUND(double) rounds to
+    0.29 (through a decimal) and DuckDB's to 0.28; 1.005 likewise gives
+    1.01 against 1.0. Rounding a DECIMAL(38,6) cast gives 0.29 and 1.01
+    on both engines."""
+    ts = dt.datetime(1995, 3, 1)
+    pq.write_table(pa.table({"c_custkey": pa.array([1], pa.int64()),
+                             "c_mktsegment": ["BUILDING"]}), tmp_path / "customer.parquet")
+    pq.write_table(pa.table({"o_orderkey": pa.array([10, 11], pa.int64()),
+                             "o_custkey": pa.array([1, 1], pa.int64()),
+                             "o_orderdate": pa.array([ts, ts], pa.timestamp("us"))}),
+                   tmp_path / "orders.parquet")
+    pq.write_table(pa.table({"l_orderkey": pa.array([10, 11], pa.int64()),
+                             "l_extendedprice": [0.285, 1.005], "l_discount": [0.0, 0.0]}),
+                   tmp_path / "lineitem.parquet")
+    sf_dir = str(tmp_path)
+    q = registry()["tpch_q3_topk"]
+
+    load_views(spark, sf_dir, *q["tables"])
+    got = spark.sql(q["spark_sql"]).collect()
+    con = duckdb.connect()
+    for t in q["tables"]:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    want = con.sql(q["duck_sql"]).fetchall()
+    assert [(r[0], r[1]) for r in got] == [(k, v) for k, v, _ in want] == [(11, 1.01), (10, 0.29)]
+    assert all(isinstance(r[1], float) for r in got)
+
+
 @pytest.mark.parametrize("sf_dir, sf", [
     ("/data/sf0.01", 0.01),
     ("/data/sf0.1/", 0.1),

@@ -19,11 +19,11 @@ def test_merge_vertical_separators_unions_double_rules():
 
 
 def test_spanning_lines_requires_margin_both_sides():
-    tx0 = np.array([100.0, 620.0, 100.0])
-    tx1 = np.array([1100.0, 680.0, 640.0])
+    tx0 = np.array([100.0, 620.0, 100.0, 620.0, 100.0])
+    tx1 = np.array([1100.0, 680.0, 640.0, 1100.0, 690.0])
     # gutter at 650, width 1300 -> margin 52
     mask = spanning_lines(tx0, tx1, [650.0], 1300)
-    assert mask.tolist() == [True, False, False]
+    assert mask.tolist() == [True, False, False, False, False]
 
 
 def test_full_width_hsep_becomes_splitter():
