@@ -8,8 +8,6 @@ without a SparkSession, and is invoked from the mapInArrow partition
 kernel in ``eynollah_spark.pipeline``.
 """
 
-from eynollah_spark.kernels.layout import DocSpans, layout_document  # noqa: F401
-
 
 def doc_runs(doc_col):
     """Per-document dispatch for bucketed applyInPandas kernels:

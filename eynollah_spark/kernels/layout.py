@@ -31,19 +31,23 @@ boxes instead of pixel rasters. Reference semantics preserved
 The kernel is a pure function of small per-document arrays; Spark's
 role (see eynollah_spark.pipeline) is to run millions of these in
 parallel inside the mapInArrow partition kernel, a batch of documents
-at a time. analyze_pages runs the page stage (deskew scores, the
-page-level projection profiles and their valleys); layout_permutations
-runs the rest phase by phase, every phase one numpy pass over the whole
-batch with its documents as segments: separators, the page-level column
-estimate, the marginal split (peak search on the run-length encoding of
-the [documents x bins] profile matrix), both splitter passes, the band
-gutters, D4 boxes and cells, the region clustering, D1, D5, D6 and the
-D8 order. Segments meet through (segment, element) pair tables, keys
-searched lexicographically on (segment, value), and bincounts or
-reduceats per segment. Python loops remain only where a step is
-sequential by nature and rare: min-distance peak suppression, greedy
-merges of close candidates, and the columns a partial-width separator
-cuts. Every batched step is exact per segment, so a document's result
+at a time. Its input is one flat span table (Spans: the span columns,
+the document bounds and one page row per document), and a batch is a
+document range of it; span_table builds one from DocSpans, the
+one-document input of layout_permutation. analyze_pages runs the page
+stage (deskew scores, the page-level projection profiles and their
+valleys); layout_permutations runs the rest phase by phase, every
+phase one numpy pass over the whole batch with its documents as
+segments: separators, the page-level column estimate, the marginal
+split (peak search on the run-length encoding of the [documents x bins]
+profile matrix), both splitter passes, the band gutters, D4 boxes and
+cells, the region clustering, D1, D5, D6 and the D8 order. Segments
+meet through (segment, element) pair tables, keys searched
+lexicographically on (segment, value), and bincounts or reduceats per
+segment. Python loops remain only where a step is sequential by nature
+and rare: min-distance peak suppression, greedy merges of close
+candidates, and the columns a partial-width separator cuts. Every
+batched step is exact per segment, so a document's result
 never depends on its batch; layout_permutation is the batch of one.
 """
 
@@ -51,6 +55,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from types import SimpleNamespace
+from typing import NamedTuple
 
 import numpy as np
 
@@ -74,9 +79,69 @@ _REGION_H_RATIO = 3.0      # C16: max line-height ratio within one region (drop 
 _LINE_ROW_DIV = 1.5        # D1: same row iff gap <= median pitch / 1.5 (eynollah.py:916-922)
 
 
+#: span kinds by code; any other kind is code len(_KINDS)
+_KINDS = (KIND_TEXT, KIND_IMAGE, KIND_SEPARATOR, KIND_TABLE)
+
+
+def kind_codes(names) -> np.ndarray:
+    """The kernel's code of every kind name: its index in _KINDS, or
+    len(_KINDS) for any other kind."""
+    return np.array([_KINDS.index(k) if k in _KINDS else len(_KINDS) for k in names],
+                    dtype=np.int64)
+
+
+@dataclass
+class Spans:
+    """The layout kernel's input: a batch of documents as one flat span
+    table. Document d's spans are the rows ``[bounds[d], bounds[d+1])``
+    of the span columns; the page columns hold one value per document.
+    ``spans[a:b]`` is documents a..b-1, the span columns as views of
+    these (no copy)."""
+
+    bounds: np.ndarray         # int64, bounds[0] == 0
+    code: np.ndarray           # span kind as kind_codes gives it
+    off: np.ndarray            # span offset, int64
+    x0: np.ndarray             # span geometry, float64
+    x1: np.ndarray
+    y0: np.ndarray
+    y1: np.ndarray
+    W: np.ndarray              # per document: page size (float64),
+    H: np.ndarray              # direction and the CLI-style column-count
+    rtl: np.ndarray            # bounds (cli_layout.py:127-143; clamp
+    num_col_lower: np.ndarray  # semantics eynollah.py:411-416; 0 = unset)
+    num_col_upper: np.ndarray
+
+    def __len__(self):
+        return len(self.W)
+
+    def __getitem__(self, docs: slice) -> Spans:
+        a, b, _ = docs.indices(len(self))
+        s, e = self.bounds[a], self.bounds[b]
+        return Spans(self.bounds[a:b + 1] - s,
+                     *(v[s:e] for v in (self.code, self.off, self.x0, self.x1, self.y0, self.y1)),
+                     *(v[a:b] for v in (self.W, self.H, self.rtl, self.num_col_lower,
+                                        self.num_col_upper)))
+
+
+def span_table(docs: list[DocSpans]) -> Spans:
+    """The flat span table of one or more DocSpans, in order."""
+    names, inv = np.unique(np.concatenate([np.asarray(d.kind, dtype=object) for d in docs]),
+                           return_inverse=True)
+    cat = lambda c, dt: np.concatenate([np.asarray(getattr(d, c), dtype=dt) for d in docs])
+    return Spans(
+        np.concatenate(([0], np.cumsum([d.n for d in docs]))).astype(np.int64),
+        kind_codes(names)[inv], cat("offset", np.int64),
+        *(cat(c, float) for c in ("x0", "x1", "y0", "y1")),
+        np.array([float(d.width) for d in docs]), np.array([float(d.height) for d in docs]),
+        np.array([bool(d.rtl) for d in docs]),
+        np.array([int(d.num_col_lower or 0) for d in docs]),
+        np.array([int(d.num_col_upper or 0) for d in docs]))
+
+
 @dataclass
 class DocSpans:
-    """Flat arrays for one document (aligned by span index)."""
+    """Flat arrays for one document (aligned by span index):
+    layout_permutation's input."""
 
     kind: np.ndarray       # object array of str
     text: np.ndarray       # object array of str|None
@@ -146,13 +211,6 @@ def coverage_profiles(x0, x1, weights, bounds, width):
     d = (np.bincount(base + lo, weights=w, minlength=size)
          - np.bincount(base + hi, weights=w, minlength=size))
     return d.reshape(-1, _BINS + 1).cumsum(axis=1)[:, :-1], bins, scale
-
-
-def coverage_profile(x0, x1, weights, width):
-    """coverage_profiles for one segment: (profile, scale)."""
-    P, bins, scale = coverage_profiles(np.asarray(x0), np.asarray(x1), weights,
-                                       [0, len(x0)], [width])
-    return P[0, :bins[0]], float(scale[0])
 
 
 _GAUSS_KERNELS: dict[float, np.ndarray] = {}
@@ -832,8 +890,12 @@ def find_splitters(tx0, tx1, ty0, ty1, hseps, width, height, main_lo, main_hi,
 
 
 def _merge_vseps(seg, cx, y0, y1, width):
-    """merge_vertical_separators for S segments at once, one flat pass:
-    (seg, cx, y0, y1) of the merged separators, by segment and cx."""
+    """Collapse near-duplicate parallel rules (double-line separators are
+    common in historical prints) into one separator with the union of
+    their y-extents — mirrors the reference's morphology step that fuses
+    them into one contour (utils/__init__.py:1337-1349). For S segments
+    (pages ``width[s]`` wide) at once, one flat pass: (seg, cx, y0, y1)
+    of the merged separators, by segment and cx."""
     o = np.lexsort((cx, seg))
     d = (_GUTTER_MERGE_FRAC * np.asarray(width, dtype=float)).tolist()
     merged = []  # [seg, cx, y0, y1]
@@ -847,17 +909,6 @@ def _merge_vseps(seg, cx, y0, y1, width):
     return m[:, 0].astype(np.int64), m[:, 1], m[:, 2], m[:, 3]
 
 
-def merge_vertical_separators(vcx, vboxes, width):
-    """Collapse near-duplicate parallel rules (double-line separators are
-    common in historical prints) into one separator with the union of
-    their y-extents — mirrors the reference's morphology step that fuses
-    them into one contour (utils/__init__.py:1337-1349)."""
-    vb = np.asarray(vboxes, dtype=float).reshape(-1, 2)
-    _, cx, y0, y1 = _merge_vseps(np.zeros(len(vb), dtype=np.int64),
-                                 np.asarray(vcx, dtype=float), vb[:, 0], vb[:, 1], [width])
-    return cx.tolist(), list(zip(y0.tolist(), y1.tolist()))
-
-
 def _spanning(x0, x1, band, gx, gb, width):
     """The lines crossing >=1 gutter of their band with margin on both
     sides (the 'large components spanning >=2 columns' rule,
@@ -867,17 +918,6 @@ def _spanning(x0, x1, band, gx, gb, width):
     q, g = _pairs(band, gb)
     m = _SPAN_MARGIN_FRAC * width[q]
     return np.unique(q[(x0[q] < gx[g] - m) & (x1[q] > gx[g] + m)])
-
-
-def spanning_lines(tx0, tx1, gutters, width):
-    """Mask of lines crossing >=1 column gutter with margin on both sides;
-    the batch of one of find_splitters' pass-2 rule (_spanning)."""
-    x0 = np.asarray(tx0, dtype=float)
-    g = np.asarray(gutters, dtype=float)
-    mask = np.zeros(len(x0), dtype=bool)
-    mask[_spanning(x0, np.asarray(tx1, dtype=float), np.zeros(len(x0), dtype=np.int64),
-                   g, np.array([0, len(g)]), np.full(len(x0), float(width)))] = True
-    return mask
 
 
 # ------------------------------------------------- region clustering (C16) ---
@@ -1166,40 +1206,14 @@ def order_lines_in_region(cx, cy, rtl, off=None, bounds=None):
     return np.lexsort((np.asarray(off), xkey, rows))
 
 
-def layout_document(doc: DocSpans):
-    """Full per-document pipeline; returns (perm, out_kind) where perm is
-    the index permutation of doc spans in final reading order and
-    out_kind the (possibly refined) kind per *output* position."""
-    perm, marg_mask = layout_permutation(doc)
-    out_kind = doc.kind[perm].copy() if len(perm) else np.array([], dtype=object)
-    out_kind[marg_mask] = KIND_MARGINALIA
-    return perm, out_kind
-
-
-#: span kinds by code; any other kind is code len(_KINDS)
-_KINDS = (KIND_TEXT, KIND_IMAGE, KIND_SEPARATOR, KIND_TABLE)
-
-
 @dataclass
-class Pages:
-    """analyze_pages' result for a batch of documents, as flat arrays:
-    document d's spans are ``[bounds[d], bounds[d+1])``, its text lines
-    ``ti[tb[d]:tb[d+1]]``."""
+class Pages(Spans):
+    """analyze_pages' result for a batch of documents: its Spans with the
+    geometry deskewed, plus the page stage's results. Document d's text
+    lines are the spans ``ti[tb[d]:tb[d+1]]``."""
 
-    bounds: np.ndarray
-    code: np.ndarray        # span kind as an index into _KINDS
-    off: np.ndarray         # span offset, int64
-    x0: np.ndarray          # geometry after deskew, float64
-    x1: np.ndarray
-    y0: np.ndarray
-    y1: np.ndarray
-    cx: np.ndarray
+    cx: np.ndarray          # span centers, after deskew
     cy: np.ndarray
-    W: np.ndarray           # per document: page size, direction and
-    H: np.ndarray           # num_col bounds
-    rtl: np.ndarray
-    num_col_lower: np.ndarray
-    num_col_upper: np.ndarray
     ti: np.ndarray
     tb: np.ndarray
     lo: np.ndarray          # x extent of each document's text lines
@@ -1208,7 +1222,7 @@ class Pages:
     margins: tuple          # _marginal_profiles, segments as documents
 
 
-def analyze_pages(docs: list[DocSpans]) -> Pages:
+def analyze_pages(spans: Spans) -> Pages:
     """The page-analysis phases that need nothing from the per-document
     remainder, run once for a batch of documents: C6 deskew (coarse and
     fine angle scores; the rotation itself is per document) and the
@@ -1218,19 +1232,11 @@ def analyze_pages(docs: list[DocSpans]) -> Pages:
     others share its batch."""
     from eynollah_spark.kernels.deskew import estimate_skews, rotate_boxes
 
-    D = len(docs)
-    n = np.array([d.n for d in docs], dtype=np.int64)
-    bounds = np.concatenate(([0], np.cumsum(n)))
-    kind = np.concatenate([d.kind for d in docs])
-    code = np.full(len(kind), len(_KINDS), dtype=np.int64)
-    for c, k in enumerate(_KINDS):
-        code[kind == k] = c
-    x0, x1, y0, y1 = (np.concatenate([np.asarray(getattr(d, c), dtype=float)
-                                      for d in docs])
-                      for c in ("x0", "x1", "y0", "y1"))
-    W = np.array([float(d.width) for d in docs])
-    H = np.array([float(d.height) for d in docs])
-    ti = (code == 0).nonzero()[0]
+    D = len(spans)
+    bounds, W, H = spans.bounds, spans.W, spans.H
+    # copies: the rotation below writes them, and the table is the caller's
+    x0, x1, y0, y1 = (v.copy() for v in (spans.x0, spans.x1, spans.y0, spans.y1))
+    ti = (spans.code == 0).nonzero()[0]
     tb = np.searchsorted(ti, bounds)
 
     # --- C6/C8 deskew: estimate page skew from text-line sharpness and
@@ -1255,48 +1261,19 @@ def analyze_pages(docs: list[DocSpans]) -> Pages:
         valleys = (vx, has[vseg], ok)
         margins = _marginal_profiles(tx0, tx1, ty0, ty1, hb, W[has], H[has])
         margins = (has[margins[0]], *margins[1:])
-    return Pages(
-        bounds, code, np.concatenate([np.asarray(d.offset, dtype=np.int64) for d in docs]),
-        x0, x1, y0, y1, (x0 + x1) / 2.0, (y0 + y1) / 2.0, W, H,
-        np.array([bool(d.rtl) for d in docs]),
-        np.array([int(d.num_col_lower or 0) for d in docs]),
-        np.array([int(d.num_col_upper or 0) for d in docs]),
-        ti, tb, lo, hi, valleys, margins)
+    return Pages(**{**vars(spans), "x0": x0, "x1": x1, "y0": y0, "y1": y1},
+                 cx=(x0 + x1) / 2.0, cy=(y0 + y1) / 2.0, ti=ti, tb=tb, lo=lo, hi=hi,
+                 valleys=valleys, margins=margins)
 
 
-@dataclass
-class BatchOrder:
+class BatchOrder(NamedTuple):
     """layout_permutations' result: every document's spans in reading
-    order, as spans of the batch (document d's being ``[bounds[d],
-    bounds[d+1])``), document by document, ``counts[d]`` of them, with a
-    marginalia flag each. ``order[d]`` and iterating give each
-    document's (perm, marg_mask), perm indexing its own spans."""
+    order, document by document, as rows of the batch's span table,
+    ``counts[d]`` of them for document d, with a marginalia flag each."""
 
     perm: np.ndarray
     marg: np.ndarray
     counts: np.ndarray
-    bounds: np.ndarray
-
-    def __len__(self):
-        return len(self.counts)
-
-    def __getitem__(self, d):
-        if not 0 <= d < len(self):
-            raise IndexError(d)
-        a = int(self.counts[:d].sum())
-        b = a + int(self.counts[d])
-        return self.perm[a:b] - self.bounds[d], self.marg[a:b]
-
-    @classmethod
-    def concat(cls, parts):
-        """The BatchOrder of the documents of ``parts``, in order."""
-        n = np.array([p.bounds[-1] for p in parts], dtype=np.int64)
-        first = np.concatenate(([0], np.cumsum(n)[:-1]))
-        return cls(
-            np.concatenate([p.perm + f for p, f in zip(parts, first)]),
-            np.concatenate([p.marg for p in parts]),
-            np.concatenate([p.counts for p in parts]),
-            np.concatenate([[0]] + [p.bounds[1:] + f for p, f in zip(parts, first)]))
 
 
 def layout_permutation(doc: DocSpans):
@@ -1310,17 +1287,18 @@ def layout_permutation(doc: DocSpans):
     Serialization order per D8 (utils/xml.py:49-66, writer.py:184-290):
     marg-L -> ordered text -> marg-R -> images -> separators -> tables.
     """
-    return layout_permutations([doc])[0]
+    order = layout_permutations(span_table([doc]))
+    return order.perm, order.marg
 
 
-def layout_permutations(docs: list[DocSpans], pages: Pages | None = None) -> BatchOrder:
+def layout_permutations(spans: Spans, pages: Pages | None = None) -> BatchOrder:
     """layout_permutation of a batch of documents, run phase by phase,
     each phase once for the whole batch with the documents as segments.
-    ``pages`` is analyze_pages(docs), computed here if not given. Every
+    ``pages`` is analyze_pages(spans), computed here if not given. Every
     batched step is exact per document, so a document's result does not
     depend on which others share its batch."""
     if pages is None:
-        pages = analyze_pages(docs)
+        pages = analyze_pages(spans)
     return _serialize(pages, _layout_batch(pages))
 
 
@@ -1417,7 +1395,7 @@ def _serialize(p: Pages, st) -> BatchOrder:
     o = o[part[o] < 6]
     marg = np.zeros(len(part), dtype=bool)
     marg[st.margs] = True
-    return BatchOrder(o, marg[o], np.bincount(seg[o], minlength=len(p.W)), p.bounds)
+    return BatchOrder(o, marg[o], np.bincount(seg[o], minlength=len(p.W)))
 
 
 def _order_marginals(X, off, regions, W):

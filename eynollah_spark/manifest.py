@@ -23,7 +23,8 @@ catalog jar):
 
 A batch is one Spark job whose tasks run the layout kernel, write one
 file per (task, bucket) and return its lineage row (docs, spans, kind
-histogram, quarantined docs); the driver sums these into the manifest.
+histogram, quarantined docs and their exception classes); the Spark
+driver process sums these into the manifest.
 As in Iceberg's manifests, file stats are recorded at commit time, with
 no re-read.
 
@@ -207,13 +208,16 @@ def _bucket_writer(snap_dir: str, kernel_kwargs: dict):
         res = layout_partition(batches, fail_fast=False, **kernel_kwargs)
         if res is None:
             return
-        col, starts, counts, take, marg, status = res
+        col, starts, counts, take, marg, failed = res
         take = pa.array(take)
         out = _flat_output(col, starts, counts, take, pa.array(marg),
                            include_payload=True)
         part = pc.take(col["part"], take)
-        doc_part = pc.take(col["part"], pa.array(starts)).to_pylist()
-        quarantined = Counter(p for p, st in zip(doc_part, status) if st)
+        # the quarantined documents' exception classes, by bucket
+        causes = {}
+        failed_part = pc.take(col["part"], pa.array(starts[list(failed)], type=pa.int64()))
+        for p, cls in zip(failed_part.to_pylist(), failed.values()):
+            causes.setdefault(p, Counter())[cls] += 1
         task = TaskContext.get().partitionId()
         lineage = []
         for p in pc.unique(part).to_pylist():
@@ -227,7 +231,8 @@ def _bucket_writer(snap_dir: str, kernel_kwargs: dict):
                 "kind_hist": json.dumps(dict(zip(
                     hist.field("values").to_pylist(),
                     hist.field("counts").to_pylist()))),
-                "quarantined": quarantined[p]})
+                "quarantined": sum(causes.get(p, {}).values()),
+                "quarantine_causes": json.dumps(dict(causes.get(p, {})))})
         if lineage:
             yield pa.RecordBatch.from_pylist(lineage)
 
@@ -240,12 +245,14 @@ def run_extraction(docs: DataFrame, out_path: str, n_parts: int = 8,
     """Extract with per-bucket checkpointing; resumable.
 
     Returns summary metrics (``quarantined``: documents the kernel failed
-    on, emitted in offset order). Re-running after a failure skips buckets
-    already recorded in the manifest. Each batch of `parts_per_batch`
-    buckets is one Spark job over extract()'s plan and flat kernel
-    (`partitions`; `extract_kwargs`: num_col_lower, num_col_upper,
-    printspace_margin) with fail_fast=False, whose tasks write the
-    snapshot's data files and return the lineage the manifest commits.
+    on, emitted in offset order; ``quarantine_causes``: their count by
+    exception class, as in each manifest part entry). Re-running after a
+    failure skips buckets already recorded in the manifest. Each batch of
+    `parts_per_batch` buckets is one Spark job over extract()'s plan and
+    flat kernel (`partitions`; `extract_kwargs`: num_col_lower,
+    num_col_upper, printspace_margin) with fail_fast=False, whose tasks
+    write the snapshot's data files and return the lineage the manifest
+    commits.
     """
     kw = dict(extract_kwargs or {})
     margin = kw.pop("printspace_margin", 0.0)
@@ -253,7 +260,7 @@ def run_extraction(docs: DataFrame, out_path: str, n_parts: int = 8,
     done = completed_parts(out_path)
     todo = [p for p in range(n_parts) if p not in done]
     summary = {"n_parts": n_parts, "skipped": len(done), "processed": 0,
-               "docs": 0, "spans": 0, "quarantined": 0}
+               "docs": 0, "spans": 0, "quarantined": 0, "quarantine_causes": Counter()}
     os.makedirs(_manifest_path(out_path), exist_ok=True)
     for i in range(0, len(todo), parts_per_batch):
         batch = todo[i:i + parts_per_batch]
@@ -263,22 +270,25 @@ def run_extraction(docs: DataFrame, out_path: str, n_parts: int = 8,
         rows = (flat.withColumn("part", bucket)
                 .mapInArrow(_bucket_writer(_snap_dir(out_path, sid), kw),
                             "part long, spans long, docs long, kind_hist string, "
-                            "quarantined long")
+                            "quarantined long, quarantine_causes string")
                 .collect())
         parts_meta = {p: {"docs": 0, "spans": 0, "kind_hist": Counter(),
-                          "quarantined": 0} for p in batch}
+                          "quarantined": 0, "quarantine_causes": Counter()}
+                      for p in batch}
         for r in rows:
             m = parts_meta[r["part"]]
             for k in ("docs", "spans", "quarantined"):
                 m[k] += r[k]
             m["kind_hist"].update(json.loads(r["kind_hist"]))
+            m["quarantine_causes"].update(json.loads(r["quarantine_causes"]))
         wall = time.time() - t0
         for m in parts_meta.values():
             m["kind_hist"] = json.dumps(dict(sorted(m["kind_hist"].items())),
                                         separators=(",", ":"))
             m["wall_sec"] = round(wall / len(batch), 3)
-            for k in ("docs", "spans", "quarantined"):
+            for k in ("docs", "spans", "quarantined", "quarantine_causes"):
                 summary[k] += m[k]
+            m["quarantine_causes"] = dict(sorted(m["quarantine_causes"].items()))
         summary["processed"] += len(batch)
         manifest = {
             "snapshot_id": sid,
@@ -293,4 +303,5 @@ def run_extraction(docs: DataFrame, out_path: str, n_parts: int = 8,
             f.write(json.dumps(manifest) + "\n")
         os.rename(tmp, os.path.join(_manifest_path(out_path), f"snap-{sid:06d}.json"))
         summary.setdefault("snapshot_ids", []).append(sid)
+    summary["quarantine_causes"] = dict(sorted(summary["quarantine_causes"].items()))
     return summary

@@ -13,22 +13,27 @@ Stage plan (explicit shuffle boundaries, SURVEY.md §3.1 lifecycle):
        sort — canonical order, so the output is bitwise-deterministic
        however the rows were ordered or batched, with no Spark sort
        stage and no carry-over between batches; each document is then
-       a contiguous run for the per-document kernel; numerics reach
-       numpy once per partition, payload strings are permuted C++-side
+       a contiguous run of rows; payload strings are permuted C++-side
        and never materialize in Python)
-         - batches of 64 documents: kernels.layout.analyze_pages (the
-           page stage: deskew angle scores, page-level projection
-           profiles, smoothing and valleys), then
-           kernels.layout.layout_permutations (the rest, phase by
-           phase, each phase one numpy pass over the batch with the
-           documents as segments). It returns the batch's output spans
-           in reading order as one array, which indexes the
-           partition's valid rows directly. Each document's result is
-           bit-identical to running it alone;
+         - the kernel's input is one flat span table
+           (kernels.layout.Spans): the partition's valid (non-null kind)
+           rows, each column gathered into numpy once, kinds as codes of
+           the Arrow dictionary's entries, plus the document bounds and
+           each document's page size, direction and num_col bounds;
+         - ranges of 64 documents of that table (slices, no copy):
+           kernels.layout.analyze_pages (the page stage: deskew angle
+           scores, page-level projection profiles, smoothing and
+           valleys), then kernels.layout.layout_permutations (the rest,
+           phase by phase, each phase one numpy pass over the batch with
+           the documents as segments). It returns the batch's output
+           spans in reading order as rows of the table, which map to
+           the partition's rows with one gather. Each document's result
+           is bit-identical to running it alone;
          - a batch that raises anywhere is re-run one document at a
-           time, and a document that still raises is quarantined: it
-           falls back to offset order and its status is counted (the
-           manifest records the count per bucket).
+           time, as one-document slices of the same table, and a
+           document that still raises is quarantined: it falls back to
+           offset order and its exception class is counted (the manifest
+           records the count per bucket and class).
     -> sink (flat rows, or nested out_spans lists built in-kernel from
        the same permutation)
 
@@ -50,7 +55,7 @@ from pyspark.sql import DataFrame, functions as F
 # layout_permutation is bound here for perfbench's kernel tracing, which
 # patches this module's attribute
 from eynollah_spark.kernels.layout import (  # noqa: F401
-    BatchOrder, DocSpans, analyze_pages, layout_permutation, layout_permutations)
+    Spans, analyze_pages, kind_codes, layout_permutation, layout_permutations)
 from eynollah_spark.schemas import FLAT_OUT_SCHEMA, OUT_SCHEMA
 
 
@@ -123,27 +128,33 @@ def flatten(df: DataFrame) -> DataFrame:
 _PAGE_BATCH = 64
 
 
-def _safe_permutations(docs: list[DocSpans], fail_fast: bool):
-    """The layout kernel over one batch of documents, with per-document
-    failure quarantine: at 10^12 docs a single pathological page must not
-    kill the job (the reference's halt_fail global abort,
+def _safe_permutations(spans: Spans, a: int, b: int, fail_fast: bool):
+    """The layout kernel over documents ``[a, b)`` of the span table, with
+    per-document failure quarantine: at 10^12 docs a single pathological
+    page must not kill the job (the reference's halt_fail global abort,
     eynollah.py:2023-2028, is replaced by degrade-and-continue). If the
     batch raises, in analyze_pages or layout_permutations, each document
     is re-run alone; one that still raises falls back to input-offset
-    order (total, kinds unchanged). Returns (the batch's BatchOrder,
-    status per document: None, or the class name of the exception that
-    quarantined it). fail_fast=True (tests/CI) re-raises instead."""
+    order (total, kinds unchanged). Returns (take, marg, counts, failed):
+    the documents' output spans in reading order as rows of ``spans``,
+    their marginalia flags, each document's number of output spans, and
+    {document: the class name of the exception that quarantined it}.
+    fail_fast=True (tests/CI) re-raises instead."""
+    batch = spans[a:b]
     try:
-        return layout_permutations(docs, analyze_pages(docs)), [None] * len(docs)
+        order = layout_permutations(batch, analyze_pages(batch))
+        return order.perm + spans.bounds[a], order.marg, order.counts, {}
     except Exception as e:
         if fail_fast:
             raise
-        if len(docs) > 1:
-            alone = [_safe_permutations([d], fail_fast) for d in docs]
-            return BatchOrder.concat([r[0] for r in alone]), [r[1][0] for r in alone]
-        perm = np.argsort(docs[0].offset, kind="stable").astype(np.int64)
-        return (BatchOrder(perm, np.zeros(len(perm), dtype=bool), np.array([len(perm)]),
-                           np.array([0, len(perm)])), [type(e).__name__])
+        if b - a > 1:
+            take, marg, counts, failed = zip(*(_safe_permutations(spans, d, d + 1, fail_fast)
+                                               for d in range(a, b)))
+            return (np.concatenate(take), np.concatenate(marg), np.concatenate(counts),
+                    {d: cls for f in failed for d, cls in f.items()})
+        s, n = spans.bounds[a], len(batch.off)
+        return (s + np.argsort(batch.off, kind="stable"), np.zeros(n, dtype=bool),
+                np.array([n]), {a: type(e).__name__})
 
 
 def _np(col, fill=0, dtype=np.float64) -> np.ndarray:
@@ -156,52 +167,37 @@ def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper:
     documents at a time. Returns (starts, counts, take, marg, status):
     each document's first row, its number of output spans (0 for an
     empty document: null-kind rows only), for all output spans in reading
-    order their row index and marginalia flag, and each document's
-    _safe_permutations status (None unless quarantined)."""
+    order their row index and marginalia flag, and the documents
+    _safe_permutations quarantined ({document: exception class name})."""
     ids = col["doc_id"]
-    n = len(ids)
     change = pc.not_equal(ids[1:], ids[:-1]).to_numpy(zero_copy_only=False).nonzero()[0] + 1
     starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [n]))
-    # kinds as dictionary codes: one Python str per distinct kind, not per row
-    kd = pc.dictionary_encode(col["kind"])
-    kind = np.asarray(kd.dictionary.to_pylist() or [""], dtype=object)[
-        _np(kd.indices, 0, np.int64)]
-    valid = pc.is_valid(col["kind"]).to_numpy(zero_copy_only=False)
-    offs = _np(col["offset"], -1, np.int64)
-    x0, x1, y0, y1 = (_np(col[c]) for c in ("x0", "x1", "y0", "y1"))
-    width = _np(col["width"], 1, np.int64)[starts].tolist()
-    height = _np(col["height"], 1, np.int64)[starts].tolist()
-    rtl = _np(col["rtl"], False, np.bool_)[starts].tolist()
-    # rows of each document's spans (a slice unless it has null-kind
-    # rows); the valid rows of all documents are the kernel's spans, so a
-    # batch's output spans index them directly
-    nvalid = np.add.reduceat(valid, starts, dtype=np.int64)
-    rows = [(k, slice(s, e) if nv == e - s else s + valid[s:e].nonzero()[0])
-            for k, (s, e, nv) in enumerate(zip(starts.tolist(), ends.tolist(),
-                                                nvalid.tolist())) if nv]
-    spans = valid.nonzero()[0]
     counts = np.zeros(len(starts), dtype=np.int64)
-    status = [None] * len(starts)
-    take_l, marg_l = [np.empty(0, np.int64)], [np.empty(0, bool)]
-    first = 0
-    for b in range(0, len(rows), _PAGE_BATCH):
-        batch = rows[b:b + _PAGE_BATCH]
-        docs = [DocSpans(
-            kind=kind[idx], text=None, media_ref=None,
-            offset=offs[idx], x0=x0[idx], x1=x1[idx], y0=y0[idx], y1=y1[idx],
-            width=width[k], height=height[k], rtl=rtl[k],
-            num_col_lower=num_col_lower, num_col_upper=num_col_upper,
-        ) for k, idx in batch]
-        order, st = _safe_permutations(docs, fail_fast)
-        take_l.append(spans[first + order.perm])
-        marg_l.append(order.marg)
-        first += int(order.bounds[-1])
-        ks = [k for k, _ in batch]
-        counts[ks] = order.counts
-        for k, st_k in zip(ks, st):
-            status[k] = st_k
-    return starts, counts, np.concatenate(take_l), np.concatenate(marg_l), status
+    # the kernel's span table: the valid rows, each column gathered once,
+    # of the documents that have any; kinds as codes of the dictionary
+    # entries, with no Python str per row
+    valid = pc.is_valid(col["kind"]).to_numpy(zero_copy_only=False)
+    rows = valid.nonzero()[0]
+    nvalid = np.add.reduceat(valid, starts, dtype=np.int64)
+    docs = nvalid.nonzero()[0]
+    if not len(docs):
+        return starts, counts, rows, np.zeros(0, dtype=bool), {}
+    first, D = starts[docs], len(docs)
+    kd = pc.dictionary_encode(col["kind"])
+    spans = Spans(
+        np.concatenate(([0], np.cumsum(nvalid[docs]))),
+        kind_codes(kd.dictionary.to_pylist())[_np(kd.indices, 0, np.int64)[rows]],
+        _np(col["offset"], -1, np.int64)[rows],
+        *(_np(col[c])[rows] for c in ("x0", "x1", "y0", "y1")),
+        _np(col["width"], 1, np.int64)[first].astype(float),
+        _np(col["height"], 1, np.int64)[first].astype(float),
+        _np(col["rtl"], False, np.bool_)[first],
+        np.full(D, num_col_lower), np.full(D, num_col_upper))
+    take, marg, cnt, failed = zip(*(_safe_permutations(spans, a, min(a + _PAGE_BATCH, D), fail_fast)
+                                    for a in range(0, D, _PAGE_BATCH)))
+    counts[docs] = np.concatenate(cnt)
+    return (starts, counts, rows[np.concatenate(take)], np.concatenate(marg),
+            {int(docs[d]): cls for f in failed for d, cls in f.items()})
 
 
 def _ords(counts: np.ndarray) -> np.ndarray:

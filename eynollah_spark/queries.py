@@ -1388,11 +1388,12 @@ _fn("dedup_embedding_neardup", ("embeddings",), _emb_nd_spark,
 
 _both("tpch_q1_pricing", ("lineitem",), lambda d: """
 SELECT l_returnflag, l_linestatus,
-       ROUND(SUM(l_quantity), 2) AS sum_qty,
-       ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       ROUND(AVG(l_quantity), 4) AS avg_qty,
-       ROUND(AVG(l_discount), 4) AS avg_disc,
+       CAST(ROUND(CAST(SUM(l_quantity) AS DECIMAL(38,6)), 2) AS DOUBLE) AS sum_qty,
+       CAST(ROUND(CAST(SUM(l_extendedprice) AS DECIMAL(38,6)), 2) AS DOUBLE) AS sum_base_price,
+       CAST(ROUND(CAST(SUM(l_extendedprice * (1 - l_discount)) AS DECIMAL(38,6)), 2)
+            AS DOUBLE) AS sum_disc_price,
+       CAST(ROUND(CAST(AVG(l_quantity) AS DECIMAL(38,6)), 4) AS DOUBLE) AS avg_qty,
+       CAST(ROUND(CAST(AVG(l_discount) AS DECIMAL(38,6)), 4) AS DOUBLE) AS avg_disc,
        COUNT(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -1415,6 +1416,8 @@ LIMIT 10
 # revenue rounds a DECIMAL(38,6) cast: ROUND(double) rounds a half-cent
 # tie up in Spark (through a decimal) and down in DuckDB (0.285 is
 # 0.28499999999999998), so the two engines would disagree by 0.01.
+# tpch_q1_pricing (sums and averages), events_hourly_window,
+# tpch_q6_revenue_delta and rollup_region_nation round the same way.
 
 # (The r3 `join_region_nation_rollup` flat star-join aggregate was a
 # grouping-set subset of rollup_region_nation below and was
@@ -1422,11 +1425,11 @@ LIMIT 10
 
 _both("events_hourly_window", ("events",), lambda d: """
 SELECT date_trunc('hour', ts) AS hour, event_type,
-       COUNT(*) AS n, ROUND(SUM(value), 2) AS sum_value
+       COUNT(*) AS n,
+       CAST(ROUND(CAST(SUM(value) AS DECIMAL(38,6)), 2) AS DOUBLE) AS sum_value
 FROM events GROUP BY date_trunc('hour', ts), event_type
 """)
-# the batch shape of the streaming tumbling-window aggregation (the
-# streaming module runs the same plan over readStream).
+# a tumbling one-hour window as a plain GROUP BY.
 
 _both("events_sessionize", ("events",), lambda d: """
 WITH gaps AS (
@@ -1442,14 +1445,14 @@ FROM gaps GROUP BY user_id
     " / 1e6"
     if d == "spark" else
     "epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))")))
-# session windows via lag + running-flag cumsum (the batch equivalent of
-# the streaming sessionizer). The Spark gap is an exact microsecond
+# session windows via lag + running-flag cumsum. The Spark gap is an exact microsecond
 # difference, matching DuckDB's fractional epoch(): whole-second
 # unix_timestamp put a 1800.5 s gap in the old session. timestampdiff,
 # not unix_micros, because the tables' ts reads as TIMESTAMP_NTZ.
 
 _both("tpch_q6_revenue_delta", ("lineitem",), lambda d: """
-SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue
+SELECT CAST(ROUND(CAST(SUM(l_extendedprice * l_discount) AS DECIMAL(38,6)), 2)
+            AS DOUBLE) AS revenue
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1994-01-01 00:00:00'
   AND l_shipdate < TIMESTAMP '1995-01-01 00:00:00'
@@ -1468,7 +1471,7 @@ GROUP BY o.o_orderpriority
 _both("rollup_region_nation", ("region", "nation", "customer"), lambda d: """
 SELECT COALESCE(r.r_name, 'ALL') AS region, COALESCE(n.n_name, 'ALL') AS nation,
        COUNT(*) AS n_cust,
-       ROUND(SUM(c.c_acctbal), 2) AS sum_bal
+       CAST(ROUND(CAST(SUM(c.c_acctbal) AS DECIMAL(38,6)), 2) AS DOUBLE) AS sum_bal
 FROM customer c
 JOIN nation n ON n.n_nationkey = c.c_nationkey
 JOIN region r ON r.r_regionkey = n.n_regionkey

@@ -4,23 +4,15 @@ exact sequence from geometry alone (FIXTURES.md §4)."""
 
 import numpy as np
 import pytest
+from page_helpers import corpus_page, reading_order
 
 from eynollah_spark.corpus import gen_doc
-from eynollah_spark.kernels.layout import DocSpans, layout_document
 
 
 def run_doc(d):
-    arrs, meta = gen_doc(d)
-    n = len(arrs["kind"])
-    doc = DocSpans(
-        kind=arrs["kind"], text=arrs["text"], media_ref=arrs["media_ref"],
-        offset=arrs["offset"],
-        x0=arrs["x0"].astype(float), x1=arrs["x1"].astype(float),
-        y0=arrs["y0"].astype(float), y1=arrs["y1"].astype(float),
-        width=meta["width"], height=meta["height"], rtl=meta["rtl"],
-    )
-    perm, kinds = layout_document(doc)
-    return arrs, perm, kinds, n
+    doc, arrs = corpus_page(d)
+    perm, kinds = reading_order(doc)
+    return arrs, perm, kinds, doc.n
 
 
 # one doc per archetype bucket boundary + rtl + degenerate

@@ -2,9 +2,9 @@
 span domain): a drop capital must end up ordered immediately BEFORE its
 paragraph's first line (VERDICT r1 item 6)."""
 
+from page_helpers import reference_page
 from pyspark.sql import functions as F
 
-from eynollah_spark.fixtures import load_fixture
 from eynollah_spark.pagexml import attach_geometry
 from eynollah_spark.pipeline import extract_flat_input
 from eynollah_spark.scorer import adhere_drop_capitals, refine_kinds
@@ -78,7 +78,7 @@ def test_pipeline_cap_before_first_line(spark):
 def test_kant_with_planted_cap(spark):
     """Plant a cap on the reference kant page at the first body line and
     require it to adhere directly before that line."""
-    doc = load_fixture("kant_0020")
+    doc = reference_page("kant_0020")
     first = next(s for s in doc.expected)
     target = next(s for s in doc.spans if s[3] == first[3])
     _k, _t, _m, off, x0, x1, y0, y1 = target

@@ -9,9 +9,10 @@ import os
 
 import numpy as np
 import pytest
+from page_helpers import corpus_page, reading_order, reference_page, require_reference_pages
 
-from eynollah_spark.fixtures import FIXTURE_FILES, load_fixture
-from eynollah_spark.kernels.layout import DocSpans, layout_document
+from eynollah_spark.fixtures import FIXTURE_FILES
+from eynollah_spark.kernels.layout import DocSpans
 
 ART = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    ".cache", "fixture_margins.json")
@@ -29,7 +30,7 @@ def _arrays(doc):
 
 def _sequence(a):
     d = DocSpans(**a)
-    perm, kinds = layout_document(d)
+    perm, kinds = reading_order(d)
     return [(kinds[p], a["text"][i], int(a["offset"][i]))
             for p, i in enumerate(perm)]
 
@@ -48,7 +49,7 @@ def _jitter(a, amp, seed):
 
 
 def _margin(doc_id):
-    a = _arrays(load_fixture(doc_id))
+    a = _arrays(reference_page(doc_id))
     base = _sequence(a)
     margin = 0
     for amp in AMPLITUDES:
@@ -61,6 +62,7 @@ def _margin(doc_id):
 
 
 def test_fixture_margins_recorded_and_not_knife_edge():
+    require_reference_pages()
     margins = {doc_id: _margin(doc_id) for doc_id in FIXTURE_FILES}
     os.makedirs(os.path.dirname(ART), exist_ok=True)
     with open(ART, "w") as f:
@@ -75,7 +77,23 @@ def test_fixture_margins_recorded_and_not_knife_edge():
 @pytest.mark.parametrize("doc_id", list(FIXTURE_FILES))
 def test_small_jitter_invariance(doc_id):
     """±1 px jitter never changes the output sequence — the hard floor."""
-    a = _arrays(load_fixture(doc_id))
+    a = _arrays(reference_page(doc_id))
+    base = _sequence(a)
+    for s in range(SAMPLES):
+        assert _sequence(_jitter(a, 1, 77 + s)) == base
+
+
+@pytest.mark.parametrize("doc_index", [0, 3, 7, 40, 66, 80])
+def test_small_jitter_invariance_generated(doc_index):
+    """The same floor on generated text pages: single column, its
+    skewed and RTL variants, two columns, columns + marginalia and
+    multi-column bands (corpus.py archetypes). Media pages are not
+    among them: D8 orders the media tail by exact center (cy, cx), as
+    the reference's writer does, so ±1 px moves images that share a
+    row past each other."""
+    d, _ = corpus_page(doc_index)
+    a = {k: getattr(d, k) for k in ("kind", "text", "media_ref", "offset", "x0", "x1",
+                                    "y0", "y1", "width", "height", "rtl")}
     base = _sequence(a)
     for s in range(SAMPLES):
         assert _sequence(_jitter(a, 1, 77 + s)) == base

@@ -3,16 +3,20 @@ kernel must reproduce the reference's PAGE-XML reading order on its own
 ground-truth test pages, span for span on (kind, text, media_ref, order).
 """
 
+import dataclasses
+
 import numpy as np
 import pytest
+from page_helpers import (corpus_page, reading_order, reference_page,
+                          require_reference_pages)
 
-from eynollah_spark.fixtures import FIXTURE_FILES, load_fixture
+from eynollah_spark.fixtures import FIXTURE_FILES
 from eynollah_spark.kernels.layout import (
     DocSpans,
     cluster_lines_into_regions,
     find_gutters,
-    layout_document,
     order_lines_in_region,
+    span_table,
     split_main_and_marginal,
 )
 
@@ -28,9 +32,9 @@ def doc_to_arrays(doc):
 
 @pytest.mark.parametrize("doc_id", list(FIXTURE_FILES))
 def test_reference_fixture_span_sequence(doc_id):
-    doc = load_fixture(doc_id)
+    doc = reference_page(doc_id)
     d = doc_to_arrays(doc)
-    perm, kinds = layout_document(d)
+    perm, kinds = reading_order(d)
     got = [
         (kinds[p], d.text[i], d.media_ref[i], int(d.offset[i]))
         for p, i in enumerate(perm)
@@ -41,10 +45,25 @@ def test_reference_fixture_span_sequence(doc_id):
 def test_every_span_emitted_exactly_once():
     # property mirrored from the reference's own assertion
     # (utils/__init__.py:1139-1143: every region indexed exactly once)
+    require_reference_pages()
     for doc_id in FIXTURE_FILES:
-        d = doc_to_arrays(load_fixture(doc_id))
-        perm, _ = layout_document(d)
+        d = doc_to_arrays(reference_page(doc_id))
+        perm, _ = reading_order(d)
         assert sorted(perm.tolist()) == list(range(d.n))
+
+
+#: generated pages, one per archetype (corpus.py): single column, its
+#: skewed and RTL variants, two columns, columns + marginalia, multi-
+#: column bands, text + media, the media-heavy tail, an all-separator
+#: page and a one-line page
+_ARCHETYPES = [0, 3, 7, 40, 66, 80, 85, 93, 98, 199]
+
+
+@pytest.mark.parametrize("doc_index", _ARCHETYPES)
+def test_every_span_emitted_exactly_once_generated(doc_index):
+    d, _ = corpus_page(doc_index)
+    perm, _ = reading_order(d)
+    assert d.n and sorted(perm.tolist()) == list(range(d.n))
 
 
 def test_empty_and_degenerate_docs():
@@ -52,7 +71,7 @@ def test_empty_and_degenerate_docs():
                      offset=np.array([], dtype=np.int64),
                      x0=np.array([]), x1=np.array([]), y0=np.array([]), y1=np.array([]),
                      width=1000, height=1000)
-    perm, kinds = layout_document(empty)
+    perm, kinds = reading_order(empty)
     assert len(perm) == 0
     one = DocSpans(
         kind=np.array(["text"], dtype=object),
@@ -63,7 +82,7 @@ def test_empty_and_degenerate_docs():
         y0=np.array([10.0]), y1=np.array([40.0]),
         width=1000, height=1000,
     )
-    perm, kinds = layout_document(one)
+    perm, kinds = reading_order(one)
     assert perm.tolist() == [0] and kinds[0] == "text"
 
 
@@ -75,27 +94,42 @@ def test_single_num_col_bound_pins_not_clamps():
     for num_col <= 2) even on a page whose auto-estimate is 1-2 columns,
     where a mere upper-clamp would leave the estimate (and the
     marginalia) unchanged."""
-    import dataclasses
-
+    require_reference_pages()
     base = None
     for doc_id in FIXTURE_FILES:
-        d = doc_to_arrays(load_fixture(doc_id))
-        _, kinds = layout_document(d)
+        d = doc_to_arrays(reference_page(doc_id))
+        _, kinds = reading_order(d)
         if "marginalia" in set(kinds):
             base = d
             break
     assert base is not None, "no fixture page with marginalia"
+    _check_single_bound_pins(base)
+
+
+def _check_single_bound_pins(base):
     # upper-only pins num_col to 3 -> marginalia channel off
-    _, k_up = layout_document(dataclasses.replace(base, num_col_upper=3))
+    _, k_up = reading_order(dataclasses.replace(base, num_col_upper=3))
     assert "marginalia" not in set(k_up)
     # lower-only pins likewise
-    _, k_lo = layout_document(dataclasses.replace(base, num_col_lower=3))
+    _, k_lo = reading_order(dataclasses.replace(base, num_col_lower=3))
     assert "marginalia" not in set(k_lo)
     # both set and UNEQUAL -> clamp only; a [1,2] clamp spans the
     # auto-estimate so the page is unchanged, marginalia survives
-    _, k_cl = layout_document(dataclasses.replace(base, num_col_lower=1,
-                                                  num_col_upper=2))
+    _, k_cl = reading_order(dataclasses.replace(base, num_col_lower=1,
+                                                num_col_upper=2))
     assert "marginalia" in set(k_cl)
+
+
+def test_single_num_col_bound_pins_not_clamps_generated():
+    """The same on a generated two-column page with marginalia, whose
+    auto-estimate is 2 columns: its marginalia are found as generated."""
+    from eynollah_spark.kernels import layout
+
+    base, a = corpus_page(66)
+    assert layout._layout_batch(layout.analyze_pages(span_table([base]))).num_col[0] == 2
+    perm, kinds = reading_order(base)
+    assert (kinds == a["expected_kind"][perm]).all() and "marginalia" in set(kinds)
+    _check_single_bound_pins(base)
 
 
 def test_line_sort_rows_then_x():
@@ -190,7 +224,7 @@ def test_d4_partial_width_separator_per_column_recursion():
         y0=np.array(y0, float), y1=np.array(y1, float),
         width=1260, height=1000, rtl=False,
     )
-    perm, _k = layout_document(doc)
+    perm, _k = reading_order(doc)
     got = [int(doc.offset[i]) for i in perm]
     expect = (
         [ids[(0, r)] for r in range(7)]      # col1 above the separator
@@ -247,7 +281,7 @@ def test_d4_get_span_column_merge():
     rows.append(("separator", None, 100, 1200, 1500, 1506))   # band splitter
 
     d = _mk_doc(rows)
-    perm, kinds = layout_document(d)
+    perm, kinds = reading_order(d)
     got = [d.text[i] for i in perm if d.text[i] is not None]
     groups = [t.split("_")[0] for t in got]
 
@@ -300,7 +334,7 @@ def test_d4_fixture_actually_diverges(monkeypatch):
     rows.append(("separator", None, 100, 1200, 1500, 1506))
 
     d = _mk_doc(rows)
-    perm, _ = layout_document(d)
+    perm, _ = reading_order(d)
     got = [d.text[i] for i in perm if d.text[i] is not None]
     first = {}
     for k, t in enumerate(got):
@@ -391,18 +425,22 @@ def test_dense_blob_page_bounded():
 
 
 def _gen_docs(n, seed):
-    from eynollah_spark.corpus import gen_doc
+    """The non-empty ones of generated documents 0..n-1, as DocSpans."""
+    return [d for d in (corpus_page(i, seed)[0] for i in range(n)) if d.n]
 
-    docs = []
-    for i in range(n):
-        a, m = gen_doc(i, seed)
-        if len(a["kind"]):
-            docs.append(DocSpans(
-                kind=a["kind"], text=None, media_ref=None, offset=a["offset"],
-                x0=a["x0"].astype(float), x1=a["x1"].astype(float),
-                y0=a["y0"].astype(float), y1=a["y1"].astype(float),
-                width=m["width"], height=m["height"], rtl=m["rtl"]))
-    return docs
+
+def test_kernel_leaves_its_input_unchanged(mixed_docs):
+    """Deskew rotates the geometry of skewed pages, but not in the span
+    table it was given: the pipeline re-runs a failed batch's documents
+    from the same table."""
+    from eynollah_spark.kernels.layout import analyze_pages, layout_permutations
+
+    before = {c: getattr(mixed_docs, c).copy() for c in ("x0", "x1", "y0", "y1")}
+    pages = analyze_pages(mixed_docs)
+    assert any(not np.array_equal(getattr(pages, c), v) for c, v in before.items())
+    layout_permutations(mixed_docs, pages)
+    for c, v in before.items():
+        assert np.array_equal(getattr(mixed_docs, c), v), c
 
 
 def test_page_stage_batch_equals_single_pages():
@@ -411,11 +449,11 @@ def test_page_stage_batch_equals_single_pages():
     from eynollah_spark.kernels.layout import analyze_pages
 
     docs = _gen_docs(150, seed=11)
-    got = analyze_pages(docs)
+    got = analyze_pages(span_table(docs))
     vx, vdoc, vok = got.valleys
     mdoc, P, bins, *rest = got.margins
     for d, doc in enumerate(docs):
-        want = analyze_pages([doc])
+        want = analyze_pages(span_table([doc]))
         s, e = got.bounds[d], got.bounds[d + 1]
         for f in ("code", "x0", "x1", "y0", "y1", "cx", "cy"):
             assert np.array_equal(getattr(got, f)[s:e], getattr(want, f)), f
@@ -431,22 +469,19 @@ def test_page_stage_batch_equals_single_pages():
 
 
 @pytest.fixture(scope="module")
-def mixed_docs():
+def mixed_list():
     """~150 generated documents — LTR and RTL, rotated pages,
     marginalia, multi-band pages, media, one-line and all-separator
     pages — plus the empty ones, as DocSpans."""
-    from eynollah_spark.corpus import gen_doc
-
-    docs = []
-    for i in range(150):
-        a, m = gen_doc(i, 42)
-        docs.append(DocSpans(
-            kind=a["kind"], text=None, media_ref=None, offset=a["offset"],
-            x0=a["x0"].astype(float), x1=a["x1"].astype(float),
-            y0=a["y0"].astype(float), y1=a["y1"].astype(float),
-            width=m["width"], height=m["height"], rtl=m["rtl"]))
+    docs = [corpus_page(i)[0] for i in range(150)]
     assert any(d.rtl for d in docs) and any(d.n == 0 for d in docs)
     return docs
+
+
+@pytest.fixture(scope="module")
+def mixed_docs(mixed_list):
+    """The mixed documents as one span table."""
+    return span_table(mixed_list)
 
 
 def _stage_calls(monkeypatch, name, docs):
@@ -530,14 +565,12 @@ def test_in_box_order_batch_equals_single(monkeypatch, mixed_docs):
 # batch gives each document exactly what it gets alone
 
 @pytest.fixture(scope="module")
-def phase_docs(mixed_docs):
+def phase_docs(mixed_list):
     """The mixed documents, then the first 100 again with num_col pinned
-    to 1: their column gutters become marginal-split candidates, which
-    runs the C10 side guards on many pages."""
-    import dataclasses
-
-    return mixed_docs + [dataclasses.replace(d, num_col_lower=1, num_col_upper=1)
-                         for d in mixed_docs[:100]]
+    to 1 (their column gutters become marginal-split candidates, which
+    runs the C10 side guards on many pages), as one span table."""
+    return span_table(mixed_list + [dataclasses.replace(d, num_col_lower=1, num_col_upper=1)
+                                    for d in mixed_list[:100]])
 
 
 @pytest.fixture(scope="module")
@@ -550,7 +583,7 @@ def phase_states(phase_docs):
         pages = layout.analyze_pages(docs)
         return pages, layout._layout_batch(pages)
 
-    return state(phase_docs), [state([d]) for d in phase_docs]
+    return state(phase_docs), [state(phase_docs[d:d + 1]) for d in range(len(phase_docs))]
 
 
 def test_marginal_split_batch_equals_single(phase_states):
@@ -636,20 +669,18 @@ def test_column_estimate_batch_equals_single(phase_states):
     assert counts == {1, 2} and (np.diff(gb) > 0).sum() >= 60
 
 
-def test_num_col_bound_is_set_when_nonzero(mixed_docs):
+def test_num_col_bound_is_set_when_nonzero(mixed_list):
     """B5's user bounds: a bound is set when it is non-zero, whatever its
     sign — a single bound pins num_col, two unequal ones clamp the
     estimate."""
-    import dataclasses
-
     from eynollah_spark.kernels import layout
 
-    docs = [d for d in mixed_docs if (d.kind == layout.KIND_TEXT).sum() > 10][:20]
-    est = layout._layout_batch(layout.analyze_pages(docs)).num_col
+    docs = [d for d in mixed_list if (d.kind == layout.KIND_TEXT).sum() > 10][:20]
+    est = layout._layout_batch(layout.analyze_pages(span_table(docs))).num_col
     for lo, hi, want in ((0, -1, np.full(len(docs), -1)), (-2, 0, np.full(len(docs), -2)),
                          (-1, 3, np.clip(est, -1, 3)), (2, 2, np.full(len(docs), 2))):
         bounded = [dataclasses.replace(d, num_col_lower=lo, num_col_upper=hi) for d in docs]
-        got = layout._layout_batch(layout.analyze_pages(bounded)).num_col
+        got = layout._layout_batch(layout.analyze_pages(span_table(bounded))).num_col
         assert np.array_equal(got, want), (lo, hi)
 
 
@@ -689,7 +720,7 @@ def test_box_assignment_batch_equals_single(monkeypatch, phase_docs):
     [(args, _, got)] = calls
     rseg, bb = args[6], args[8]
     for d in np.unique(rseg).tolist():
-        _, single = _stage_calls(monkeypatch, "_box_of", [phase_docs[d]])
+        _, single = _stage_calls(monkeypatch, "_box_of", phase_docs[d:d + 1])
         [(_, _, want)] = single
         assert np.array_equal(got[rseg == d] - bb[d], want), d
     assert len(np.unique(rseg)) > 100 and (np.diff(bb) > 1).sum() > 20
@@ -701,10 +732,13 @@ def test_serialize_batch_equals_single(phase_docs):
     from eynollah_spark.kernels.layout import layout_permutations
 
     batch = layout_permutations(phase_docs)
-    assert len(batch) == len(phase_docs)
-    for d, (perm, marg) in enumerate(batch):
-        want_perm, want_marg = layout_permutations([phase_docs[d]])[0]
-        assert np.array_equal(perm, want_perm) and np.array_equal(marg, want_marg), d
+    assert len(batch.counts) == len(phase_docs)
+    ends = np.cumsum(batch.counts)
+    for d in range(len(phase_docs)):
+        want_perm, want_marg, _ = layout_permutations(phase_docs[d:d + 1])
+        a, b = ends[d] - batch.counts[d], ends[d]
+        assert np.array_equal(batch.perm[a:b] - phase_docs.bounds[d], want_perm), d
+        assert np.array_equal(batch.marg[a:b], want_marg), d
     assert batch.marg.any() and (batch.counts == 0).any()
 
 

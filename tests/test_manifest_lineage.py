@@ -229,8 +229,9 @@ def test_run_extraction_reads_nothing_it_wrote(spark, tmp_path, monkeypatch):
 def test_quarantined_docs_are_counted(spark, tmp_path):
     """run_extraction runs the kernel with fail_fast=False: a document it
     fails on (here a zero page width) is written in offset order and
-    counted in the summary and in its bucket's manifest entry; a clean
-    run counts none."""
+    counted, with the class of the exception that quarantined it, in the
+    summary and in its bucket's manifest entry; a clean run counts
+    none."""
     from eynollah_spark.manifest import read_as_of, snapshots
 
     victim = "doc00000003"
@@ -244,9 +245,13 @@ def test_quarantined_docs_are_counted(spark, tmp_path):
         s = run_extraction(nest_corpus(frame), out, n_parts=4, partitions=2,
                            parts_per_batch=4)
         assert s["quarantined"] == want
+        assert s["quarantine_causes"] == ({"OverflowError": 1} if want else {})
         parts = snapshots(out)[0]["parts"]
         assert {int(p): m["quarantined"] for p, m in parts.items()} == {
             p: want * (p == victim_part) for p in range(4)}
+        assert {int(p): m["quarantine_causes"] for p, m in parts.items()} == {
+            p: {"OverflowError": want} if want and p == victim_part else {}
+            for p in range(4)}
     rows = (read_as_of(spark, out).filter(F.col("doc_id") == victim)
             .orderBy("ord").collect())
     assert len(rows) > 1

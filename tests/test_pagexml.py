@@ -10,9 +10,10 @@ import re
 import tempfile
 
 import numpy as np
+from page_helpers import reading_order, require_reference_pages
 
 from eynollah_spark.fixtures import all_fixtures, parse_pagexml
-from eynollah_spark.kernels.layout import DocSpans, layout_document
+from eynollah_spark.kernels.layout import DocSpans
 from eynollah_spark.pagexml import doc_to_pagexml
 
 
@@ -29,7 +30,7 @@ def _extract(doc):
         y1=np.array([s[7] for s in spans], float),
         width=doc.width, height=doc.height, rtl=False,
     )
-    perm, kinds = layout_document(d)
+    perm, kinds = reading_order(d)
     return d, perm, kinds
 
 
@@ -49,6 +50,7 @@ def _write_xml(doc, tmpdir):
 
 
 def test_roundtrip_all_fixtures():
+    require_reference_pages()
     with tempfile.TemporaryDirectory() as tmp:
         for doc in all_fixtures():
             path, out_seq, xml = _write_xml(doc, tmp)
@@ -58,6 +60,7 @@ def test_roundtrip_all_fixtures():
 
 
 def test_id_and_ro_conventions():
+    require_reference_pages()
     with tempfile.TemporaryDirectory() as tmp:
         doc = all_fixtures()[0]  # kant_0020
         path, _seq, xml = _write_xml(doc, tmp)

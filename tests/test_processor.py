@@ -5,11 +5,14 @@ the output pages carry the reference reading order span for span."""
 import os
 import shutil
 
+from page_helpers import require_reference_pages
+
 from eynollah_spark.fixtures import FIXTURE_FILES, parse_pagexml
 from eynollah_spark.processor import SparkLayoutProcessor
 
 
 def _stage_workspace(tmp_path):
+    require_reference_pages()
     in_dir = tmp_path / "ws_in"
     in_dir.mkdir()
     for doc_id, path in FIXTURE_FILES.items():

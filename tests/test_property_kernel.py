@@ -5,8 +5,9 @@ every region is indexed exactly once (utils/__init__.py:1139-1143)."""
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from page_helpers import reading_order
 
-from eynollah_spark.kernels.layout import DocSpans, layout_document
+from eynollah_spark.kernels.layout import DocSpans
 
 KINDS = ["text", "image", "separator", "table"]
 
@@ -39,7 +40,7 @@ def random_doc(draw):
 @settings(max_examples=120, deadline=None)
 @given(random_doc())
 def test_permutation_total_and_kinds_sane(doc):
-    perm, kinds = layout_document(doc)
+    perm, kinds = reading_order(doc)
     # every span emitted exactly once
     assert sorted(perm.tolist()) == list(range(doc.n))
     # kinds only refine text -> marginalia; media kinds pass through
@@ -59,7 +60,7 @@ def test_permutation_total_and_kinds_sane(doc):
 def test_input_order_invariance(doc, rnd):
     """The kernel must depend on geometry only: shuffling the input spans
     yields the same output sequence (keyed by offset provenance)."""
-    perm1, kinds1 = layout_document(doc)
+    perm1, kinds1 = reading_order(doc)
     seq1 = [(kinds1[p], int(doc.offset[i])) for p, i in enumerate(perm1)]
     idx = list(range(doc.n))
     rnd.shuffle(idx)
@@ -70,7 +71,7 @@ def test_input_order_invariance(doc, rnd):
         y0=doc.y0[idx], y1=doc.y1[idx],
         width=doc.width, height=doc.height, rtl=doc.rtl,
     )
-    perm2, kinds2 = layout_document(shuffled)
+    perm2, kinds2 = reading_order(shuffled)
     seq2 = [(kinds2[p], int(shuffled.offset[i])) for p, i in enumerate(perm2)]
     assert seq1 == seq2
 
@@ -97,12 +98,13 @@ def test_coverage_profile_matches_add_at(n, width, rnd):
     """The bincount difference-array rewrite must match the original
     np.add.at formulation bit-for-bit on integer-valued weights (all
     corpus/fixture geometry) and to float tolerance otherwise."""
-    from eynollah_spark.kernels.layout import coverage_profile
+    from eynollah_spark.kernels.layout import coverage_profiles
 
     x0 = np.array([rnd.uniform(0, width - 2) for _ in range(n)])
     x1 = x0 + np.array([rnd.uniform(1, width / 3) for _ in range(n)])
     w = np.array([float(rnd.randint(1, 40)) for _ in range(n)])
-    p, scale = coverage_profile(x0, x1, w, width)
+    P, nbins, scale = coverage_profiles(x0, x1, w, [0, n], [width])
+    p, scale = P[0, :nbins[0]], float(scale[0])
     bins = int(min(max(int(width), 8), 1024))
     lo = np.clip((x0 * scale).astype(np.int64), 0, bins - 1)
     hi = np.clip((x1 * scale).astype(np.int64) + 1, 1, bins)

@@ -11,7 +11,7 @@ import pytest
 import eynollah_spark.pipeline as pl
 from eynollah_spark.corpus import gen_corpus_flat
 from eynollah_spark.kernels import layout
-from eynollah_spark.kernels.layout import DocSpans
+from eynollah_spark.kernels.layout import DocSpans, span_table
 
 #: the failing document carries this page width (no generated page has it)
 _MARK = 7777
@@ -31,16 +31,19 @@ def _doc():
 
 
 def test_safe_permutation_falls_back(monkeypatch):
-    def boom(docs, pages=None):
+    def boom(spans, pages=None):
         raise ValueError("kernel bug")
 
     monkeypatch.setattr(pl, "layout_permutations", boom)
-    [(perm, marg)], status = pl._safe_permutations([_doc()], fail_fast=False)
+    # the failing document is the second of the table: its fallback
+    # indexes the table's rows
+    spans = span_table([_doc(), _doc()])
+    perm, marg, counts, failed = pl._safe_permutations(spans, 1, 2, fail_fast=False)
     # degraded but total: input-offset order
-    assert perm.tolist() == [1, 0] and not marg.any()
-    assert status == ["ValueError"]
+    assert perm.tolist() == [3, 2] and not marg.any() and counts.tolist() == [2]
+    assert failed == {1: "ValueError"}
     with pytest.raises(ValueError):
-        pl._safe_permutations([_doc()], fail_fast=True)
+        pl._safe_permutations(spans, 1, 2, fail_fast=True)
 
 
 def _partition() -> pa.Table:
@@ -78,10 +81,10 @@ def test_quarantined_doc_does_not_poison_batch(monkeypatch):
     ref = _run(t, fail_fast=True)
     real = pl.layout_permutations
 
-    def flaky(docs, pages=None):
-        if any(d.width == _MARK for d in docs):
+    def flaky(spans, pages=None):
+        if (spans.W == _MARK).any():
             raise ValueError("kernel bug")
-        return real(docs, pages)
+        return real(spans, pages)
 
     monkeypatch.setattr(pl, "layout_permutations", flaky)
     _check_quarantined(t, _run(t, fail_fast=False), ref)
@@ -97,11 +100,11 @@ def test_page_stage_failure_quarantines_one_doc(monkeypatch):
     real = layout.analyze_pages
     sizes = []
 
-    def flaky(docs):
-        sizes.append(len(docs))
-        if any(d.width == _MARK for d in docs):
+    def flaky(spans):
+        sizes.append(len(spans))
+        if (spans.W == _MARK).any():
             raise ValueError("page stage bug")
-        return real(docs)
+        return real(spans)
 
     monkeypatch.setattr(pl, "analyze_pages", flaky)
     monkeypatch.setattr(layout, "analyze_pages", flaky)

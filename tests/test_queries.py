@@ -73,33 +73,94 @@ def test_sessionize_gap_has_sub_second_precision(spark, tmp_path):
     assert got == _oracle(sf_dir, "events", "events_sessionize")
 
 
-def test_q3_rounds_half_cent_ties_like_the_oracle(spark, tmp_path):
-    """tpch_q3_topk's revenue on a half-cent tie: SUM(double) is
-    0.28499999999999998 for 0.285, which Spark's ROUND(double) rounds to
-    0.29 (through a decimal) and DuckDB's to 0.28; 1.005 likewise gives
-    1.01 against 1.0. Rounding a DECIMAL(38,6) cast gives 0.29 and 1.01
-    on both engines."""
-    ts = dt.datetime(1995, 3, 1)
-    pq.write_table(pa.table({"c_custkey": pa.array([1], pa.int64()),
-                             "c_mktsegment": ["BUILDING"]}), tmp_path / "customer.parquet")
-    pq.write_table(pa.table({"o_orderkey": pa.array([10, 11], pa.int64()),
-                             "o_custkey": pa.array([1, 1], pa.int64()),
-                             "o_orderdate": pa.array([ts, ts], pa.timestamp("us"))}),
-                   tmp_path / "orders.parquet")
-    pq.write_table(pa.table({"l_orderkey": pa.array([10, 11], pa.int64()),
-                             "l_extendedprice": [0.285, 1.005], "l_discount": [0.0, 0.0]}),
-                   tmp_path / "lineitem.parquet")
+def _on_both_engines(spark, tmp_path, name, tables):
+    """Query ``name`` on Spark and on its DuckDB oracle over ``tables``
+    ({table: pa.Table}, written as the sf dir's parquet files): (the
+    Spark rows, the DuckDB rows) as tuples, in the order returned."""
+    for t, data in tables.items():
+        pq.write_table(data, tmp_path / f"{t}.parquet")
     sf_dir = str(tmp_path)
-    q = registry()["tpch_q3_topk"]
-
+    q = registry()[name]
     load_views(spark, sf_dir, *q["tables"])
-    got = spark.sql(q["spark_sql"]).collect()
     con = duckdb.connect()
     for t in q["tables"]:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    want = con.sql(q["duck_sql"]).fetchall()
-    assert [(r[0], r[1]) for r in got] == [(k, v) for k, v, _ in want] == [(11, 1.01), (10, 0.29)]
+    return ([tuple(r) for r in spark.sql(q["spark_sql"]).collect()],
+            con.sql(q["duck_sql"]).fetchall())
+
+
+# Half-cent ties: SUM(double) is 0.28499999999999998 for 0.285, which
+# Spark's ROUND(double) rounds to 0.29 (through a decimal) and DuckDB's
+# to 0.28; 1.005 likewise gives 1.01 against 1.0. Rounding a
+# DECIMAL(38,6) cast gives 0.29 and 1.01 on both engines, as a double.
+
+def test_q3_rounds_half_cent_ties_like_the_oracle(spark, tmp_path):
+    """tpch_q3_topk's revenue on half-cent ties."""
+    ts = dt.datetime(1995, 3, 1)
+    got, want = _on_both_engines(spark, tmp_path, "tpch_q3_topk", {
+        "customer": pa.table({"c_custkey": pa.array([1], pa.int64()),
+                              "c_mktsegment": ["BUILDING"]}),
+        "orders": pa.table({"o_orderkey": pa.array([10, 11], pa.int64()),
+                            "o_custkey": pa.array([1, 1], pa.int64()),
+                            "o_orderdate": pa.array([ts, ts], pa.timestamp("us"))}),
+        "lineitem": pa.table({"l_orderkey": pa.array([10, 11], pa.int64()),
+                              "l_extendedprice": [0.285, 1.005], "l_discount": [0.0, 0.0]})})
+    assert [r[:2] for r in got] == [r[:2] for r in want] == [(11, 1.01), (10, 0.29)]
     assert all(isinstance(r[1], float) for r in got)
+
+
+def test_q1_rounds_half_cent_ties_like_the_oracle(spark, tmp_path):
+    """tpch_q1_pricing's three sums on half-cent ties, and its averages
+    on the same tie at 4 places (0.00015 is 0.000149999... in double)."""
+    ts = dt.datetime(1995, 3, 1)
+    got, want = _on_both_engines(spark, tmp_path, "tpch_q1_pricing", {
+        "lineitem": pa.table({
+            "l_quantity": [0.285, 1.0], "l_extendedprice": [1.005, 1.0],
+            "l_discount": [0.0, 0.00015],
+            "l_returnflag": ["A", "N"], "l_linestatus": ["F", "O"],
+            "l_shipdate": pa.array([ts, ts], pa.timestamp("us"))})})
+    assert sorted(got) == sorted(want) == [("A", "F", 0.29, 1.01, 1.01, 0.285, 0.0, 1),
+                                           ("N", "O", 1.0, 1.0, 1.0, 1.0, 0.0002, 1)]
+    assert all(isinstance(v, float) for r in got for v in r[2:7])
+
+
+def test_hourly_window_rounds_half_cent_ties_like_the_oracle(spark, tmp_path):
+    """events_hourly_window's sum_value on half-cent ties."""
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    hours = [t0, t0 + dt.timedelta(hours=1)]
+    got, want = _on_both_engines(spark, tmp_path, "events_hourly_window", {
+        "events": pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(hours, pa.timestamp("us")),
+            "user_id": pa.array([1, 1], pa.int64()),
+            "event_type": ["view", "view"], "value": [0.285, 1.005],
+            "props": ["{}", "{}"]})})
+    assert sorted(got) == sorted(want) == [(hours[0], "view", 1, 0.29),
+                                           (hours[1], "view", 1, 1.01)]
+
+
+def test_q6_rounds_half_cent_ties_like_the_oracle(spark, tmp_path):
+    """tpch_q6_revenue_delta's revenue on a half-cent tie: 4.75 * 0.06
+    is 0.28499999999999998 in double arithmetic."""
+    got, want = _on_both_engines(spark, tmp_path, "tpch_q6_revenue_delta", {
+        "lineitem": pa.table({
+            "l_quantity": [1.0], "l_extendedprice": [4.75], "l_discount": [0.06],
+            "l_shipdate": pa.array([dt.datetime(1994, 6, 1)], pa.timestamp("us"))})})
+    assert got == want == [(0.29,)]
+
+
+def test_rollup_rounds_half_cent_ties_like_the_oracle(spark, tmp_path):
+    """rollup_region_nation's sum_bal on half-cent ties, at every
+    grouping level."""
+    i32 = lambda v: pa.array(v, pa.int32())
+    got, want = _on_both_engines(spark, tmp_path, "rollup_region_nation", {
+        "customer": pa.table({"c_custkey": pa.array([1, 2], pa.int64()),
+                              "c_nationkey": i32([0, 1]), "c_acctbal": [0.285, 1.005]}),
+        "nation": pa.table({"n_nationkey": i32([0, 1]), "n_name": ["N0", "N1"],
+                            "n_regionkey": i32([0, 0])}),
+        "region": pa.table({"r_regionkey": i32([0]), "r_name": ["R0"]})})
+    assert sorted(got) == sorted(want) == [("ALL", "ALL", 2, 1.29), ("R0", "ALL", 2, 1.29),
+                                           ("R0", "N0", 1, 0.29), ("R0", "N1", 1, 1.01)]
 
 
 @pytest.mark.parametrize("sf_dir, sf", [

@@ -2,28 +2,31 @@
 
 import numpy as np
 
-from eynollah_spark.kernels.layout import (
-    find_splitters,
-    merge_vertical_separators,
-    spanning_lines,
-)
+from eynollah_spark.kernels.layout import _merge_vseps, _spanning, find_splitters
 
 
 def test_merge_vertical_separators_unions_double_rules():
-    vcx = [647.0, 658.0, 1200.0]
-    vboxes = [(300.0, 520.0), (320.0, 560.0), (100.0, 900.0)]
-    cx, boxes = merge_vertical_separators(vcx, vboxes, width=1300)
-    assert len(cx) == 2
-    assert boxes[0] == (300.0, 560.0)  # union of the double rule
-    assert boxes[1] == (100.0, 900.0)
+    """Near-duplicate parallel rules (double-line separators) collapse
+    into one separator with the union of their y-extents
+    (utils/__init__.py:1337-1349); one page here, two below."""
+    seg = np.zeros(3, dtype=np.int64)
+    cx = np.array([647.0, 658.0, 1200.0])
+    y0, y1 = np.array([300.0, 320.0, 100.0]), np.array([520.0, 560.0, 900.0])
+    mseg, mcx, my0, my1 = _merge_vseps(seg, cx, y0, y1, [1300])
+    assert mseg.tolist() == [0, 0] and len(mcx) == 2
+    assert list(zip(my0, my1)) == [(300.0, 560.0), (100.0, 900.0)]
+    # the same rules on two pages: no merge across pages
+    mseg, mcx, _, _ = _merge_vseps(np.array([0, 1, 1]), cx, y0, y1, [1300, 1300])
+    assert mseg.tolist() == [0, 1, 1] and mcx.tolist() == cx.tolist()
 
 
 def test_spanning_lines_requires_margin_both_sides():
     tx0 = np.array([100.0, 620.0, 100.0, 620.0, 100.0])
     tx1 = np.array([1100.0, 680.0, 640.0, 1100.0, 690.0])
-    # gutter at 650, width 1300 -> margin 52
-    mask = spanning_lines(tx0, tx1, [650.0], 1300)
-    assert mask.tolist() == [True, False, False, False, False]
+    # one band, gutter at 650, width 1300 -> margin 52
+    got = _spanning(tx0, tx1, np.zeros(5, dtype=np.int64), np.array([650.0]),
+                    np.array([0, 1]), np.full(5, 1300.0))
+    assert got.tolist() == [0]
 
 
 def test_full_width_hsep_becomes_splitter():
