@@ -248,11 +248,13 @@ def run_extraction(docs: DataFrame, out_path: str, n_parts: int = 8,
     on, emitted in offset order; ``quarantine_causes``: their count by
     exception class, as in each manifest part entry). Re-running after a
     failure skips buckets already recorded in the manifest. Each batch of
-    `parts_per_batch` buckets is one Spark job over extract()'s plan and
-    flat kernel (`partitions`; `extract_kwargs`: num_col_lower,
-    num_col_upper, printspace_margin) with fail_fast=False, whose tasks
-    write the snapshot's data files and return the lineage the manifest
-    commits.
+    `parts_per_batch` buckets is one Spark job over pipeline._kernel_input's
+    plan (one doc_id hash exchange, flatten, the optional printspace
+    filter) and the flat kernel (`partitions`; `extract_kwargs`:
+    num_col_lower, num_col_upper, printspace_margin) with fail_fast=False,
+    whose tasks write the snapshot's data files and return the lineage
+    the manifest commits. A document without spans has no output rows
+    and is not counted in `docs`.
     """
     kw = dict(extract_kwargs or {})
     margin = kw.pop("printspace_margin", 0.0)

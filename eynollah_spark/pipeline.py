@@ -1,13 +1,14 @@
-"""The Spark extraction pipeline: documents -> ordered out_spans.
+"""The Spark extraction pipeline: documents -> ordered flat span rows.
 
-Stage plan (explicit shuffle boundaries, SURVEY.md §3.1 lifecycle):
+Every DataFrame entry runs one plan (SURVEY.md §3.1 lifecycle):
 
-  scan (nested documents table; column-pruned: media payloads never read)
-    -> repartition on pmod(xxhash64(doc_id), 64 * partitions): one hash
-       exchange over a keyspace 64x wider than the partition count, so
-       every partition fills (AQE skew handling does not apply to UDF
-       stages)
-    -> flatten (posexplode, narrow — preserves partitioning)
+  input (flat span rows, or the nested documents table)
+    -> repartition(2p, pmod(xxhash64(doc_id), 64p)) (_repartition_by_doc):
+       the plan's one exchange, over a keyspace 64x wider than the
+       partition count, so every partition fills (AQE skew handling does
+       not apply to UDF stages); every document lands in one partition
+    -> nested input only: flatten (posexplode, narrow — preserves
+       partitioning) and the optional printspace filter (_kernel_input)
     -> mapInArrow(make_partition_arrow_kernel)  (the task holds its whole
        partition and sorts it ONCE by (doc_id, offset) with an Arrow C++
        sort — canonical order, so the output is bitwise-deterministic
@@ -34,12 +35,13 @@ Stage plan (explicit shuffle boundaries, SURVEY.md §3.1 lifecycle):
            document that still raises is quarantined: it falls back to
            offset order and its exception class is counted (the manifest
            records the count per bucket and class).
-    -> sink (flat rows, or nested out_spans lists built in-kernel from
-       the same permutation)
+    -> sink: flat rows (doc_id, ord, kind, text, media_ref, offset), one
+       per output span; `ord` is the reading order. A document without
+       spans has no rows.
 
-extract_flat_input keeps the payload out of the kernel stage entirely and
-joins it back JVM-side; extract_from_parquet_files is the zero-shuffle
-path over doc-complete bucketed files.
+The entries: extract_flat_input (flat span rows), manifest.run_extraction
+(nested documents, checkpointed per bucket) and extract_from_parquet_files,
+the zero-shuffle path over doc-complete bucketed files.
 
 The kernel itself is eynollah_spark.kernels.layout.layout_permutations
 — see that module for reference-semantics citations.
@@ -56,12 +58,11 @@ from pyspark.sql import DataFrame, functions as F
 # patches this module's attribute
 from eynollah_spark.kernels.layout import (  # noqa: F401
     Spans, analyze_pages, kind_codes, layout_permutation, layout_permutations)
-from eynollah_spark.schemas import FLAT_OUT_SCHEMA, OUT_SCHEMA
+from eynollah_spark.schemas import FLAT_IN_FIELDS, FLAT_OUT_SCHEMA
 
 
 def filter_printspace(flat: DataFrame, frame=None,
-                      margin_frac: float = 0.02,
-                      keep_null_spans: bool = False) -> DataFrame:
+                      margin_frac: float = 0.02) -> DataFrame:
     """B9 page-frame / printspace filter (extract_text_regions page-frame
     model + crop, eynollah.py:318-401): drop spans whose center falls
     outside the printspace box. `frame` is (x0, x1, y0, y1) absolute, or
@@ -77,38 +78,19 @@ def filter_printspace(flat: DataFrame, frame=None,
         fx1 = (1 - margin_frac) * F.col("width")
         fy0 = margin_frac * F.col("height")
         fy1 = (1 - margin_frac) * F.col("height")
-    keep = (cx >= fx0) & (cx <= fx1) & (cy >= fy0) & (cy <= fy1)
-    if not keep_null_spans:
-        return flat.filter(keep)
-    # posexplode_outer null-span rows (empty documents) must survive so
-    # nested mode still emits their empty out_spans row — and (ADVICE r4)
-    # a document whose EVERY span fell outside the printspace must not
-    # vanish either: it re-enters as one synthetic null-span row,
-    # preserving the one-row-per-doc contract resume/count logic relies
-    # on. The re-emit costs one per-doc distinct + anti-join on doc_id —
-    # keyed shuffles only, and only on the keep_null_spans path.
-    kept = flat.filter(F.col("kind").isNull() | keep)
-    span_cols = {"kind", "text", "media_ref", "offset", "x0", "x1", "y0", "y1"}
-    lost = (flat.join(kept.select("doc_id").distinct(), "doc_id", "left_anti")
-            .dropDuplicates(["doc_id"])
-            .select(*[
-                F.lit(None).cast(flat.schema[c].dataType).alias(c)
-                if c in span_cols else F.col(c)
-                for c in flat.columns
-            ]))
-    return kept.unionByName(lost)
+    return flat.filter((cx >= fx0) & (cx <= fx1) & (cy >= fy0) & (cy <= fy1))
 
 
 def flatten(df: DataFrame) -> DataFrame:
     """Nested documents -> one row per span (narrow op). Keeps doc meta on
-    every row; empty documents keep a single null-span row
-    (posexplode_outer) so they still emit an empty out_spans row."""
+    every row; a document without spans has no rows, as it has no
+    output."""
     return df.select(
         "doc_id",
         F.col("meta.width").alias("width"),
         F.col("meta.height").alias("height"),
         F.coalesce(F.col("meta.rtl"), F.lit(False)).alias("rtl"),
-        F.posexplode_outer(F.arrays_zip("spans", "geom")).alias("_i", "z"),
+        F.posexplode(F.arrays_zip("spans", "geom")).alias("_i", "z"),
     ).select(
         "doc_id", "width", "height", "rtl",
         F.col("z.spans.kind").alias("kind"),
@@ -222,21 +204,6 @@ def _flat_output(col, starts, counts, take, marg, include_payload):
         names=["doc_id", "ord", "kind", *payload, "offset"])
 
 
-def _nested_output(col, starts, counts, take, marg, include_payload):
-    """OUT_SCHEMA rows, one per document: out_spans lists the spans in
-    reading order ([] for an empty document)."""
-    spans = pa.StructArray.from_arrays(
-        [_out_kind(col, take, marg), pc.take(col["text"], take),
-         pc.take(col["media_ref"], take),
-         pc.cast(pc.take(col["offset"], take), pa.int32())],
-        names=["kind", "text", "media_ref", "offset"])
-    offsets = pa.array(np.concatenate(([0], np.cumsum(counts))), type=pa.int32())
-    return pa.RecordBatch.from_arrays(
-        [pc.take(col["doc_id"], pa.array(starts)),
-         pa.ListArray.from_arrays(offsets, spans)],
-        names=["doc_id", "out_spans"])
-
-
 def _check_output(col, starts, counts, take, marg, include_payload):
     """(doc_id, n_bad) per document with spans: the number of spans whose
     (ord, kind) differs from the input's (expected_rank, expected_kind),
@@ -255,7 +222,7 @@ def _check_output(col, starts, counts, take, marg, include_payload):
         names=["doc_id", "n_bad"])
 
 
-_OUTPUTS = {"flat": _flat_output, "nested": _nested_output, "check": _check_output}
+_OUTPUTS = {"flat": _flat_output, "check": _check_output}
 
 
 def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = True,
@@ -269,9 +236,9 @@ def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = 
     objects).
 
     output: 'flat' -> FLAT_OUT_SCHEMA rows (text / media_ref only if
-    include_payload); 'nested' -> OUT_SCHEMA rows; 'check' -> (doc_id,
-    n_bad) for the extract_reading_order self-check, with the input
-    carrying expected_kind / expected_rank / expected_n. The check is the
+    include_payload); 'check' -> (doc_id, n_bad) for the
+    extract_reading_order self-check, with the input carrying
+    expected_kind / expected_rank / expected_n. The check is the
     in-kernel equivalent of a full-outer join of the flat output with the
     expected rows on (doc_id, offset): offsets are unique per doc and the
     output is always a permutation of the valid input spans (kind IS NULL
@@ -321,10 +288,10 @@ def layout_partition(batches, fail_fast: bool = True, num_col_lower: int = 0,
     return (col, *_permutations(col, fail_fast, num_col_lower, num_col_upper))
 
 
-def _kernel_input(df: DataFrame, partitions: int | None,
-                  printspace_margin: float) -> DataFrame:
-    """extract()'s pre-kernel plan: nested documents -> flat span rows in
-    doc-complete hash partitions, with the optional printspace filter."""
+def _repartition_by_doc(df: DataFrame, partitions: int | None) -> DataFrame:
+    """The shuffled entries' one exchange: ship the package, then hash df's
+    rows on doc_id into 2 * partitions (default
+    spark.sql.shuffle.partitions) doc-complete partitions."""
     from eynollah_spark.packaging import ensure_distributed
 
     spark = df.sparkSession
@@ -336,70 +303,38 @@ def _kernel_input(df: DataFrame, partitions: int | None,
     # by balls-in-bins (r6). The media-heavy tail is not salted into its
     # own hash space: that measured +22% executor CPU on one box, as the
     # heavy kernels are memory-bandwidth-bound.
-    df = df.repartition(
+    return df.repartition(
         2 * partitions,
         F.pmod(F.xxhash64("doc_id"), F.lit(64 * partitions)).cast("int"))
-    flat = flatten(df)
+
+
+def _kernel_input(df: DataFrame, partitions: int | None,
+                  printspace_margin: float) -> DataFrame:
+    """run_extraction's pre-kernel plan: nested documents -> flat span rows
+    in doc-complete hash partitions, with the optional printspace filter."""
+    flat = flatten(_repartition_by_doc(df, partitions))
     if printspace_margin > 0:
         # B9 page-frame filter as a pre-kernel codegen predicate (the
         # CLI's page-extraction step; --ignore-page-extraction skips it)
-        flat = filter_printspace(flat, margin_frac=printspace_margin,
-                                 keep_null_spans=True)
+        flat = filter_printspace(flat, margin_frac=printspace_margin)
     return flat
-
-
-def extract(df: DataFrame, partitions: int | None = None, nested: bool = True,
-            fail_fast: bool = True,
-            num_col_lower: int = 0, num_col_upper: int = 0,
-            printspace_margin: float = 0.0) -> DataFrame:
-    """documents (nested) -> ordered out_spans.
-
-    ``nested=True`` returns FIXTURES.md §2 rows (doc_id, out_spans);
-    ``nested=False`` returns the flat sink shape (doc_id, ord, kind,
-    text, media_ref, offset) — preferable at scale.
-    """
-    kern = make_partition_arrow_kernel(
-        fail_fast=fail_fast, num_col_lower=num_col_lower,
-        num_col_upper=num_col_upper, output="nested" if nested else "flat")
-    return _kernel_input(df, partitions, printspace_margin).mapInArrow(
-        kern, schema=OUT_SCHEMA if nested else FLAT_OUT_SCHEMA)
 
 
 def extract_flat_input(flat: DataFrame, partitions: int | None = None,
                        fail_fast: bool = True,
                        num_col_lower: int = 0, num_col_upper: int = 0) -> DataFrame:
-    """Same pipeline for already-flat span rows (doc_id, width, height,
-    rtl, kind, text, media_ref, offset, x0..y1) — used when the corpus is
-    generated distributed, skipping the nest/flatten round-trip.
-
-    Permutation join: the kernel sees only the narrow numeric projection
-    and emits (doc_id, ord, kind, offset); the text / media_ref payload
-    joins back JVM-side (shuffled hash join — both sides hash-shuffle on
-    the keys, no sort) on (doc_id, offset) and never crosses into Python
-    at all — the wide-payload plan for 100 TB inputs. For input that is
-    already doc-complete per file (a table bucketed by doc_id) use
-    extract_from_parquet_files, which needs no shuffle at all.
+    """Flat span rows (doc_id, width, height, rtl, kind, text, media_ref,
+    offset, x0..y1; other columns are dropped) -> FLAT_OUT_SCHEMA rows:
+    one hash exchange on doc_id, then the partition kernel, which carries
+    the text / media_ref payload to the output with pc.take. For input
+    that is already doc-complete per file (a table bucketed by doc_id)
+    use extract_from_parquet_files, which needs no shuffle at all.
     """
-    from eynollah_spark.packaging import ensure_distributed
-
-    spark = flat.sparkSession
-    ensure_distributed(spark)
-    if partitions is None:
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    narrow = flat.select("doc_id", "width", "height", "rtl", "kind",
-                         "offset", "x0", "x1", "y0", "y1")
-    perm = narrow.repartition(partitions, F.xxhash64("doc_id")).mapInArrow(
-        make_partition_arrow_kernel(include_payload=False, fail_fast=fail_fast,
-                                    num_col_lower=num_col_lower,
-                                    num_col_upper=num_col_upper),
-        schema="doc_id string, ord int, kind string, offset int")
-    payload = flat.select("doc_id", "offset", "text", "media_ref")
-    # shuffle_hash: build a hash map per partition instead of sorting
-    # BOTH 10^9-row sides (sort-merge); measured ~20% faster here and
-    # strictly less work at scale. Spark >=3.1 hash joins can spill.
-    return perm.join(payload.hint("shuffle_hash"),
-                     ["doc_id", "offset"], "left").select(
-        "doc_id", "ord", "kind", "text", "media_ref", "offset")
+    kern = make_partition_arrow_kernel(fail_fast=fail_fast,
+                                       num_col_lower=num_col_lower,
+                                       num_col_upper=num_col_upper)
+    return _repartition_by_doc(flat.select(*FLAT_IN_FIELDS), partitions).mapInArrow(
+        kern, schema=FLAT_OUT_SCHEMA)
 
 
 def write_parquet_atomic(table: pa.Table, final: str) -> None:

@@ -959,9 +959,11 @@ _both("text_source_quality", ("documents",), lambda d: """
 WITH per_source AS (
   SELECT source, lang,
          CAST(COUNT(*) AS BIGINT) AS n_docs,
-         ROUND(AVG(CAST(length(text) AS DOUBLE)), 2) AS avg_len,
-         ROUND(AVG(CASE WHEN length(text) BETWEEN 50 AND 5000
-                        THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END), 4) AS len_ok_rate
+         CAST(ROUND(CAST(AVG(CAST(length(text) AS DOUBLE)) AS DECIMAL(38,6)), 2)
+              AS DOUBLE) AS avg_len,
+         CAST(ROUND(CAST(AVG(CASE WHEN length(text) BETWEEN 50 AND 5000
+                                  THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
+                         AS DECIMAL(38,6)), 4) AS DOUBLE) AS len_ok_rate
   FROM documents GROUP BY source, lang
 )
 SELECT source, lang, n_docs, avg_len, len_ok_rate,
@@ -971,6 +973,9 @@ FROM per_source
 # source-level quality gating (standard training-pipeline op: drop
 # whole low-quality sources before per-doc filtering — one aggregate
 # pass, no per-doc work for dropped sources).
+# The averages round a DECIMAL(38,6) cast, as tpch_q1_pricing's do: 41/40
+# is 1.0249999999999999 in double, which Spark's ROUND(double) rounds to
+# 1.03 and DuckDB's to 1.02.
 
 _both("text_fingerprint", ("documents",), scan_floor=True, body_of=lambda d: f"""
 WITH {_shingles_cte(d)}

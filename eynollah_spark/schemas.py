@@ -33,13 +33,8 @@ DOCUMENTS_SCHEMA = T.StructType([
     T.StructField("meta", META_STRUCT),
 ])
 
-# nested output (FIXTURES.md §2)
-OUT_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("out_spans", T.ArrayType(SPAN_STRUCT)),
-])
-
-# flat output (scale-friendly sink shape; `ord` is the reading order)
+# output (FIXTURES.md §2): one row per output span; `ord` is the
+# reading order
 FLAT_OUT_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
     T.StructField("ord", T.IntegerType()),
@@ -49,7 +44,7 @@ FLAT_OUT_SCHEMA = T.StructType([
     T.StructField("offset", T.IntegerType()),
 ])
 
-# flat exploded input (internal stage shape between flatten and the kernel)
+# flat span input (extract_flat_input's columns; flatten's output shape)
 FLAT_IN_FIELDS = [
     "doc_id", "width", "height", "rtl",
     "kind", "text", "media_ref", "offset", "x0", "x1", "y0", "y1",

@@ -443,13 +443,3 @@ def resize_policy_by_columns(df: DataFrame) -> DataFrame:
                         .otherwise(h).cast("int"))
             .drop("_w_new", "_h_new"))
 
-
-def clamp_num_col(df: DataFrame, lower: int | None = None, upper: int | None = None) -> DataFrame:
-    """B5 clamp (eynollah.py:411-416): bound a num_col column by CLI-style
-    lower/upper hints — pure column math."""
-    c = F.col("num_col")
-    if lower is not None:
-        c = F.greatest(c, F.lit(lower))
-    if upper is not None:
-        c = F.least(c, F.lit(upper))
-    return df.withColumn("num_col", c)

@@ -4,6 +4,8 @@ The reference's ground-truth PAGE-XML pages (eynollah_spark.fixtures
 FIXTURE_FILES) are test resources of the reference checkout. Where a page
 is absent, every case that reads it is skipped, and the skip names the
 missing file; where the pages are present, those cases run unchanged.
+Generated pages (corpus.gen_doc) stand in for them where a test needs a
+page on every box.
 """
 
 import os
@@ -51,3 +53,36 @@ def reading_order(doc: DocSpans):
     kinds = np.asarray(doc.kind, dtype=object)[perm]
     kinds[marg] = KIND_MARGINALIA
     return perm, kinds
+
+
+#: generated pages written as PAGE-XML: the non-RTL two-column page with
+#: marginalia, multi-band and media-interleaved archetypes of
+#: corpus.gen_doc (doc_index % 100 in 65-74, 75-84 and 85-92)
+GENERATED_PAGES = (70, 80, 90)
+
+
+def _in_generator_order(doc_index, seed):
+    from eynollah_spark.corpus import gen_doc
+
+    a, m = gen_doc(doc_index, seed)
+    o = np.argsort(a["expected_rank"])
+    return {k: v[o] for k, v in a.items()}, m
+
+
+def generated_page_xml(doc_index, seed=42):
+    """Generated document ``doc_index`` as (doc_id, PAGE-XML string)
+    written by pagexml.doc_to_pagexml with its spans in the generator's
+    reading order and kinds: a page whose ground-truth order is the
+    generator order."""
+    from eynollah_spark.pagexml import doc_to_pagexml
+
+    a, m = _in_generator_order(doc_index, seed)
+    return m["doc_id"], doc_to_pagexml(
+        m["doc_id"], m["width"], m["height"], a["expected_kind"], a["text"],
+        a["media_ref"], a["offset"], a["x0"], a["x1"], a["y0"], a["y1"])
+
+
+def generator_order(doc_index, seed=42):
+    """(kind, text) of generated document ``doc_index`` in reading order."""
+    a, _ = _in_generator_order(doc_index, seed)
+    return list(zip(a["expected_kind"], a["text"]))

@@ -2,9 +2,10 @@
 span domain): a drop capital must end up ordered immediately BEFORE its
 paragraph's first line (VERDICT r1 item 6)."""
 
-from page_helpers import reference_page
+from page_helpers import GENERATED_PAGES, generated_page_xml, reference_page
 from pyspark.sql import functions as F
 
+from eynollah_spark.fixtures import parse_pagexml_string
 from eynollah_spark.pagexml import attach_geometry
 from eynollah_spark.pipeline import extract_flat_input
 from eynollah_spark.scorer import adhere_drop_capitals, refine_kinds
@@ -75,22 +76,36 @@ def test_pipeline_cap_before_first_line(spark):
     assert ords == sorted(ords)
 
 
-def test_kant_with_planted_cap(spark):
-    """Plant a cap on the reference kant page at the first body line and
-    require it to adhere directly before that line."""
-    doc = reference_page("kant_0020")
-    first = next(s for s in doc.expected)
+def _assert_planted_cap_adheres(spark, doc, first):
+    """Plant a cap left of ``first`` (an entry of doc.expected), three of
+    its line heights tall, and require it to adhere directly before that
+    line."""
     target = next(s for s in doc.spans if s[3] == first[3])
     _k, _t, _m, off, x0, x1, y0, y1 = target
     h = y1 - y0
     cap = ("text", "W", None, 9999, x0 - 40, x0 - 5, y0, y0 + 3 * h)
-    final = _run(spark, "kant", doc.width, doc.height,
+    final = _run(spark, doc.doc_id, doc.width, doc.height,
                  list(doc.spans) + [cap]).orderBy("ord").collect()
     by_off = {r["offset"]: r for r in final}
     cap_row = by_off[9999]
     tgt_row = by_off[off]
     assert cap_row["kind"] == "drop-capital"
     assert cap_row["ord"] == tgt_row["ord"] - 1
+
+
+def test_kant_with_planted_cap(spark):
+    """Plant a cap on the reference kant page at the first body line and
+    require it to adhere directly before that line."""
+    doc = reference_page("kant_0020")
+    _assert_planted_cap_adheres(spark, doc, next(s for s in doc.expected))
+
+
+def test_kant_with_planted_cap_generated(spark):
+    """The same on a generated two-column page with marginalia: the cap
+    goes on the first body (non-marginalia) line."""
+    doc_id, xml = generated_page_xml(GENERATED_PAGES[0])
+    doc = parse_pagexml_string(xml, doc_id)
+    _assert_planted_cap_adheres(spark, doc, next(s for s in doc.expected if s[0] == "text"))
 
 
 def test_no_caps_is_identity(spark):

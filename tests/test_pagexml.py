@@ -1,5 +1,5 @@
-"""PAGE-XML writer round-trip: extract the reference fixture pages with
-the kernel, serialize to PAGE-XML, re-parse with the fixtures parser,
+"""PAGE-XML writer round-trip: extract the reference fixture pages (or
+generated pages written as PAGE-XML) with the kernel, serialize to PAGE-XML, re-parse with the fixtures parser,
 and require span-sequence equality (kind, text, order) with the kernel
 output — i.e. the XML we write encodes exactly the reading order and
 kinds the engine produced (VERDICT r1 missing-item #1; reference
@@ -10,9 +10,10 @@ import re
 import tempfile
 
 import numpy as np
-from page_helpers import reading_order, require_reference_pages
+from page_helpers import (GENERATED_PAGES, generated_page_xml, reading_order,
+                          require_reference_pages)
 
-from eynollah_spark.fixtures import all_fixtures, parse_pagexml
+from eynollah_spark.fixtures import all_fixtures, parse_pagexml, parse_pagexml_string
 from eynollah_spark.kernels.layout import DocSpans
 from eynollah_spark.pagexml import doc_to_pagexml
 
@@ -49,20 +50,31 @@ def _write_xml(doc, tmpdir):
     return path, [(kinds[p], d.text[i]) for p, i in enumerate(perm)], xml
 
 
-def test_roundtrip_all_fixtures():
-    require_reference_pages()
+def _generated_fixtures():
+    return [parse_pagexml_string(xml, doc_id)
+            for doc_id, xml in map(generated_page_xml, GENERATED_PAGES)]
+
+
+def _assert_roundtrips(docs):
     with tempfile.TemporaryDirectory() as tmp:
-        for doc in all_fixtures():
+        for doc in docs:
             path, out_seq, xml = _write_xml(doc, tmp)
             back = parse_pagexml(path, doc.doc_id)
             got_seq = [(k, t) for (k, t, _m, _o) in back.expected]
             assert got_seq == out_seq, f"{doc.doc_id}: round-trip sequence diverged"
 
 
-def test_id_and_ro_conventions():
+def test_roundtrip_all_fixtures():
     require_reference_pages()
+    _assert_roundtrips(all_fixtures())
+
+
+def test_roundtrip_all_fixtures_generated():
+    _assert_roundtrips(_generated_fixtures())
+
+
+def _assert_id_and_ro_conventions(doc):
     with tempfile.TemporaryDirectory() as tmp:
-        doc = all_fixtures()[0]  # kant_0020
         path, _seq, xml = _write_xml(doc, tmp)
         # 1-based zero-padded region/line ids, reference templates
         assert 'id="region_0001"' in xml
@@ -76,6 +88,15 @@ def test_id_and_ro_conventions():
         refs = re.findall(r'regionRef="([^"]+)"', xml)
         for r in refs:
             assert f'<TextRegion id="{r}"' in xml
+
+
+def test_id_and_ro_conventions():
+    require_reference_pages()
+    _assert_id_and_ro_conventions(all_fixtures()[0])  # kant_0020
+
+
+def test_id_and_ro_conventions_generated():
+    _assert_id_and_ro_conventions(_generated_fixtures()[0])  # two columns + marginalia
 
 
 def test_spark_pagexml_df(spark):

@@ -1,8 +1,7 @@
 """Spark-free gates on the whole-partition Arrow kernel
 (pipeline.make_partition_arrow_kernel): the pinned 3000-doc permutation
-hashes, independence from how a partition arrives in batches and from
-which documents share it, and the nested output agreeing with the flat
-one."""
+hashes, and independence from how a partition arrives in batches and
+from which documents share it."""
 
 import hashlib
 
@@ -178,20 +177,4 @@ def test_batch_boundaries_do_not_matter(partition):
     assert whole.num_rows > 0
     assert whole.equals(split)
     assert whole.equals(shuffled)
-
-
-def test_nested_output_regroups_flat_output(partition):
-    """output='nested' is the flat output grouped per doc in ord order,
-    with an empty out_spans list for each empty doc."""
-    t = _first_docs(partition, 200)
-    flat = _run(t.to_batches()).to_pylist()
-    nested = _run(t.to_batches(), output="nested").to_pylist()
-    ids = list(dict.fromkeys(t.column("doc_id").to_pylist()))
-    assert [r["doc_id"] for r in nested] == ids
-    by_doc = {d: [] for d in ids}
-    for r in flat:
-        by_doc[r["doc_id"]].append(
-            {k: r[k] for k in ("kind", "text", "media_ref", "offset")})
-    assert {r["doc_id"]: r["out_spans"] for r in nested} == by_doc
-    assert sum(not r["out_spans"] for r in nested) == 2  # docs 99 and 198
 

@@ -1,5 +1,5 @@
-"""End-to-end Spark pipeline gate: distributed corpus -> nested documents
-table -> extract -> span-sequence equality vs the by-construction oracle."""
+"""End-to-end Spark pipeline gate: distributed corpus -> extraction ->
+span-sequence equality vs the by-construction oracle."""
 
 import shutil
 import sys
@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from eynollah_spark.corpus import corpus_flat_spark, expected_spark, nest_corpus
-from eynollah_spark.pipeline import extract, extract_flat_input
+from eynollah_spark.pipeline import _kernel_input, extract_flat_input
 
 N_DOCS = 200
 
@@ -32,30 +32,9 @@ def _mismatches(out, exp):
     ).count()
 
 
-def test_extract_matches_oracle(spark, corpus):
-    docs = nest_corpus(corpus)
-    out = extract(docs, partitions=8, nested=False)
-    assert _mismatches(out, expected_spark(corpus)) == 0
-
-
 def test_extract_flat_input_matches(spark, corpus):
     out = extract_flat_input(corpus.drop("expected_kind", "expected_rank"), partitions=8)
     assert _mismatches(out, expected_spark(corpus)) == 0
-
-
-def test_nested_output_preserves_empty_docs(spark, corpus):
-    docs = nest_corpus(corpus)
-    nested = extract(docs, partitions=8, nested=True)
-    assert nested.count() == N_DOCS
-    n_empty_in = docs.filter(F.size("spans") == 0).count()
-    assert nested.filter(F.size("out_spans") == 0).count() == n_empty_in
-    # out_spans echo input offsets: per doc, offsets are a permutation
-    chk = nested.select(
-        "doc_id",
-        F.size("out_spans").alias("n"),
-        F.size(F.array_distinct("out_spans.offset")).alias("nd"),
-    ).filter(F.col("n") != F.col("nd"))
-    assert chk.count() == 0
 
 
 def test_manifest_resume(spark, corpus, tmp_path_factory):
@@ -95,15 +74,6 @@ def test_filter_printspace(spark):
     plan = filter_printspace(flat, frame=(200, 900, 150, 800)) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Python" not in plan
-    # keep_null_spans: a doc whose EVERY span falls outside the frame
-    # must re-enter as one null-span row — the one-row-per-doc contract
-    # (ADVICE r4). An impossible frame empties every doc; each must
-    # survive as exactly one row with null span fields.
-    all_docs = flat.select("doc_id").distinct().count()
-    k = filter_printspace(flat, frame=(-10, -5, -10, -5), keep_null_spans=True)
-    assert k.count() == all_docs
-    assert k.filter(F.col("kind").isNull()).count() == all_docs
-    assert k.select("doc_id").distinct().count() == all_docs
     flat.unpersist()
 
 
@@ -259,27 +229,40 @@ def test_reading_order_check_sees_lost_and_duplicated_rows(corpus):
     assert n_bad(dup) > 0
 
 
+def _exchanges_beyond_input(out, inp) -> int:
+    def count(df):
+        return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
+    return count(out) - count(inp)
+
+
 def test_extract_repartition_is_one_hash_exchange(spark, corpus):
-    """extract() repartitions once, on the wide xxhash64(doc_id)
+    """Both shuffled entries, extract_flat_input and run_extraction's
+    _kernel_input, repartition once, on the wide xxhash64(doc_id)
     keyspace and on nothing else: no size(spans) evaluation in the plan,
     exactly ONE exchange beyond the input's, and every document lands in
     the partition an explicit repartition(2p, pmod(xxhash64(doc_id), 64p))
     gives it (flatten and mapInArrow are narrow)."""
-    from eynollah_spark.corpus import nest_corpus
-
     docs = nest_corpus(corpus)
-    out = extract(docs, partitions=8, nested=True)
-    p_out = out._jdf.queryExecution().executedPlan().toString()
-    p_in = docs._jdf.queryExecution().executedPlan().toString()
-    assert "size(spans" not in p_out
-    assert p_out.count("Exchange") == p_in.count("Exchange") + 1
-    ref = docs.repartition(16, F.pmod(F.xxhash64("doc_id"), F.lit(512)).cast("int"))
-    a = (out.select("doc_id", F.spark_partition_id().alias("p"))
-         .orderBy("doc_id").collect())
-    b = (ref.select("doc_id", F.spark_partition_id().alias("p"))
-         .orderBy("doc_id").collect())
-    assert len(a) == N_DOCS
-    assert a == b
+    ref = corpus.repartition(16, F.pmod(F.xxhash64("doc_id"), F.lit(512)).cast("int"))
+    want = {r["doc_id"]: r["p"] for r in ref.select(
+        "doc_id", F.spark_partition_id().alias("p")).distinct().collect()}
+    n_with_spans = corpus.filter(F.col("kind").isNotNull()).select("doc_id").distinct().count()
+    for inp, out in ((docs, _kernel_input(docs, 8, 0.0)),
+                     (corpus, extract_flat_input(corpus, partitions=8))):
+        assert "size(spans" not in out._jdf.queryExecution().executedPlan().toString()
+        assert _exchanges_beyond_input(out, inp) == 1
+        got = {r["doc_id"]: r["p"] for r in out.select(
+            "doc_id", F.spark_partition_id().alias("p")).distinct().collect()}
+        assert len(got) == n_with_spans
+        assert got == {d: want[d] for d in got}
+
+
+def test_printspace_filter_adds_no_exchange(corpus):
+    """run_extraction's plan with the printspace filter on is the same
+    single exchange as without it: the filter is a narrow predicate on
+    the flat rows, with no per-document re-emit of emptied documents."""
+    docs = nest_corpus(corpus)
+    assert _exchanges_beyond_input(_kernel_input(docs, 8, 0.05), docs) == 1
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 13),

@@ -39,17 +39,14 @@ def test_extraction_plan_has_single_shuffle(spark):
     from eynollah_spark.corpus import corpus_flat_spark
     from eynollah_spark.pipeline import extract_flat_input
 
-    flat = corpus_flat_spark(spark, 50)
-    # kernel repartition + the two join-side exchanges (plus the corpus
-    # generator's own), and the payload join must be a shuffled HASH join
-    # (no sort of either 10^9-row side), never a nested-loop/cartesian
-    outj = extract_flat_input(flat.drop("expected_kind", "expected_rank"),
-                              partitions=4)
+    flat = corpus_flat_spark(spark, 50).drop("expected_kind", "expected_rank")
+    # the doc_id repartition is the plan's one exchange beyond the
+    # input's; the payload rides through the kernel, so there is no join
+    outj = extract_flat_input(flat, partitions=4)
     pj = _plan(outj)
-    assert pj.count("Exchange") <= 4
+    assert pj.count("Exchange") == _plan(flat).count("Exchange") + 1
     assert "MapInArrow" in pj
-    assert "ShuffledHashJoin" in pj
-    assert "CartesianProduct" not in pj and "BroadcastNestedLoop" not in pj
+    assert "Join" not in pj and "CartesianProduct" not in pj
 
 
 def test_whole_stage_codegen_active(spark):

@@ -1,11 +1,13 @@
-"""F7 processor contract: a workspace of the reference's own PAGE-XML
-pages goes through parse -> distributed extraction -> PAGE-XML out, and
-the output pages carry the reference reading order span for span."""
+"""F7 processor contract: a workspace of PAGE-XML pages goes through
+parse -> distributed extraction -> PAGE-XML out, and the output pages
+carry the input pages' reading order span for span. The pages are the
+reference's own, or generated pages whose order is the generator's."""
 
 import os
 import shutil
 
-from page_helpers import require_reference_pages
+from page_helpers import (GENERATED_PAGES, generated_page_xml, generator_order,
+                          require_reference_pages)
 
 from eynollah_spark.fixtures import FIXTURE_FILES, parse_pagexml
 from eynollah_spark.processor import SparkLayoutProcessor
@@ -48,3 +50,36 @@ def test_process_workspace_resumes(spark, tmp_path):
     assert first == len(FIXTURE_FILES)
     again = proc.process_workspace(in_dir, out_dir)
     assert again == 0
+
+
+def _stage_generated_workspace(tmp_path):
+    in_dir = tmp_path / "ws_in"
+    in_dir.mkdir()
+    doc_ids = {}
+    for i in GENERATED_PAGES:
+        doc_id, xml = generated_page_xml(i)
+        (in_dir / f"{doc_id}.xml").write_text(xml)
+        doc_ids[doc_id] = i
+    return str(in_dir), doc_ids
+
+
+def test_process_workspace_reproduces_reference_order_generated(spark, tmp_path):
+    in_dir, doc_ids = _stage_generated_workspace(tmp_path)
+    out_dir = str(tmp_path / "ws_out")
+    proc = SparkLayoutProcessor(spark)
+    proc.setup()
+    assert proc.process_workspace(in_dir, out_dir) == len(doc_ids)
+    for doc_id, i in doc_ids.items():
+        want = parse_pagexml(os.path.join(in_dir, f"{doc_id}.xml"), doc_id)
+        got = parse_pagexml(os.path.join(out_dir, f"{doc_id}.xml"), doc_id)
+        want = [(k, t) for k, t, _m, _o in want.expected]
+        assert want == generator_order(i), doc_id
+        assert [(k, t) for k, t, _m, _o in got.expected] == want, doc_id
+
+
+def test_process_workspace_resumes_generated(spark, tmp_path):
+    in_dir, doc_ids = _stage_generated_workspace(tmp_path)
+    out_dir = str(tmp_path / "ws_out")
+    proc = SparkLayoutProcessor(spark)
+    assert proc.process_workspace(in_dir, out_dir) == len(doc_ids)
+    assert proc.process_workspace(in_dir, out_dir) == 0

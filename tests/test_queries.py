@@ -163,6 +163,22 @@ def test_rollup_rounds_half_cent_ties_like_the_oracle(spark, tmp_path):
                                            ("R0", "N0", 1, 0.29), ("R0", "N1", 1, 1.01)]
 
 
+def test_source_quality_rounds_ties_like_the_oracle(spark, tmp_path):
+    """text_source_quality's averages on ties: 41 / 40 = 1.025 for
+    avg_len (1.0249999999999999 in double) and 57 / 800 = 0.07125 for
+    len_ok_rate (0.071249999999999994) round up on both engines."""
+    lengths = {"a": [1] * 39 + [2], "b": [50] * 57 + [1] * 743}
+    texts = [("x" * n, src) for src, ns in lengths.items() for n in ns]
+    got, want = _on_both_engines(spark, tmp_path, "text_source_quality", {
+        "documents": pa.table({
+            "doc_id": pa.array(range(len(texts)), pa.int64()),
+            "text": [t for t, _ in texts], "lang": ["en"] * len(texts),
+            "source": [src for _, src in texts],
+            "n_chars": pa.array([len(t) for t, _ in texts], pa.int64())})})
+    assert sorted(got) == sorted(want) == [("a", "en", 40, 1.03, 0.0, 0),
+                                           ("b", "en", 800, 4.49, 0.0713, 0)]
+
+
 @pytest.mark.parametrize("sf_dir, sf", [
     ("/data/sf0.01", 0.01),
     ("/data/sf0.1/", 0.1),
