@@ -58,6 +58,8 @@ from types import SimpleNamespace
 from typing import NamedTuple
 
 import numpy as np
+# np.convolve's own C kernel, called without its Python wrapper
+from numpy._core.multiarray import correlate as _correlate
 
 KIND_TEXT = "text"
 KIND_IMAGE = "image"
@@ -216,10 +218,9 @@ def coverage_profiles(x0, x1, weights, bounds, width):
 _GAUSS_KERNELS: dict[float, np.ndarray] = {}
 
 
-def gaussian_smooth(p, sigma):
-    """1-D gaussian smoothing (cf. scipy gaussian_filter1d use at
-    utils/__init__.py:277, sigma=25 on ~2500px pages). Kernels are
-    memoized by sigma (constant per page width)."""
+def _gauss_kernel(sigma):
+    """The normalized gaussian kernel of gaussian_smooth, memoized by
+    sigma (constant per page width)."""
     sigma = max(float(sigma), 0.5)
     k = _GAUSS_KERNELS.get(sigma)
     if k is None:
@@ -229,7 +230,13 @@ def gaussian_smooth(p, sigma):
         k /= k.sum()
         if len(_GAUSS_KERNELS) < 4096:
             _GAUSS_KERNELS[sigma] = k
-    return np.convolve(p, k, mode="same")
+    return k
+
+
+def gaussian_smooth(p, sigma):
+    """1-D gaussian smoothing (cf. scipy gaussian_filter1d use at
+    utils/__init__.py:277, sigma=25 on ~2500px pages)."""
+    return np.convolve(p, _gauss_kernel(sigma), mode="same")
 
 
 # ------------------------------------------------------------ segments ---
@@ -283,19 +290,25 @@ def _lex_key(major, minor):
 
 def _smooth_rows(P, bins, sigma):
     """gaussian_smooth of the first ``bins[k]`` columns of every row k of
-    ``P`` (one np.convolve per row: rows differ in sigma, and a matrix
+    ``P`` (one convolution per row: rows differ in sigma, and a matrix
     form would not round as np.convolve does). Returns (S, n): row k of S
     holds the smoothed row in its first ``n[k]`` columns, zeros after
     (np.convolve's 'same' output outgrows the row when the kernel is the
-    longer of the two)."""
-    rows = [gaussian_smooth(P[k, :b], s)
-            for k, (b, s) in enumerate(zip(bins.tolist(), sigma.tolist()))]
-    n = np.fromiter(map(len, rows), dtype=np.int64, count=len(rows))
-    S = np.zeros((len(rows), max(_BINS, int(n.max()) if len(n) else 0)))
-    if len(rows):
-        S[np.repeat(np.arange(len(rows)), n), _ragged_arange(np.zeros_like(n), n)] = \
-            np.concatenate(rows)
-    return S, n
+    longer of the two).
+
+    Each row calls the correlate np.convolve calls, as np.convolve calls
+    it: ``convolve(a, v, 'same')`` is ``correlate(a, v[::-1], 'same')``
+    with a and v swapped when v is the longer, so every row is bitwise
+    gaussian_smooth's."""
+    bins = bins.tolist()
+    kernels = [_gauss_kernel(s) for s in sigma.tolist()]
+    n = [max(b, len(k)) for b, k in zip(bins, kernels)]
+    S = np.zeros((len(n), max(_BINS, *n) if n else _BINS))
+    for i, (b, k, m) in enumerate(zip(bins, kernels, n)):
+        row = P[i, :b]
+        S[i, :m] = (_correlate(k, row[::-1], "same") if len(k) > b
+                    else _correlate(row, k[::-1], "same"))
+    return S, np.array(n, dtype=np.int64)
 
 
 # ------------------------------------------------------- marginalia (C10) ---

@@ -41,13 +41,32 @@ Every DataFrame entry runs one plan (SURVEY.md §3.1 lifecycle):
 
 The entries: extract_flat_input (flat span rows), manifest.run_extraction
 (nested documents, checkpointed per bucket) and extract_from_parquet_files,
-the zero-shuffle path over doc-complete bucketed files.
+the zero-shuffle path over doc-complete bucketed files. Its unit of work
+is the task, not the file:
+
+  sorted file list -> packed onto tasks by byte size, largest first onto
+  the lightest task (_pack_files)
+    -> per task: read its files in order; run the kernel once per chunk
+       of consecutive files of at most _CHUNK_ROWS rows (a bigger file is
+       a chunk of its own), so a task holds at most one chunk plus one
+       file. Each row carries its file's index (_FILE), the kernel orders
+       the chunk by it first, and the output is split by it:
+    -> one output file per input file with output spans, named after the
+       input's index in the sorted list (part-<index:05d>.parquet), so a
+       retry or another packing rewrites the same names.
+
+Every Spark Python worker freezes its heap at its first kernel call,
+and again after new imports (_freeze_worker_heap): the daemon's full
+gc.collect() after each task then skips the imported modules' objects.
 
 The kernel itself is eynollah_spark.kernels.layout.layout_permutations
 — see that module for reference-semantics citations.
 """
 
 from __future__ import annotations
+
+import gc
+import sys
 
 import numpy as np
 import pyarrow as pa
@@ -109,6 +128,9 @@ def flatten(df: DataFrame) -> DataFrame:
 #: matrices stay in cache, and the re-run after a failed batch stays short
 _PAGE_BATCH = 64
 
+#: the file-index column of a task-side scan chunk (extract_from_parquet_files)
+_FILE = "_file"
+
 
 def _safe_permutations(spans: Spans, a: int, b: int, fail_fast: bool):
     """The layout kernel over documents ``[a, b)`` of the span table, with
@@ -152,7 +174,11 @@ def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper:
     order their row index and marginalia flag, and the documents
     _safe_permutations quarantined ({document: exception class name})."""
     ids = col["doc_id"]
-    change = pc.not_equal(ids[1:], ids[:-1]).to_numpy(zero_copy_only=False).nonzero()[0] + 1
+    change = pc.not_equal(ids[1:], ids[:-1])
+    if _FILE in col:
+        # a chunk of the task-side scan path: a document never spans files
+        change = pc.or_(change, pc.not_equal(col[_FILE][1:], col[_FILE][:-1]))
+    change = change.to_numpy(zero_copy_only=False).nonzero()[0] + 1
     starts = np.concatenate(([0], change))
     counts = np.zeros(len(starts), dtype=np.int64)
     # the kernel's span table: the valid rows, each column gathered once,
@@ -252,8 +278,9 @@ def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = 
     poorly on one box, profiled r3; pc.sort_indices + pc.take costs ~0.1 s
     per 300k-row partition), and input only needs to be doc-complete per
     partition: neither sorted nor batched at doc boundaries. Memory: one
-    partition resident per task — bounded by the repartition (shuffled
-    paths) or by the file size (bucketed scan path)."""
+    partition resident per task, bounded by the repartition. (The
+    bucketed scan path runs layout_partition on chunks of its files
+    instead: _CHUNK_ROWS rows plus one file.)"""
     build = _OUTPUTS[output]
 
     def kernel(batches):
@@ -269,12 +296,40 @@ def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = 
     return kernel
 
 
+#: the number of modules this process had imported when it last froze
+#: its heap (_freeze_worker_heap)
+_frozen_modules = 0
+
+
+def _freeze_worker_heap() -> None:
+    """In a Spark Python worker, move every object alive now (chiefly the
+    imported modules: ~74k tracked objects) to the collector's permanent
+    generation: at the first kernel call, and again at a call that finds
+    modules imported since (PySpark's worker imports pandas after the
+    first task's kernel). A reused worker's daemon runs a full
+    gc.collect() after every task (pyspark/daemon.py), which otherwise
+    re-traverses them all: 27-36 ms per task. Outside a Spark task (the
+    driver, tests, in-process callers) the heap is never frozen."""
+    global _frozen_modules
+    if len(sys.modules) == _frozen_modules:
+        return
+    from pyspark import TaskContext
+
+    if TaskContext.get() is None:
+        return
+    gc.collect()
+    gc.freeze()
+    _frozen_modules = len(sys.modules)
+
+
 def layout_partition(batches, fail_fast: bool = True, num_col_lower: int = 0,
                      num_col_upper: int = 0):
     """The body of the partition kernel, for callers that build their own
     output: the partition's columns in canonical (doc_id, offset) order
-    and _permutations' (starts, counts, take, marg, status) — or None for
-    an empty partition."""
+    (preceded by the file index, when the rows carry a _FILE column) and
+    _permutations' (starts, counts, take, marg, status) — or None for an
+    empty partition."""
+    _freeze_worker_heap()
     batches = list(batches)
     if not batches:
         return None
@@ -282,8 +337,10 @@ def layout_partition(batches, fail_fast: bool = True, num_col_lower: int = 0,
     del batches
     if t.num_rows == 0:
         return None
-    t = t.take(pc.sort_indices(
-        t, sort_keys=[("doc_id", "ascending"), ("offset", "ascending")]))
+    keys = [("doc_id", "ascending"), ("offset", "ascending")]
+    if _FILE in t.column_names:
+        keys.insert(0, (_FILE, "ascending"))
+    t = t.take(pc.sort_indices(t, sort_keys=keys))
     col = {name: t.column(name).combine_chunks() for name in t.column_names}
     return (col, *_permutations(col, fail_fast, num_col_lower, num_col_upper))
 
@@ -342,7 +399,7 @@ def write_parquet_atomic(table: pa.Table, final: str) -> None:
     attempt-unique hidden temp file (ADVICE r3): a killed or speculative
     attempt never leaves a truncated `final`, and a crashed one's '.'
     leftover is skipped by Spark's file listing. Callers name `final`
-    after the task, so a retried attempt rewrites the same doc-complete
+    after its input, so a retried attempt rewrites the same doc-complete
     bytes. On an object store: PUT to a temp key + a manifest commit."""
     import os
     import uuid
@@ -360,6 +417,84 @@ def write_parquet_atomic(table: pa.Table, final: str) -> None:
 _SCAN_COLS_NARROW = ["doc_id", "width", "height", "rtl", "kind",
                      "offset", "x0", "x1", "y0", "y1"]
 
+#: row budget of one kernel call of the task-side scan: a task closes its
+#: chunk of consecutive files before the file that would take it past this
+_CHUNK_ROWS = 1 << 18
+
+
+def _file_sizes(paths: list[str]) -> list[int]:
+    """The byte size of every file, local or on an object store."""
+    import os
+
+    from pyarrow import fs
+
+    sizes = []
+    for p in paths:
+        try:
+            filesystem, path = fs.FileSystem.from_uri(p)
+        except pa.ArrowInvalid:  # a plain local path
+            filesystem, path = fs.LocalFileSystem(), os.path.abspath(p)
+        sizes.append(filesystem.get_file_info(path).size or 0)
+    return sizes
+
+
+def _pack_files(sizes: list[int], ntasks: int) -> list[list[int]]:
+    """The file indices of each of ntasks tasks, each in increasing order:
+    files packed by size, largest first onto the lightest task (ties to
+    the lower index), so every task gets a near-equal share of rows."""
+    import heapq
+
+    tasks = [[] for _ in range(ntasks)]
+    load = [(0, t) for t in range(ntasks)]
+    for i in sorted(range(len(sizes)), key=lambda i: (-sizes[i], i)):
+        total, t = heapq.heappop(load)
+        tasks[t].append(i)
+        heapq.heappush(load, (total + sizes[i], t))
+    return [sorted(t) for t in tasks]
+
+
+def _chunk_outputs(tables, include_payload: bool, fail_fast: bool):
+    """The flat output of one chunk, split by input file: runs the kernel
+    once over the chunk's (file index, table) pairs and yields (file
+    index, output rows) for every file with output. The chunk is ordered
+    by file first, so each file's documents are one slice of the output,
+    in the order the file alone would give."""
+    res = layout_partition(pa.concat_tables(
+        [t.append_column(_FILE, pa.array(np.full(t.num_rows, i, dtype=np.int32)))
+         for i, t in tables], promote_options="permissive").to_batches(), fail_fast)
+    if res is None:
+        return
+    col, starts, counts, take, marg, _ = res
+    out = _flat_output(col, starts, counts, pa.array(take), pa.array(marg),
+                       include_payload)
+    # each document's file (non-decreasing) -> each file's output rows
+    files, first = np.unique(col[_FILE].to_numpy()[starts], return_index=True)
+    off = np.concatenate(([0], np.cumsum(counts)))
+    for i, a, b in zip(files.tolist(), off[first].tolist(),
+                       off[np.append(first[1:], len(starts))].tolist()):
+        if b > a:
+            yield i, out.slice(a, b - a)
+
+
+def _task_outputs(paths: list[str], files: list[int], cols: list[str],
+                  include_payload: bool, fail_fast: bool, budget: int):
+    """One task's body: read its files in order, run the kernel once per
+    chunk of consecutive files (at most ``budget`` rows; a bigger file is
+    a chunk of its own) and yield (file index, output rows) per input
+    file with output. A task holds at most one chunk plus one file."""
+    import pyarrow.parquet as pq
+
+    chunk, rows = [], 0
+    for i in files:
+        t = pq.read_table(paths[i], columns=cols)
+        if chunk and rows + t.num_rows > budget:
+            yield from _chunk_outputs(chunk, include_payload, fail_fast)
+            chunk, rows = [], 0
+        chunk.append((i, t))
+        rows += t.num_rows
+    if chunk:
+        yield from _chunk_outputs(chunk, include_payload, fail_fast)
+
 
 def extract_from_parquet_files(spark, paths: list[str], partitions: int | None = None,
                                include_payload: bool = True,
@@ -370,13 +505,22 @@ def extract_from_parquet_files(spark, paths: list[str], partitions: int | None =
     taken to its logical end (zero JVM row conversion on the input side).
 
     The input is the bucketed table's FILE MANIFEST (an Iceberg snapshot's
-    data-file list): Spark schedules one task per file slice; each task
-    opens its doc-complete parquet files with pyarrow (column-projected to
-    the kernel's needs) and streams them through the whole-partition
-    kernel. Input bytes go parquet -> Arrow -> numpy with no
-    InternalRow/ArrowEvalPython re-encode hop, which profiling shows is
-    the bulk of the JVM-scan path's fixed cost; only the (narrow) OUTPUT
-    crosses the JVM boundary.
+    data-file list). The driver sorts the paths and packs the files onto
+    min(len(paths), partitions) tasks by byte size, largest first onto
+    the lightest task. Each task opens its doc-complete parquet files in
+    order with pyarrow (column-projected to the kernel's needs) and runs
+    the whole-partition kernel once per chunk of consecutive files: a
+    chunk closes before the file that would take it past _CHUNK_ROWS
+    rows, and a bigger file is a chunk of its own, so a task holds at
+    most one chunk plus one file.
+    Each file's rows carry its index through the kernel, and the output
+    is split by it: with write_dir, every input file with output spans
+    gets one doc-complete output file, named after the input's index in
+    the sorted path list (write_dir/part-<index:05d>.parquet), so a
+    retried task, or another packing, rewrites the same names. Input
+    bytes go parquet -> Arrow -> numpy with no InternalRow/ArrowEvalPython
+    re-encode hop, which profiling shows is the bulk of the JVM-scan
+    path's fixed cost; only the (narrow) OUTPUT crosses the JVM boundary.
 
     Distribution story at 100 TB: identical to the DataFrame path — tasks
     read their files from the object store (pyarrow reads s3://... the
@@ -394,34 +538,27 @@ def extract_from_parquet_files(spark, paths: list[str], partitions: int | None =
     if partitions is None:
         partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     ntasks = min(len(paths), max(partitions, 1))
+    tasks = _pack_files(_file_sizes(paths), ntasks)
+    budget = _CHUNK_ROWS  # read on the driver: the tasks run with its value
     full = include_payload or write_dir is not None
     cols = _SCAN_COLS_NARROW + (["text", "media_ref"] if full else [])
     narrow_names = ["doc_id", "ord", "kind", "offset"]
 
     def gen(batches):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        kern = make_partition_arrow_kernel(include_payload=full,
-                                           fail_fast=fail_fast)
         for b in batches:
             for tid in b.column(0).to_pylist():
                 n_task = 0
-                for k, fp in enumerate(paths[int(tid)::ntasks]):
-                    t = pq.read_table(fp, columns=cols)
-                    outs = list(kern(iter(t.to_batches())))
-                    if write_dir is not None and outs:
-                        # one doc-complete output file per input file
-                        write_parquet_atomic(
-                            pa.Table.from_batches(outs),
-                            f"{write_dir}/part-{int(tid)}-{k}.parquet")
+                for i, out in _task_outputs(paths, tasks[tid], cols, full,
+                                            fail_fast, budget):
+                    if write_dir is not None:
+                        write_parquet_atomic(pa.Table.from_batches([out]),
+                                             f"{write_dir}/part-{i:05d}.parquet")
                     if stats_only:
-                        n_task += sum(ob.num_rows for ob in outs)
+                        n_task += out.num_rows
                     elif write_dir is not None and not include_payload:
-                        for ob in outs:
-                            yield ob.select(narrow_names)
+                        yield out.select(narrow_names)
                     else:
-                        yield from outs
+                        yield out
                 if stats_only:
                     yield pa.RecordBatch.from_arrays(
                         [pa.array([n_task], type=pa.int64())], names=["n_rows"])

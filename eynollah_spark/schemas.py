@@ -3,36 +3,6 @@ eynollah.py:94-99,2052-2060; we make them explicit StructTypes)."""
 
 from pyspark.sql import types as T
 
-SPAN_STRUCT = T.StructType([
-    T.StructField("kind", T.StringType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("media_ref", T.StringType()),
-    T.StructField("offset", T.IntegerType()),
-])
-
-GEOM_STRUCT = T.StructType([
-    T.StructField("x0", T.IntegerType()),
-    T.StructField("x1", T.IntegerType()),
-    T.StructField("y0", T.IntegerType()),
-    T.StructField("y1", T.IntegerType()),
-])
-
-META_STRUCT = T.StructType([
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("dpi", T.IntegerType()),
-    T.StructField("num_col_hint", T.IntegerType()),
-    T.StructField("rtl", T.BooleanType()),
-])
-
-# input table (BASELINE.json input_hint + FIXTURES.md geometry sidecar)
-DOCUMENTS_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("spans", T.ArrayType(SPAN_STRUCT)),
-    T.StructField("geom", T.ArrayType(GEOM_STRUCT)),
-    T.StructField("meta", META_STRUCT),
-])
-
 # output (FIXTURES.md §2): one row per output span; `ord` is the
 # reading order
 FLAT_OUT_SCHEMA = T.StructType([

@@ -773,3 +773,26 @@ def test_traced_kernel_phases_resolve(mixed_docs):
         assert np.array_equal(got.perm, want.perm) and tracer.spans
     finally:
         del sys.modules[spec.name]
+
+
+def test_smooth_rows_is_per_row_gaussian_smooth():
+    """The batched row smoothing is bitwise gaussian_smooth row by row,
+    on full rows, short rows and rows shorter than their kernel (where
+    np.convolve swaps its operands and the output outgrows the row), and
+    takes zero rows."""
+    from eynollah_spark.kernels.layout import _BINS, _smooth_rows, gaussian_smooth
+
+    rng = np.random.default_rng(3)
+    P = rng.random((6, _BINS)) * rng.integers(1, 50, size=(6, 1))
+    bins = np.array([_BINS, 700, 8, 8, 40, 1000])
+    sigma = np.array([6.8, 0.3, 5.0, 1.2, 25.0, 0.5])
+    S, n = _smooth_rows(P, bins, sigma)
+    for k in range(len(bins)):
+        want = gaussian_smooth(P[k, :bins[k]], sigma[k])
+        assert n[k] == len(want)
+        assert S[k, :n[k]].tobytes() == want.tobytes()
+        assert not S[k, n[k]:].any()
+    assert n[2] > bins[2] and n[4] > bins[4]  # the swapped rows
+    assert S.shape == (6, max(_BINS, n.max()))
+    S, n = _smooth_rows(P[:0], bins[:0], sigma[:0])
+    assert S.shape == (0, _BINS) and n.shape == (0,)

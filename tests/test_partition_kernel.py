@@ -4,10 +4,12 @@ hashes, and independence from how a partition arrives in batches and
 from which documents share it."""
 
 import hashlib
+import os
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 
 from eynollah_spark.corpus import gen_doc
@@ -178,3 +180,78 @@ def test_batch_boundaries_do_not_matter(partition):
     assert whole.equals(split)
     assert whole.equals(shuffled)
 
+
+
+def test_pack_files_places_every_file_once_and_balances():
+    """The fast path's packing is deterministic, places every file on
+    exactly one task (each task's files in index order), and on skewed
+    sizes its heaviest task is no heavier than round-robin's."""
+    from eynollah_spark.pipeline import _pack_files
+
+    rng = np.random.default_rng(5)
+    for sizes, ntasks in ((rng.pareto(1.5, 64) * 1e5 + 1e4, 8),
+                          (rng.integers(1, 10**6, 37), 5),
+                          ([7] * 12, 4), ([3, 1, 2], 3), ([], 2)):
+        sizes = [int(s) for s in sizes]
+        tasks = _pack_files(sizes, ntasks)
+        assert tasks == _pack_files(sizes, ntasks)
+        assert len(tasks) == ntasks
+        assert sorted(i for t in tasks for i in t) == list(range(len(sizes)))
+        assert all(t == sorted(t) for t in tasks)
+        if sizes:
+            packed = max(sum(sizes[i] for i in t) for t in tasks)
+            robin = max(sum(sizes[tid::ntasks]) for tid in range(ntasks))
+            assert packed <= robin
+
+
+def _write_files(tmp_path, t: pa.Table, n_files: int) -> list[str]:
+    """t's documents split by doc_id hash into n_files doc-complete
+    parquet files (sorted paths), plus one empty file."""
+    ids = t.column("doc_id").to_numpy(zero_copy_only=False)
+    h = np.array([int(hashlib.md5(x.encode()).hexdigest(), 16) % n_files for x in ids])
+    paths = []
+    for k in range(n_files):
+        paths.append(str(tmp_path / f"f{k:02d}.parquet"))
+        pq.write_table(t.filter(pa.array(h == k)), paths[-1])
+    paths.append(str(tmp_path / f"f{n_files:02d}.parquet"))
+    pq.write_table(t.slice(0, 0), paths[-1])
+    return sorted(paths)
+
+
+def test_task_chunks_equal_per_file_runs(partition, tmp_path, monkeypatch):
+    """A task's chunks close at the row budget (a file over it is a chunk
+    of its own), and each file's output from its chunk equals running the
+    kernel on that file alone, in the same row order; an empty file has
+    no output. File sizes are read for absolute and relative paths."""
+    from eynollah_spark import pipeline
+
+    paths = _write_files(tmp_path, _first_docs(partition, 400), 5)
+    sizes = [os.path.getsize(p) for p in paths]
+    assert pipeline._file_sizes(paths) == sizes
+    monkeypatch.chdir(tmp_path)
+    assert pipeline._file_sizes([os.path.basename(p) for p in paths]) == sizes
+    cols = pq.read_schema(paths[0]).names
+    rows = [pq.read_metadata(p).num_rows for p in paths]
+    kern, alone = make_partition_arrow_kernel(), {}
+    for i, p in enumerate(paths):
+        outs = list(kern(iter(pq.read_table(p).to_batches())))
+        if outs:
+            alone[i] = pa.Table.from_batches(outs)
+    assert len(alone) == 5 and rows[5] == 0
+    chunks = []
+    run_chunk = pipeline._chunk_outputs
+    monkeypatch.setattr(pipeline, "_chunk_outputs", lambda tables, *a: (
+        chunks.append([i for i, _ in tables]) or run_chunk(tables, *a)))
+    everything = list(range(6))
+    for files, budget, want in (
+            (everything, 10**9, [everything]),
+            (everything, 1, [[0], [1], [2], [3], [4], [5]]),
+            ([0, 1, 2], rows[0] + rows[1], [[0, 1], [2]]),
+            ([1, 3, 5], rows[1] + rows[3], [[1, 3, 5]])):
+        chunks.clear()
+        got = {i: pa.Table.from_batches([o]) for i, o in pipeline._task_outputs(
+            paths, files, cols, True, True, budget)}
+        assert chunks == want
+        assert got.keys() == {i for i in files if i in alone}
+        for i, out in got.items():
+            assert out.equals(alone[i]), i

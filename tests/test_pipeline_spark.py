@@ -147,6 +147,105 @@ def test_task_side_scan_empty_file_list(spark):
     assert "doc_id" in out.columns
 
 
+def test_task_side_scan_writes_one_file_per_input_file(spark, tmp_path, monkeypatch):
+    """The fast path writes one output file per input file with output,
+    named after the input's index in the sorted path list, holding the
+    rows the kernel gives that file alone, also when a small row budget
+    splits every task into several chunks (each of the 2 tasks holds 3
+    or 4 files, and any two non-empty files exceed the budget). An empty
+    input file has no output."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from eynollah_spark import pipeline
+
+    corpus_dir = str(tmp_path / "corpus")
+    (corpus_flat_spark(spark, 80, partitions=4)
+     .drop("expected_kind", "expected_rank")
+     .repartition(6, F.xxhash64("doc_id"))
+     .write.parquet(corpus_dir))
+    files = sorted(glob.glob(corpus_dir + "/*.parquet"))
+    pq.write_table(pq.read_table(files[0]).slice(0, 0), corpus_dir + "/zz-empty.parquet")
+    files = sorted(glob.glob(corpus_dir + "/*.parquet"))
+    rows = [pq.read_metadata(f).num_rows for f in files]
+    assert len(files) == 7 and sorted(rows)[0] == 0 < sorted(rows)[1]
+    monkeypatch.setattr(pipeline, "_CHUNK_ROWS", sorted(rows)[1])
+
+    kern, alone = pipeline.make_partition_arrow_kernel(), {}
+    for i, f in enumerate(files):
+        outs = list(kern(iter(pq.read_table(f).to_batches())))
+        if outs:
+            alone[f"part-{i:05d}.parquet"] = pa.Table.from_batches(outs)
+    assert len(alone) == 6
+
+    out_dir = str(tmp_path / "written")
+    got = pipeline.extract_from_parquet_files(spark, files, partitions=2,
+                                              include_payload=False,
+                                              write_dir=out_dir)
+    cols = ["doc_id", "ord", "kind", "offset"]
+    assert sorted(map(tuple, got.collect())) == sorted(
+        r for t in alone.values() for r in zip(*t.select(cols).to_pydict().values()))
+    assert sorted(os.listdir(out_dir)) == sorted(alone)
+    for name, want in alone.items():
+        assert pq.read_table(os.path.join(out_dir, name)).equals(want), name
+
+
+def test_worker_heap_is_frozen_only_in_spark_tasks(spark, corpus):
+    """layout_partition freezes the heap of a Spark Python worker from its
+    first kernel call on, and never the heap of the driver (or any
+    process outside a Spark task)."""
+    import gc
+
+    from eynollah_spark.packaging import ensure_distributed
+    from eynollah_spark.pipeline import layout_partition
+    from eynollah_spark.schemas import FLAT_IN_FIELDS
+
+    flat = corpus.select(*FLAT_IN_FIELDS)
+    assert layout_partition(flat.limit(300).toArrow().to_batches()) is not None
+    assert gc.get_freeze_count() == 0
+
+    def probe(batches):
+        import gc
+
+        import pyarrow as pa
+
+        from eynollah_spark.pipeline import layout_partition
+
+        layout_partition(batches)
+        yield pa.RecordBatch.from_pydict({"frozen": [gc.get_freeze_count()]})
+
+    ensure_distributed(spark)
+    rows = flat.repartition(4).mapInArrow(probe, "frozen long").collect()
+    assert len(rows) == 4 and all(r["frozen"] > 0 for r in rows)
+
+
+def test_worker_heap_refreezes_after_new_imports(monkeypatch):
+    """Inside a task, the heap is frozen at the first kernel call and
+    again only at a call that finds modules imported since (PySpark's
+    worker imports pandas after the first task's kernel)."""
+    import gc
+    import types
+
+    from pyspark import TaskContext
+
+    from eynollah_spark import pipeline
+
+    freezes = []
+    monkeypatch.setattr(TaskContext, "get", classmethod(lambda cls: cls))
+    monkeypatch.setattr(gc, "freeze", lambda: freezes.append(len(sys.modules)))
+    monkeypatch.setattr(pipeline, "_frozen_modules", 0)
+    pipeline._freeze_worker_heap()
+    pipeline._freeze_worker_heap()
+    assert freezes == [len(sys.modules)]
+    monkeypatch.setitem(sys.modules, "_imported_after_freeze", types.ModuleType("m"))
+    pipeline._freeze_worker_heap()
+    pipeline._freeze_worker_heap()
+    assert freezes == [len(sys.modules) - 1, len(sys.modules)]
+
+
 _CHECK_COLS = ["doc_id", "width", "height", "rtl", "kind", "offset",
                "x0", "x1", "y0", "y1", "expected_kind", "expected_rank",
                "expected_n"]
