@@ -22,6 +22,11 @@ import numpy as np
 #: between 384 and 512 on 64-document batches)
 _SCORE_SPANS = 512
 
+#: the smallest |deskew angle| in degrees that the kernel applies: a page
+#: whose estimate is below it is not rotated (analyze_pages), and its
+#: effective angle is 0 (pagexml.page_deskew_angles)
+MIN_ROTATION_DEG = 0.75
+
 
 def _score_angles(cx, cy, w, h, seg, bounds, angles_rad, bin_w, ox, oy):
     """Column-edge alignment score per (segment, angle), vectorized over

@@ -1243,7 +1243,7 @@ def analyze_pages(spans: Spans) -> Pages:
     find_gutters and split_main_and_marginal. Every batched step is
     exact per document, so a document's part of the Pages does not depend on which
     others share its batch."""
-    from eynollah_spark.kernels.deskew import estimate_skews, rotate_boxes
+    from eynollah_spark.kernels.deskew import MIN_ROTATION_DEG, estimate_skews, rotate_boxes
 
     D = len(spans)
     bounds, W, H = spans.bounds, spans.W, spans.H
@@ -1258,7 +1258,7 @@ def analyze_pages(spans: Spans) -> Pages:
     ang = estimate_skews((x0[ti] + x1[ti]) / 2.0, (y0[ti] + y1[ti]) / 2.0,
                          np.maximum(x1[ti] - x0[ti], 1.0),
                          np.maximum(y1[ti] - y0[ti], 1.0), tb, W, H)
-    for d in (np.abs(ang) >= 0.75).nonzero()[0].tolist():
+    for d in (np.abs(ang) >= MIN_ROTATION_DEG).nonzero()[0].tolist():
         s, e = bounds[d], bounds[d + 1]
         x0[s:e], x1[s:e], y0[s:e], y1[s:e] = rotate_boxes(
             x0[s:e], x1[s:e], y0[s:e], y1[s:e], float(ang[d]), W[d] / 2.0, H[d] / 2.0)

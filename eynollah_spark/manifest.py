@@ -21,10 +21,11 @@ catalog jar):
                                             same metadata-swap commit
                                             Iceberg uses)
 
-A batch is one Spark job whose tasks run the layout kernel, write one
-file per (task, bucket) and return its lineage row (docs, spans, kind
-histogram, quarantined docs and their exception classes); the Spark
-driver process sums these into the manifest.
+A batch is one Spark job whose tasks run pipeline._keyed_outputs (the
+fast path's task body) with rows keyed by bucket, write one file per
+(task, bucket) and return its lineage row (docs, spans, kind histogram,
+quarantined docs and their exception classes); the Spark driver process
+sums these into the manifest.
 As in Iceberg's manifests, file stats are recorded at commit time, with
 no re-read.
 
@@ -53,8 +54,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from eynollah_spark import KERNEL_VERSION
-from eynollah_spark.pipeline import (_flat_output, _kernel_input, layout_partition,
-                                     write_parquet_atomic)
+from eynollah_spark.pipeline import _KEY, _keyed_outputs, _kernel_input, write_parquet_atomic
 
 
 def _manifest_path(out_path: str) -> str:
@@ -198,30 +198,17 @@ def _reserve_snapshot_dir(out_path: str) -> int:
 
 
 def _bucket_writer(snap_dir: str, kernel_kwargs: dict):
-    """The mapInArrow function of one batch: run the flat layout kernel
+    """The mapInArrow function of one batch: pipeline._keyed_outputs
     (fail_fast=False, ``kernel_kwargs``) over the task's doc-complete
-    partition, write each bucket's rows to
+    partition, its rows keyed by bucket; write each bucket's rows to
     snap_dir/part=<p>/part-<task>.parquet (the flat sink columns; the
     bucket is in the path only) and yield one lineage row per bucket."""
 
     def write(batches):
-        res = layout_partition(batches, fail_fast=False, **kernel_kwargs)
-        if res is None:
-            return
-        col, starts, counts, take, marg, failed = res
-        take = pa.array(take)
-        out = _flat_output(col, starts, counts, take, pa.array(marg),
-                           include_payload=True)
-        part = pc.take(col["part"], take)
-        # the quarantined documents' exception classes, by bucket
-        causes = {}
-        failed_part = pc.take(col["part"], pa.array(starts[list(failed)], type=pa.int64()))
-        for p, cls in zip(failed_part.to_pylist(), failed.values()):
-            causes.setdefault(p, Counter())[cls] += 1
         task = TaskContext.get().partitionId()
         lineage = []
-        for p in pc.unique(part).to_pylist():
-            rows = out.filter(pc.equal(part, p))
+        for p, rows, causes in _keyed_outputs(batches, include_payload=True,
+                                               fail_fast=False, **kernel_kwargs):
             write_parquet_atomic(pa.Table.from_batches([rows]), os.path.join(
                 snap_dir, f"part={p}", f"part-{task:05d}.parquet"))
             hist = pc.value_counts(rows.column("kind"))
@@ -231,8 +218,8 @@ def _bucket_writer(snap_dir: str, kernel_kwargs: dict):
                 "kind_hist": json.dumps(dict(zip(
                     hist.field("values").to_pylist(),
                     hist.field("counts").to_pylist()))),
-                "quarantined": sum(causes.get(p, {}).values()),
-                "quarantine_causes": json.dumps(dict(causes.get(p, {})))})
+                "quarantined": sum(causes.values()),
+                "quarantine_causes": json.dumps(dict(causes))})
         if lineage:
             yield pa.RecordBatch.from_pylist(lineage)
 
@@ -269,7 +256,7 @@ def run_extraction(docs: DataFrame, out_path: str, n_parts: int = 8,
         t0 = time.time()
         sid = _reserve_snapshot_dir(out_path)
         flat = _kernel_input(docs.filter(bucket.isin(batch)), partitions, margin)
-        rows = (flat.withColumn("part", bucket)
+        rows = (flat.withColumn(_KEY, bucket)
                 .mapInArrow(_bucket_writer(_snap_dir(out_path, sid), kw),
                             "part long, spans long, docs long, kind_hist string, "
                             "quarantined long, quarantine_causes string")

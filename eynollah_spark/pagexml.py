@@ -167,10 +167,10 @@ def attach_geometry(out: DataFrame, flat_input: DataFrame) -> DataFrame:
 
 def page_deskew_angles(flat_input: DataFrame) -> DataFrame:
     """Per-document EFFECTIVE deskew angle (doc_id, angle_deg): the exact
-    angle layout_permutation applied — estimate_skew over the text spans,
-    gated the same way (>= 8 text lines, |angle| >= 0.75 deg, else 0).
-    Bucketed applyInPandas with the doc_runs idiom; one numpy call per
-    document slice."""
+    angle the layout kernel applied — estimate_skews over the text spans
+    (0 below 8 lines), 0 below the kernel's MIN_ROTATION_DEG. Bucketed
+    applyInPandas with the doc_runs idiom; one estimate_skews call per
+    bucket, its documents as segments."""
     from pyspark.sql import functions as F
 
     from eynollah_spark.packaging import ensure_distributed
@@ -184,34 +184,22 @@ def page_deskew_angles(flat_input: DataFrame) -> DataFrame:
 
     def fn(b: pd.DataFrame) -> pd.DataFrame:
         from eynollah_spark.kernels import doc_runs
-        from eynollah_spark.kernels.deskew import estimate_skew
+        from eynollah_spark.kernels.deskew import MIN_ROTATION_DEG, estimate_skews
 
         if not len(b):
             return pd.DataFrame({"doc_id": pd.Series([], dtype=object),
                                  "angle_deg": pd.Series([], dtype=float)})
-        order, starts, ends = doc_runs(b["doc_id"])
-        ids = b["doc_id"].to_numpy(dtype=object)[order]
-        x0 = b["x0"].to_numpy(float)[order]
-        x1 = b["x1"].to_numpy(float)[order]
-        y0 = b["y0"].to_numpy(float)[order]
-        y1 = b["y1"].to_numpy(float)[order]
-        W = b["width"].to_numpy(float)[order]
-        H = b["height"].to_numpy(float)[order]
-        out_id, out_a = [], []
-        for s, e in zip(starts, ends):
-            ang = 0.0
-            if e - s >= 8:  # the kernel's text-line gate
-                cx = (x0[s:e] + x1[s:e]) / 2.0
-                cy = (y0[s:e] + y1[s:e]) / 2.0
-                ang = estimate_skew(cx, cy,
-                                    np.maximum(x1[s:e] - x0[s:e], 1.0),
-                                    np.maximum(y1[s:e] - y0[s:e], 1.0),
-                                    W[s], H[s])
-                if abs(ang) < 0.75:  # the kernel's apply threshold
-                    ang = 0.0
-            out_id.append(ids[s])
-            out_a.append(float(ang))
-        return pd.DataFrame({"doc_id": out_id, "angle_deg": out_a})
+        order, starts, _ = doc_runs(b["doc_id"])
+        x0, x1, y0, y1 = (b[c].to_numpy(float)[order] for c in ("x0", "x1", "y0", "y1"))
+        first = order[starts]
+        ang = estimate_skews((x0 + x1) / 2.0, (y0 + y1) / 2.0,
+                             np.maximum(x1 - x0, 1.0), np.maximum(y1 - y0, 1.0),
+                             np.append(starts, len(order)),
+                             b["width"].to_numpy(float)[first],
+                             b["height"].to_numpy(float)[first])
+        ang[np.abs(ang) < MIN_ROTATION_DEG] = 0.0
+        return pd.DataFrame({"doc_id": b["doc_id"].to_numpy(dtype=object)[first],
+                             "angle_deg": ang})
 
     return txt.groupBy("_bucket").applyInPandas(
         fn, schema="doc_id string, angle_deg double")

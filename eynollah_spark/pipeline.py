@@ -41,16 +41,18 @@ Every DataFrame entry runs one plan (SURVEY.md §3.1 lifecycle):
 
 The entries: extract_flat_input (flat span rows), manifest.run_extraction
 (nested documents, checkpointed per bucket) and extract_from_parquet_files,
-the zero-shuffle path over doc-complete bucketed files. Its unit of work
-is the task, not the file:
+the zero-shuffle path over doc-complete bucketed files. The two writers
+share one task body, _keyed_outputs: one kernel call over rows keyed by
+bucket (run_extraction) or input file (the fast path), its output and
+quarantine counts split by key. The fast path's unit of work is the
+task, not the file:
 
   sorted file list -> packed onto tasks by byte size, largest first onto
   the lightest task (_pack_files)
-    -> per task: read its files in order; run the kernel once per chunk
-       of consecutive files of at most _CHUNK_ROWS rows (a bigger file is
-       a chunk of its own), so a task holds at most one chunk plus one
-       file. Each row carries its file's index (_FILE), the kernel orders
-       the chunk by it first, and the output is split by it:
+    -> per task: read its files in order; run _keyed_outputs once per
+       chunk of consecutive files of at most _CHUNK_ROWS rows (a bigger
+       file is a chunk of its own), keyed by the file's index, so a task
+       holds at most one chunk plus one file:
     -> one output file per input file with output spans, named after the
        input's index in the sorted list (part-<index:05d>.parquet), so a
        retry or another packing rewrites the same names.
@@ -67,6 +69,7 @@ from __future__ import annotations
 
 import gc
 import sys
+from collections import Counter
 
 import numpy as np
 import pyarrow as pa
@@ -128,8 +131,9 @@ def flatten(df: DataFrame) -> DataFrame:
 #: matrices stay in cache, and the re-run after a failed batch stays short
 _PAGE_BATCH = 64
 
-#: the file-index column of a task-side scan chunk (extract_from_parquet_files)
-_FILE = "_file"
+#: the key column of _keyed_outputs' input rows: a document boundary and
+#: the kernel's first sort key
+_KEY = "_key"
 
 
 def _safe_permutations(spans: Spans, a: int, b: int, fail_fast: bool):
@@ -175,9 +179,9 @@ def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper:
     _safe_permutations quarantined ({document: exception class name})."""
     ids = col["doc_id"]
     change = pc.not_equal(ids[1:], ids[:-1])
-    if _FILE in col:
-        # a chunk of the task-side scan path: a document never spans files
-        change = pc.or_(change, pc.not_equal(col[_FILE][1:], col[_FILE][:-1]))
+    if _KEY in col:
+        # _keyed_outputs' rows: a document never spans keys
+        change = pc.or_(change, pc.not_equal(col[_KEY][1:], col[_KEY][:-1]))
     change = change.to_numpy(zero_copy_only=False).nonzero()[0] + 1
     starts = np.concatenate(([0], change))
     counts = np.zeros(len(starts), dtype=np.int64)
@@ -279,8 +283,8 @@ def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = 
     per 300k-row partition), and input only needs to be doc-complete per
     partition: neither sorted nor batched at doc boundaries. Memory: one
     partition resident per task, bounded by the repartition. (The
-    bucketed scan path runs layout_partition on chunks of its files
-    instead: _CHUNK_ROWS rows plus one file.)"""
+    writers run _keyed_outputs instead; the bucketed scan path on chunks
+    of its files: _CHUNK_ROWS rows plus one file.)"""
     build = _OUTPUTS[output]
 
     def kernel(batches):
@@ -326,7 +330,7 @@ def layout_partition(batches, fail_fast: bool = True, num_col_lower: int = 0,
                      num_col_upper: int = 0):
     """The body of the partition kernel, for callers that build their own
     output: the partition's columns in canonical (doc_id, offset) order
-    (preceded by the file index, when the rows carry a _FILE column) and
+    (preceded by the key, when the rows carry a _KEY column) and
     _permutations' (starts, counts, take, marg, status) — or None for an
     empty partition."""
     _freeze_worker_heap()
@@ -338,11 +342,38 @@ def layout_partition(batches, fail_fast: bool = True, num_col_lower: int = 0,
     if t.num_rows == 0:
         return None
     keys = [("doc_id", "ascending"), ("offset", "ascending")]
-    if _FILE in t.column_names:
-        keys.insert(0, (_FILE, "ascending"))
+    if _KEY in t.column_names:
+        keys.insert(0, (_KEY, "ascending"))
     t = t.take(pc.sort_indices(t, sort_keys=keys))
     col = {name: t.column(name).combine_chunks() for name in t.column_names}
     return (col, *_permutations(col, fail_fast, num_col_lower, num_col_upper))
+
+
+def _keyed_outputs(batches, include_payload: bool, fail_fast: bool, **kernel_kwargs):
+    """The task body of both writers (extract_from_parquet_files' tasks,
+    keyed by input file; manifest.run_extraction's, keyed by bucket): run
+    the kernel once over rows that carry a _KEY column and yield (key,
+    flat output rows, Counter of the quarantined documents' exception
+    classes) for every key with output. The rows are ordered by key
+    first, so each key's documents are one slice of the output, in the
+    order the key's rows alone would give."""
+    res = layout_partition(batches, fail_fast, **kernel_kwargs)
+    if res is None:
+        return
+    col, starts, counts, take, marg, failed = res
+    out = _flat_output(col, starts, counts, pa.array(take), pa.array(marg),
+                       include_payload)
+    # each document's key (non-decreasing) -> each key's output rows
+    doc_key = col[_KEY].to_numpy()[starts]
+    keys, first = np.unique(doc_key, return_index=True)
+    causes = {}
+    for d, cls in failed.items():
+        causes.setdefault(doc_key[d], Counter())[cls] += 1
+    off = np.concatenate(([0], np.cumsum(counts)))
+    for k, a, b in zip(keys.tolist(), off[first].tolist(),
+                       off[np.append(first[1:], len(starts))].tolist()):
+        if b > a:
+            yield k, out.slice(a, b - a), causes.get(k, Counter())
 
 
 def _repartition_by_doc(df: DataFrame, partitions: int | None) -> DataFrame:
@@ -453,47 +484,29 @@ def _pack_files(sizes: list[int], ntasks: int) -> list[list[int]]:
     return [sorted(t) for t in tasks]
 
 
-def _chunk_outputs(tables, include_payload: bool, fail_fast: bool):
-    """The flat output of one chunk, split by input file: runs the kernel
-    once over the chunk's (file index, table) pairs and yields (file
-    index, output rows) for every file with output. The chunk is ordered
-    by file first, so each file's documents are one slice of the output,
-    in the order the file alone would give."""
-    res = layout_partition(pa.concat_tables(
-        [t.append_column(_FILE, pa.array(np.full(t.num_rows, i, dtype=np.int32)))
-         for i, t in tables], promote_options="permissive").to_batches(), fail_fast)
-    if res is None:
-        return
-    col, starts, counts, take, marg, _ = res
-    out = _flat_output(col, starts, counts, pa.array(take), pa.array(marg),
-                       include_payload)
-    # each document's file (non-decreasing) -> each file's output rows
-    files, first = np.unique(col[_FILE].to_numpy()[starts], return_index=True)
-    off = np.concatenate(([0], np.cumsum(counts)))
-    for i, a, b in zip(files.tolist(), off[first].tolist(),
-                       off[np.append(first[1:], len(starts))].tolist()):
-        if b > a:
-            yield i, out.slice(a, b - a)
-
-
 def _task_outputs(paths: list[str], files: list[int], cols: list[str],
                   include_payload: bool, fail_fast: bool, budget: int):
-    """One task's body: read its files in order, run the kernel once per
-    chunk of consecutive files (at most ``budget`` rows; a bigger file is
-    a chunk of its own) and yield (file index, output rows) per input
-    file with output. A task holds at most one chunk plus one file."""
+    """One task's body: read its files in order, run _keyed_outputs once
+    per chunk of consecutive files (at most ``budget`` rows; a bigger
+    file is a chunk of its own), its rows keyed by file index, and yield
+    (file index, output rows, quarantine causes) per input file with
+    output. A task holds at most one chunk plus one file."""
     import pyarrow.parquet as pq
+
+    def run(chunk):
+        return _keyed_outputs(pa.concat_tables(chunk, promote_options="permissive")
+                              .to_batches(), include_payload, fail_fast)
 
     chunk, rows = [], 0
     for i in files:
         t = pq.read_table(paths[i], columns=cols)
         if chunk and rows + t.num_rows > budget:
-            yield from _chunk_outputs(chunk, include_payload, fail_fast)
+            yield from run(chunk)
             chunk, rows = [], 0
-        chunk.append((i, t))
+        chunk.append(t.append_column(_KEY, pa.array(np.full(t.num_rows, i, dtype=np.int32))))
         rows += t.num_rows
     if chunk:
-        yield from _chunk_outputs(chunk, include_payload, fail_fast)
+        yield from run(chunk)
 
 
 def extract_from_parquet_files(spark, paths: list[str], partitions: int | None = None,
@@ -513,11 +526,14 @@ def extract_from_parquet_files(spark, paths: list[str], partitions: int | None =
     chunk closes before the file that would take it past _CHUNK_ROWS
     rows, and a bigger file is a chunk of its own, so a task holds at
     most one chunk plus one file.
-    Each file's rows carry its index through the kernel, and the output
-    is split by it: with write_dir, every input file with output spans
-    gets one doc-complete output file, named after the input's index in
-    the sorted path list (write_dir/part-<index:05d>.parquet), so a
-    retried task, or another packing, rewrites the same names. Input
+    Each file's rows carry its index through the kernel as the key of
+    _keyed_outputs, and the output is split by it: with write_dir, every
+    input file with output spans gets one doc-complete output file, named
+    after the input's index in the sorted path list
+    (write_dir/part-<index:05d>.parquet), so a retried task, or another
+    packing, rewrites the same names. stats_only yields one row per task
+    instead: its output rows (n_rows) and the documents it quarantined
+    (quarantined; fail_fast=False). Input
     bytes go parquet -> Arrow -> numpy with no InternalRow/ArrowEvalPython
     re-encode hop, which profiling shows is the bulk of the JVM-scan
     path's fixed cost; only the (narrow) OUTPUT crosses the JVM boundary.
@@ -547,24 +563,25 @@ def extract_from_parquet_files(spark, paths: list[str], partitions: int | None =
     def gen(batches):
         for b in batches:
             for tid in b.column(0).to_pylist():
-                n_task = 0
-                for i, out in _task_outputs(paths, tasks[tid], cols, full,
-                                            fail_fast, budget):
+                n_task = q_task = 0
+                for i, out, causes in _task_outputs(paths, tasks[tid], cols, full,
+                                                    fail_fast, budget):
                     if write_dir is not None:
                         write_parquet_atomic(pa.Table.from_batches([out]),
                                              f"{write_dir}/part-{i:05d}.parquet")
                     if stats_only:
                         n_task += out.num_rows
+                        q_task += sum(causes.values())
                     elif write_dir is not None and not include_payload:
                         yield out.select(narrow_names)
                     else:
                         yield out
                 if stats_only:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([n_task], type=pa.int64())], names=["n_rows"])
+                    yield pa.RecordBatch.from_pylist([{"n_rows": n_task,
+                                                       "quarantined": q_task}])
 
     if stats_only:
-        out_schema = "n_rows long"
+        out_schema = "n_rows long, quarantined long"
     elif include_payload:
         out_schema = FLAT_OUT_SCHEMA
     else:

@@ -108,15 +108,12 @@ class SparkLayoutProcessor:
                         .drop("stem"))
         flat = flat.cache()
         try:
-            ordered = extract_flat_input(flat, fail_fast=self.fail_fast)
+            rows = attach_geometry(extract_flat_input(flat, fail_fast=self.fail_fast), flat)
             if self.scorer is not None:
                 from eynollah_spark.scorer import refine_kinds
 
-                ordered = refine_kinds(
-                    attach_geometry(ordered, flat), scorer=self.scorer
-                ).select(*ordered.columns)
-            xml_df = to_pagexml_df(attach_geometry(ordered, flat))
-            return write_pagexml_dir(xml_df, out_dir)
+                rows = refine_kinds(rows, scorer=self.scorer)
+            return write_pagexml_dir(to_pagexml_df(rows), out_dir)
         finally:
             flat.unpersist()
 

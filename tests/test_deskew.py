@@ -68,3 +68,56 @@ def test_batched_scores_equal_single_page_scores():
                                 angles if angles.ndim == 1 else angles[k:k + 1],
                                 bin_w[k:k + 1], ox[k:k + 1], oy[k:k + 1])
             assert np.array_equal(got[k], one[0])
+
+
+def test_page_deskew_angles_are_the_kernels_rotation(spark):
+    """pagexml.page_deskew_angles gives, document by document, the angle
+    the layout kernel's page stage applies: rotating a page by it
+    reproduces analyze_pages' deskewed geometry bit for bit, and a page
+    at angle 0 (or absent: no text lines) keeps its geometry. Over 200
+    generated pages, some with a planted skew, and single-column pages
+    rotated by less than MIN_ROTATION_DEG, whose estimate the gate
+    zeroes, and by more."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from page_helpers import corpus_page
+
+    from eynollah_spark.corpus import corpus_flat_spark
+    from eynollah_spark.kernels.deskew import MIN_ROTATION_DEG, estimate_skews
+    from eynollah_spark.kernels.layout import DocSpans, analyze_pages, span_table
+    from eynollah_spark.pagexml import page_deskew_angles
+
+    tilted = []
+    for k, theta in enumerate((0.4, 0.6, -0.5, 0.8, 2.8)):
+        x0, x1, y0, y1 = rotate_boxes(*_column(), theta, 700, 1000)
+        tilted.append((f"tilted{k}", DocSpans(
+            kind=np.full(len(x0), "text", dtype=object),
+            text=np.full(len(x0), None, dtype=object),
+            media_ref=np.full(len(x0), None, dtype=object),
+            offset=np.arange(len(x0)), x0=x0, x1=x1, y0=y0, y1=y1,
+            width=1400, height=2000)))
+    raw = [estimate_skews((d.x0 + d.x1) / 2.0, (d.y0 + d.y1) / 2.0, d.x1 - d.x0,
+                          d.y1 - d.y0, [0, d.n], [1400], [2000])[0] for _, d in tilted]
+    assert any(0 < abs(a) < MIN_ROTATION_DEG for a in raw), raw
+    assert any(abs(a) >= MIN_ROTATION_DEG for a in raw), raw
+    geom = pd.DataFrame([(i, 1400, 2000, "text", *v) for i, d in tilted
+                         for v in zip(d.x0, d.x1, d.y0, d.y1)],
+                        columns=["doc_id", "width", "height", "kind", "x0", "x1", "y0", "y1"])
+    flat = corpus_flat_spark(spark, 200, partitions=4).filter(F.col("offset") >= 0)
+    angles = {r["doc_id"]: r["angle_deg"]
+              for frame in (flat, spark.createDataFrame(geom))
+              for r in page_deskew_angles(frame).collect()}
+    assert sum(a != 0.0 for a in angles.values()) >= 5
+    docs = [(f"doc{i:08d}", d) for i in range(200)
+            for d in [corpus_page(i)[0]] if d.n] + tilted
+    spans = span_table([d for _, d in docs])
+    pages = analyze_pages(spans)
+    for d, (doc_id, _) in enumerate(docs):
+        s, e = spans.bounds[d], spans.bounds[d + 1]
+        box = tuple(v[s:e] for v in (spans.x0, spans.x1, spans.y0, spans.y1))
+        a = angles.get(doc_id, 0.0)
+        if a != 0.0:
+            box = rotate_boxes(*box, a, spans.W[d] / 2.0, spans.H[d] / 2.0)
+        for want, got in zip(box, (pages.x0, pages.x1, pages.y0, pages.y1)):
+            assert np.array_equal(got[s:e], want), (doc_id, a)

@@ -239,9 +239,15 @@ def test_task_chunks_equal_per_file_runs(partition, tmp_path, monkeypatch):
             alone[i] = pa.Table.from_batches(outs)
     assert len(alone) == 5 and rows[5] == 0
     chunks = []
-    run_chunk = pipeline._chunk_outputs
-    monkeypatch.setattr(pipeline, "_chunk_outputs", lambda tables, *a: (
-        chunks.append([i for i, _ in tables]) or run_chunk(tables, *a)))
+    run_chunk = pipeline._keyed_outputs
+
+    def record(batches, *a, **kw):
+        # the keys of the chunk's rows: the empty file 5 has none
+        chunks.append(sorted({k for b in batches
+                              for k in b.column(pipeline._KEY).to_pylist()}))
+        return run_chunk(batches, *a, **kw)
+
+    monkeypatch.setattr(pipeline, "_keyed_outputs", record)
     everything = list(range(6))
     for files, budget, want in (
             (everything, 10**9, [everything]),
@@ -249,9 +255,35 @@ def test_task_chunks_equal_per_file_runs(partition, tmp_path, monkeypatch):
             ([0, 1, 2], rows[0] + rows[1], [[0, 1], [2]]),
             ([1, 3, 5], rows[1] + rows[3], [[1, 3, 5]])):
         chunks.clear()
-        got = {i: pa.Table.from_batches([o]) for i, o in pipeline._task_outputs(
+        got = {i: pa.Table.from_batches([o]) for i, o, _ in pipeline._task_outputs(
             paths, files, cols, True, True, budget)}
-        assert chunks == want
+        assert chunks == [[i for i in c if rows[i]] for c in want]
         assert got.keys() == {i for i in files if i in alone}
         for i, out in got.items():
             assert out.equals(alone[i]), i
+
+
+def test_keyed_outputs_equal_per_key_runs(partition):
+    """The writers' task body: over rows keyed so that consecutive doc_ids
+    fall under different keys, with one document of key 1 poisoned (a
+    zero page width) and fail_fast=False, each key's output equals the
+    kernel run on that key's rows alone, and quarantine causes appear
+    under the poisoned key only."""
+    from eynollah_spark import pipeline
+
+    t = _first_docs(partition, 120)
+    ids = t.column("doc_id").to_numpy(zero_copy_only=False)
+    key = np.array([int(d[3:]) % 3 for d in ids], dtype=np.int32)
+    victim = next(d for d in ids[pc.is_valid(t["kind"]).to_numpy(zero_copy_only=False)]
+                  if int(d[3:]) % 3 == 1)
+    t = t.set_column(t.schema.get_field_index("width"), "width", pc.if_else(
+        pc.equal(t["doc_id"], victim), pa.scalar(0, pa.int32()), t["width"]))
+    got = {k: (pa.Table.from_batches([rows]), causes)
+           for k, rows, causes in pipeline._keyed_outputs(
+               t.append_column(pipeline._KEY, pa.array(key)).to_batches(max_chunksize=1000),
+               True, False)}
+    assert sorted(got) == [0, 1, 2]
+    for k, (rows, causes) in got.items():
+        alone = _run(t.filter(pa.array(key == k)).to_batches(), fail_fast=False)
+        assert rows.equals(alone), k
+        assert causes == ({"OverflowError": 1} if k == 1 else {}), k

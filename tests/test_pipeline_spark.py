@@ -193,6 +193,35 @@ def test_task_side_scan_writes_one_file_per_input_file(spark, tmp_path, monkeypa
         assert pq.read_table(os.path.join(out_dir, name)).equals(want), name
 
 
+def test_task_side_scan_counts_quarantined_docs(spark, tmp_path):
+    """With fail_fast=False the fast path quarantines a document the
+    kernel fails on (here a zero page width): it is written in offset
+    order, and the stats_only rows count it once."""
+    import glob
+
+    victim = "doc00000003"
+    corpus_dir = str(tmp_path / "corpus")
+    flat = corpus_flat_spark(spark, 40, partitions=2)
+    (flat.withColumn("width", F.when(F.col("doc_id") == victim, 0)
+                     .otherwise(F.col("width")))
+     .drop("expected_kind", "expected_rank")
+     .repartition(4, F.xxhash64("doc_id"))
+     .write.parquet(corpus_dir))
+    from eynollah_spark.pipeline import extract_from_parquet_files
+
+    out_dir = str(tmp_path / "written")
+    stats = extract_from_parquet_files(
+        spark, sorted(glob.glob(corpus_dir + "/*.parquet")), partitions=2,
+        include_payload=False, write_dir=out_dir, stats_only=True,
+        fail_fast=False).collect()
+    assert sum(r["quarantined"] for r in stats) == 1
+    written = spark.read.parquet(out_dir)
+    assert written.count() == sum(r["n_rows"] for r in stats)
+    rows = written.filter(F.col("doc_id") == victim).orderBy("ord").collect()
+    assert len(rows) > 1
+    assert [r["offset"] for r in rows] == sorted(r["offset"] for r in rows)
+
+
 def test_worker_heap_is_frozen_only_in_spark_tasks(spark, corpus):
     """layout_partition freezes the heap of a Spark Python worker from its
     first kernel call on, and never the heap of the driver (or any

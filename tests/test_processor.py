@@ -83,3 +83,41 @@ def test_process_workspace_resumes_generated(spark, tmp_path):
     proc = SparkLayoutProcessor(spark)
     assert proc.process_workspace(in_dir, out_dir) == len(doc_ids)
     assert proc.process_workspace(in_dir, out_dir) == 0
+
+
+def test_process_workspace_with_scorer_equals_two_join_plan(spark, tmp_path):
+    """With a scorer, process_workspace joins the geometry once and
+    refines kinds on the joined rows. The pages it writes equal those of
+    refining kinds on the joined rows, dropping the geometry and joining
+    it again. The pages are generated ones the scorer relabels spans on
+    (a text span that is wide and short becomes a heading)."""
+    from eynollah_spark.pagexml import attach_geometry, to_pagexml_df
+    from eynollah_spark.pipeline import extract_flat_input
+    from eynollah_spark.processor import parse_pagexml_distributed
+    from eynollah_spark.scorer import HeuristicScorer, refine_kinds
+
+    in_dir = tmp_path / "ws_in"
+    in_dir.mkdir()
+    doc_ids = []
+    for i in (14, 72, 81):
+        doc_id, xml = generated_page_xml(i)
+        (in_dir / f"{doc_id}.xml").write_text(xml)
+        doc_ids.append(doc_id)
+    in_dir, out_dir = str(in_dir), str(tmp_path / "ws_out")
+    scorer = HeuristicScorer()
+    proc = SparkLayoutProcessor(spark, scorer=scorer)
+    assert proc.process_workspace(in_dir, out_dir) == len(doc_ids)
+
+    flat = parse_pagexml_distributed(spark, in_dir)
+    ordered = extract_flat_input(flat)
+    refined = refine_kinds(attach_geometry(ordered, flat), scorer=scorer).select(
+        *ordered.columns)
+    want = {r["doc_id"]: r["xml"]
+            for r in to_pagexml_df(attach_geometry(refined, flat)).collect()}
+    plain = {r["doc_id"]: r["xml"]
+             for r in to_pagexml_df(attach_geometry(ordered, flat)).collect()}
+    assert sorted(want) == sorted(doc_ids)
+    assert any(want[d] != plain[d] for d in doc_ids)
+    for doc_id in doc_ids:
+        with open(os.path.join(out_dir, f"{doc_id}.xml")) as f:
+            assert f.read() == want[doc_id], doc_id
