@@ -2,6 +2,8 @@
 
   layout        F1 `eynollah layout`   — full extraction with per-partition
                 checkpointing + resume (manifest.run_extraction)
+  snapshots     the snapshot log of a `layout` output, one JSON object
+                (manifest metadata only: no Spark session)
   extract-images F6 `eynollah-extract-images` — B17 image-only projection
   machine-ro    F5 `eynollah machine-based-reading-order` — B14 pairwise path
   gen-corpus    fixture/bench corpus materialization
@@ -49,6 +51,9 @@ def main(argv=None):
     p.add_argument("--output", required=True)
     p.add_argument("--n-parts", type=int, default=8)
     _layout_flags(p)
+
+    p = sub.add_parser("snapshots", help="print a layout output's snapshot log")
+    p.add_argument("--output", required=True, help="a `layout` --output dir")
 
     p = sub.add_parser("full-layout", help="F1 --full-layout: extract + refine + adhere")
     p.add_argument("--input", required=True, help="flat span parquet")
@@ -101,6 +106,15 @@ def main(argv=None):
     p.add_argument("--output", required=True, help="output page directory")
 
     args = ap.parse_args(argv)
+    if args.cmd == "snapshots":
+        from eynollah_spark.manifest import snapshots
+
+        print(json.dumps({"output": args.output, "snapshots": [
+            {"snapshot_id": s["snapshot_id"], "parent_id": s["parent_id"], "ts": s["ts"],
+             **{k: sum(m[k] for m in s["parts"].values())
+                for k in ("docs", "spans", "quarantined")}}
+            for s in snapshots(args.output)]}))
+        return
 
     from pyspark.sql import functions as F
 

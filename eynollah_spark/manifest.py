@@ -21,13 +21,19 @@ catalog jar):
                                             same metadata-swap commit
                                             Iceberg uses)
 
-A batch is one Spark job whose tasks run pipeline._keyed_outputs (the
-fast path's task body) with rows keyed by bucket, write one file per
-(task, bucket) and return its lineage row (docs, spans, kind histogram,
-quarantined docs and their exception classes); the Spark driver process
-sums these into the manifest.
-As in Iceberg's manifests, file stats are recorded at commit time, with
-no re-read.
+Each run first stages the buckets still to do, in ONE bucketize job:
+pipeline._kernel_input's plan (the one doc_id hash exchange, flatten,
+the optional printspace filter), whose tasks write their rows of each
+bucket to {out}/_staging/<run id>/part=<p>/part-<task>.parquet. Every
+staged file is doc-complete, the contract of the task-side scan. Each
+batch is then one task-side scan job over the batch's staged files
+(pipeline._file_job, the job extract_from_parquet_files runs): it
+writes data file part-<i>.parquet for the i-th staged file of the batch
+and returns one lineage row per file (docs, spans, kind histogram,
+quarantined docs and their exception classes, input rows and task),
+which the Spark driver process sums per bucket into the manifest. As in
+Iceberg's manifests, file stats are recorded at commit time, with no
+re-read. The staging dir is removed when the run ends, however it ends.
 
 Snapshot ids are monotonically increasing; the table state at any id is
 reconstructed by replaying the manifest log: each part is served by the
@@ -45,6 +51,7 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 import time
 from collections import Counter
 
@@ -54,7 +61,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from eynollah_spark import KERNEL_VERSION
-from eynollah_spark.pipeline import _KEY, _keyed_outputs, _kernel_input, write_parquet_atomic
+from eynollah_spark.pipeline import _file_job, _kernel_input, write_parquet_atomic
 
 
 def _manifest_path(out_path: str) -> str:
@@ -197,31 +204,21 @@ def _reserve_snapshot_dir(out_path: str) -> int:
             sid += 1
 
 
-def _bucket_writer(snap_dir: str, kernel_kwargs: dict):
-    """The mapInArrow function of one batch: pipeline._keyed_outputs
-    (fail_fast=False, ``kernel_kwargs``) over the task's doc-complete
-    partition, its rows keyed by bucket; write each bucket's rows to
-    snap_dir/part=<p>/part-<task>.parquet (the flat sink columns; the
-    bucket is in the path only) and yield one lineage row per bucket."""
+def _stage_writer(stage: str):
+    """The bucketize job's mapInArrow function: write the task's rows of
+    each bucket, doc-complete, to stage/part=<p>/part-<task>.parquet (the
+    bucket is in the path only) and yield each file's (path, part)."""
 
     def write(batches):
+        batches = list(batches)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
         task = TaskContext.get().partitionId()
-        lineage = []
-        for p, rows, causes in _keyed_outputs(batches, include_payload=True,
-                                               fail_fast=False, **kernel_kwargs):
-            write_parquet_atomic(pa.Table.from_batches([rows]), os.path.join(
-                snap_dir, f"part={p}", f"part-{task:05d}.parquet"))
-            hist = pc.value_counts(rows.column("kind"))
-            lineage.append({
-                "part": p, "spans": rows.num_rows,
-                "docs": pc.count_distinct(rows.column("doc_id")).as_py(),
-                "kind_hist": json.dumps(dict(zip(
-                    hist.field("values").to_pylist(),
-                    hist.field("counts").to_pylist()))),
-                "quarantined": sum(causes.values()),
-                "quarantine_causes": json.dumps(dict(causes))})
-        if lineage:
-            yield pa.RecordBatch.from_pylist(lineage)
+        for p in pc.unique(t["part"]).to_pylist():
+            path = os.path.join(stage, f"part={p}", f"part-{task:05d}.parquet")
+            write_parquet_atomic(t.filter(pc.equal(t["part"], p)).drop_columns(["part"]), path)
+            yield pa.RecordBatch.from_pylist([{"path": path, "part": p}])
 
     return write
 
@@ -233,64 +230,83 @@ def run_extraction(docs: DataFrame, out_path: str, n_parts: int = 8,
 
     Returns summary metrics (``quarantined``: documents the kernel failed
     on, emitted in offset order; ``quarantine_causes``: their count by
-    exception class, as in each manifest part entry). Re-running after a
-    failure skips buckets already recorded in the manifest. Each batch of
-    `parts_per_batch` buckets is one Spark job over pipeline._kernel_input's
-    plan (one doc_id hash exchange, flatten, the optional printspace
-    filter) and the flat kernel (`partitions`; `extract_kwargs`:
-    num_col_lower, num_col_upper, printspace_margin) with fail_fast=False,
+    exception class, as in each manifest part entry; ``bucketize_s``: the
+    bucketize job's wall). Re-running after a failure skips buckets
+    already recorded in the manifest. One bucketize job, over
+    pipeline._kernel_input's plan (one doc_id hash exchange, flatten,
+    the optional printspace filter; `partitions`), stages the buckets
+    still to do; each batch of `parts_per_batch` buckets is then one
+    pipeline._file_job over the batch's staged files (fail_fast=False;
+    `extract_kwargs`: num_col_lower, num_col_upper, printspace_margin),
     whose tasks write the snapshot's data files and return the lineage
     the manifest commits. A document without spans has no output rows
     and is not counted in `docs`.
     """
     kw = dict(extract_kwargs or {})
     margin = kw.pop("printspace_margin", 0.0)
-    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int")
     done = completed_parts(out_path)
     todo = [p for p in range(n_parts) if p not in done]
     summary = {"n_parts": n_parts, "skipped": len(done), "processed": 0,
-               "docs": 0, "spans": 0, "quarantined": 0, "quarantine_causes": Counter()}
+               "docs": 0, "spans": 0, "quarantined": 0, "quarantine_causes": Counter(),
+               "bucketize_s": 0.0}
     os.makedirs(_manifest_path(out_path), exist_ok=True)
-    for i in range(0, len(todo), parts_per_batch):
-        batch = todo[i:i + parts_per_batch]
-        t0 = time.time()
-        sid = _reserve_snapshot_dir(out_path)
-        flat = _kernel_input(docs.filter(bucket.isin(batch)), partitions, margin)
-        rows = (flat.withColumn(_KEY, bucket)
-                .mapInArrow(_bucket_writer(_snap_dir(out_path, sid), kw),
-                            "part long, spans long, docs long, kind_hist string, "
-                            "quarantined long, quarantine_causes string")
-                .collect())
-        parts_meta = {p: {"docs": 0, "spans": 0, "kind_hist": Counter(),
-                          "quarantined": 0, "quarantine_causes": Counter()}
-                      for p in batch}
-        for r in rows:
-            m = parts_meta[r["part"]]
-            for k in ("docs", "spans", "quarantined"):
-                m[k] += r[k]
-            m["kind_hist"].update(json.loads(r["kind_hist"]))
-            m["quarantine_causes"].update(json.loads(r["quarantine_causes"]))
-        wall = time.time() - t0
-        for m in parts_meta.values():
-            m["kind_hist"] = json.dumps(dict(sorted(m["kind_hist"].items())),
-                                        separators=(",", ":"))
-            m["wall_sec"] = round(wall / len(batch), 3)
-            for k in ("docs", "spans", "quarantined", "quarantine_causes"):
-                summary[k] += m[k]
-            m["quarantine_causes"] = dict(sorted(m["quarantine_causes"].items()))
-        summary["processed"] += len(batch)
-        manifest = {
-            "snapshot_id": sid,
-            "parent_id": current_snapshot_id(out_path),
-            "kernel_version": KERNEL_VERSION,
-            "n_parts": n_parts,
-            "parts": {str(p): m for p, m in parts_meta.items()},
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        tmp = os.path.join(_manifest_path(out_path), f".snap-{sid:06d}.json.tmp")
-        with open(tmp, "w") as f:
-            f.write(json.dumps(manifest) + "\n")
-        os.rename(tmp, os.path.join(_manifest_path(out_path), f"snap-{sid:06d}.json"))
-        summary.setdefault("snapshot_ids", []).append(sid)
+    os.makedirs(os.path.join(out_path, "_staging"), exist_ok=True)
+    staged = []
+    with tempfile.TemporaryDirectory(dir=os.path.join(out_path, "_staging")) as stage:
+        if todo:
+            t0 = time.time()
+            bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int")
+            plan = (_kernel_input(docs.filter(bucket.isin(todo)), partitions, margin)
+                    .withColumn("part", bucket))
+            staged = sorted(map(tuple, plan.mapInArrow(_stage_writer(stage),
+                                                       "path string, part long").collect()))
+            summary["bucketize_s"] = round(time.time() - t0, 3)
+        for i in range(0, len(todo), parts_per_batch):
+            batch = todo[i:i + parts_per_batch]
+            t0 = time.time()
+            sid = _reserve_snapshot_dir(out_path)
+            files = [(f, p) for f, p in staged if p in batch]
+            rows = _file_job(docs.sparkSession, [f for f, _ in files],
+                             [os.path.join(_snap_dir(out_path, sid), f"part={p}",
+                                           f"part-{j:05d}.parquet")
+                              for j, (_, p) in enumerate(files)],
+                             partitions, stats_only=True, fail_fast=False, **kw).collect()
+            parts_meta = {p: {"docs": 0, "spans": 0, "kind_hist": Counter(), "quarantined": 0,
+                              "quarantine_causes": Counter(), "rows_in": 0}
+                          for p in batch}
+            load = Counter()
+            for r in rows:
+                m = parts_meta[files[r["file"]][1]]
+                m["spans"] += r["n_rows"]
+                for k in ("docs", "quarantined", "rows_in"):
+                    m[k] += r[k]
+                m["kind_hist"].update(json.loads(r["kind_hist"]))
+                m["quarantine_causes"].update(json.loads(r["quarantine_causes"]))
+                load[r["task"]] += r["rows_in"]
+            wall = time.time() - t0
+            for m in parts_meta.values():
+                m["kind_hist"] = json.dumps(dict(sorted(m["kind_hist"].items())),
+                                            separators=(",", ":"))
+                m["wall_sec"] = round(wall / len(batch), 3)
+                for k in ("docs", "spans", "quarantined", "quarantine_causes"):
+                    summary[k] += m[k]
+                m["quarantine_causes"] = dict(sorted(m["quarantine_causes"].items()))
+            summary["processed"] += len(batch)
+            manifest = {
+                "snapshot_id": sid,
+                "parent_id": current_snapshot_id(out_path),
+                "kernel_version": KERNEL_VERSION,
+                "n_parts": n_parts,
+                "parts": {str(p): m for p, m in parts_meta.items()},
+                # max / mean of the tasks' input rows (None: no input)
+                "load_max_mean": (round(max(load.values()) * len(load) / sum(load.values()), 3)
+                                  if sum(load.values()) else None),
+                "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            }
+            tmp = os.path.join(_manifest_path(out_path), f".snap-{sid:06d}.json.tmp")
+            with open(tmp, "w") as f:
+                f.write(json.dumps(manifest) + "\n")
+            os.rename(tmp, os.path.join(_manifest_path(out_path), f"snap-{sid:06d}.json"))
+            summary.setdefault("snapshot_ids", []).append(sid)
     summary["quarantine_causes"] = dict(sorted(summary["quarantine_causes"].items()))
     return summary

@@ -39,13 +39,14 @@ Every DataFrame entry runs one plan (SURVEY.md §3.1 lifecycle):
        per output span; `ord` is the reading order. A document without
        spans has no rows.
 
-The entries: extract_flat_input (flat span rows), manifest.run_extraction
-(nested documents, checkpointed per bucket) and extract_from_parquet_files,
-the zero-shuffle path over doc-complete bucketed files. The two writers
-share one task body, _keyed_outputs: one kernel call over rows keyed by
-bucket (run_extraction) or input file (the fast path), its output and
-quarantine counts split by key. The fast path's unit of work is the
-task, not the file:
+The entries: extract_flat_input (flat span rows) and
+extract_from_parquet_files, the zero-shuffle task-side scan over
+doc-complete files and the product path: manifest.run_extraction stages
+nested documents as such files in one bucketize job (_kernel_input's
+plan above), then runs the same job (_file_job) on each bucket batch.
+Its task body is _keyed_outputs: one kernel call over rows keyed by
+input file, its output and quarantine counts split by key. Its unit of
+work is the task, not the file:
 
   sorted file list -> packed onto tasks by byte size, largest first onto
   the lightest task (_pack_files)
@@ -55,7 +56,8 @@ task, not the file:
        holds at most one chunk plus one file:
     -> one output file per input file with output spans, named after the
        input's index in the sorted list (part-<index:05d>.parquet), so a
-       retry or another packing rewrites the same names.
+       retry or another packing rewrites the same names, and one lineage
+       row per input file (_lineage).
 
 Every Spark Python worker freezes its heap at its first kernel call,
 and again after new imports (_freeze_worker_heap): the daemon's full
@@ -68,6 +70,7 @@ The kernel itself is eynollah_spark.kernels.layout.layout_permutations
 from __future__ import annotations
 
 import gc
+import json
 import sys
 from collections import Counter
 
@@ -283,8 +286,8 @@ def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = 
     per 300k-row partition), and input only needs to be doc-complete per
     partition: neither sorted nor batched at doc boundaries. Memory: one
     partition resident per task, bounded by the repartition. (The
-    writers run _keyed_outputs instead; the bucketed scan path on chunks
-    of its files: _CHUNK_ROWS rows plus one file.)"""
+    task-side scan runs _keyed_outputs instead, on chunks of its files:
+    _CHUNK_ROWS rows plus one file.)"""
     build = _OUTPUTS[output]
 
     def kernel(batches):
@@ -350,11 +353,10 @@ def layout_partition(batches, fail_fast: bool = True, num_col_lower: int = 0,
 
 
 def _keyed_outputs(batches, include_payload: bool, fail_fast: bool, **kernel_kwargs):
-    """The task body of both writers (extract_from_parquet_files' tasks,
-    keyed by input file; manifest.run_extraction's, keyed by bucket): run
-    the kernel once over rows that carry a _KEY column and yield (key,
-    flat output rows, Counter of the quarantined documents' exception
-    classes) for every key with output. The rows are ordered by key
+    """The task-side scan's kernel call (_task_outputs, keyed by input
+    file): run the kernel once over rows that carry a _KEY column and
+    yield (key, flat output rows, Counter of the quarantined documents'
+    exception classes) for every key with output. The rows are ordered by key
     first, so each key's documents are one slice of the output, in the
     order the key's rows alone would give."""
     res = layout_partition(batches, fail_fast, **kernel_kwargs)
@@ -376,16 +378,20 @@ def _keyed_outputs(batches, include_payload: bool, fail_fast: bool, **kernel_kwa
             yield k, out.slice(a, b - a), causes.get(k, Counter())
 
 
+def _ship(spark, partitions: int | None) -> int:
+    """Ship the package to the executors; returns ``partitions``, by
+    default spark.sql.shuffle.partitions."""
+    from eynollah_spark.packaging import ensure_distributed
+
+    ensure_distributed(spark)
+    return int(spark.conf.get("spark.sql.shuffle.partitions")) if partitions is None else partitions
+
+
 def _repartition_by_doc(df: DataFrame, partitions: int | None) -> DataFrame:
     """The shuffled entries' one exchange: ship the package, then hash df's
     rows on doc_id into 2 * partitions (default
     spark.sql.shuffle.partitions) doc-complete partitions."""
-    from eynollah_spark.packaging import ensure_distributed
-
-    spark = df.sparkSession
-    ensure_distributed(spark)
-    if partitions is None:
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    partitions = _ship(df.sparkSession, partitions)
     # bucket ids span 64x the partition count: hashing only `partitions`
     # distinct ids into 2*partitions partitions left ~1/e of them empty
     # by balls-in-bins (r6). The media-heavy tail is not salted into its
@@ -398,7 +404,7 @@ def _repartition_by_doc(df: DataFrame, partitions: int | None) -> DataFrame:
 
 def _kernel_input(df: DataFrame, partitions: int | None,
                   printspace_margin: float) -> DataFrame:
-    """run_extraction's pre-kernel plan: nested documents -> flat span rows
+    """run_extraction's bucketize plan: nested documents -> flat span rows
     in doc-complete hash partitions, with the optional printspace filter."""
     flat = flatten(_repartition_by_doc(df, partitions))
     if printspace_margin > 0:
@@ -444,10 +450,6 @@ def write_parquet_atomic(table: pa.Table, final: str) -> None:
     os.replace(tmp, final)
 
 
-#: input columns the kernel needs (column projection for the task-side scan)
-_SCAN_COLS_NARROW = ["doc_id", "width", "height", "rtl", "kind",
-                     "offset", "x0", "x1", "y0", "y1"]
-
 #: row budget of one kernel call of the task-side scan: a task closes its
 #: chunk of consecutive files before the file that would take it past this
 _CHUNK_ROWS = 1 << 18
@@ -485,21 +487,25 @@ def _pack_files(sizes: list[int], ntasks: int) -> list[list[int]]:
 
 
 def _task_outputs(paths: list[str], files: list[int], cols: list[str],
-                  include_payload: bool, fail_fast: bool, budget: int):
+                  include_payload: bool, fail_fast: bool, budget: int,
+                  rows_in: dict | None = None, **kernel_kwargs):
     """One task's body: read its files in order, run _keyed_outputs once
     per chunk of consecutive files (at most ``budget`` rows; a bigger
     file is a chunk of its own), its rows keyed by file index, and yield
     (file index, output rows, quarantine causes) per input file with
-    output. A task holds at most one chunk plus one file."""
+    output. A task holds at most one chunk plus one file. ``rows_in``,
+    if given, receives each file's input row count."""
     import pyarrow.parquet as pq
 
     def run(chunk):
         return _keyed_outputs(pa.concat_tables(chunk, promote_options="permissive")
-                              .to_batches(), include_payload, fail_fast)
+                              .to_batches(), include_payload, fail_fast, **kernel_kwargs)
 
     chunk, rows = [], 0
     for i in files:
         t = pq.read_table(paths[i], columns=cols)
+        if rows_in is not None:
+            rows_in[i] = t.num_rows
         if chunk and rows + t.num_rows > budget:
             yield from run(chunk)
             chunk, rows = [], 0
@@ -509,13 +515,75 @@ def _task_outputs(paths: list[str], files: list[int], cols: list[str],
         yield from run(chunk)
 
 
+#: the lineage of a file without output
+_NO_OUTPUT = dict(n_rows=0, docs=0, kind_hist="{}", quarantined=0, quarantine_causes="{}")
+
+
+def _lineage(out: pa.RecordBatch, causes: Counter) -> dict:
+    """A file's output lineage: its output rows, documents, kind
+    histogram (JSON) and quarantined documents by exception class (JSON)."""
+    hist = pc.value_counts(out.column("kind"))
+    return {"n_rows": out.num_rows,
+            "docs": pc.count_distinct(out.column("doc_id")).as_py(),
+            "kind_hist": json.dumps(dict(zip(hist.field("values").to_pylist(),
+                                             hist.field("counts").to_pylist()))),
+            "quarantined": sum(causes.values()),
+            "quarantine_causes": json.dumps(dict(causes))}
+
+
+def _file_job(spark, paths: list[str], outputs: list[str] | None,
+              partitions: int | None, include_payload: bool = True,
+              stats_only: bool = False, fail_fast: bool = True,
+              **kernel_kwargs) -> DataFrame:
+    """extract_from_parquet_files over the files ``paths`` in this order,
+    each file's output written to its path in ``outputs`` (if given), and
+    the kernel run with ``kernel_kwargs`` (num_col_lower, num_col_upper)."""
+    ntasks = min(len(paths), max(_ship(spark, partitions), 1))
+    tasks = _pack_files(_file_sizes(paths), ntasks)
+    budget = _CHUNK_ROWS  # read on the driver: the tasks run with its value
+
+    def gen(batches):
+        for b in batches:
+            for tid in b.column(0).to_pylist():
+                rows_in, lineage = {}, {}
+                for i, out, causes in _task_outputs(paths, tasks[tid], FLAT_IN_FIELDS, True,
+                                                    fail_fast, budget, rows_in, **kernel_kwargs):
+                    if outputs is not None:
+                        write_parquet_atomic(pa.Table.from_batches([out]), outputs[i])
+                    if stats_only:
+                        lineage[i] = _lineage(out, causes)
+                    elif include_payload:
+                        yield out
+                    else:
+                        yield out.select(["doc_id", "ord", "kind", "offset"])
+                if stats_only and rows_in:
+                    yield pa.RecordBatch.from_pylist([
+                        {"file": i, "task": tid, "rows_in": n, **lineage.get(i, _NO_OUTPUT)}
+                        for i, n in rows_in.items()])
+
+    if stats_only:
+        out_schema = ("file long, task long, rows_in long, n_rows long, docs long, "
+                      "kind_hist string, quarantined long, quarantine_causes string")
+    elif include_payload:
+        out_schema = FLAT_OUT_SCHEMA
+    else:
+        out_schema = "doc_id string, ord int, kind string, offset int"
+    if ntasks == 0:
+        # empty file list (wrong glob, or a fully-resumed manifest):
+        # an empty result, not spark.range(...)'s opaque JVM error
+        return spark.createDataFrame([], schema=out_schema)
+    ids = spark.range(0, ntasks, 1, ntasks)
+    return ids.mapInArrow(gen, schema=out_schema)
+
+
 def extract_from_parquet_files(spark, paths: list[str], partitions: int | None = None,
                                include_payload: bool = True,
                                write_dir: str | None = None,
                                stats_only: bool = False,
                                fail_fast: bool = True) -> DataFrame:
-    """Task-side columnar scan extraction — the bucketed-table fast path
-    taken to its logical end (zero JVM row conversion on the input side).
+    """Task-side columnar scan extraction — the product path:
+    manifest.run_extraction (`cli layout`) stages its input as
+    doc-complete files and runs this job (_file_job) on each bucket batch.
 
     The input is the bucketed table's FILE MANIFEST (an Iceberg snapshot's
     data-file list). The driver sorts the paths and packs the files onto
@@ -531,9 +599,10 @@ def extract_from_parquet_files(spark, paths: list[str], partitions: int | None =
     input file with output spans gets one doc-complete output file, named
     after the input's index in the sorted path list
     (write_dir/part-<index:05d>.parquet), so a retried task, or another
-    packing, rewrites the same names. stats_only yields one row per task
-    instead: its output rows (n_rows) and the documents it quarantined
-    (quarantined; fail_fast=False). Input
+    packing, rewrites the same names. stats_only returns one lineage row
+    per input file instead: its index (file), task, input rows (rows_in),
+    output rows (n_rows), docs, kind histogram, and the documents it
+    quarantined (quarantined; fail_fast=False) with their causes. Input
     bytes go parquet -> Arrow -> numpy with no InternalRow/ArrowEvalPython
     re-encode hop, which profiling shows is the bulk of the JVM-scan
     path's fixed cost; only the (narrow) OUTPUT crosses the JVM boundary.
@@ -541,57 +610,16 @@ def extract_from_parquet_files(spark, paths: list[str], partitions: int | None =
     Distribution story at 100 TB: identical to the DataFrame path — tasks
     read their files from the object store (pyarrow reads s3://... the
     same way the JVM scan would), locality and retries come from the
-    Spark scheduler, resume anti-joins the output manifest per file. The
-    caller guarantees what the bucketed contract already required: every
-    file is doc-complete. Files need not be sorted (in-kernel sort).
+    Spark scheduler. The caller guarantees what the bucketed contract
+    already required: every file is doc-complete. Files need not be
+    sorted (in-kernel sort).
 
     Correctness equivalence with extract_flat_input is pinned by the bench
     checksum and tests/test_pipeline_spark.py."""
-    from eynollah_spark.packaging import ensure_distributed
-
-    ensure_distributed(spark)
     paths = sorted(paths)
-    if partitions is None:
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ntasks = min(len(paths), max(partitions, 1))
-    tasks = _pack_files(_file_sizes(paths), ntasks)
-    budget = _CHUNK_ROWS  # read on the driver: the tasks run with its value
-    full = include_payload or write_dir is not None
-    cols = _SCAN_COLS_NARROW + (["text", "media_ref"] if full else [])
-    narrow_names = ["doc_id", "ord", "kind", "offset"]
-
-    def gen(batches):
-        for b in batches:
-            for tid in b.column(0).to_pylist():
-                n_task = q_task = 0
-                for i, out, causes in _task_outputs(paths, tasks[tid], cols, full,
-                                                    fail_fast, budget):
-                    if write_dir is not None:
-                        write_parquet_atomic(pa.Table.from_batches([out]),
-                                             f"{write_dir}/part-{i:05d}.parquet")
-                    if stats_only:
-                        n_task += out.num_rows
-                        q_task += sum(causes.values())
-                    elif write_dir is not None and not include_payload:
-                        yield out.select(narrow_names)
-                    else:
-                        yield out
-                if stats_only:
-                    yield pa.RecordBatch.from_pylist([{"n_rows": n_task,
-                                                       "quarantined": q_task}])
-
-    if stats_only:
-        out_schema = "n_rows long, quarantined long"
-    elif include_payload:
-        out_schema = FLAT_OUT_SCHEMA
-    else:
-        out_schema = "doc_id string, ord int, kind string, offset int"
-    if ntasks == 0:
-        # empty file list (wrong glob, or a fully-resumed manifest):
-        # an empty result, not spark.range(...)'s opaque JVM error
-        return spark.createDataFrame([], schema=out_schema)
-    ids = spark.range(0, ntasks, 1, ntasks)
-    return ids.mapInArrow(gen, schema=out_schema)
+    outputs = (None if write_dir is None
+               else [f"{write_dir}/part-{i:05d}.parquet" for i in range(len(paths))])
+    return _file_job(spark, paths, outputs, partitions, include_payload, stats_only, fail_fast)
 
 
 def extract_full_layout(flat: DataFrame, partitions: int | None = None,

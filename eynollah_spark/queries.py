@@ -299,8 +299,9 @@ hist AS (
   FROM lines GROUP BY doc_id, CAST(cx / 100 AS INT)
 )
 SELECT doc_id, bucket, n,
-       ROUND(AVG(n) OVER (PARTITION BY doc_id ORDER BY bucket
-                          ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING), 3) AS smooth_n
+       CAST(ROUND(CAST(AVG(n) OVER (PARTITION BY doc_id ORDER BY bucket
+                                    ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING)
+                       AS DECIMAL(38,6)), 3) AS DOUBLE) AS smooth_n
 FROM hist
 """)
 # C5 (utils/__init__.py:245-489): projection histogram + moving-average
@@ -326,7 +327,8 @@ WHERE rk = 1
 
 _both("ro_region_confidence", ("documents",), lambda d: f"""
 WITH {_lines_cte(d)}
-SELECT doc_id, col, ROUND(AVG(conf), 4) AS avg_conf, COUNT(*) AS n
+SELECT doc_id, col, CAST(ROUND(CAST(AVG(conf) AS DECIMAL(38,6)), 4) AS DOUBLE) AS avg_conf,
+       COUNT(*) AS n
 FROM lines GROUP BY doc_id, col
 """)
 # C4 (utils/contour.py:211-224): mean confidence per region.
@@ -460,7 +462,8 @@ u3 AS (
   FROM u2 JOIN m2 ON u2.doc_id = m2.doc_id AND u2.region = m2.region
 ),
 m3 AS (SELECT doc_id, region, MEDIAN(adev) AS madev FROM u3 GROUP BY doc_id, region)
-SELECT u3.doc_id, u3.region, ROUND(AVG(u3.angle), 4) AS skew,
+SELECT u3.doc_id, u3.region,
+       CAST(ROUND(CAST(AVG(u3.angle) AS DECIMAL(38,6)), 4) AS DOUBLE) AS skew,
        COUNT(*) AS n_used
 FROM u3 JOIN m3 ON u3.doc_id = m3.doc_id AND u3.region = m3.region
 WHERE u3.adev <= 2 * m3.madev

@@ -190,3 +190,30 @@ def test_layout_cmd_flags_reach_kernel(run_cli, spark, tmp_path):
     assert cropped_rows.filter(F.col("doc_id") == victim).count() == 0
     assert cropped["docs"] == cropped_rows.select("doc_id").distinct().count()
     assert cropped["docs"] < base["docs"]
+
+
+def test_snapshots_cmd_prints_the_log_without_spark(run_cli, spark, tmp_path, monkeypatch):
+    """`cli snapshots` prints the snapshot log of a two-batch `cli layout`
+    run as one JSON object, per commit its id, parent, ts and the
+    docs/spans/quarantined sums, without starting a Spark session."""
+    import eynollah_spark.session as session_mod
+    from eynollah_spark.corpus import corpus_flat_spark, nest_corpus
+
+    nested = str(tmp_path / "nested.parquet")
+    nest_corpus(corpus_flat_spark(spark, 30)).write.parquet(nested)
+    out = str(tmp_path / "out")
+    summary = run_cli(["layout", "--input", nested, "--output", out])
+    assert summary["snapshot_ids"] == [1, 2]
+
+    def no_session(**kw):
+        raise AssertionError("cli snapshots started a Spark session")
+
+    monkeypatch.setattr(session_mod, "build_session", no_session)
+    log = run_cli(["snapshots", "--output", out])
+    assert log["output"] == out
+    snaps = log["snapshots"]
+    assert [(s["snapshot_id"], s["parent_id"]) for s in snaps] == [(1, None), (2, 1)]
+    assert all(s["ts"] for s in snaps)
+    for k in ("docs", "spans", "quarantined"):
+        assert sum(s[k] for s in snaps) == summary[k]
+    assert summary["docs"] == 30

@@ -1,11 +1,13 @@
 """Checkpoint/lineage integration (r2 VERDICT item 4).
 
-run_extraction commits each bucket batch as a snapshot: its extraction
-tasks write the data files and return the per-bucket lineage (docs,
-spans, kind histogram) the manifest records, with no re-read of what
-they wrote. These tests cover the manifest lineage, idempotent resume,
-time travel and rollback, sparse and deleted buckets, and two writers
-that pick the same snapshot id."""
+run_extraction stages its input once as doc-complete files per bucket,
+then commits each bucket batch as a snapshot: its extraction tasks
+write the data files and return the per-file lineage (docs, spans,
+kind histogram, input rows) the manifest sums per bucket, with no
+re-read of what they wrote. These tests cover the manifest lineage,
+idempotent resume, time travel and rollback, sparse and deleted
+buckets, two writers that pick the same snapshot id, the one
+bucketize job and its staging dir."""
 
 import json
 import os
@@ -195,8 +197,9 @@ def test_snapshot_id_taken_by_another_writer(spark, tmp_path, monkeypatch):
 
 
 def test_run_extraction_reads_nothing_it_wrote(spark, tmp_path, monkeypatch):
-    """The lineage comes from the writing tasks: run_extraction reads no
-    parquet under its output path, and each part=<p> dir holds only
+    """The lineage comes from the writing tasks: run_extraction reads none
+    of the data it committed (its tasks read the staged input with
+    pyarrow, not through Spark), and each part=<p> dir holds only
     committed part-NNNNN.parquet files (no temp-file leftovers)."""
     import re
 
@@ -256,3 +259,86 @@ def test_quarantined_docs_are_counted(spark, tmp_path):
             .orderBy("ord").collect())
     assert len(rows) > 1
     assert [r["offset"] for r in rows] == sorted(r["offset"] for r in rows)
+
+
+def _staging_left(out):
+    stage = os.path.join(out, "_staging")
+    return os.listdir(stage) if os.path.isdir(stage) else []
+
+
+def test_run_extraction_bucketizes_once(spark, tmp_path, monkeypatch):
+    """One bucketize job per call: over 4 buckets in batches of 2,
+    run_extraction builds pipeline._kernel_input's plan once, every
+    staged document lies in exactly one staged file, and the staging dir
+    is gone afterwards. The manifest's partition load: each part's
+    rows_in, summed over the parts, is the staged row count, and each
+    snapshot's load_max_mean (max / mean of the tasks' input rows) is at
+    least 1."""
+    import pyarrow.parquet as pq
+
+    from eynollah_spark import manifest
+    from eynollah_spark.manifest import snapshots
+
+    calls, staged = [], []
+    real_input, real_job = manifest._kernel_input, manifest._file_job
+
+    def kernel_input(*a, **kw):
+        calls.append(a)
+        return real_input(*a, **kw)
+
+    def file_job(spark_, paths, *a, **kw):
+        staged.extend(pq.read_table(p, columns=["doc_id"]) for p in paths)
+        return real_job(spark_, paths, *a, **kw)
+
+    monkeypatch.setattr(manifest, "_kernel_input", kernel_input)
+    monkeypatch.setattr(manifest, "_file_job", file_job)
+    out = str(tmp_path / "once")
+    docs = nest_corpus(corpus_flat_spark(spark, 60, partitions=2))
+    s = run_extraction(docs, out, n_parts=4, partitions=2, parts_per_batch=2)
+    assert s["processed"] == 4 and s["snapshot_ids"] == [1, 2]
+    assert len(calls) == 1 and s["bucketize_s"] > 0
+    assert _staging_left(out) == []
+    owners = {}
+    for i, t in enumerate(staged):
+        for d in set(t.column("doc_id").to_pylist()):
+            owners.setdefault(d, set()).add(i)
+    assert owners and all(len(files) == 1 for files in owners.values())
+    snaps = snapshots(out)
+    assert sum(m["rows_in"] for sn in snaps for m in sn["parts"].values()) == sum(
+        t.num_rows for t in staged) > 0
+    assert all(sn["load_max_mean"] >= 1 for sn in snaps)
+
+
+def test_failed_batch_leaves_no_staging_and_resumes(spark, tmp_path, monkeypatch):
+    """A run whose second batch job raises leaves its staging dir empty
+    and its first snapshot committed and readable; a re-run completes
+    only the missing buckets and gives the table a clean run gives."""
+    from eynollah_spark import manifest
+    from eynollah_spark.manifest import read_as_of, snapshots
+
+    docs = nest_corpus(corpus_flat_spark(spark, 40, partitions=2))
+    clean = str(tmp_path / "clean")
+    run_extraction(docs, clean, n_parts=4, partitions=2, parts_per_batch=2)
+    want = sorted(map(tuple, read_as_of(spark, clean).collect()))
+
+    real_job, jobs = manifest._file_job, []
+
+    def failing_job(*a, **kw):
+        jobs.append(1)
+        if len(jobs) == 2:
+            raise RuntimeError("batch job failed")
+        return real_job(*a, **kw)
+
+    out = str(tmp_path / "failed")
+    monkeypatch.setattr(manifest, "_file_job", failing_job)
+    with pytest.raises(RuntimeError, match="batch job failed"):
+        run_extraction(docs, out, n_parts=4, partitions=2, parts_per_batch=2)
+    monkeypatch.setattr(manifest, "_file_job", real_job)
+    assert _staging_left(out) == []
+    assert [sn["snapshot_id"] for sn in snapshots(out)] == [1]
+    assert completed_parts(out) == {0, 1}
+    assert read_as_of(spark, out).count() == read_as_of(spark, clean, 1).count() > 0
+    s = run_extraction(docs, out, n_parts=4, partitions=2, parts_per_batch=2)
+    assert s["processed"] == 2 and s["skipped"] == 2
+    assert _staging_left(out) == []
+    assert sorted(map(tuple, read_as_of(spark, out).collect())) == want

@@ -179,6 +179,29 @@ def test_source_quality_rounds_ties_like_the_oracle(spark, tmp_path):
                                            ("b", "en", 800, 4.49, 0.0713, 0)]
 
 
+# The line-generator queries average a few of each document's lines:
+# ro_column_histogram up to 3 counts (halves and thirds), ro_region_skew
+# up to 24 integer angles (a tie at 4 places needs 32 | n), and
+# ro_region_confidence up to 24 confidences in hundredths, which an exact
+# (fractions) count over one period of its doc_id residues finds never
+# to average to a tie at 4 places. So the DECIMAL(38,6) cast changes no
+# result of theirs today; the first 1,800 doc_ids cover every residue the
+# lines depend on (the lcm of the generator's moduli).
+
+@pytest.mark.parametrize("name", ["ro_column_histogram", "ro_region_confidence",
+                                  "ro_region_skew"])
+def test_line_averages_round_like_the_oracle(spark, tmp_path, name):
+    """The three line averages round a DECIMAL(38,6) cast, as
+    text_source_quality's do, and equal the oracle's over every reachable
+    document (one period of the line generator), as doubles."""
+    got, want = _on_both_engines(spark, tmp_path, name, {
+        "documents": pa.table({"doc_id": pa.array(range(1800), pa.int64())})})
+    assert len(got) == len(want) > 1800
+    assert sorted(got) == sorted(want)
+    rounded = {"ro_column_histogram": 3, "ro_region_confidence": 2, "ro_region_skew": 2}[name]
+    assert all(isinstance(r[rounded], float) for r in got)
+
+
 @pytest.mark.parametrize("sf_dir, sf", [
     ("/data/sf0.01", 0.01),
     ("/data/sf0.1/", 0.1),
