@@ -19,6 +19,16 @@ import json
 import sys
 
 
+def layout_rows(spark, path: str, coords: str = "original"):
+    """The rows `page-xml` and `plot` write: extract_flat_input over the
+    flat span table at ``path``, geometry in the ``coords`` frame."""
+    from eynollah_spark.pagexml import rotate_geometry
+    from eynollah_spark.pipeline import extract_flat_input
+
+    rows = extract_flat_input(spark.read.parquet(path))
+    return rotate_geometry(rows) if coords == "deskewed" else rows
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser(prog="eynollah_spark")
     ap.add_argument("--cpus", type=int, default=8)
@@ -178,15 +188,9 @@ def main(argv=None):
             fn(media).write.mode("overwrite").parquet(args.output)
             print(json.dumps({"ok": True, "output": args.output}))
         elif args.cmd == "plot":
-            from eynollah_spark.pagexml import attach_geometry, page_deskew_angles
-            from eynollah_spark.pipeline import extract_flat_input
             from eynollah_spark.plot import to_svg_df, write_svg_dir
 
-            flat = spark.read.parquet(args.input)
-            out = extract_flat_input(flat)
-            rows = attach_geometry(out, flat)
-            n = write_svg_dir(to_svg_df(rows, angles=page_deskew_angles(flat)),
-                              args.output)
+            n = write_svg_dir(to_svg_df(layout_rows(spark, args.input)), args.output)
             print(json.dumps({"ok": True, "pages": n, "output": args.output}))
         elif args.cmd == "process":
             from eynollah_spark.processor import SparkLayoutProcessor
@@ -197,20 +201,10 @@ def main(argv=None):
             print(json.dumps({"ok": True, "pages_written": n,
                               "output": args.output}))
         elif args.cmd == "page-xml":
-            from eynollah_spark.pagexml import (attach_geometry,
-                                                page_deskew_angles,
-                                                rotate_geometry,
-                                                to_pagexml_df,
-                                                write_pagexml_dir)
-            from eynollah_spark.pipeline import extract_flat_input
+            from eynollah_spark.pagexml import to_pagexml_df, write_pagexml_dir
 
-            flat = spark.read.parquet(args.input)
-            out = extract_flat_input(flat)
-            rows = attach_geometry(out, flat)
-            if args.coords == "deskewed":
-                rows = rotate_geometry(rows, page_deskew_angles(flat))
-            xml_df = to_pagexml_df(rows)
-            write_pagexml_dir(xml_df, args.output)
+            write_pagexml_dir(to_pagexml_df(layout_rows(spark, args.input, args.coords)),
+                              args.output)
             print(json.dumps({"ok": True, "output": args.output,
                               "coords": args.coords}))
     finally:

@@ -23,8 +23,8 @@ import numpy as np
 _SCORE_SPANS = 512
 
 #: the smallest |deskew angle| in degrees that the kernel applies: a page
-#: whose estimate is below it is not rotated (analyze_pages), and its
-#: effective angle is 0 (pagexml.page_deskew_angles)
+#: whose estimate is below it is not rotated, and its applied angle is 0
+#: (analyze_pages)
 MIN_ROTATION_DEG = 0.75
 
 

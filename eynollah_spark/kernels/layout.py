@@ -1219,12 +1219,17 @@ def order_lines_in_region(cx, cy, rtl, off=None, bounds=None):
     return np.lexsort((np.asarray(off), xkey, rows))
 
 
+class PageSizeError(ValueError):
+    """A page of the batch has a width or height <= 0."""
+
+
 @dataclass
 class Pages(Spans):
     """analyze_pages' result for a batch of documents: its Spans with the
     geometry deskewed, plus the page stage's results. Document d's text
     lines are the spans ``ti[tb[d]:tb[d+1]]``."""
 
+    ang: np.ndarray         # per document: the applied deskew angle (deg)
     cx: np.ndarray          # span centers, after deskew
     cy: np.ndarray
     ti: np.ndarray
@@ -1242,11 +1247,14 @@ def analyze_pages(spans: Spans) -> Pages:
     coverage profiles, smoothing and valley masks behind the page-level
     find_gutters and split_main_and_marginal. Every batched step is
     exact per document, so a document's part of the Pages does not depend on which
-    others share its batch."""
+    others share its batch. Raises PageSizeError for a page without
+    area."""
     from eynollah_spark.kernels.deskew import MIN_ROTATION_DEG, estimate_skews, rotate_boxes
 
     D = len(spans)
     bounds, W, H = spans.bounds, spans.W, spans.H
+    if not ((W > 0) & (H > 0)).all():
+        raise PageSizeError("page width and height must be > 0")
     # copies: the rotation below writes them, and the table is the caller's
     x0, x1, y0, y1 = (v.copy() for v in (spans.x0, spans.x1, spans.y0, spans.y1))
     ti = (spans.code == 0).nonzero()[0]
@@ -1258,7 +1266,8 @@ def analyze_pages(spans: Spans) -> Pages:
     ang = estimate_skews((x0[ti] + x1[ti]) / 2.0, (y0[ti] + y1[ti]) / 2.0,
                          np.maximum(x1[ti] - x0[ti], 1.0),
                          np.maximum(y1[ti] - y0[ti], 1.0), tb, W, H)
-    for d in (np.abs(ang) >= MIN_ROTATION_DEG).nonzero()[0].tolist():
+    ang = np.where(np.abs(ang) >= MIN_ROTATION_DEG, ang, 0.0)
+    for d in ang.nonzero()[0].tolist():
         s, e = bounds[d], bounds[d + 1]
         x0[s:e], x1[s:e], y0[s:e], y1[s:e] = rotate_boxes(
             x0[s:e], x1[s:e], y0[s:e], y1[s:e], float(ang[d]), W[d] / 2.0, H[d] / 2.0)
@@ -1274,7 +1283,7 @@ def analyze_pages(spans: Spans) -> Pages:
         valleys = (vx, has[vseg], ok)
         margins = _marginal_profiles(tx0, tx1, ty0, ty1, hb, W[has], H[has])
         margins = (has[margins[0]], *margins[1:])
-    return Pages(**{**vars(spans), "x0": x0, "x1": x1, "y0": y0, "y1": y1},
+    return Pages(**{**vars(spans), "x0": x0, "x1": x1, "y0": y0, "y1": y1}, ang=ang,
                  cx=(x0 + x1) / 2.0, cy=(y0 + y1) / 2.0, ti=ti, tb=tb, lo=lo, hi=hi,
                  valleys=valleys, margins=margins)
 

@@ -10,10 +10,11 @@ Image/Separator/Table regions appended without RO entries. Ids follow
 utils/counter.py: `region_%04d` / `region_%04d_line_%04d`, 1-based.
 
 Here the writer is a vectorized post-pass over the engine's ordered
-flat output (doc_id, ord, kind, text, media_ref, offset) joined with
-span geometry: per document it re-groups consecutive ordered text spans
-into regions (same geometric clustering the kernel used) and serializes
-one XML string per document. At scale the XML strings land in a
+flat output (pipeline.extract_flat_input: doc_id, ord, kind, text,
+media_ref, offset, with each span's geometry and its page's deskew
+angle on the row): per document it re-groups consecutive ordered text
+spans into regions (same geometric clustering the kernel used) and
+serializes one XML string per document. At scale the XML strings land in a
 (doc_id, xml) table — writing 10^12 individual files is an object-store
 concern, not an engine concern — with a local-directory helper for the
 reference's one-file-per-page layout.
@@ -156,72 +157,20 @@ def doc_to_pagexml(doc_id, width, height, kind, text, media_ref, offset,
     return "\n".join(parts)
 
 
-def attach_geometry(out: DataFrame, flat_input: DataFrame) -> DataFrame:
-    """Join the engine's ordered output back to the input geometry on
-    (doc_id, offset) — broadcast-free equi-join, both sides hash-
-    partitionable on doc_id."""
-    geom = flat_input.select("doc_id", "offset", "width", "height",
-                             "x0", "x1", "y0", "y1")
-    return out.join(geom, ["doc_id", "offset"], "left")
-
-
-def page_deskew_angles(flat_input: DataFrame) -> DataFrame:
-    """Per-document EFFECTIVE deskew angle (doc_id, angle_deg): the exact
-    angle the layout kernel applied — estimate_skews over the text spans
-    (0 below 8 lines), 0 below the kernel's MIN_ROTATION_DEG. Bucketed
-    applyInPandas with the doc_runs idiom; one estimate_skews call per
-    bucket, its documents as segments."""
-    from pyspark.sql import functions as F
-
-    from eynollah_spark.packaging import ensure_distributed
-
-    spark = flat_input.sparkSession
-    ensure_distributed(spark)
-    buckets = int(spark.conf.get("spark.sql.shuffle.partitions")) * 2
-    txt = flat_input.filter(F.col("kind") == "text").select(
-        "doc_id", "width", "height", "x0", "x1", "y0", "y1",
-        F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).alias("_bucket"))
-
-    def fn(b: pd.DataFrame) -> pd.DataFrame:
-        from eynollah_spark.kernels import doc_runs
-        from eynollah_spark.kernels.deskew import MIN_ROTATION_DEG, estimate_skews
-
-        if not len(b):
-            return pd.DataFrame({"doc_id": pd.Series([], dtype=object),
-                                 "angle_deg": pd.Series([], dtype=float)})
-        order, starts, _ = doc_runs(b["doc_id"])
-        x0, x1, y0, y1 = (b[c].to_numpy(float)[order] for c in ("x0", "x1", "y0", "y1"))
-        first = order[starts]
-        ang = estimate_skews((x0 + x1) / 2.0, (y0 + y1) / 2.0,
-                             np.maximum(x1 - x0, 1.0), np.maximum(y1 - y0, 1.0),
-                             np.append(starts, len(order)),
-                             b["width"].to_numpy(float)[first],
-                             b["height"].to_numpy(float)[first])
-        ang[np.abs(ang) < MIN_ROTATION_DEG] = 0.0
-        return pd.DataFrame({"doc_id": b["doc_id"].to_numpy(dtype=object)[first],
-                             "angle_deg": ang})
-
-    return txt.groupBy("_bucket").applyInPandas(
-        fn, schema="doc_id string, angle_deg double")
-
-
-def rotate_geometry(rows: DataFrame, angles: DataFrame,
-                    inverse: bool = False) -> DataFrame:
+def rotate_geometry(rows: DataFrame, inverse: bool = False) -> DataFrame:
     """C9 closure (deskewed<->original coordinate mapping, the symbolic
     form of utils/contour.py:258-391's contour back-projection): rotate
-    every box center around the page center by the doc's deskew angle
-    (inverse=False -> original frame to deskewed frame; inverse=True ->
-    back), extents preserved — identical math to kernels/deskew.py
-    rotate_boxes, expressed as PURE COLUMN ARITHMETIC so it runs
-    JVM-side in codegen: the only cost is the hash join on doc_id
-    against the (small) per-doc angle table."""
+    every box center around the page center by the row's angle_deg, the
+    deskew angle the kernel applied to its page (inverse=False ->
+    original frame to deskewed frame; inverse=True -> back), extents
+    preserved — identical math to kernels/deskew.py rotate_boxes,
+    expressed as PURE COLUMN ARITHMETIC so it runs JVM-side in codegen,
+    with no join and no exchange. The columns keep their order, and
+    angle_deg is kept, so the inverse applies to the result."""
     from pyspark.sql import functions as F
 
-    r = rows.join(angles, "doc_id", "left").withColumn(
-        "_a", F.radians(F.coalesce(
-            -F.col("angle_deg") if inverse else F.col("angle_deg"),
-            F.lit(0.0))))
-    s, c = F.sin("_a"), F.cos("_a")
+    a = F.radians(-F.col("angle_deg") if inverse else F.col("angle_deg"))
+    s, c = F.sin(a), F.cos(a)
     cx = (F.col("x0") + F.col("x1")) / 2 - F.col("width") / 2
     cy = (F.col("y0") + F.col("y1")) / 2 - F.col("height") / 2
     ncx = c * cx + s * cy + F.col("width") / 2
@@ -231,18 +180,15 @@ def rotate_geometry(rows: DataFrame, angles: DataFrame,
     # one select, never chained withColumn: w2/h2 are unresolved
     # expressions over x0/x1, so replacing x0 first would silently feed
     # the NEW x0 into x1's computation
-    keep = [c for c in r.columns
-            if c not in ("x0", "x1", "y0", "y1", "_a", "angle_deg")]
-    return r.select(
-        *keep,
-        (ncx - w2).alias("x0"), (ncx + w2).alias("x1"),
-        (ncy - h2).alias("y0"), (ncy + h2).alias("y1"))
+    new = {"x0": ncx - w2, "x1": ncx + w2, "y0": ncy - h2, "y1": ncy + h2}
+    return rows.select(*(new[n].alias(n) if n in new else n for n in rows.columns))
 
 
 def to_pagexml_df(rows: DataFrame) -> DataFrame:
     """(doc_id, ord, kind, text, media_ref, offset, width, height,
-    x0..y1) -> (doc_id, xml). One XML string per document; grouped
-    per-doc (the writer is a low-volume post-pass, not the hot path)."""
+    x0..y1; extract_flat_input's rows) -> (doc_id, xml). One XML string
+    per document; grouped per-doc (the writer is a low-volume post-pass,
+    not the hot path)."""
     from eynollah_spark.packaging import ensure_distributed
 
     ensure_distributed(rows.sparkSession)

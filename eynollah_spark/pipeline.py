@@ -37,7 +37,9 @@ Every DataFrame entry runs one plan (SURVEY.md §3.1 lifecycle):
            records the count per bucket and class).
     -> sink: flat rows (doc_id, ord, kind, text, media_ref, offset), one
        per output span; `ord` is the reading order. A document without
-       spans has no rows.
+       spans has no rows. extract_flat_input's rows also carry the span's
+       input geometry (width, height, x0..y1) and its document's applied
+       deskew angle (angle_deg), so no consumer joins the input back.
 
 The entries: extract_flat_input (flat span rows) and
 extract_from_parquet_files, the zero-shuffle task-side scan over
@@ -78,12 +80,13 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # layout_permutation is bound here for perfbench's kernel tracing, which
 # patches this module's attribute
 from eynollah_spark.kernels.layout import (  # noqa: F401
     Spans, analyze_pages, kind_codes, layout_permutation, layout_permutations)
-from eynollah_spark.schemas import FLAT_IN_FIELDS, FLAT_OUT_SCHEMA
+from eynollah_spark.schemas import FLAT_GEOM_OUT_SCHEMA, FLAT_IN_FIELDS, FLAT_OUT_SCHEMA
 
 
 def filter_printspace(flat: DataFrame, frame=None,
@@ -146,26 +149,28 @@ def _safe_permutations(spans: Spans, a: int, b: int, fail_fast: bool):
     eynollah.py:2023-2028, is replaced by degrade-and-continue). If the
     batch raises, in analyze_pages or layout_permutations, each document
     is re-run alone; one that still raises falls back to input-offset
-    order (total, kinds unchanged). Returns (take, marg, counts, failed):
-    the documents' output spans in reading order as rows of ``spans``,
-    their marginalia flags, each document's number of output spans, and
-    {document: the class name of the exception that quarantined it}.
-    fail_fast=True (tests/CI) re-raises instead."""
+    order, unrotated (total, kinds unchanged). Returns (take, marg,
+    counts, angle, failed): the documents' output spans in reading order
+    as rows of ``spans``, their marginalia flags, each document's number
+    of output spans and applied deskew angle, and {document: the class
+    name of the exception that quarantined it}. fail_fast=True (tests/CI)
+    re-raises instead."""
     batch = spans[a:b]
     try:
-        order = layout_permutations(batch, analyze_pages(batch))
-        return order.perm + spans.bounds[a], order.marg, order.counts, {}
+        pages = analyze_pages(batch)
+        order = layout_permutations(batch, pages)
+        return order.perm + spans.bounds[a], order.marg, order.counts, pages.ang, {}
     except Exception as e:
         if fail_fast:
             raise
         if b - a > 1:
-            take, marg, counts, failed = zip(*(_safe_permutations(spans, d, d + 1, fail_fast)
-                                               for d in range(a, b)))
-            return (np.concatenate(take), np.concatenate(marg), np.concatenate(counts),
+            *res, failed = zip(*(_safe_permutations(spans, d, d + 1, fail_fast)
+                                 for d in range(a, b)))
+            return (*map(np.concatenate, res),
                     {d: cls for f in failed for d, cls in f.items()})
         s, n = spans.bounds[a], len(batch.off)
         return (s + np.argsort(batch.off, kind="stable"), np.zeros(n, dtype=bool),
-                np.array([n]), {a: type(e).__name__})
+                np.array([n]), np.zeros(1), {a: type(e).__name__})
 
 
 def _np(col, fill=0, dtype=np.float64) -> np.ndarray:
@@ -175,11 +180,13 @@ def _np(col, fill=0, dtype=np.float64) -> np.ndarray:
 def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper: int):
     """The layout kernel over a partition sorted by (doc_id, offset),
     where every document is a contiguous run of rows, _PAGE_BATCH
-    documents at a time. Returns (starts, counts, take, marg, status):
-    each document's first row, its number of output spans (0 for an
-    empty document: null-kind rows only), for all output spans in reading
-    order their row index and marginalia flag, and the documents
-    _safe_permutations quarantined ({document: exception class name})."""
+    documents at a time. Returns (starts, counts, take, marg, angle,
+    status): each document's first row, its number of output spans (0
+    for an empty document: null-kind rows only), for all output spans in
+    reading order their row index and marginalia flag, each document's
+    applied deskew angle (0 for an empty or quarantined one), and the
+    documents _safe_permutations quarantined ({document: exception class
+    name})."""
     ids = col["doc_id"]
     change = pc.not_equal(ids[1:], ids[:-1])
     if _KEY in col:
@@ -187,7 +194,7 @@ def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper:
         change = pc.or_(change, pc.not_equal(col[_KEY][1:], col[_KEY][:-1]))
     change = change.to_numpy(zero_copy_only=False).nonzero()[0] + 1
     starts = np.concatenate(([0], change))
-    counts = np.zeros(len(starts), dtype=np.int64)
+    counts, angle = np.zeros(len(starts), dtype=np.int64), np.zeros(len(starts))
     # the kernel's span table: the valid rows, each column gathered once,
     # of the documents that have any; kinds as codes of the dictionary
     # entries, with no Python str per row
@@ -196,7 +203,7 @@ def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper:
     nvalid = np.add.reduceat(valid, starts, dtype=np.int64)
     docs = nvalid.nonzero()[0]
     if not len(docs):
-        return starts, counts, rows, np.zeros(0, dtype=bool), {}
+        return starts, counts, rows, np.zeros(0, dtype=bool), angle, {}
     first, D = starts[docs], len(docs)
     kd = pc.dictionary_encode(col["kind"])
     spans = Spans(
@@ -208,10 +215,11 @@ def _permutations(col: dict, fail_fast: bool, num_col_lower: int, num_col_upper:
         _np(col["height"], 1, np.int64)[first].astype(float),
         _np(col["rtl"], False, np.bool_)[first],
         np.full(D, num_col_lower), np.full(D, num_col_upper))
-    take, marg, cnt, failed = zip(*(_safe_permutations(spans, a, min(a + _PAGE_BATCH, D), fail_fast)
-                                    for a in range(0, D, _PAGE_BATCH)))
-    counts[docs] = np.concatenate(cnt)
-    return (starts, counts, rows[np.concatenate(take)], np.concatenate(marg),
+    take, marg, cnt, ang, failed = zip(*(
+        _safe_permutations(spans, a, min(a + _PAGE_BATCH, D), fail_fast)
+        for a in range(0, D, _PAGE_BATCH)))
+    counts[docs], angle[docs] = np.concatenate(cnt), np.concatenate(ang)
+    return (starts, counts, rows[np.concatenate(take)], np.concatenate(marg), angle,
             {int(docs[d]): cls for f in failed for d, cls in f.items()})
 
 
@@ -225,19 +233,28 @@ def _out_kind(col: dict, take: pa.Array, marg: pa.Array) -> pa.Array:
                       pc.cast(pc.take(col["kind"], take), pa.string()))
 
 
-def _flat_output(col, starts, counts, take, marg, include_payload):
-    """FLAT_OUT_SCHEMA rows (without text / media_ref unless
-    include_payload), one per output span."""
-    payload = ["text", "media_ref"] if include_payload else []
-    return pa.RecordBatch.from_arrays(
-        [pc.take(col["doc_id"], take), pa.array(_ords(counts), type=pa.int32()),
-         _out_kind(col, take, marg)]
-        + [pc.take(col[c], take) for c in payload]
-        + [pc.cast(pc.take(col["offset"], take), pa.int32())],
-        names=["doc_id", "ord", "kind", *payload, "offset"])
+#: the Arrow types of FLAT_GEOM_OUT_SCHEMA's columns
+_OUT_TYPES = to_arrow_schema(FLAT_GEOM_OUT_SCHEMA)
 
 
-def _check_output(col, starts, counts, take, marg, include_payload):
+def _flat_output(col, counts, take, marg, angle, names):
+    """The columns ``names`` of FLAT_GEOM_OUT_SCHEMA, one row per output
+    span: its reading-order rank (ord), its kind with the marginalia
+    refinement, its document's applied deskew angle (angle_deg), and every
+    other column gathered from the input row, cast to the schema's type."""
+    def column(c):
+        if c == "ord":
+            return pa.array(_ords(counts), type=pa.int32())
+        if c == "kind":
+            return _out_kind(col, take, marg)
+        if c == "angle_deg":
+            return pa.array(np.repeat(angle, counts))
+        return pc.cast(pc.take(col[c], take), _OUT_TYPES.field(c).type)
+
+    return pa.RecordBatch.from_arrays([column(c) for c in names], names=names)
+
+
+def _check_output(col, starts, counts, take, marg):
     """(doc_id, n_bad) per document with spans: the number of spans whose
     (ord, kind) differs from the input's (expected_rank, expected_kind),
     plus how far its span count is from the generator's expected_n (rows
@@ -255,7 +272,9 @@ def _check_output(col, starts, counts, take, marg, include_payload):
         names=["doc_id", "n_bad"])
 
 
-_OUTPUTS = {"flat": _flat_output, "check": _check_output}
+#: the columns of make_partition_arrow_kernel's outputs ('check' builds
+#: its own)
+_OUTPUTS = {"flat": FLAT_OUT_SCHEMA.names, "geometry": FLAT_GEOM_OUT_SCHEMA.names, "check": None}
 
 
 def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = True,
@@ -268,8 +287,10 @@ def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = 
     (C++ pc.take / pc.if_else — payload strings never become Python
     objects).
 
-    output: 'flat' -> FLAT_OUT_SCHEMA rows (text / media_ref only if
-    include_payload); 'check' -> (doc_id, n_bad) for the
+    output: 'flat' -> FLAT_OUT_SCHEMA rows; 'geometry' ->
+    FLAT_GEOM_OUT_SCHEMA rows (each span's input geometry and page size,
+    and its document's applied deskew angle); both carry text / media_ref
+    only if include_payload. 'check' -> (doc_id, n_bad) for the
     extract_reading_order self-check, with the input carrying
     expected_kind / expected_rank / expected_n. The check is the
     in-kernel equivalent of a full-outer join of the flat output with the
@@ -288,15 +309,18 @@ def make_partition_arrow_kernel(include_payload: bool = True, fail_fast: bool = 
     partition resident per task, bounded by the repartition. (The
     task-side scan runs _keyed_outputs instead, on chunks of its files:
     _CHUNK_ROWS rows plus one file.)"""
-    build = _OUTPUTS[output]
+    names = _OUTPUTS[output]
+    if names is not None:
+        names = [c for c in names if include_payload or c not in ("text", "media_ref")]
 
     def kernel(batches):
         res = layout_partition(batches, fail_fast, num_col_lower, num_col_upper)
         if res is None:
             return
-        col, starts, counts, take, marg, _ = res
-        out = build(col, starts, counts, pa.array(take), pa.array(marg),
-                    include_payload)
+        col, starts, counts, take, marg, angle, _ = res
+        take, marg = pa.array(take), pa.array(marg)
+        out = (_check_output(col, starts, counts, take, marg) if names is None
+               else _flat_output(col, counts, take, marg, angle, names))
         if out.num_rows:
             yield out
 
@@ -334,8 +358,8 @@ def layout_partition(batches, fail_fast: bool = True, num_col_lower: int = 0,
     """The body of the partition kernel, for callers that build their own
     output: the partition's columns in canonical (doc_id, offset) order
     (preceded by the key, when the rows carry a _KEY column) and
-    _permutations' (starts, counts, take, marg, status) — or None for an
-    empty partition."""
+    _permutations' (starts, counts, take, marg, angle, status) — or None
+    for an empty partition."""
     _freeze_worker_heap()
     batches = list(batches)
     if not batches:
@@ -352,19 +376,19 @@ def layout_partition(batches, fail_fast: bool = True, num_col_lower: int = 0,
     return (col, *_permutations(col, fail_fast, num_col_lower, num_col_upper))
 
 
-def _keyed_outputs(batches, include_payload: bool, fail_fast: bool, **kernel_kwargs):
+def _keyed_outputs(batches, fail_fast: bool, **kernel_kwargs):
     """The task-side scan's kernel call (_task_outputs, keyed by input
     file): run the kernel once over rows that carry a _KEY column and
-    yield (key, flat output rows, Counter of the quarantined documents'
+    yield (key, FLAT_OUT_SCHEMA rows, Counter of the quarantined documents'
     exception classes) for every key with output. The rows are ordered by key
     first, so each key's documents are one slice of the output, in the
     order the key's rows alone would give."""
     res = layout_partition(batches, fail_fast, **kernel_kwargs)
     if res is None:
         return
-    col, starts, counts, take, marg, failed = res
-    out = _flat_output(col, starts, counts, pa.array(take), pa.array(marg),
-                       include_payload)
+    col, starts, counts, take, marg, angle, failed = res
+    out = _flat_output(col, counts, pa.array(take), pa.array(marg), angle,
+                       FLAT_OUT_SCHEMA.names)
     # each document's key (non-decreasing) -> each key's output rows
     doc_key = col[_KEY].to_numpy()[starts]
     keys, first = np.unique(doc_key, return_index=True)
@@ -418,17 +442,20 @@ def extract_flat_input(flat: DataFrame, partitions: int | None = None,
                        fail_fast: bool = True,
                        num_col_lower: int = 0, num_col_upper: int = 0) -> DataFrame:
     """Flat span rows (doc_id, width, height, rtl, kind, text, media_ref,
-    offset, x0..y1; other columns are dropped) -> FLAT_OUT_SCHEMA rows:
-    one hash exchange on doc_id, then the partition kernel, which carries
-    the text / media_ref payload to the output with pc.take. For input
-    that is already doc-complete per file (a table bucketed by doc_id)
-    use extract_from_parquet_files, which needs no shuffle at all.
+    offset, x0..y1; other columns are dropped) -> FLAT_GEOM_OUT_SCHEMA
+    rows: one hash exchange on doc_id, then the partition kernel, which
+    carries the payload and the geometry to the output with pc.take and
+    adds each document's applied deskew angle (0 for a quarantined
+    document, which is emitted unrotated). The rows are ready for the
+    PAGE-XML and SVG writers and pagexml.rotate_geometry. For input that
+    is already doc-complete per file (a table bucketed by doc_id) use
+    extract_from_parquet_files, which needs no shuffle at all.
     """
     kern = make_partition_arrow_kernel(fail_fast=fail_fast,
                                        num_col_lower=num_col_lower,
-                                       num_col_upper=num_col_upper)
+                                       num_col_upper=num_col_upper, output="geometry")
     return _repartition_by_doc(flat.select(*FLAT_IN_FIELDS), partitions).mapInArrow(
-        kern, schema=FLAT_OUT_SCHEMA)
+        kern, schema=FLAT_GEOM_OUT_SCHEMA)
 
 
 def write_parquet_atomic(table: pa.Table, final: str) -> None:
@@ -487,7 +514,7 @@ def _pack_files(sizes: list[int], ntasks: int) -> list[list[int]]:
 
 
 def _task_outputs(paths: list[str], files: list[int], cols: list[str],
-                  include_payload: bool, fail_fast: bool, budget: int,
+                  fail_fast: bool, budget: int,
                   rows_in: dict | None = None, **kernel_kwargs):
     """One task's body: read its files in order, run _keyed_outputs once
     per chunk of consecutive files (at most ``budget`` rows; a bigger
@@ -499,7 +526,7 @@ def _task_outputs(paths: list[str], files: list[int], cols: list[str],
 
     def run(chunk):
         return _keyed_outputs(pa.concat_tables(chunk, promote_options="permissive")
-                              .to_batches(), include_payload, fail_fast, **kernel_kwargs)
+                              .to_batches(), fail_fast, **kernel_kwargs)
 
     chunk, rows = [], 0
     for i in files:
@@ -546,8 +573,8 @@ def _file_job(spark, paths: list[str], outputs: list[str] | None,
         for b in batches:
             for tid in b.column(0).to_pylist():
                 rows_in, lineage = {}, {}
-                for i, out, causes in _task_outputs(paths, tasks[tid], FLAT_IN_FIELDS, True,
-                                                    fail_fast, budget, rows_in, **kernel_kwargs):
+                for i, out, causes in _task_outputs(paths, tasks[tid], FLAT_IN_FIELDS, fail_fast,
+                                                    budget, rows_in, **kernel_kwargs):
                     if outputs is not None:
                         write_parquet_atomic(pa.Table.from_batches([out]), outputs[i])
                     if stats_only:
@@ -627,22 +654,21 @@ def extract_full_layout(flat: DataFrame, partitions: int | None = None,
                         headers_off: bool = False,
                         num_col_lower: int = 0, num_col_upper: int = 0) -> DataFrame:
     """F1 `--full-layout` mode parity: the complete post-kernel chain —
-    XY-cut extraction -> geometry re-attach -> scorer kind refinement
-    (headings, drop capitals; B12/C12/C13) -> C14 drop-capital adhesion.
+    XY-cut extraction (its rows carry their geometry and deskew angle) ->
+    scorer kind refinement (headings, drop capitals; B12/C12/C13) -> C14
+    drop-capital adhesion.
     C15 table splitting (tables.split_wide_tables) runs BEFORE extraction
     since it rewrites input spans.
 
     Returns ordered flat rows WITH geometry (ready for the PAGE-XML
     writer). Every stage is a relational plan or an Arrow-batched kernel;
     shuffles stay on doc_id-derived keys throughout."""
-    from eynollah_spark.pagexml import attach_geometry
     from eynollah_spark.scorer import adhere_drop_capitals, refine_kinds
     from eynollah_spark.tables import split_wide_tables
 
     flat = split_wide_tables(flat)
-    out = extract_flat_input(flat, partitions=partitions, fail_fast=fail_fast,
-                             num_col_lower=num_col_lower, num_col_upper=num_col_upper)
-    rows = attach_geometry(out, flat)
+    rows = extract_flat_input(flat, partitions=partitions, fail_fast=fail_fast,
+                              num_col_lower=num_col_lower, num_col_upper=num_col_upper)
     # headers_off (cli_layout.py:111-115): ignore the headers role only —
     # refine_kinds still runs so drop-capital reclassification (and the
     # C14 adhesion below, which needs it) is unaffected, matching the

@@ -84,27 +84,21 @@ def doc_to_svg(doc_id, width, height, kinds, x0s, x1s, y0s, y1s,
     return "\n".join(parts)
 
 
-def to_svg_df(rows: DataFrame, angles: DataFrame | None = None) -> DataFrame:
-    """(doc_id, ord, kind, width, height, x0..y1[, angle_deg]) ->
-    (doc_id, svg). Same shape as pagexml.to_pagexml_df: a low-volume
-    grouped post-pass, one string per document."""
+def to_svg_df(rows: DataFrame) -> DataFrame:
+    """(doc_id, ord, kind, width, height, x0..y1, angle_deg;
+    extract_flat_input's rows) -> (doc_id, svg). Same shape as
+    pagexml.to_pagexml_df: a low-volume grouped post-pass, one string per
+    document."""
     from eynollah_spark.packaging import ensure_distributed
 
     ensure_distributed(rows.sparkSession)
-    if angles is not None:
-        rows = rows.join(angles, "doc_id", "left")
-    has_angle = "angle_deg" in rows.columns
 
     def fn(g: pd.DataFrame) -> pd.DataFrame:
         g = g.sort_values("ord")
-        ang = 0.0
-        if has_angle:
-            v = g["angle_deg"].iloc[0]
-            ang = 0.0 if pd.isna(v) else float(v)  # left-join miss -> NaN
         svg = doc_to_svg(
             g["doc_id"].iloc[0], g["width"].iloc[0], g["height"].iloc[0],
             g["kind"].tolist(), g["x0"].tolist(), g["x1"].tolist(),
-            g["y0"].tolist(), g["y1"].tolist(), angle_deg=ang)
+            g["y0"].tolist(), g["y1"].tolist(), angle_deg=float(g["angle_deg"].iloc[0]))
         return pd.DataFrame({"doc_id": [g["doc_id"].iloc[0]], "svg": [svg]})
 
     return rows.groupBy("doc_id").applyInPandas(

@@ -81,11 +81,7 @@ class SparkLayoutProcessor:
         Returns the number of pages written this invocation."""
         from pyspark.sql import functions as F
 
-        from eynollah_spark.pagexml import (
-            attach_geometry,
-            to_pagexml_df,
-            write_pagexml_dir,
-        )
+        from eynollah_spark.pagexml import to_pagexml_df, write_pagexml_dir
         from eynollah_spark.pipeline import extract_flat_input
 
         flat = parse_pagexml_distributed(self.spark, in_dir)
@@ -106,16 +102,12 @@ class SparkLayoutProcessor:
                 flat = (flat.withColumn("stem", stem)
                         .join(F.broadcast(done_df), "stem", "left_anti")
                         .drop("stem"))
-        flat = flat.cache()
-        try:
-            rows = attach_geometry(extract_flat_input(flat, fail_fast=self.fail_fast), flat)
-            if self.scorer is not None:
-                from eynollah_spark.scorer import refine_kinds
+        rows = extract_flat_input(flat, fail_fast=self.fail_fast)
+        if self.scorer is not None:
+            from eynollah_spark.scorer import refine_kinds
 
-                rows = refine_kinds(rows, scorer=self.scorer)
-            return write_pagexml_dir(to_pagexml_df(rows), out_dir)
-        finally:
-            flat.unpersist()
+            rows = refine_kinds(rows, scorer=self.scorer)
+        return write_pagexml_dir(to_pagexml_df(rows), out_dir)
 
 
 try:  # pragma: no cover - exercised only where ocrd is installed

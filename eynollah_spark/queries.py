@@ -1574,13 +1574,11 @@ def _pagexml_roundtrip_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from eynollah_spark.corpus import corpus_flat_spark
-    from eynollah_spark.pagexml import attach_geometry, to_pagexml_df
     from eynollah_spark.pipeline import extract_flat_input
 
     n = max(100, int(20_000 * sf_of(sf_dir)))
     flat = corpus_flat_spark(spark, n).drop("expected_kind", "expected_rank")
-    out = extract_flat_input(flat)
-    rows = attach_geometry(out, flat)
+    rows = extract_flat_input(flat)
 
     def check(g: pd.DataFrame) -> pd.DataFrame:
         from eynollah_spark.fixtures import parse_pagexml_string

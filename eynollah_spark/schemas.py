@@ -14,6 +14,16 @@ FLAT_OUT_SCHEMA = T.StructType([
     T.StructField("offset", T.IntegerType()),
 ])
 
+# extract_flat_input's output: FLAT_OUT_SCHEMA plus the span's input
+# geometry and page size, and its document's applied deskew angle in
+# degrees (the same on every row of the document)
+FLAT_GEOM_OUT_SCHEMA = T.StructType(FLAT_OUT_SCHEMA.fields + [
+    T.StructField("width", T.IntegerType()),
+    T.StructField("height", T.IntegerType()),
+    *(T.StructField(c, T.DoubleType()) for c in ("x0", "x1", "y0", "y1")),
+    T.StructField("angle_deg", T.DoubleType()),
+])
+
 # flat span input (extract_flat_input's columns; flatten's output shape)
 FLAT_IN_FIELDS = [
     "doc_id", "width", "height", "rtl",

@@ -70,15 +70,14 @@ def test_batched_scores_equal_single_page_scores():
             assert np.array_equal(got[k], one[0])
 
 
-def test_page_deskew_angles_are_the_kernels_rotation(spark):
-    """pagexml.page_deskew_angles gives, document by document, the angle
+def test_emitted_deskew_angles_are_the_kernels_rotation(spark):
+    """extract_flat_input's angle_deg is, document by document, the angle
     the layout kernel's page stage applies: rotating a page by it
     reproduces analyze_pages' deskewed geometry bit for bit, and a page
-    at angle 0 (or absent: no text lines) keeps its geometry. Over 200
+    at angle 0 (or without text lines) keeps its geometry. Over 200
     generated pages, some with a planted skew, and single-column pages
     rotated by less than MIN_ROTATION_DEG, whose estimate the gate
     zeroes, and by more."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from page_helpers import corpus_page
@@ -86,7 +85,7 @@ def test_page_deskew_angles_are_the_kernels_rotation(spark):
     from eynollah_spark.corpus import corpus_flat_spark
     from eynollah_spark.kernels.deskew import MIN_ROTATION_DEG, estimate_skews
     from eynollah_spark.kernels.layout import DocSpans, analyze_pages, span_table
-    from eynollah_spark.pagexml import page_deskew_angles
+    from eynollah_spark.pipeline import extract_flat_input
 
     tilted = []
     for k, theta in enumerate((0.4, 0.6, -0.5, 0.8, 2.8)):
@@ -101,22 +100,26 @@ def test_page_deskew_angles_are_the_kernels_rotation(spark):
                           d.y1 - d.y0, [0, d.n], [1400], [2000])[0] for _, d in tilted]
     assert any(0 < abs(a) < MIN_ROTATION_DEG for a in raw), raw
     assert any(abs(a) >= MIN_ROTATION_DEG for a in raw), raw
-    geom = pd.DataFrame([(i, 1400, 2000, "text", *v) for i, d in tilted
-                         for v in zip(d.x0, d.x1, d.y0, d.y1)],
-                        columns=["doc_id", "width", "height", "kind", "x0", "x1", "y0", "y1"])
+    geom = spark.createDataFrame(
+        [(i, 1400, 2000, False, "text", None, None, int(o), *map(float, v))
+         for i, d in tilted for o, *v in zip(d.offset, d.x0, d.x1, d.y0, d.y1)],
+        "doc_id string, width int, height int, rtl boolean, kind string, text string, "
+        "media_ref string, offset int, x0 double, x1 double, y0 double, y1 double")
     flat = corpus_flat_spark(spark, 200, partitions=4).filter(F.col("offset") >= 0)
     angles = {r["doc_id"]: r["angle_deg"]
-              for frame in (flat, spark.createDataFrame(geom))
-              for r in page_deskew_angles(frame).collect()}
+              for frame in (flat, geom)
+              for r in extract_flat_input(frame).select("doc_id", "angle_deg")
+              .distinct().collect()}
     assert sum(a != 0.0 for a in angles.values()) >= 5
     docs = [(f"doc{i:08d}", d) for i in range(200)
             for d in [corpus_page(i)[0]] if d.n] + tilted
+    assert len(angles) == len(docs)
     spans = span_table([d for _, d in docs])
     pages = analyze_pages(spans)
     for d, (doc_id, _) in enumerate(docs):
         s, e = spans.bounds[d], spans.bounds[d + 1]
         box = tuple(v[s:e] for v in (spans.x0, spans.x1, spans.y0, spans.y1))
-        a = angles.get(doc_id, 0.0)
+        a = angles[doc_id]
         if a != 0.0:
             box = rotate_boxes(*box, a, spans.W[d] / 2.0, spans.H[d] / 2.0)
         for want, got in zip(box, (pages.x0, pages.x1, pages.y0, pages.y1)):

@@ -6,7 +6,6 @@ from page_helpers import GENERATED_PAGES, generated_page_xml, reference_page
 from pyspark.sql import functions as F
 
 from eynollah_spark.fixtures import parse_pagexml_string
-from eynollah_spark.pagexml import attach_geometry
 from eynollah_spark.pipeline import extract_flat_input
 from eynollah_spark.scorer import adhere_drop_capitals, refine_kinds
 
@@ -26,9 +25,7 @@ def _flat_df(spark, doc_id, width, height, spans):
 
 
 def _run(spark, doc_id, width, height, spans):
-    flat = _flat_df(spark, doc_id, width, height, spans)
-    out = extract_flat_input(flat, partitions=2)
-    rows = attach_geometry(out, flat)
+    rows = extract_flat_input(_flat_df(spark, doc_id, width, height, spans), partitions=2)
     refined = refine_kinds(rows)
     return adhere_drop_capitals(refined)
 
@@ -113,9 +110,7 @@ def test_no_caps_is_identity(spark):
         ("text", f"line{i}", None, i, 200, 620, 100 + 40 * i, 130 + 40 * i)
         for i in range(5)
     ]
-    flat = _flat_df(spark, "nd", 1000, 1400, spans)
-    out = extract_flat_input(flat, partitions=2)
-    rows = attach_geometry(out, flat).cache()
+    rows = extract_flat_input(_flat_df(spark, "nd", 1000, 1400, spans), partitions=2).cache()
     moved = adhere_drop_capitals(rows)
     a = [(r["ord"], r["offset"]) for r in rows.orderBy("ord").collect()]
     b = [(r["ord"], r["offset"]) for r in moved.orderBy("ord").collect()]

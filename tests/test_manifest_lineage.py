@@ -248,12 +248,12 @@ def test_quarantined_docs_are_counted(spark, tmp_path):
         s = run_extraction(nest_corpus(frame), out, n_parts=4, partitions=2,
                            parts_per_batch=4)
         assert s["quarantined"] == want
-        assert s["quarantine_causes"] == ({"OverflowError": 1} if want else {})
+        assert s["quarantine_causes"] == ({"PageSizeError": 1} if want else {})
         parts = snapshots(out)[0]["parts"]
         assert {int(p): m["quarantined"] for p, m in parts.items()} == {
             p: want * (p == victim_part) for p in range(4)}
         assert {int(p): m["quarantine_causes"] for p, m in parts.items()} == {
-            p: {"OverflowError": want} if want and p == victim_part else {}
+            p: {"PageSizeError": want} if want and p == victim_part else {}
             for p in range(4)}
     rows = (read_as_of(spark, out).filter(F.col("doc_id") == victim)
             .orderBy("ord").collect())

@@ -1,8 +1,8 @@
 """C9 closure (VERDICT r3 item 8): the PAGE-XML sink's coordinate-frame
-option. page_deskew_angles must recover the generator's planted skew,
-rotate_geometry must map original->deskewed frame with pure column math,
-and the inverse rotation must round-trip back to the original
-coordinates within 1 px."""
+option. extract_flat_input's angle_deg must recover the generator's
+planted skew, rotate_geometry must map original->deskewed frame with
+pure column math, and the inverse rotation must round-trip back to the
+original coordinates within 1 px."""
 
 import numpy as np
 import pytest
@@ -21,19 +21,21 @@ def skewed_flat(spark):
             .cache())
 
 
-def _planted_angles(n_docs=200):
-    """Re-derive the generator's planted skew per doc (corpus.py:284-295)."""
-    from eynollah_spark.corpus import gen_corpus_flat
+@pytest.fixture(scope="module")
+def extracted(skewed_flat):
+    from eynollah_spark.pipeline import extract_flat_input
 
-    flat, metas = gen_corpus_flat(n_docs)
-    return flat, metas
+    return extract_flat_input(skewed_flat).cache()
 
 
-def test_deskew_angles_recover_planted_skew(spark, skewed_flat):
-    from eynollah_spark.pagexml import page_deskew_angles
+def _skewed_docs(extracted):
+    return {r["doc_id"] for r in
+            extracted.filter(F.col("angle_deg") != 0).select("doc_id").distinct().collect()}
 
+
+def test_deskew_angles_recover_planted_skew(extracted):
     rows = {r["doc_id"]: r["angle_deg"]
-            for r in page_deskew_angles(skewed_flat).collect()}
+            for r in extracted.select("doc_id", "angle_deg").distinct().collect()}
     est = {d: a for d, a in rows.items() if a != 0.0}
     # the generator plants skew on ~1 in 10 of the first 200 docs
     assert len(est) >= 5, est
@@ -42,19 +44,17 @@ def test_deskew_angles_recover_planted_skew(spark, skewed_flat):
         assert 0.75 <= abs(a) <= 5.0, (d, a)
 
 
-def test_rotate_geometry_roundtrip_within_1px(spark, skewed_flat):
-    from eynollah_spark.pagexml import page_deskew_angles, rotate_geometry
+def test_rotate_geometry_roundtrip_within_1px(skewed_flat, extracted):
+    from eynollah_spark.pagexml import rotate_geometry
 
-    angles = page_deskew_angles(skewed_flat).cache()
-    skewed_docs = {r["doc_id"] for r in
-                   angles.filter(F.col("angle_deg") != 0).collect()}
+    skewed_docs = _skewed_docs(extracted)
     assert skewed_docs
-    rows = skewed_flat.select("doc_id", "offset", "width", "height",
-                              "x0", "x1", "y0", "y1")
-    fwd = rotate_geometry(rows, angles)
-    back = rotate_geometry(fwd, angles, inverse=True)
-    j = (rows.select("doc_id", "offset",
-                     *[F.col(c).alias(f"o_{c}") for c in ("x0", "x1", "y0", "y1")])
+    rows = extracted.select("doc_id", "offset", "width", "height",
+                            "x0", "x1", "y0", "y1", "angle_deg")
+    fwd = rotate_geometry(rows)
+    back = rotate_geometry(fwd, inverse=True)
+    j = (skewed_flat.select("doc_id", "offset",
+                            *[F.col(c).alias(f"o_{c}") for c in ("x0", "x1", "y0", "y1")])
          .join(back, ["doc_id", "offset"]))
     worst = j.select(F.max(F.greatest(*[
         F.abs(F.col(f"o_{c}") - F.col(c)) for c in ("x0", "x1", "y0", "y1")
@@ -69,18 +69,16 @@ def test_rotate_geometry_roundtrip_within_1px(spark, skewed_flat):
     assert moved > 0
 
 
-def test_deskewed_frame_sharpens_columns(spark, skewed_flat):
+def test_deskewed_frame_sharpens_columns(extracted):
     """In the deskewed frame the text-line left edges of a skewed page
     stack into fewer distinct positions (that alignment is exactly the
     signal estimate_skew maximizes)."""
-    from eynollah_spark.pagexml import page_deskew_angles, rotate_geometry
+    from eynollah_spark.pagexml import rotate_geometry
 
-    angles = page_deskew_angles(skewed_flat).cache()
-    skewed = angles.filter(F.col("angle_deg") != 0)
-    rows = (skewed_flat.filter(F.col("kind") == "text")
-            .join(skewed.select("doc_id"), "doc_id"))
+    rows = extracted.filter((F.col("kind") == "text") & (F.col("angle_deg") != 0))
+    assert rows.count()
     fwd = rotate_geometry(rows.select("doc_id", "offset", "width", "height",
-                                      "x0", "x1", "y0", "y1"), angles)
+                                      "x0", "x1", "y0", "y1", "angle_deg"))
 
     def x0_spread(df):
         # mean per-doc stddev of left edges, quantized to 4 px bins

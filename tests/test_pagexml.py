@@ -100,18 +100,17 @@ def test_id_and_ro_conventions_generated():
 
 
 def test_spark_pagexml_df(spark):
-    """End-to-end through Spark: corpus -> extract -> attach geometry ->
+    """End-to-end through Spark: corpus -> extract (rows with geometry) ->
     per-doc XML strings -> local files, reparse one."""
     from pyspark.sql import functions as F
 
     from eynollah_spark.corpus import corpus_flat_spark
-    from eynollah_spark.pagexml import attach_geometry, to_pagexml_df, write_pagexml_dir
+    from eynollah_spark.pagexml import to_pagexml_df, write_pagexml_dir
     from eynollah_spark.pipeline import extract_flat_input
 
     flat = corpus_flat_spark(spark, 12, partitions=2).cache()
     out = extract_flat_input(flat, partitions=4)
-    rows = attach_geometry(out, flat)
-    xml_df = to_pagexml_df(rows)
+    xml_df = to_pagexml_df(out)
     got = {r["doc_id"]: r["xml"] for r in xml_df.collect()}
     n_docs = flat.select("doc_id").distinct().count()
     assert len(got) == n_docs

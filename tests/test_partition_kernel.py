@@ -256,7 +256,7 @@ def test_task_chunks_equal_per_file_runs(partition, tmp_path, monkeypatch):
             ([1, 3, 5], rows[1] + rows[3], [[1, 3, 5]])):
         chunks.clear()
         got = {i: pa.Table.from_batches([o]) for i, o, _ in pipeline._task_outputs(
-            paths, files, cols, True, True, budget)}
+            paths, files, cols, True, budget)}
         assert chunks == [[i for i in c if rows[i]] for c in want]
         assert got.keys() == {i for i in files if i in alone}
         for i, out in got.items():
@@ -281,9 +281,9 @@ def test_keyed_outputs_equal_per_key_runs(partition):
     got = {k: (pa.Table.from_batches([rows]), causes)
            for k, rows, causes in pipeline._keyed_outputs(
                t.append_column(pipeline._KEY, pa.array(key)).to_batches(max_chunksize=1000),
-               True, False)}
+               False)}
     assert sorted(got) == [0, 1, 2]
     for k, (rows, causes) in got.items():
         alone = _run(t.filter(pa.array(key == k)).to_batches(), fail_fast=False)
         assert rows.equals(alone), k
-        assert causes == ({"OverflowError": 1} if k == 1 else {}), k
+        assert causes == ({"PageSizeError": 1} if k == 1 else {}), k

@@ -37,6 +37,20 @@ def test_extract_flat_input_matches(spark, corpus):
     assert _mismatches(out, expected_spark(corpus)) == 0
 
 
+def test_extract_flat_input_emits_the_input_geometry(corpus):
+    """Every output row carries its input span's page size and box: the
+    emitted (width, height, x0..y1) equal the input row's, matched on
+    (doc_id, offset), for every span of the 200 generated documents."""
+    geom = ["width", "height", "x0", "x1", "y0", "y1"]
+    flat = corpus.filter(F.col("offset") >= 0)
+    out = extract_flat_input(flat, partitions=8)
+    j = (flat.select("doc_id", "offset", *(F.col(c).alias(f"i_{c}") for c in geom))
+         .join(out, ["doc_id", "offset"], "full_outer"))
+    assert j.count() == flat.count() > 0
+    assert j.filter(~F.coalesce(F.expr(" AND ".join(f"{c} = i_{c}" for c in geom)),
+                                F.lit(False))).count() == 0
+
+
 def test_manifest_resume(spark, corpus, tmp_path_factory):
     from eynollah_spark.manifest import completed_parts, run_extraction
 

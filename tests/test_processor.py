@@ -86,12 +86,13 @@ def test_process_workspace_resumes_generated(spark, tmp_path):
 
 
 def test_process_workspace_with_scorer_equals_two_join_plan(spark, tmp_path):
-    """With a scorer, process_workspace joins the geometry once and
-    refines kinds on the joined rows. The pages it writes equal those of
-    refining kinds on the joined rows, dropping the geometry and joining
-    it again. The pages are generated ones the scorer relabels spans on
-    (a text span that is wide and short becomes a heading)."""
-    from eynollah_spark.pagexml import attach_geometry, to_pagexml_df
+    """With a scorer, process_workspace refines kinds on the extracted
+    rows, which carry their own geometry. The pages it writes equal those
+    of a plan that joins the input geometry to the ordered rows, refines
+    kinds on the joined rows, drops the geometry and joins it again. The
+    pages are generated ones the scorer relabels spans on (a text span
+    that is wide and short becomes a heading)."""
+    from eynollah_spark.pagexml import to_pagexml_df
     from eynollah_spark.pipeline import extract_flat_input
     from eynollah_spark.processor import parse_pagexml_distributed
     from eynollah_spark.scorer import HeuristicScorer, refine_kinds
@@ -109,13 +110,19 @@ def test_process_workspace_with_scorer_equals_two_join_plan(spark, tmp_path):
     assert proc.process_workspace(in_dir, out_dir) == len(doc_ids)
 
     flat = parse_pagexml_distributed(spark, in_dir)
-    ordered = extract_flat_input(flat)
-    refined = refine_kinds(attach_geometry(ordered, flat), scorer=scorer).select(
+    geom = flat.select("doc_id", "offset", "width", "height", "x0", "x1", "y0", "y1")
+
+    def with_geometry(rows):
+        return rows.join(geom, ["doc_id", "offset"], "left")
+
+    ordered = extract_flat_input(flat).select("doc_id", "ord", "kind", "text",
+                                              "media_ref", "offset")
+    refined = refine_kinds(with_geometry(ordered), scorer=scorer).select(
         *ordered.columns)
     want = {r["doc_id"]: r["xml"]
-            for r in to_pagexml_df(attach_geometry(refined, flat)).collect()}
+            for r in to_pagexml_df(with_geometry(refined)).collect()}
     plain = {r["doc_id"]: r["xml"]
-             for r in to_pagexml_df(attach_geometry(ordered, flat)).collect()}
+             for r in to_pagexml_df(with_geometry(ordered)).collect()}
     assert sorted(want) == sorted(doc_ids)
     assert any(want[d] != plain[d] for d in doc_ids)
     for doc_id in doc_ids:

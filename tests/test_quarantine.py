@@ -38,9 +38,10 @@ def test_safe_permutation_falls_back(monkeypatch):
     # the failing document is the second of the table: its fallback
     # indexes the table's rows
     spans = span_table([_doc(), _doc()])
-    perm, marg, counts, failed = pl._safe_permutations(spans, 1, 2, fail_fast=False)
-    # degraded but total: input-offset order
+    perm, marg, counts, angle, failed = pl._safe_permutations(spans, 1, 2, fail_fast=False)
+    # degraded but total: input-offset order, unrotated
     assert perm.tolist() == [3, 2] and not marg.any() and counts.tolist() == [2]
+    assert angle.tolist() == [0.0]
     assert failed == {1: "ValueError"}
     with pytest.raises(ValueError):
         pl._safe_permutations(spans, 1, 2, fail_fast=True)
