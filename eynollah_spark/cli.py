@@ -188,9 +188,10 @@ def main(argv=None):
             fn(media).write.mode("overwrite").parquet(args.output)
             print(json.dumps({"ok": True, "output": args.output}))
         elif args.cmd == "plot":
-            from eynollah_spark.plot import to_svg_df, write_svg_dir
+            from eynollah_spark.pagexml import write_dir
+            from eynollah_spark.plot import to_svg_df
 
-            n = write_svg_dir(to_svg_df(layout_rows(spark, args.input)), args.output)
+            n = write_dir(to_svg_df(layout_rows(spark, args.input)), args.output, "svg")
             print(json.dumps({"ok": True, "pages": n, "output": args.output}))
         elif args.cmd == "process":
             from eynollah_spark.processor import SparkLayoutProcessor
@@ -201,10 +202,10 @@ def main(argv=None):
             print(json.dumps({"ok": True, "pages_written": n,
                               "output": args.output}))
         elif args.cmd == "page-xml":
-            from eynollah_spark.pagexml import to_pagexml_df, write_pagexml_dir
+            from eynollah_spark.pagexml import to_pagexml_df, write_dir
 
-            write_pagexml_dir(to_pagexml_df(layout_rows(spark, args.input, args.coords)),
-                              args.output)
+            write_dir(to_pagexml_df(layout_rows(spark, args.input, args.coords)),
+                      args.output, "xml")
             print(json.dumps({"ok": True, "output": args.output,
                               "coords": args.coords}))
     finally:

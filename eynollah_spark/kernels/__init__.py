@@ -10,13 +10,14 @@ kernel in ``eynollah_spark.pipeline``.
 
 
 def doc_runs(doc_col):
-    """Per-document dispatch for bucketed applyInPandas kernels:
+    """Per-document dispatch for whole-partition and bucketed kernels:
     factorize + ONE stable argsort + contiguous-run boundaries (no
     per-doc pandas objects). Returns ``(order, starts, ends)`` —
     ``order`` indexes the bucket's arrays into doc-contiguous form and
     ``[starts[i], ends[i])`` slices one document. Shared by
-    machine_reading_order and the sub-line split query so the idiom has
-    one implementation."""
+    machine_reading_order, the sub-line split query and
+    pagexml.render_docs (the PAGE-XML and SVG writers and the PAGE-XML
+    round-trip query) so the idiom has one implementation."""
     import numpy as np
     import pandas as pd
 

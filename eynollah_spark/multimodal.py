@@ -2,7 +2,7 @@
 
 Media pixels never enter the layout engine (media travel by `media_ref`,
 SURVEY.md §1.1); this module is the training-data-pipeline side: decode /
-feature-extract / resize / frame-sample over binary payload columns as
+feature-extract / resize over binary payload columns as
 Arrow-batched mapInPandas kernels. The image/audio codec libraries are
 not in this container, so the codec call itself is stubbed behind
 `EYNOLLAH_SPARK_FAKE_DECODE` (deterministic fake) /
@@ -126,20 +126,6 @@ def variant_cache(media: DataFrame, target_w: int = 2000) -> DataFrame:
     return (dec.select("media_ref", "mean_luma", v)
             .select("media_ref", "v.variant", "v.width", "v.height",
                     "mean_luma"))
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one row per (media_ref, frame_ts) —
-    pure relational explode of the sampling grid; the decode of each
-    frame goes through decode_and_embed."""
-    return media.filter(F.col("kind") == "video").select(
-        "media_ref",
-        F.explode(F.sequence(
-            F.lit(0),
-            F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)),
-            F.lit(every_ms),
-        )).alias("frame_ts_ms"),
-    )
 
 
 def synth_media_table(spark, n: int = 64) -> DataFrame:

@@ -9,15 +9,17 @@ main text, then marginalia-right — utils/xml.py:49-66), and
 Image/Separator/Table regions appended without RO entries. Ids follow
 utils/counter.py: `region_%04d` / `region_%04d_line_%04d`, 1-based.
 
-Here the writer is a vectorized post-pass over the engine's ordered
-flat output (pipeline.extract_flat_input: doc_id, ord, kind, text,
-media_ref, offset, with each span's geometry and its page's deskew
-angle on the row): per document it re-groups consecutive ordered text
+Here the writer is a post-pass over the engine's ordered flat output
+(pipeline.extract_flat_input: doc_id, ord, kind, text, media_ref,
+offset, with each span's geometry and its page's deskew angle on the
+row), whose partitions already hold whole documents. render_docs runs
+one task per partition with no second exchange: it sorts the partition
+by (doc_id, ord), re-groups each document's consecutive ordered text
 spans into regions (same geometric clustering the kernel used) and
-serializes one XML string per document. At scale the XML strings land in a
-(doc_id, xml) table — writing 10^12 individual files is an object-store
-concern, not an engine concern — with a local-directory helper for the
-reference's one-file-per-page layout.
+serializes one XML string per document. At scale the XML strings land
+in a (doc_id, xml) table — writing 10^12 individual files is an
+object-store concern, not an engine concern — with a local-directory
+sink (write_dir) for the reference's one-file-per-page layout.
 """
 
 from __future__ import annotations
@@ -28,8 +30,10 @@ import re
 from xml.sax.saxutils import escape, quoteattr
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 PAGE_NS = "http://schema.primaresearch.org/PAGE/gts/pagecontent/2019-07-15"
 XSI_NS = "http://www.w3.org/2001/XMLSchema-instance"
@@ -184,25 +188,67 @@ def rotate_geometry(rows: DataFrame, inverse: bool = False) -> DataFrame:
     return rows.select(*(new[n].alias(n) if n in new else n for n in rows.columns))
 
 
-def to_pagexml_df(rows: DataFrame) -> DataFrame:
-    """(doc_id, ord, kind, text, media_ref, offset, width, height,
-    x0..y1; extract_flat_input's rows) -> (doc_id, xml). One XML string
-    per document; grouped per-doc (the writer is a low-volume post-pass,
-    not the hot path)."""
+#: documents per output batch: bounds the Python lists a task holds and
+#: keeps each string column far below Arrow's 2 GiB offset limit
+_DOCS_PER_BATCH = 1024
+
+
+def _render_partition(batches, render, name: str):
+    """render_docs' task body. It holds the whole partition, as an Arrow
+    batch can end inside a document."""
+    from eynollah_spark.kernels import doc_runs
+
+    batches = list(batches)
+    if not any(b.num_rows for b in batches):
+        return
+    t = pa.Table.from_batches(batches)
+    t = t.take(pc.sort_indices(t, [("doc_id", "ascending"), ("ord", "ascending")]))
+    doc_id = t.column("doc_id").to_numpy()
+    _, starts, ends = doc_runs(doc_id)
+    # a document split across partitions leaves a fragment without ord 0,
+    # and a repeated row repeats an ord: the fragment's ords are not 0..m-1
+    bad = t.column("ord").to_numpy() != np.arange(t.num_rows) - np.repeat(starts, ends - starts)
+    if bad.any():
+        raise ValueError(f"document {doc_id[np.argmax(bad)]!r} is not whole in its "
+                         "partition: its ord values are not 0..m-1")
+    for i in range(0, len(starts), _DOCS_PER_BATCH):
+        s, e = starts[i:i + _DOCS_PER_BATCH], ends[i:i + _DOCS_PER_BATCH]
+        cols = t.slice(s[0], e[-1] - s[0]).to_pydict()
+        vals = [render({c: v[a:b] for c, v in cols.items()}) for a, b in zip(s - s[0], e - s[0])]
+        yield pa.RecordBatch.from_arrays([pa.array(doc_id[s], pa.string()), pa.array(vals)],
+                                         names=["doc_id", name])
+
+
+def render_docs(rows: DataFrame, render, name: str, dtype: str = "string") -> DataFrame:
+    """(doc_id, ord, ...) rows -> (doc_id, <name> <dtype>) rows: one
+    render(doc) per document, ``doc`` mapping each column to the
+    document's values in ord order, in the rows' own partitions (no
+    exchange). The partitions must hold whole documents, as
+    extract_flat_input's rows, a narrow plan over them (rotate_geometry)
+    or a plan keyed on doc_id (scorer.refine_kinds' join) do; a task that
+    holds part of a document, or a row twice, raises a ValueError naming
+    it, so no page is rendered from a fragment."""
     from eynollah_spark.packaging import ensure_distributed
 
     ensure_distributed(rows.sparkSession)
+    return rows.mapInArrow(lambda batches: _render_partition(batches, render, name),
+                           schema=f"doc_id string, {name} {dtype}")
 
-    def fn(g: pd.DataFrame) -> pd.DataFrame:
-        g = g.sort_values("ord")
-        xml = doc_to_pagexml(
-            g["doc_id"].iloc[0], g["width"].iloc[0], g["height"].iloc[0],
-            g["kind"].tolist(), g["text"].tolist(), g["media_ref"].tolist(),
-            g["offset"].tolist(), g["x0"].tolist(), g["x1"].tolist(),
-            g["y0"].tolist(), g["y1"].tolist())
-        return pd.DataFrame({"doc_id": [g["doc_id"].iloc[0]], "xml": [xml]})
 
-    return rows.groupBy("doc_id").applyInPandas(fn, schema="doc_id string, xml string")
+def page_xml(doc: dict) -> str:
+    """doc_to_pagexml over one document of render_docs."""
+    return doc_to_pagexml(
+        doc["doc_id"][0], doc["width"][0], doc["height"][0], doc["kind"], doc["text"],
+        doc["media_ref"], doc["offset"], doc["x0"], doc["x1"], doc["y0"], doc["y1"])
+
+
+def to_pagexml_df(rows: DataFrame) -> DataFrame:
+    """extract_flat_input's rows -> (doc_id, xml), one page per document."""
+    return render_docs(rows, page_xml, "xml")
+
+
+#: what sanitize_stem rewrites in a doc_id
+_HOSTILE = r"[/\\\x00]|\.\."
 
 
 def sanitize_stem(doc_id: str) -> str:
@@ -211,32 +257,37 @@ def sanitize_stem(doc_id: str) -> str:
     rewrites the name, a short hash of the RAW doc_id is appended so two
     distinct doc_ids (e.g. 'a/b' and 'a_b') can never collapse to the
     same stem and silently overwrite each other (ADVICE r3)."""
-    stem = re.sub(r"[/\\\x00]|\.\.", "_", str(doc_id))
+    stem = re.sub(_HOSTILE, "_", str(doc_id))
     if stem != str(doc_id):
         digest = hashlib.md5(str(doc_id).encode("utf-8")).hexdigest()[:8]
         stem = f"{stem}-{digest}"
     return stem
 
 
-def write_pagexml_dir(xml_df: DataFrame, out_dir: str) -> int:
-    """Reference-style one-file-per-page sink: <out_dir>/<doc_id>.xml.
-    Executor-side writes (foreachPartition) — works in local mode and on
-    a shared filesystem; at object-store scale keep the (doc_id, xml)
-    table instead. The returned count comes from an accumulator and is
-    approximate under task retries/speculation (a retried partition
-    counts twice); the file set itself is idempotent (fixed name per
-    doc, whole-file rewrite)."""
+def stem_col():
+    """sanitize_stem as a Spark column over doc_id (the processor's
+    resume anti-join)."""
+    clean = F.regexp_replace("doc_id", _HOSTILE, "_")
+    return F.when(clean == F.col("doc_id"), clean).otherwise(
+        F.concat(clean, F.lit("-"), F.substring(F.md5("doc_id"), 1, 8)))
+
+
+def write_dir(df: DataFrame, out_dir: str, ext: str) -> int:
+    """Reference-style one-file-per-page sink: each (doc_id, value) row
+    (to_pagexml_df, plot.to_svg_df) becomes <out_dir>/<stem>.<ext>,
+    written by the tasks (local mode or a shared filesystem; at
+    object-store scale keep the table instead). Returns the sum of the
+    tasks' file counts, exact as Spark keeps one attempt's result per
+    task; the files are idempotent (fixed name per doc, whole rewrite)."""
     os.makedirs(out_dir, exist_ok=True)
-    acc = xml_df.sparkSession.sparkContext.accumulator(0)
 
-    def write_part(rows):
+    def write(batches):
         n = 0
-        for r in rows:
-            stem = sanitize_stem(r["doc_id"])
-            with open(os.path.join(out_dir, f"{stem}.xml"), "w") as f:
-                f.write(r["xml"])
-            n += 1
-        acc.add(n)
+        for b in batches:
+            for doc_id, value in zip(*(c.to_pylist() for c in b.columns)):
+                with open(os.path.join(out_dir, f"{sanitize_stem(doc_id)}.{ext}"), "w") as f:
+                    f.write(value)
+                n += 1
+        yield pa.RecordBatch.from_pydict({"n": [n]})
 
-    xml_df.foreachPartition(write_part)
-    return acc.value
+    return sum(r["n"] for r in df.mapInArrow(write, "n long").collect())

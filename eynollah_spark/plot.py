@@ -16,21 +16,19 @@ built from the symbolic geometry the engine already has:
 - the page deskew angle annotated in the corner (save_deskewed_image's
   information content without rotating pixels).
 
-Everything is a per-doc string projection: groupBy(doc_id).applyInPandas
-emits one SVG per document (same low-volume post-pass contract as
-to_pagexml_df), and the directory sink reuses the PAGE-XML writer's
-sanitized-stem rules.
+Everything is a per-doc string projection: pagexml.render_docs emits one
+SVG per document in the rows' own doc-complete partitions (the same pass
+as to_pagexml_df), and pagexml.write_dir writes them with the PAGE-XML
+writer's sanitized-stem rules.
 """
 
 from __future__ import annotations
 
-import os
 from xml.sax.saxutils import escape
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from eynollah_spark.pagexml import sanitize_stem
+from eynollah_spark.pagexml import render_docs
 
 #: kind -> fill color (stable, distinct; mirrors the reference's intent
 #: of one color per region class, plot.py:43-48)
@@ -84,42 +82,13 @@ def doc_to_svg(doc_id, width, height, kinds, x0s, x1s, y0s, y1s,
     return "\n".join(parts)
 
 
+def page_svg(doc: dict) -> str:
+    """doc_to_svg over one document of pagexml.render_docs."""
+    return doc_to_svg(doc["doc_id"][0], doc["width"][0], doc["height"][0], doc["kind"],
+                      doc["x0"], doc["x1"], doc["y0"], doc["y1"],
+                      angle_deg=doc["angle_deg"][0])
+
+
 def to_svg_df(rows: DataFrame) -> DataFrame:
-    """(doc_id, ord, kind, width, height, x0..y1, angle_deg;
-    extract_flat_input's rows) -> (doc_id, svg). Same shape as
-    pagexml.to_pagexml_df: a low-volume grouped post-pass, one string per
-    document."""
-    from eynollah_spark.packaging import ensure_distributed
-
-    ensure_distributed(rows.sparkSession)
-
-    def fn(g: pd.DataFrame) -> pd.DataFrame:
-        g = g.sort_values("ord")
-        svg = doc_to_svg(
-            g["doc_id"].iloc[0], g["width"].iloc[0], g["height"].iloc[0],
-            g["kind"].tolist(), g["x0"].tolist(), g["x1"].tolist(),
-            g["y0"].tolist(), g["y1"].tolist(), angle_deg=float(g["angle_deg"].iloc[0]))
-        return pd.DataFrame({"doc_id": [g["doc_id"].iloc[0]], "svg": [svg]})
-
-    return rows.groupBy("doc_id").applyInPandas(
-        fn, schema="doc_id string, svg string")
-
-
-def write_svg_dir(svg_df: DataFrame, out_dir: str) -> int:
-    """<out_dir>/<doc_id>.svg, executor-side (same contract and stem
-    sanitization as pagexml.write_pagexml_dir; count approximate under
-    retries)."""
-    os.makedirs(out_dir, exist_ok=True)
-    acc = svg_df.sparkSession.sparkContext.accumulator(0)
-
-    def write_part(rows_iter):
-        n = 0
-        for r in rows_iter:
-            stem = sanitize_stem(r["doc_id"])
-            with open(os.path.join(out_dir, f"{stem}.svg"), "w") as f:
-                f.write(r["svg"])
-            n += 1
-        acc.add(n)
-
-    svg_df.foreachPartition(write_part)
-    return acc.value
+    """extract_flat_input's rows -> (doc_id, svg), one page per document."""
+    return render_docs(rows, page_svg, "svg")

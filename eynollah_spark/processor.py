@@ -81,7 +81,7 @@ class SparkLayoutProcessor:
         Returns the number of pages written this invocation."""
         from pyspark.sql import functions as F
 
-        from eynollah_spark.pagexml import to_pagexml_df, write_pagexml_dir
+        from eynollah_spark.pagexml import stem_col, to_pagexml_df, write_dir
         from eynollah_spark.pipeline import extract_flat_input
 
         flat = parse_pagexml_distributed(self.spark, in_dir)
@@ -91,15 +91,8 @@ class SparkLayoutProcessor:
             if done:
                 done_df = self.spark.createDataFrame(
                     [(d,) for d in done], "stem string")
-                # compare SANITIZED stems: write_pagexml_dir rewrites
-                # path-hostile characters in doc_id when naming the file
-                # (appending an md5 tag when it does — pagexml.sanitize_stem),
-                # so a raw doc_id comparison would never skip such pages
-                clean = F.regexp_replace("doc_id", r"[/\\\x00]|\.\.", "_")
-                stem = F.when(clean == F.col("doc_id"), clean).otherwise(
-                    F.concat(clean, F.lit("-"),
-                             F.substring(F.md5(F.col("doc_id")), 1, 8)))
-                flat = (flat.withColumn("stem", stem)
+                # compare SANITIZED stems, the names write_dir gives the files
+                flat = (flat.withColumn("stem", stem_col())
                         .join(F.broadcast(done_df), "stem", "left_anti")
                         .drop("stem"))
         rows = extract_flat_input(flat, fail_fast=self.fail_fast)
@@ -107,7 +100,7 @@ class SparkLayoutProcessor:
             from eynollah_spark.scorer import refine_kinds
 
             rows = refine_kinds(rows, scorer=self.scorer)
-        return write_pagexml_dir(to_pagexml_df(rows), out_dir)
+        return write_dir(to_pagexml_df(rows), out_dir, "xml")
 
 
 try:  # pragma: no cover - exercised only where ocrd is installed

@@ -1570,37 +1570,26 @@ def _pagexml_roundtrip_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     and require the recovered (kind, text, order) sequence to equal the
     engine's output for EVERY document. Returns per-bucket mismatch
     counts; the oracle is the all-zeros table."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from eynollah_spark.corpus import corpus_flat_spark
+    from eynollah_spark.pagexml import page_xml, render_docs
     from eynollah_spark.pipeline import extract_flat_input
 
     n = max(100, int(20_000 * sf_of(sf_dir)))
     flat = corpus_flat_spark(spark, n).drop("expected_kind", "expected_rank")
-    rows = extract_flat_input(flat)
 
-    def check(g: pd.DataFrame) -> pd.DataFrame:
+    def bad(doc) -> int:
         from eynollah_spark.fixtures import parse_pagexml_string
-        from eynollah_spark.pagexml import doc_to_pagexml
 
-        g = g.sort_values("ord")
-        doc_id = g["doc_id"].iloc[0]
-        xml = doc_to_pagexml(
-            doc_id, g["width"].iloc[0], g["height"].iloc[0],
-            g["kind"].tolist(), g["text"].tolist(), g["media_ref"].tolist(),
-            g["offset"].tolist(), g["x0"].tolist(), g["x1"].tolist(),
-            g["y0"].tolist(), g["y1"].tolist())
         try:
-            back = parse_pagexml_string(xml, doc_id)
-            got = [(k, t) for (k, t, _m, _o) in back.expected]
-            want = list(zip(g["kind"], [None if pd.isna(t) else t for t in g["text"]]))
-            bad = 0 if got == want else 1
+            back = parse_pagexml_string(page_xml(doc), doc["doc_id"][0])
         except Exception:
-            bad = 1
-        return pd.DataFrame({"doc_id": [doc_id], "bad": [bad]})
+            return 1
+        return int([(k, t) for (k, t, _m, _o) in back.expected]
+                   != list(zip(doc["kind"], doc["text"])))
 
-    per_doc = rows.groupBy("doc_id").applyInPandas(check, schema="doc_id string, bad int")
+    per_doc = render_docs(extract_flat_input(flat), bad, "bad", "long")
     bucket = (F.substring("doc_id", 4, 8).cast("int") % 10)
     return (per_doc.groupBy(bucket.alias("bucket"))
             .agg(F.sum("bad").cast("bigint").alias("n_bad")))
@@ -1912,11 +1901,19 @@ def _multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = max(64, int(10_000 * sf_of(sf_dir)))
     _export_media_truth(n)
-    out = decode_and_embed(synth_media_table(spark, n))
-    return out.agg(F.count("*").cast("bigint").alias("n_rows"),
+    return _decode_totals(decode_and_embed(synth_media_table(spark, n)))
+
+
+def _decode_totals(dec: DataFrame) -> DataFrame:
+    """multimodal_decode_embed's aggregate over the decoded rows; the
+    luma sum rounds a DECIMAL(38,6) cast, as the oracle's does."""
+    from pyspark.sql import functions as F
+
+    return dec.agg(F.count("*").cast("bigint").alias("n_rows"),
                    F.sum("width").cast("bigint").alias("w_sum"),
                    F.sum("height").cast("bigint").alias("h_sum"),
-                   F.round(F.sum("mean_luma"), 2).alias("luma_sum"))
+                   F.round(F.sum("mean_luma").cast("decimal(38,6)"), 2)
+                   .cast("double").alias("luma_sum"))
 
 def _multimodal_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 variant cache through the real operator. The input media table
@@ -1952,7 +1949,7 @@ _fn("multimodal_decode_embed", (), _multimodal_decode, duck_sql=f"""
 SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
        CAST(SUM(width) AS BIGINT) AS w_sum,
        CAST(SUM(height) AS BIGINT) AS h_sum,
-       CAST(ROUND(SUM(mean_luma), 2) AS DOUBLE) AS luma_sum
+       CAST(ROUND(CAST(SUM(mean_luma) AS DECIMAL(38,6)), 2) AS DOUBLE) AS luma_sum
 FROM read_parquet('{_ORACLE_EXPORT_DIR}/media_truth.parquet')
 """)
 

@@ -10,6 +10,7 @@ import re
 import tempfile
 
 import numpy as np
+import pytest
 from page_helpers import (GENERATED_PAGES, generated_page_xml, reading_order,
                           require_reference_pages)
 
@@ -105,7 +106,7 @@ def test_spark_pagexml_df(spark):
     from pyspark.sql import functions as F
 
     from eynollah_spark.corpus import corpus_flat_spark
-    from eynollah_spark.pagexml import to_pagexml_df, write_pagexml_dir
+    from eynollah_spark.pagexml import to_pagexml_df, write_dir
     from eynollah_spark.pipeline import extract_flat_input
 
     flat = corpus_flat_spark(spark, 12, partitions=2).cache()
@@ -116,9 +117,10 @@ def test_spark_pagexml_df(spark):
     assert len(got) == n_docs
     assert all(x.startswith("<?xml") and "<PcGts" in x for x in got.values())
     with tempfile.TemporaryDirectory() as tmp:
-        write_pagexml_dir(xml_df, tmp)
+        n_written = write_dir(xml_df, tmp, "xml")
         files = sorted(os.listdir(tmp))
-        assert len(files) == n_docs
+        # the sink's count is exact: the number of files it wrote
+        assert n_written == len(files) == n_docs
         some = files[0]
         back = parse_pagexml(os.path.join(tmp, some), some[:-4])
         # reparsed doc has the same number of spans as the engine emitted
@@ -167,3 +169,61 @@ def test_sanitized_stems_never_collide_and_match_resume_expr():
     # processor.py builds with F.md5 for the resume anti-join
     assert sanitize_stem("a/b").endswith(
         "-" + hashlib.md5(b"a/b").hexdigest()[:8])
+
+
+def test_stem_col_is_sanitize_stem(spark):
+    """The processor's resume anti-join names each page with the Spark
+    column form of sanitize_stem; both give the same stem."""
+    from eynollah_spark.pagexml import sanitize_stem, stem_col
+
+    ids = ["a_b", "a/b", "a\\b", "x..y", 'evil"doc/../x', "nul\x00id", "plain"]
+    got = {r["doc_id"]: r["stem"] for r in spark.createDataFrame(
+        [(d,) for d in ids], "doc_id string").select("doc_id", stem_col().alias("stem")).collect()}
+    assert got == {d: sanitize_stem(d) for d in ids}
+
+
+def _batches(*docs):
+    """One Arrow batch per (doc_id, [ord...]) pair: each ord is a row."""
+    import pyarrow as pa
+
+    return [pa.RecordBatch.from_pydict({"doc_id": [d] * len(ords), "ord": ords})
+            for d, ords in docs]
+
+
+def test_render_partition_holds_documents_across_batches():
+    """A document whose rows arrive in two Arrow batches of one
+    partition, out of order, renders once, on its rows in reading order."""
+    from eynollah_spark.pagexml import _render_partition
+
+    out = list(_render_partition(_batches(("b", [2, 0]), ("a", [0]), ("b", [1, 3])),
+                                 lambda doc: ",".join(map(str, doc["ord"])), "v"))
+    rows = [r for b in out for r in b.to_pylist()]
+    assert rows == [{"doc_id": "a", "v": "0"}, {"doc_id": "b", "v": "0,1,2,3"}]
+    assert list(_render_partition(iter([]), str, "v")) == []
+
+
+@pytest.mark.parametrize("docs", [(("a", [0, 1]), ("b", [1, 2])),   # b lost ord 0
+                                  (("a", [0]), ("b", [0, 2])),      # b lost ord 1
+                                  (("a", [0]), ("b", [0, 1, 1]))])  # b repeats ord 1
+def test_render_partition_refuses_a_document_fragment(docs):
+    from eynollah_spark.pagexml import _render_partition
+
+    with pytest.raises(ValueError, match="document 'b' is not whole"):
+        list(_render_partition(_batches(*docs), str, "v"))
+
+
+def test_pagexml_df_refuses_rows_split_across_partitions(spark):
+    """Rows repartitioned on offset split documents across partitions:
+    the render task fails naming a document instead of writing pages
+    from its fragments."""
+    from pyspark.sql import functions as F
+
+    from eynollah_spark.corpus import corpus_flat_spark
+    from eynollah_spark.pagexml import to_pagexml_df
+    from eynollah_spark.pipeline import extract_flat_input
+
+    rows = extract_flat_input(corpus_flat_spark(spark, 12).drop("expected_kind",
+                                                                 "expected_rank"))
+    assert rows.groupBy("doc_id").agg(F.max("ord").alias("m")).filter("m > 0").count()
+    with pytest.raises(Exception, match=r"ValueError: document 'doc\d+' is not whole"):
+        to_pagexml_df(rows.repartition(4, "offset")).collect()

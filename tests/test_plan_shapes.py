@@ -38,19 +38,27 @@ def test_small_dim_join_broadcasts(spark):
 def test_extraction_plan_has_single_shuffle(spark, tmp_path):
     from eynollah_spark.cli import layout_rows
     from eynollah_spark.corpus import corpus_flat_spark
+    from eynollah_spark.pagexml import to_pagexml_df
     from eynollah_spark.pipeline import extract_flat_input
+    from eynollah_spark.plot import to_svg_df
 
     flat = corpus_flat_spark(spark, 50).drop("expected_kind", "expected_rank")
     src = str(tmp_path / "flat.parquet")
     flat.write.parquet(src)
     # the doc_id repartition is the plan's one exchange beyond the
     # input's; the payload and the geometry ride through the kernel, so
-    # there is no join: in extract_flat_input's rows, and in the rows
-    # `cli page-xml` writes (either frame) and `cli plot` writes
+    # there is no join: in extract_flat_input's rows, in the rows
+    # `cli page-xml` writes (either frame) and `cli plot` writes, and in
+    # the pages and SVGs rendered from them in the same partitions
     for inp, outj in ((flat, extract_flat_input(flat, partitions=4)),
                       (spark.read.parquet(src), layout_rows(spark, src, "original")),
                       (spark.read.parquet(src), layout_rows(spark, src, "deskewed")),
-                      (spark.read.parquet(src), layout_rows(spark, src))):
+                      (spark.read.parquet(src), layout_rows(spark, src)),
+                      (spark.read.parquet(src),
+                       to_pagexml_df(layout_rows(spark, src, "original"))),
+                      (spark.read.parquet(src),
+                       to_pagexml_df(layout_rows(spark, src, "deskewed"))),
+                      (spark.read.parquet(src), to_svg_df(layout_rows(spark, src)))):
         pj = _plan(outj)
         assert pj.count("Exchange") == _plan(inp).count("Exchange") + 1
         assert "MapInArrow" in pj

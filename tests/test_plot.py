@@ -1,7 +1,7 @@
 """Layout-diagnostics plotter (the reference plot.py surface, VERDICT r3
 "What's missing" item 4): dependency-free SVG per page — rect per span
 colored by kind, reading-order polyline, deskew annotation — emitted
-distributed with the same grouped post-pass shape as the PAGE-XML sink."""
+distributed by the same per-partition render pass as the PAGE-XML sink."""
 
 import json
 import os
@@ -65,6 +65,7 @@ def test_plot_cli_writes_svg_per_page(spark, monkeypatch, capsys, tmp_path):
     assert res["ok"]
     files = [f for f in os.listdir(out) if f.endswith(".svg")]
     assert len(files) == 25
+    assert res["pages"] == len(os.listdir(out))  # the sink's count is exact
     # every file is valid SVG whose span-rect count matches the doc
     flat = spark.read.parquet(src)
     counts = {r["doc_id"]: r["n"] for r in

@@ -85,6 +85,25 @@ def test_process_workspace_resumes_generated(spark, tmp_path):
     assert proc.process_workspace(in_dir, out_dir) == 0
 
 
+def test_process_workspace_resumes_a_sanitized_stem(spark, tmp_path):
+    """A page whose doc_id the writer renames (x..y -> x_y-<md5 tag>) is
+    written once and skipped on resume: the resume anti-join computes
+    the same stem as the sink."""
+    from eynollah_spark.pagexml import sanitize_stem
+
+    in_dir = tmp_path / "ws_in"
+    in_dir.mkdir()
+    for name, i in (("x..y", GENERATED_PAGES[0]), ("plain", GENERATED_PAGES[1])):
+        (in_dir / f"{name}.xml").write_text(generated_page_xml(i)[1])
+    out_dir = str(tmp_path / "ws_out")
+    proc = SparkLayoutProcessor(spark)
+    assert proc.process_workspace(str(in_dir), out_dir) == 2
+    assert sorted(os.listdir(out_dir)) == sorted(
+        [f"{sanitize_stem('x..y')}.xml", "plain.xml"])
+    assert sanitize_stem("x..y") != "x..y"
+    assert proc.process_workspace(str(in_dir), out_dir) == 0
+
+
 def test_process_workspace_with_scorer_equals_two_join_plan(spark, tmp_path):
     """With a scorer, process_workspace refines kinds on the extracted
     rows, which carry their own geometry. The pages it writes equal those
@@ -119,10 +138,12 @@ def test_process_workspace_with_scorer_equals_two_join_plan(spark, tmp_path):
                                               "media_ref", "offset")
     refined = refine_kinds(with_geometry(ordered), scorer=scorer).select(
         *ordered.columns)
-    want = {r["doc_id"]: r["xml"]
-            for r in to_pagexml_df(with_geometry(refined)).collect()}
-    plain = {r["doc_id"]: r["xml"]
-             for r in to_pagexml_df(with_geometry(ordered)).collect()}
+    # the join hashes on (doc_id, offset); the writer needs whole
+    # documents per partition
+    want = {r["doc_id"]: r["xml"] for r in
+            to_pagexml_df(with_geometry(refined).repartition("doc_id")).collect()}
+    plain = {r["doc_id"]: r["xml"] for r in
+             to_pagexml_df(with_geometry(ordered).repartition("doc_id")).collect()}
     assert sorted(want) == sorted(doc_ids)
     assert any(want[d] != plain[d] for d in doc_ids)
     for doc_id in doc_ids:

@@ -231,3 +231,22 @@ def test_subline_split_ships_the_package(spark, monkeypatch):
     rows = _rows(fn(spark, SF_DIR).collect())
     assert calls == [spark]
     assert rows == _oracle(SF_DIR, "documents", "ro_subline_split")
+
+
+@pytest.mark.parametrize("luma, rounded", [(0.285, 0.29), (1.005, 1.01)])
+def test_decode_embed_rounds_half_cent_ties_like_the_oracle(spark, tmp_path, luma, rounded):
+    """multimodal_decode_embed's luma_sum on a half-cent tie: the Spark
+    aggregate and the oracle text over the same decoded row."""
+    from eynollah_spark.queries import _ORACLE_EXPORT_DIR, _decode_totals
+
+    path = tmp_path / "media_truth.parquet"
+    pq.write_table(pa.table({"media_ref": ["m"], "width": pa.array([64], pa.int64()),
+                             "height": pa.array([48], pa.int64()), "mean_luma": [luma]}),
+                   path)
+    duck_sql = registry()["multimodal_decode_embed"]["duck_sql"]
+    truth = f"{_ORACLE_EXPORT_DIR}/media_truth.parquet"
+    assert truth in duck_sql
+    con = duckdb.connect()
+    want = con.sql(duck_sql.replace(truth, str(path))).fetchall()
+    got = [tuple(r) for r in _decode_totals(spark.read.parquet(str(path))).collect()]
+    assert got == want == [(1, 64, 48, rounded)]

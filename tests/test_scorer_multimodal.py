@@ -54,16 +54,6 @@ def test_multimodal_decode_embed(spark):
     dec.unpersist()
 
 
-def test_frame_sample_plan(spark):
-    from eynollah_spark.multimodal import frame_sample_plan, synth_media_table
-
-    media = synth_media_table(spark, 30)
-    plan = frame_sample_plan(media, every_ms=1000)
-    n_video = media.filter(F.col("kind") == "video").count()
-    assert plan.count() == n_video * 4  # 4000ms / 1000ms
-    assert plan.groupBy("media_ref").count().filter("count != 4").count() == 0
-
-
 def test_drop_capital_detection():
     from eynollah_spark.scorer import HeuristicScorer
 
